@@ -4165,8 +4165,9 @@ def q_stream_keep_latest(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_stream_keep_latest_packed(spark: SparkSession, sf: str) -> DataFrame:
     """stream_keep_latest with PACKED state (VERDICT r10 item 6): many
-    logical keys share one physical state group, so the measured ~1.3 ms
-    applyInPandasWithState per-group constant pays once per BUCKET per
+    logical keys share one physical state group, so the ~1.1 ms
+    applyInPandasWithState per-group constant (re-measured; see
+    streaming.core.replay_partitions) pays once per BUCKET per
     batch instead of once per key — the 100 TB state-scaling transform
     stream_locf_packed shipped, extended to the keep-latest family.
     Oracle is the per-key contract's SQL VERBATIM (batch keep-latest

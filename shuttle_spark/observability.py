@@ -19,8 +19,8 @@ here:
   returns only the stages that action created — per-contract shuffle-byte
   accounting with no extra listener plumbing on the Python side.
 
-`tools/observe_contracts.py` uses `measure` to publish a per-contract
-shuffle/spill table into PLANS.md.
+`tools/plan_report.py` uses `measure` to publish a per-contract
+stage/shuffle/spill table into PLANS.md ("Observed runtime metrics").
 """
 
 from __future__ import annotations

@@ -14,6 +14,25 @@ verifies on read (Ors2BlockManager.scala:127-136,
 ShufflePartitionReader.java:217-249).  Spark 3.2+ ships the same mechanism
 behind ``spark.shuffle.checksum.enabled`` — we enable it, and additionally
 expose query-level checksums in operators/integrity.py.
+
+Python workers: the reference plugs its own component into Spark's
+``spark.shuffle.manager`` extension point; the engine does the same for
+Python workers through ``spark.python.daemon.module`` ->
+``shuttle_spark.pydaemon``.  Cause: PySpark calls
+``importlib.invalidate_caches()`` at the start of every Python task, and on
+CPython 3.10-3.11 that makes each ``zipimporter`` re-read its whole archive
+directory; a worker's path reaches the spark-core jar (5,359 entries) and
+pyspark.zip (1,328) through ~16 importers.  The daemon re-reads an archive
+only when its stat changed.  Version guard: CPython 3.12+ invalidates zip
+directories lazily, so there the daemon installs nothing and is Spark's own
+daemon.  Measured at local[4] (sf0.1, median of 3 warm runs, stock daemon
+-> engine daemon): ``invalidate_caches`` per task 0.17-0.25 s of CPU ->
+0.2 ms; an 8-task no-op RDD job 1.1 -> 0.21 s; pandas_udf_bucket 1.51 ->
+0.58 s; grouped_map_normalize 1.15 -> 0.73 s; stream_keep_latest_packed
+3.07 -> 1.90 s.  ``resolve_conf`` also prepends the package root to the
+workers' PYTHONPATH (``spark.executorEnv.PYTHONPATH``): without it a
+driver started outside the repo with PYTHONPATH unset could not start the
+daemon, nor unpickle any UDF that references an engine function.
 """
 
 from __future__ import annotations
@@ -92,7 +111,16 @@ _DEFAULTS = {
     "spark.sql.warehouse.dir": "/tmp/shuttle_spark_warehouse",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # Python workers fork from the engine daemon, which stops each task
+    # from re-reading the Spark jar and pyspark.zip (module docstring).
+    "spark.python.daemon.module": "shuttle_spark.pydaemon",
 }
+
+# The directory holding the shuttle_spark package, prepended to the
+# workers' PYTHONPATH: the daemon module above and every engine function a
+# UDF pickles by reference must import whatever the driver's cwd is.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 # Corpus-size-aware profile (round 9, VERDICT r8 item 1).  The dials below
@@ -177,7 +205,9 @@ def resolve_conf(
     data_dir: str | None = None, overrides: dict[str, str] | None = None
 ) -> dict[str, str]:
     """The exact conf dict ``get_session`` applies (factored out so tests
-    can assert the precedence chain without paying a JVM)."""
+    can assert the precedence chain without paying a JVM).  The workers'
+    PYTHONPATH always starts with the package root, ahead of any value an
+    override supplies."""
     conf = dict(_DEFAULTS)
     conf.update(profile_for_corpus(data_dir))
     env_shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
@@ -187,4 +217,8 @@ def resolve_conf(
     if env_aqe:
         conf["spark.sql.adaptive.enabled"] = env_aqe
     conf.update(overrides or {})
+    caller_path = conf.get(_WORKER_PYTHONPATH)
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, caller_path) if p
+    )
     return conf

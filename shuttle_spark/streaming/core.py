@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -356,11 +357,20 @@ def stream_keep_latest_packed(
 ) -> DataFrame:
     """``stream_keep_latest`` with PACKED state (VERDICT r10 item 6) —
     the second family to ship the ``stream_locf_packed`` transform, the
-    100 TB state-scaling answer to applyInPandasWithState's measured
-    ~1.3 ms per GROUP INVOCATION constant: per-key state pays
-    keys x batches x 1.3 ms (the whole budget at a 10M-key stream),
-    packed state pays it once per BUCKET per batch and runs the per-key
-    argmax vectorized over the bucket's rows.
+    100 TB state-scaling answer to applyInPandasWithState's per GROUP
+    INVOCATION constant, re-measured at ~1.1 ms of wall per group
+    (see ``replay_partitions``): per-key state pays keys x batches x
+    that constant (the whole budget at a 10M-key stream), packed state
+    pays it once per BUCKET per batch and runs the per-key argmax
+    vectorized over the bucket's rows.
+
+    At bench scale the per-group constant was not this operator's main
+    cost: the contract replay (sf0.1, local[4], median of 3 warm runs)
+    read 3.07 s with Spark's stock worker daemon, mostly because every
+    Python task re-read the Spark jar and pyspark.zip directories
+    (0.17-0.35 s per task).  With the engine daemon
+    (``shuttle_spark.pydaemon``) it reads 1.90 s; the per-key
+    ``stream_keep_latest`` went 5.00 -> 4.17 s.
 
     Bucketing is ``pmod(key, n_state_buckets)`` like the locf twin;
     state per bucket = the pending winners as flat parallel arrays
@@ -932,12 +942,22 @@ def run_stream_decontaminate(
     return spark.read.parquet(*dirs)
 
 
+def _local_cores(master: str) -> int | None:
+    """Worker threads of a ``local[N]``, ``local[*]``, ``local[N,F]`` or
+    ``local[*,F]`` master (``F`` is the task-failure limit); None for any
+    other master."""
+    m = re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master)
+    if m is None:
+        return None
+    return (os.cpu_count() or 1) if m.group(1) == "*" else int(m.group(1))
+
+
 def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
     """Bench-scale partition count for PER-KEY Python-state replays
-    (applyInPandasWithState over a wide key space): the ~1 ms per-GROUP
-    runner constant parallelizes across partitions while each partition
-    adds a fixed state-store commit, so the sweet spot tracks the local
-    core count.  Measured at sf0.1 (round 13, interleaved medians):
+    (applyInPandasWithState over a wide key space): the per-GROUP runner
+    constant parallelizes across partitions while each partition adds a
+    fixed state-store commit, so the sweet spot tracks the local core
+    count.  Measured at sf0.1 (round 13, interleaved medians):
     stream_locf at local[32] reads 5.85/4.07/3.48/4.01 s for 4/8/16/32
     partitions and at local[8] reads 6.49/5.29/6.87/9.82 —
     ``min(cores, 16)`` picks the winner at both; keep_latest and ewma
@@ -947,12 +967,19 @@ def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
     3.19→8.68) — they keep the fixed small count.  Production sizes
     stateful partitions by state volume, not by this bench dial (see
     run_available_now).  Results are partition-count-invariant (per-key
-    state is key-local); only scheduling changes."""
-    master = spark.sparkContext.master or ""
-    if master.startswith("local[") and master.endswith("]"):
-        inner = master[6:-1]
-        cores = os.cpu_count() or lo if inner == "*" else int(inner)
-    else:
+    state is key-local); only scheduling changes.
+
+    Those figures predate the engine worker daemon (``pydaemon``), so
+    they also carried 0.17-0.35 s per Python TASK of zip-directory
+    re-reads, which penalized extra partitions.  Re-measured with it
+    (sf0.1, one micro-batch, local[4], median of 3 warm runs, a trivial
+    count fold): 1,500 keys 2.69 s vs 10 keys 1.05 s at 4 partitions,
+    i.e. ~1.1 ms of wall per group, the same as with Spark's stock
+    daemon (2.53 vs 1.18 s) — the per-group constant is real and the
+    daemon does not move it, so the ``min(cores, 16)`` dial stands.
+    16 partitions read 3.02 s (3.87 s stock)."""
+    cores = _local_cores(spark.sparkContext.master or "")
+    if cores is None:
         cores = spark.sparkContext.defaultParallelism
     return max(lo, min(hi, cores))
 

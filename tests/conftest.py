@@ -28,99 +28,24 @@ def sf_dir() -> str:
 # Fast/full test tiers (round 13, VERDICT r12 item 2).
 #
 # The full suite takes ~3,600 s solo (measured 2026-08-17: 490 passed in
-# 3681 s), which does not fit the driver's verification window — r12's
-# driver run was cut at 43% with zero failures, shipping an unverifiable
-# "tests_ok: false".  The default `python -m pytest tests/` run therefore
-# DESELECTS the 77 individually-slowest tests (each >= 10 s in the
-# measured run, 3,042 s combined — the hypothesis fuzz/property gates and
-# the heaviest end-to-end streaming parities), keeping the full
-# 216-contract oracle gate (test_contracts) and every unit/semantics test:
-# ~600 s, which completes inside the window.
+# 3681 s), too long for a routine verification run.  The default
+# `python -m pytest tests/` run therefore DESELECTS the tests
+# marked ``@pytest.mark.slow`` at their definition (77 tests, each >= 10 s
+# in the measured run, 3,042 s combined — the hypothesis fuzz/property
+# gates and the heaviest end-to-end streaming parities), keeping the full
+# 216-contract oracle gate (test_contracts) and every unit/semantics test.
 #
-# SHUTTLE_FULL_TESTS=1 runs everything (the builder's own gate; CI tier).
-# The deselected tests are NOT weaker duplicates — they are the deep
-# fuzz tier and must stay green; they are simply run on the builder's
-# budget instead of the driver's.
+# SHUTTLE_FULL_TESTS=1 runs everything (the full gate).  The slow tests
+# are NOT weaker duplicates — they are the deep fuzz tier and must stay
+# green; they run in the full gate.
 # ---------------------------------------------------------------------------
-_SLOW_TESTS = {
-    "test_aqe_splits_skewed_join",
-    "test_as_of_join_matches_reference",
-    "test_changeset_roundtrip_property",
-    "test_connected_components_match_union_find",
-    "test_decontaminate_matches_bruteforce",
-    "test_exact_jaccard_pairs_match_reference",
-    "test_fuzz_bigram_lm",
-    "test_fuzz_bpe_train",
-    "test_fuzz_changeset_apply_arriving",
-    "test_fuzz_compact_changeset",
-    "test_fuzz_corr_matrix",
-    "test_fuzz_cusum",
-    "test_fuzz_date_arithmetic",
-    "test_fuzz_decayed_engagement",
-    "test_fuzz_doc_typicality",
-    "test_fuzz_equi_depth",
-    "test_fuzz_event_transitions",
-    "test_fuzz_ewma_anomalies",
-    "test_fuzz_filter_group_agg",
-    "test_fuzz_fk_census",
-    "test_fuzz_golden_record",
-    "test_fuzz_group_outliers",
-    "test_fuzz_hash_split",
-    "test_fuzz_inverted_index",
-    "test_fuzz_join_fanout_census",
-    "test_fuzz_join_group_agg",
-    "test_fuzz_k_anonymity",
-    "test_fuzz_key_skew_census",
-    "test_fuzz_linear_attribution",
-    "test_fuzz_mad_outliers",
-    "test_fuzz_null_injected_outer_join",
-    "test_fuzz_pack_greedy_bins",
-    "test_fuzz_pagerank",
-    "test_fuzz_priority_sample",
-    "test_fuzz_profile_drift",
-    "test_fuzz_repeated_spans",
-    "test_fuzz_rolling_actives",
-    "test_fuzz_rolling_window_features",
-    "test_fuzz_session_copresence",
-    "test_fuzz_set_ops",
-    "test_fuzz_stratified_split",
-    "test_fuzz_stream_batch_window_equivalence",
-    "test_fuzz_stream_cusum_packed_parity",
-    "test_fuzz_stream_dedup_window_parity",
-    "test_fuzz_stream_ewma_packed_parity",
-    "test_fuzz_stream_keep_latest_packed_parity",
-    "test_fuzz_stream_locf_packed_parity",
-    "test_fuzz_stream_window_parity",
-    "test_fuzz_table_recon",
-    "test_fuzz_twap",
-    "test_fuzz_winsorized_stats",
-    "test_fuzzy_string_join_matches_bruteforce",
-    "test_global_pctrank_matches_reference",
-    "test_global_rank_matches_sorted_reference",
-    "test_incremental_totals_equal_recompute_property",
-    "test_injected_task_failure_is_exactly_once",
-    "test_kcore_matches_sequential_peel",
-    "test_label_propagation_matches_synchronous_replay",
-    "test_mixture_weights_matches_reference",
-    "test_murmur3_matches_spark_hash",
-    "test_python_datasource_batch",
-    "test_python_datasource_stream_equals_batch",
-    "test_salted_agg_matches_plain",
-    "test_session_stream_equals_batch",
-    "test_stream_cusum_packed_parity",
-    "test_stream_dedup_is_exact_on_unique_keys",
-    "test_stream_ewma_equals_batch_single_and_multi_batch",
-    "test_stream_ewma_packed_parity",
-    "test_stream_file_sink_roundtrip",
-    "test_stream_keep_latest_equals_batch",
-    "test_stream_keep_latest_packed_parity",
-    "test_stream_locf_packed_parity_and_batch_equality",
-    "test_triangle_count_matches_reference",
-    "test_upsert_sink_zero_batch_stream_is_empty_state",
-    "test_zero_norm_vectors_score_zero_never_nan",
-    "test_zorder_write_bounds_both_dims",
-    "test_zorder_write_collapsed_domain_files_nonempty",
-}
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: deep fuzz/parity tier, deselected unless SHUTTLE_FULL_TESTS=1",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -128,8 +53,7 @@ def pytest_collection_modifyitems(config, items):
         return
     keep, dropped = [], []
     for item in items:
-        base = item.name.split("[", 1)[0]
-        (dropped if base in _SLOW_TESTS else keep).append(item)
+        (dropped if item.get_closest_marker("slow") else keep).append(item)
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = keep

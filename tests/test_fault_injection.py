@@ -21,6 +21,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 _SCRIPT = textwrap.dedent(
     """
     from pyspark import TaskContext
@@ -75,6 +77,7 @@ _SCRIPT = textwrap.dedent(
 )
 
 
+@pytest.mark.slow
 def test_injected_task_failure_is_exactly_once():
     r = subprocess.run(
         [sys.executable, "-c", _SCRIPT],

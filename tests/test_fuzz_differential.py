@@ -166,6 +166,7 @@ def _check(sdf, duck, sql):
 # Mode 1: filter -> groupBy -> agg  (the B5/B6 shape)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     filters=_filters(),
     groups=st.lists(
@@ -222,6 +223,7 @@ def test_fuzz_sort_limit(spark, duck, filters, descs, limit):
 # Mode 3: filtered join -> group agg  (the B12 shape)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     filters=_filters(),
     aggs=st.lists(
@@ -332,6 +334,7 @@ def test_fuzz_rollup_agg(spark, duck, filters, aggs):
 # Mode 6: set operations on filtered key projections  (the B15 shape)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     f_left=_filters(),
     f_right=_filters(),
@@ -450,6 +453,7 @@ def test_fuzz_group_having(spark, duck, filters, min_cnt):
 # full_outer_nulls' eager-aggregation rewrite)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     how=st.sampled_from(["inner", "left", "full"]),
     key_mod=st.integers(2, 9),
@@ -560,6 +564,7 @@ _DATE_EXPRS = {
 }
 
 
+@pytest.mark.slow
 @given(
     expr=st.sampled_from(sorted(_DATE_EXPRS)),
     n=st.integers(-400, 400),
@@ -686,6 +691,7 @@ def test_fuzz_string_functions(spark, duck, expr, n, filters):
 # engines, including the |z| boundary itself)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     keys=st.sampled_from(
         [("l_returnflag",), ("l_linestatus",), ("l_returnflag", "l_linestatus")]
@@ -732,6 +738,7 @@ def test_fuzz_group_outliers(spark, duck, keys, value, z, key_mod):
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
+@pytest.mark.slow
 @given(
     types=st.lists(
         st.sampled_from(_EVENT_TYPES), unique=True, min_size=2, max_size=5
@@ -843,6 +850,7 @@ FUZZ_HEAVY = settings(
 )
 
 
+@pytest.mark.slow
 @given(
     p=st.sampled_from([13, 29, 61, 97]),
     q=st.sampled_from([11, 37, 89]),
@@ -895,6 +903,7 @@ def _ewma_sql(window: int, min_lags: int, thr: int, user_mod: int) -> str:
     )
 
 
+@pytest.mark.slow
 @given(
     window=st.integers(2, 10),
     min_lags_frac=st.integers(1, 100),
@@ -926,6 +935,7 @@ def test_fuzz_ewma_anomalies(spark, duck, window, min_lags_frac, thr, user_mod):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(
     budget=st.sampled_from([64, 300, 700, 2048, 10000]),
     doc_mod=st.integers(1, 5),
@@ -969,6 +979,7 @@ def test_fuzz_pack_greedy_bins(spark, duck, budget, doc_mod, key):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(
     width=st.sampled_from([8, 12, 16, 24, 32]),
     stride_frac=st.sampled_from([1, 2, 4]),
@@ -1045,6 +1056,7 @@ def test_fuzz_semantic_dedup(spark, duck, tau_pct, vec_mod):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(
     days=st.integers(1, 30),
     roles=st.sampled_from(
@@ -1092,6 +1104,7 @@ def test_fuzz_linear_attribution(spark, duck, days, roles, user_mod):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(
     lo_pct=st.integers(1, 30),
     hi_pct=st.integers(70, 100),
@@ -1133,6 +1146,7 @@ def test_fuzz_winsorized_stats(spark, duck, lo_pct, hi_pct, key):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(
     train_pct=st.integers(10, 90),
     val_pct=st.integers(5, 9),
@@ -1157,6 +1171,7 @@ def test_fuzz_hash_split(spark, duck, train_pct, val_pct, seed):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(
     key=st.sampled_from(["o_custkey", "o_orderstatus", "o_orderpriority"]),
     k=st.integers(1, 20),
@@ -1185,6 +1200,7 @@ def test_fuzz_key_skew_census(spark, duck, key, k):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(n=st.integers(2, 5), doc_mod=st.integers(1, 3))
 @FUZZ
 def test_fuzz_doc_typicality(spark, duck, n, doc_mod):
@@ -1217,6 +1233,7 @@ def test_fuzz_doc_typicality(spark, duck, n, doc_mod):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(
     hours=st.integers(1, 96),
     at_type=st.sampled_from(["purchase", "signup"]),
@@ -1244,6 +1261,7 @@ def test_fuzz_rolling_window_features(spark, duck, hours, at_type, count_type):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(
     left_t=st.sampled_from(["click", "view"]),
     right_t=st.sampled_from(["purchase", "error", "signup"]),
@@ -1272,6 +1290,7 @@ def test_fuzz_join_fanout_census(spark, duck, left_t, right_t, k):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(days=st.integers(1, 30), user_mod=st.integers(1, 4))
 @FUZZ
 def test_fuzz_rolling_actives(spark, duck, days, user_mod):
@@ -1305,6 +1324,7 @@ def test_fuzz_rolling_actives(spark, duck, days, user_mod):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @given(gap_min=st.integers(5, 240), user_mod=st.integers(1, 4))
 @FUZZ
 def test_fuzz_session_copresence(spark, duck, gap_min, user_mod):
@@ -1411,6 +1431,7 @@ def test_fuzz_ohlc_bars(spark, duck, key, key_mod):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(
     keys=st.sampled_from(
         [("l_returnflag",), ("l_linestatus",), ("l_returnflag", "l_linestatus")]
@@ -1479,6 +1500,7 @@ def test_fuzz_trend_slope(spark, duck, key, key_mod):
     _check(sdf, duck, sql)
 
 
+@pytest.mark.slow
 @given(
     strat=st.sampled_from(["lang", "source"]),
     train_pct=st.integers(10, 90),
@@ -1569,6 +1591,7 @@ def test_fuzz_locf_impute(spark, duck, key, null_mod):
 # U/D by guard, I on offset keys), both engines pay the same merge
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     u_mod=st.integers(3, 23),
     d_mod=st.integers(3, 23),
@@ -1637,6 +1660,7 @@ def test_fuzz_changeset_apply_arriving(spark, duck, u_mod, d_mod, i_mod):
 # Mode 38: exact time-decay engagement — randomized half-life and key
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     key=st.sampled_from(["event_type", "user_id"]),
     half_life=st.integers(1, 48),
@@ -1678,6 +1702,7 @@ def test_fuzz_decayed_engagement(spark, duck, key, half_life, negate_mod):
 # Mode 39: reconciliation census — randomized corruption moduli + buckets
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     flip_mod=st.integers(5, 400),
     drop_mod=st.integers(5, 400),
@@ -1737,6 +1762,7 @@ def test_fuzz_table_recon(spark, duck, flip_mod, drop_mod, n_buckets):
 # Mode 40: profile drift census — randomized corruption moduli + column set
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     null_mod=st.integers(2, 300),
     shift_mod=st.integers(2, 300),
@@ -1816,6 +1842,7 @@ _CORR_POOL = ["l_quantity", "l_extendedprice", "l_discount", "l_tax",
               "l_orderkey", "l_partkey"]
 
 
+@pytest.mark.slow
 @given(
     idx=st.sets(st.integers(0, 5), min_size=2, max_size=4),
     scales=st.lists(st.integers(0, 2), min_size=4, max_size=4),
@@ -1869,6 +1896,7 @@ def test_fuzz_corr_matrix(spark, duck, idx, scales, row_mod, null_mod):
 # Mode 42: priority sampling — random k / seed / grouping / weight scale
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     k=st.integers(1, 40),
     seed=st.integers(0, 10_000),
@@ -1914,6 +1942,7 @@ def test_fuzz_priority_sample(spark, duck, k, seed, grp, scale, row_mod):
 # Mode 43: golden-record survivorship — random NULL moduli + entity grain
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     cents_mod=st.integers(0, 12),  # 0/1 -> column never NULL
     props_mod=st.integers(0, 12),
@@ -2002,6 +2031,7 @@ def test_fuzz_golden_record(spark, duck, cents_mod, props_mod, type_mod,
 # Mode 44: CUSUM drift — random target/slack/threshold/grain + NULLs
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     target=st.integers(0, 12_000),
     slack=st.integers(0, 2_000),
@@ -2052,6 +2082,7 @@ def test_fuzz_cusum(spark, duck, target, slack, threshold, key, null_mod):
 _II_NORM = "TRIM(LOWER(REGEXP_REPLACE(text, '\\s+', ' ', 'g')))"
 
 
+@pytest.mark.slow
 @given(
     cap=st.integers(1, 12),
     min_df=st.integers(1, 6),
@@ -2089,6 +2120,7 @@ def test_fuzz_inverted_index(spark, duck, cap, min_df, max_df, doc_mod):
 # Mode 46: TWAP + equi-depth histogram — random grains / bins / scales
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     key=st.sampled_from(["user_id", "event_type", "user_id % 9"]),
     scale=st.integers(0, 3),
@@ -2119,6 +2151,7 @@ def test_fuzz_twap(spark, duck, key, scale, null_mod):
     )
 
 
+@pytest.mark.slow
 @given(
     n_bins=st.integers(2, 64),
     col=st.sampled_from(["l_extendedprice", "l_quantity", "l_discount"]),
@@ -2153,6 +2186,7 @@ def test_fuzz_equi_depth(spark, duck, n_bins, col, scale, buckets):
 # Mode 47: CDC compaction + FK census — random op mixes / corruption
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     i_mod=st.integers(2, 9),
     d_mod=st.integers(2, 9),
@@ -2200,6 +2234,7 @@ def test_fuzz_compact_changeset(spark, duck, i_mod, d_mod, key_mod):
     )
 
 
+@pytest.mark.slow
 @given(
     drop_mod=st.integers(0, 60),   # 0/1 -> intact parent
     null_mod=st.integers(0, 8),    # 0/1 -> no NULL injection
@@ -2243,6 +2278,7 @@ def test_fuzz_fk_census(spark, duck, drop_mod, null_mod):
 # Mode 48: bigram LM stats — random top-k + document subsets
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     top_k=st.integers(5, 120),
     doc_mod=st.integers(0, 7),  # 0/1 -> all docs
@@ -2326,6 +2362,7 @@ def test_fuzz_interp_impute(spark, duck, null_mod, per_type):
 # whole class-size + diversity distribution
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     k=st.integers(2, 9),
     l_threshold=st.integers(2, 5),
@@ -2378,6 +2415,7 @@ def test_fuzz_k_anonymity(spark, duck, k, l_threshold, ubucket, sens_mod,
 # bpe_pair_merge kernel, same total-order tie-break) EXACTLY
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     n_merges=st.integers(2, 10),
     doc_mod=st.integers(1, 5),

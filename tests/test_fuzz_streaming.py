@@ -178,6 +178,7 @@ def _replay_vs_batch(spark, build, filt="none"):
 # x filter)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(spec=_spec())
 @FUZZ
 def test_fuzz_stream_window_parity(spark, spec):
@@ -196,6 +197,7 @@ def test_fuzz_stream_window_parity(spark, spec):
 # docstring).
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 @given(
     window=st.sampled_from(_WINDOWS),
     delay=st.sampled_from(sorted(_DELAYS)),
@@ -246,6 +248,7 @@ FUZZ_PACKED = settings(
 )
 
 
+@pytest.mark.slow
 @given(
     n_buckets=st.sampled_from([1, 2, 7, 32]),
     null_mod=st.integers(2, 9),
@@ -289,6 +292,7 @@ def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
     assert packed.exceptAll(plain).count() == 0
 
 
+@pytest.mark.slow
 @given(
     n_buckets=st.sampled_from([1, 2, 7, 32]),
     key_mod=st.sampled_from([1, 3, 10]),
@@ -341,6 +345,7 @@ def test_fuzz_stream_keep_latest_packed_parity(
     assert packed.exceptAll(plain).count() == 0
 
 
+@pytest.mark.slow
 @given(
     n_buckets=st.sampled_from([1, 2, 7, 32]),
     window=st.sampled_from([4, 8]),
@@ -397,6 +402,7 @@ def test_fuzz_stream_ewma_packed_parity(
     assert packed.exceptAll(plain).count() == 0
 
 
+@pytest.mark.slow
 @given(
     n_buckets=st.sampled_from([1, 2, 7, 32]),
     key_mod=st.sampled_from([1, 3, 11]),

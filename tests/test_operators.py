@@ -4,6 +4,7 @@ checks on constructed data."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shuttle_spark.operators import dedup as D
@@ -350,6 +351,7 @@ def test_cluster_keep_best_picks_highest_score(spark):
     assert kept == [2, 4, 5]
 
 
+@pytest.mark.slow
 def test_zero_norm_vectors_score_zero_never_nan(spark):
     """An all-zero embedding must score cosine 0.0 on EVERY scoring path
     (brute force, LSH re-score, IVF probe) — 0/0 would be NaN, which

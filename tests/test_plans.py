@@ -8,6 +8,7 @@ top-k avoids global sort."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shuttle_spark.catalog import load_table
@@ -149,6 +150,7 @@ def test_tpch_q21_decorrelated_plan(spark):
     assert a["top_k"] and not a["python_stages"]
 
 
+@pytest.mark.slow
 def test_aqe_splits_skewed_join(spark):
     """AQE skew-join handling — the engine's answer to the reference's
     worker-group spreading of hot partitions.  One key owns ~95% of the left

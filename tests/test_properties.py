@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -51,6 +52,7 @@ def test_keep_latest_matches_reference(spark, rows):
     assert got == set(want.values())
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @SLOW
 def test_salted_agg_matches_plain(spark, rows):
@@ -93,6 +95,7 @@ def _py_ngrams(text: str, n: int = 2) -> set[str]:
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
 
+@pytest.mark.slow
 @given(texts=texts_strategy)
 @SLOW
 def test_exact_jaccard_pairs_match_reference(spark, texts):
@@ -116,6 +119,7 @@ def test_exact_jaccard_pairs_match_reference(spark, texts):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     left=st.lists(st.tuples(st.integers(0, 3), st.integers(0, 20)), min_size=1, max_size=15),
     right=st.lists(st.tuples(st.integers(0, 3), st.integers(0, 20)), min_size=1, max_size=15),
@@ -147,6 +151,7 @@ edges_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(edges=edges_strategy)
 @SLOW
 def test_connected_components_match_union_find(spark, edges):
@@ -190,6 +195,7 @@ vals_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(rows=vals_strategy)
 @SLOW
 def test_global_rank_matches_sorted_reference(spark, rows):
@@ -209,6 +215,7 @@ def test_global_rank_matches_sorted_reference(spark, rows):
     assert out == want
 
 
+@pytest.mark.slow
 @given(rows=vals_strategy)
 @SLOW
 def test_global_pctrank_matches_reference(spark, rows):
@@ -266,6 +273,7 @@ def _pygrams(text: str, n: int) -> set[str]:
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
 
+@pytest.mark.slow
 @given(corpus=words_strategy, bench=words_strategy)
 @SLOW
 def test_decontaminate_matches_bruteforce(spark, corpus, bench):
@@ -309,6 +317,7 @@ def test_repetition_matches_bruteforce(spark, texts):
         assert abs(got[i] - want) < 1e-9, (i, t, got[i], want)
 
 
+@pytest.mark.slow
 @given(
     tokens=st.lists(st.integers(1, 10_000), min_size=1, max_size=8),
     target=st.integers(1, 50_000),
@@ -339,6 +348,7 @@ def test_mixture_weights_matches_reference(spark, tokens, target):
         assert ge == exp
 
 
+@pytest.mark.slow
 @given(
     strings=st.lists(
         st.text(alphabet="abcx yz", min_size=0, max_size=12),
@@ -374,6 +384,7 @@ def test_fuzzy_string_join_matches_bruteforce(spark, strings, tau):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     edges=st.sets(
         st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
@@ -417,6 +428,7 @@ edges_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(edges=edges_strategy, k=st.integers(1, 5))
 @SLOW
 def test_kcore_matches_sequential_peel(spark, edges, k):
@@ -451,6 +463,7 @@ snapshot_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(old_rows=snapshot_strategy, new_rows=snapshot_strategy)
 @SLOW
 def test_changeset_roundtrip_property(spark, old_rows, new_rows):
@@ -474,6 +487,7 @@ def test_changeset_roundtrip_property(spark, old_rows, new_rows):
     )
 
 
+@pytest.mark.slow
 @given(old_rows=snapshot_strategy, new_rows=snapshot_strategy)
 @SLOW
 def test_incremental_totals_equal_recompute_property(spark, old_rows, new_rows):
@@ -511,6 +525,7 @@ def test_incremental_totals_equal_recompute_property(spark, old_rows, new_rows):
     assert got == direct
 
 
+@pytest.mark.slow
 @given(edges=edges_strategy, rounds=st.integers(1, 4))
 @SLOW
 def test_label_propagation_matches_synchronous_replay(spark, edges, rounds):

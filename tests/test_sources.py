@@ -96,6 +96,7 @@ def test_bucketed_join_skips_shuffle(spark):
     assert j.count() == want
 
 
+@pytest.mark.slow
 def test_python_datasource_batch(spark):
     """Custom Python DataSource (Spark 4 API): deterministic, partitioned,
     schema-stable batch reads."""
@@ -127,6 +128,7 @@ def test_python_datasource_batch(spark):
     assert df.select("event_id").distinct().count() == 5000
 
 
+@pytest.mark.slow
 def test_python_datasource_stream_equals_batch(spark):
     """The streaming side of the custom source replays the identical rows
     the batch side produces (offsets are pure id ranges)."""
@@ -214,6 +216,7 @@ def test_compact_small_files(spark, tmp_path):
         assert hi1 <= lo2  # disjoint -> skippable
 
 
+@pytest.mark.slow
 def test_zorder_write_bounds_both_dims(spark, tmp_path):
     """Z-order clustering: after a 2-dim Z-curve write, parquet row-group
     min/max stats are bounded on BOTH dimensions, so filters on either
@@ -275,6 +278,7 @@ def test_zorder_write_bounds_both_dims(spark, tmp_path):
     assert len(zx) >= 16  # enough row groups for the property to mean much
 
 
+@pytest.mark.slow
 def test_zorder_write_collapsed_domain_files_nonempty(spark, tmp_path):
     """Low-cardinality dimensions dedupe quantile boundaries, collapsing
     the occupied z-key domain far below 2^(bits*n); slicing the
@@ -324,6 +328,7 @@ def test_zorder_write_collapsed_domain_files_nonempty(spark, tmp_path):
     assert sum(1 for c in ccounts if c > 0) == 1 and sum(ccounts) == 512
 
 
+@pytest.mark.slow
 def test_murmur3_matches_spark_hash(spark):
     """_murmur3_int32 must be bit-identical to Spark's Murmur3 over
     IntegerType (seed 42) — zorder_write's deterministic slice placement

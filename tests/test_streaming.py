@@ -11,7 +11,9 @@ readers only consume `_final` partition files
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from shuttle_spark.catalog import load_table
@@ -59,6 +61,7 @@ def test_windowed_agg_stream_equals_batch(spark):
     assert _rows(got.filter(F.col("w") + F.expr("INTERVAL 1 HOUR") <= F.lit(cutoff))) == want
 
 
+@pytest.mark.slow
 def test_session_stream_equals_batch(spark):
     got = run_available_now(
         session_agg_stream(events_stream(spark, SF), "30 minutes", "2 hours"),
@@ -83,6 +86,7 @@ def test_session_stream_equals_batch(spark):
     assert _rows(got.filter(F.col("session_end") <= F.lit(cutoff))) == want
 
 
+@pytest.mark.slow
 def test_stream_dedup_is_exact_on_unique_keys(spark):
     got = run_available_now(
         stream_dedup(events_stream(spark, SF), ["event_id"], "2 hours"),
@@ -93,6 +97,7 @@ def test_stream_dedup_is_exact_on_unique_keys(spark):
     assert got.select("event_id").distinct().count() == got.count()
 
 
+@pytest.mark.slow
 def test_stream_keep_latest_equals_batch(spark):
     got = run_available_now(
         stream_keep_latest(events_stream(spark, SF)), "kl_stream"
@@ -111,6 +116,7 @@ def test_stream_keep_latest_equals_batch(spark):
     assert _rows(got) == want
 
 
+@pytest.mark.slow
 def test_stream_file_sink_roundtrip(spark):
     """Streaming ETL to a parquet file sink (AvailableNow): the output of a
     replayed windowed aggregation lands as parquet and reads back equal to
@@ -173,6 +179,7 @@ def test_upsert_sink_is_idempotent_and_matches_batch(spark):
     assert rows2 == rows1
 
 
+@pytest.mark.slow
 def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
     """A stream over an empty landing dir runs zero batches; the sink must
     return empty state (not IndexError on a fresh versionless path —
@@ -343,6 +350,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
+@pytest.mark.slow
 @given(
     window=st.sampled_from(["30 minutes", "1 hour", "3 hours"]),
     watermark=st.sampled_from(["1 hour", "2 hours"]),
@@ -407,6 +415,7 @@ def test_fuzz_stream_batch_window_equivalence(spark, window, watermark, key, mod
     assert got == batch
 
 
+@pytest.mark.slow
 def test_stream_ewma_equals_batch_single_and_multi_batch(spark):
     """stream_ewma_deviants == relational.ewma_deviants on the finalized
     subset, bit-for-bit — in BOTH replay shapes: single-batch (all rows
@@ -615,6 +624,7 @@ def test_stream_locf_equals_batch_single_and_multi_batch(spark):
     assert any(r[-1] for r in want)  # the data exercises real fills
 
 
+@pytest.mark.slow
 def test_stream_locf_packed_parity_and_batch_equality(spark):
     """stream_locf_packed == stream_locf row-for-row (exceptAll both
     ways, full output including the not-yet-finalized-free tail) AND ==
@@ -653,6 +663,7 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
         assert packed.filter(F.col("was_filled")).count() > 0, name
 
 
+@pytest.mark.slow
 def test_stream_keep_latest_packed_parity(spark):
     """stream_keep_latest_packed == stream_keep_latest row-for-row
     (exceptAll both ways), single- and multi-batch — the packed form is
@@ -722,6 +733,7 @@ def test_stream_cusum_equals_batch_single_and_multi_batch(spark):
     assert any(r[-1] for r in want) and not all(r[-1] for r in want)
 
 
+@pytest.mark.slow
 def test_stream_ewma_packed_parity(spark):
     """stream_ewma_packed == stream_ewma_deviants row-for-row (exceptAll
     both ways), single- and multi-batch — packing is a physical layout
@@ -787,6 +799,7 @@ def test_stream_cusum_rejects_non_integral_tiebreak(spark):
         stream_cusum_packed(src, tiebreak_col="value")
 
 
+@pytest.mark.slow
 def test_stream_cusum_packed_parity(spark):
     """stream_cusum_packed == stream_cusum row-for-row (exceptAll both
     ways), single- and multi-batch — packing is a physical layout
@@ -838,3 +851,32 @@ def test_replay_partitions_tracks_local_cores(spark):
         assert p == max(4, min(16, cores))
     # bounds are parameters, not constants
     assert replay_partitions(spark, lo=2, hi=8) <= 8
+
+
+@pytest.mark.parametrize(
+    "master,cores",
+    [
+        pytest.param(master, cores, id=master)
+        for master, cores in [
+            ("local[4]", 4),
+            ("local[*]", os.cpu_count()),
+            ("local[4,2]", 4),
+            ("local[*,3]", os.cpu_count()),
+            ("local[12]", 12),
+            ("spark://head:7077", 7),  # non-local: the context's parallelism
+            ("local", 7),
+        ]
+    ],
+)
+def test_replay_partitions_parses_every_master_form(master, cores):
+    """local[N,F] / local[*,F] (F = task-failure limit) are legal masters;
+    only the leading thread count sizes the replay."""
+    from types import SimpleNamespace
+
+    from shuttle_spark.streaming.core import replay_partitions
+
+    fake = SimpleNamespace(
+        sparkContext=SimpleNamespace(master=master, defaultParallelism=7)
+    )
+    assert replay_partitions(fake, lo=1, hi=64) == cores
+    assert replay_partitions(fake) == max(4, min(16, cores))
