@@ -4164,80 +4164,26 @@ def q_stream_keep_latest(spark: SparkSession, sf: str) -> DataFrame:
     "B8",
 )
 def q_stream_keep_latest_packed(spark: SparkSession, sf: str) -> DataFrame:
-    """stream_keep_latest with PACKED state (VERDICT r10 item 6): many
-    logical keys share one physical state group, so the ~1.1 ms
-    applyInPandasWithState per-group constant (re-measured; see
-    streaming.core.replay_partitions) pays once per BUCKET per
-    batch instead of once per key — the 100 TB state-scaling transform
-    stream_locf_packed shipped, extended to the keep-latest family.
-    Oracle is the per-key contract's SQL VERBATIM (batch keep-latest
-    restricted to quiesced users), and a pytest parity gate holds packed
-    == per-key row-for-row; the per-key original stays contracted as
-    regression coverage."""
+    """stream_keep_latest in the PACKED state layout
+    (``n_state_buckets=32``): many logical keys share one physical state
+    group, so the per-group runner constant (cost model:
+    streaming.core._keyed_recurrence) pays once per BUCKET per batch
+    instead of once per key.  Oracle is the per-key contract's SQL
+    VERBATIM (batch keep-latest restricted to quiesced users), and a
+    pytest parity gate holds packed == per-key row-for-row; the per-key
+    layout stays contracted as regression coverage."""
     from shuttle_spark.streaming import (
         events_stream,
         run_available_now,
-        stream_keep_latest_packed,
+        stream_keep_latest,
     )
 
     out = run_available_now(
-        stream_keep_latest_packed(events_stream(spark, sf)),
+        stream_keep_latest(events_stream(spark, sf), n_state_buckets=32),
         f"sklp_{abs(hash(sf)) % 99999}",
         shuffle_partitions=4,
     )
     return out.select("user_id", "ts_us", "event_id", "event_type")
-
-
-def _register_tws_contract() -> None:
-    """stream_keep_latest_tws is registered ONLY where the runtime can
-    execute it (google.protobuf present — the TWS Python runner's state
-    protocol): the registry reflects the environment instead of shipping a
-    contract guaranteed to error.  The same keep-latest semantics stay
-    always-contracted via stream_keep_latest (applyInPandasWithState) and
-    stream_upsert_sink (foreachBatch); environments with protobuf
-    additionally gate the Spark-4 successor API against the same oracle."""
-    from shuttle_spark.streaming.core import tws_available
-
-    if not tws_available():
-        return
-
-    @contract(
-        "stream_keep_latest_tws",
-        "SELECT user_id, epoch_us(ts::TIMESTAMP) AS ts_us, event_id,"
-        " event_type"
-        " FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id"
-        "   ORDER BY ts::TIMESTAMP DESC, event_id DESC) AS rn FROM events)"
-        " WHERE rn = 1",
-        "B8",
-    )
-    def q_stream_keep_latest_tws(spark: SparkSession, sf: str) -> DataFrame:
-        """Keep-latest on transformWithStateInPandas (Spark 4 successor
-        stateful API): the update log's last emission per key reduced to
-        the final winner must hash-match the batch keep-latest oracle over
-        ALL events (update mode emits every key, so no watermark
-        restriction)."""
-        from shuttle_spark.streaming.core import (
-            events_stream_multi,
-            run_available_now,
-            stream_keep_latest_tws,
-        )
-
-        out = run_available_now(
-            stream_keep_latest_tws(events_stream_multi(spark, sf, n_files=4)),
-            output_mode="update",
-            shuffle_partitions=4,
-            session_conf={
-                "spark.sql.streaming.stateStore.providerClass":
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider"
-            },
-        )
-        return D.keep_latest(
-            out, ["user_id"], [F.col("ts_us").desc(), F.col("event_id").desc()]
-        ).select("user_id", "ts_us", "event_id", "event_type")
-
-
-_register_tws_contract()
 
 
 @contract(
@@ -6258,17 +6204,17 @@ def q_stream_ewma_anomalies(spark: SparkSession, sf: str) -> DataFrame:
     "B17",
 )
 def q_stream_ewma_packed(spark: SparkSession, sf: str) -> DataFrame:
-    """stream_ewma_deviants with PACKED state (r11 — third family on the
-    packed-state transform): same FIR recurrence, same finalize rule,
+    """stream_ewma_deviants in the PACKED state layout
+    (``n_state_buckets=32``): same FIR recurrence, same finalize rule,
     same batch oracle VERBATIM as stream_ewma_anomalies, but keys share
-    pmod hash buckets so the ~1.3 ms/group applyInPandasWithState
-    constant is paid per bucket per batch.  The per-key original stays
-    contracted as regression coverage of the one-group-per-key path;
-    packed == per-key is additionally exceptAll-parity-tested."""
+    hash buckets so the per-group runner constant (cost model:
+    streaming.core._keyed_recurrence) is paid per bucket per batch.  The
+    per-key layout stays contracted as regression coverage; packed ==
+    per-key is additionally exceptAll-parity-tested."""
     from shuttle_spark.streaming import (
         events_stream,
         run_available_now,
-        stream_ewma_packed,
+        stream_ewma_deviants,
     )
 
     ev = load_table(spark, sf, "events")
@@ -6276,7 +6222,7 @@ def q_stream_ewma_packed(spark: SparkSession, sf: str) -> DataFrame:
         ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] - 7_201_000_000
     )
     out = run_available_now(
-        stream_ewma_packed(events_stream(spark, sf)),
+        stream_ewma_deviants(events_stream(spark, sf), n_state_buckets=32),
         f"sewmp_{abs(hash(sf)) % 99999}",
         shuffle_partitions=4,
     )
@@ -6363,18 +6309,16 @@ def q_stream_locf_census(spark: SparkSession, sf: str) -> DataFrame:
     "B17",
 )
 def q_stream_locf_packed_census(spark: SparkSession, sf: str) -> DataFrame:
-    """``stream_locf_census`` through the PACKED-state operator
-    (streaming.stream_locf_packed): many logical keys share one physical
-    applyInPandasWithState group, amortizing the measured ~1.3 ms
+    """``stream_locf_census`` through the PACKED state layout
+    (``stream_locf(..., n_state_buckets=32)``): many logical keys share
+    one physical applyInPandasWithState group, amortizing the
     per-group-invocation constant that dominates per-key stateful
-    replays (round-9 profile: a trivial fold at 1500 keys costs 3x the
-    same fold at 10 keys on identical data).  Shares the batch window
-    oracle VERBATIM with the per-key contract — packed == per-key ==
-    batch in one checksum — and a direct packed-vs-per-key exceptAll
-    parity test rides tests/test_streaming.py.  Measured at sf0.1:
-    per-key replay ~5.2 s warm, packed ~1.8 s, identical output."""
+    replays (cost model: streaming.core._keyed_recurrence).  Shares the
+    batch window oracle VERBATIM with the per-key contract — packed ==
+    per-key == batch in one checksum — and a direct packed-vs-per-key
+    exceptAll parity test rides tests/test_streaming.py."""
     from shuttle_spark.streaming import events_stream, run_available_now
-    from shuttle_spark.streaming.core import stream_locf_packed
+    from shuttle_spark.streaming.core import stream_locf
 
     ev = load_table(spark, sf, "events")
     cutoff_us = (
@@ -6387,7 +6331,7 @@ def q_stream_locf_packed_census(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     out = run_available_now(
-        stream_locf_packed(src),
+        stream_locf(src, n_state_buckets=32),
         f"slocfp_{abs(hash(sf)) % 99999}",
         shuffle_partitions=4,
     )
@@ -6714,24 +6658,24 @@ def q_stream_cusum_census(spark: SparkSession, sf: str) -> DataFrame:
     "B17",
 )
 def q_stream_cusum_packed_census(spark: SparkSession, sf: str) -> DataFrame:
-    """stream_cusum with PACKED state (r12 — fourth family on the
-    packed-state transform): same two-counter recurrence, same
-    finalize rule, same batch-closed-form oracle VERBATIM as
-    stream_cusum_census, but keys share pmod(hash) buckets so the
-    ~1.3 ms/group applyInPandasWithState constant is paid per bucket
-    per batch — the 100 TB answer when the metric-name key space is
-    wide.  The per-key original stays contracted as regression
-    coverage; packed == per-key is additionally exceptAll-parity and
-    replay-space fuzz tested."""
+    """stream_cusum in the PACKED state layout (``n_state_buckets=32``):
+    same two-counter recurrence, same finalize rule, same
+    batch-closed-form oracle VERBATIM as stream_cusum_census, but keys
+    share pmod(hash) buckets so the per-group runner constant (cost
+    model: streaming.core._keyed_recurrence) is paid per bucket per
+    batch — the 100 TB answer when the metric-name key space is wide.
+    The per-key layout stays contracted as regression coverage; packed
+    == per-key is additionally exceptAll-parity and replay-space fuzz
+    tested."""
     from shuttle_spark.streaming import events_stream, run_available_now
-    from shuttle_spark.streaming.core import stream_cusum_packed
+    from shuttle_spark.streaming.core import stream_cusum
 
     ev = load_table(spark, sf, "events")
     cutoff_us = (
         ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] - 7_201_000_000
     )
     out = run_available_now(
-        stream_cusum_packed(events_stream(spark, sf)),
+        stream_cusum(events_stream(spark, sf), n_state_buckets=32),
         f"scusp_{abs(hash(sf)) % 99999}",
         shuffle_partitions=4,
     )
@@ -8710,7 +8654,7 @@ def q_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
 #
 # Round-9 late rotation: stream_locf_packed_census (the packed-state
 # LOCF — many logical keys per physical state group, amortizing the
-# measured ~1.3 ms applyInPandasWithState per-group constant; shares the
+# applyInPandasWithState per-group constant; shares the
 # per-key contract's batch oracle VERBATIM and an exceptAll parity test)
 # displaces ngram_jaccard_prefix (B28 keeps minhash_replay_equal +
 # simhash_replay_equal + semantic_dedup_kept; the PPJoin prefix row is

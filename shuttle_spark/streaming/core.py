@@ -5,8 +5,9 @@ worker file is `_final` before reading (/root/reference/src/main/java/com/oppo/
 shuttle/rss/clients/ShufflePartitionReader.java:134-153) — is the moral
 ancestor of the watermark: both declare "this slice of input is complete, you
 may emit".  Our engine exposes the Spark-native version: file-source streams,
-event-time watermarks, tumbling/session windows, stream dedup, and a custom
-stateful keep-latest built on ``applyInPandasWithState``.
+event-time watermarks, tumbling/session windows, stream dedup, and four
+stateful keyed recurrences (keep-latest, EWMA, LOCF, CUSUM) on one
+``applyInPandasWithState`` kernel, ``_keyed_recurrence``.
 
 Correctness protocol (tested in tests/test_streaming.py): every streaming
 operator replayed to completion over a static directory must equal its batch
@@ -35,7 +36,8 @@ import shutil
 import tempfile
 import time
 import uuid
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -265,342 +267,504 @@ def stream_dedup(
     )
 
 
+# ---------------------------------------------------------------------------
+# Keyed recurrences: one stateful fold, four families
+# ---------------------------------------------------------------------------
+
+_NULL_CENTS = -(2**62)  # a NULL cents value inside the long-array state
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+class _Family(NamedTuple):
+    """One keyed recurrence, as a spec for ``_keyed_recurrence``.
+
+    * ``out``: the output columns after the key, in order.  The kernel
+      fills ``ts_us`` and the order column; ``step`` fills the rest.
+    * ``inputs``: the event columns ``ingest`` reads.
+    * ``ingest(pdf) -> (ok, payload)``: the per-row arrays kept while a
+      row is pending, plus a mask of the rows to ingest (None = all).
+    * ``payload``: the state types of those arrays.
+    * ``carry``: per-key carry fields as ``(name, shape, initial)``.
+    * ``step(k, ts, payload, carry, wm_us) -> (emit, cols, keep,
+      carry)``: takes the pending rows sorted by (key, ts, order), with
+      ``k`` indexing the per-key ``carry`` arrays, and returns the
+      indices of the emitted rows, their ``cols``, the mask of rows
+      still pending and the new carry."""
+
+    out: list[tuple[str, T.DataType]]
+    inputs: list[str]
+    ingest: Callable
+    payload: list[tuple[str, T.DataType]]
+    carry: list[tuple[str, tuple[int, ...], int]]
+    step: Callable
+
+
+def _keyed_recurrence(
+    events: DataFrame,
+    key_col: str,
+    ts_col: str,
+    order_col: str,
+    family: _Family,
+    n_state_buckets: int | None,
+    watermark: str,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` fold behind every stateful
+    stream family in this module (keep-latest, EWMA, LOCF, CUSUM).
+
+    Rows buffer in state as pending ``(key, ts_us, order, payload)``
+    arrays next to a per-key carry.  Each invocation drops true-late
+    rows, sorts the pending rows by (key, ts, order) and hands them to
+    the family's ``step``, which emits what the watermark has finalized
+    and threads the carry through.  A finalized row's predecessors have
+    smaller or equal event time, so they finalized with or before it,
+    and a step sees each key's history in batch order: stream == batch
+    on the finalized subset.
+
+    **Late rule.**  A row whose event time is strictly before the
+    batch's watermark (``us < wm_us``) is dropped; a row AT the
+    watermark is kept, because the ewma/locf/cusum steps finalize
+    ``ts_us <= wm_us``.  On Spark 4.1.2 this rule is the only filter:
+    Spark passes strictly-late rows into the fold and reports
+    ``numRowsDroppedByWatermark = 0``, so streaming progress does not
+    count these drops.  In-order sources (a range-staged replay, a
+    production landing zone) produce no late rows.
+
+    **Timeout.**  While rows are pending, the event-time timeout is
+    re-armed at ``max(min_pending_ms + 1, wm_ms + 1)``, so the group is
+    invoked again, with or without new rows, once the watermark passes
+    its oldest pending row.
+
+    **State hygiene.**  Keys whose carry equals its initial value are
+    not stored, and a group with no stored key and nothing pending is
+    removed, so no drained entry without a timeout is left behind.
+
+    **Layouts.**  ``n_state_buckets=None`` makes each key its own state
+    group.  An int packs keys into ``pmod(hash(key), n_state_buckets)``
+    groups; the fold is the same, so the layout changes only how many
+    groups exist.  That count is the cost model: Spark's runner costs
+    ~1.1 ms of wall per group invocation whatever the fold does
+    (local[4], sf0.1, engine worker daemon: a trivial count fold over
+    1,500 keys replays in 2.69 s vs 1.05 s over 10 keys).  Per-key
+    state pays keys x batches x that constant, packed state pays it per
+    bucket per batch, and the steps are vectorized numpy over a group's
+    rows.  Size ``n_state_buckets`` ~= shuffle partitions x a small
+    constant: enough groups to keep every core busy, few enough that
+    the per-group constant vanishes.
+
+    ``order_col`` must be integral: it rides the LongType state and
+    output schemas."""
+    types = {f.name: f.dataType for f in events.schema.fields}
+    if not isinstance(types.get(order_col), _INTEGRAL):
+        got = types.get(order_col)
+        raise ValueError(
+            f"order column {order_col!r} must be an integral column (got"
+            f" {got.simpleString() if got else 'no such column'}); it rides"
+            " the LongType state and output schemas"
+        )
+    key_type = types[key_col]
+    key_np = "int64" if isinstance(key_type, _INTEGRAL) else object
+    row_np = ["int64", "int64"] + [
+        "int64" if isinstance(t, T.LongType) else object
+        for _, t in family.payload
+    ]
+    longs = T.ArrayType(T.LongType())
+    # keys holding a carry or pending rows, their carry, how many pending
+    # rows each holds, then the pending rows in key-run order
+    state_schema = T.StructType(
+        [T.StructField("keys", T.ArrayType(key_type))]
+        + [T.StructField(name, longs) for name, _, _ in family.carry]
+        + [
+            T.StructField("p_count", longs),
+            T.StructField("p_ts", longs),
+            T.StructField("p_ord", longs),
+        ]
+        + [T.StructField(name, T.ArrayType(t)) for name, t in family.payload]
+    )
+    out_schema = T.StructType(
+        [T.StructField(key_col, key_type)]
+        + [T.StructField(name, t) for name, t in family.out]
+    )
+    n_carry = len(family.carry)
+
+    def fold(_key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
+        s = state.get if state.exists else [[]] * len(state_schema)
+        keys = np.asarray(s[0], dtype=key_np)
+        carry = [
+            np.asarray(s[1 + i], dtype="int64").reshape(len(keys), *shape)
+            for i, (_, shape, _) in enumerate(family.carry)
+        ]
+        counts = np.asarray(s[1 + n_carry], dtype="int64")
+        rows = [np.repeat(np.arange(len(keys)), counts)] + [
+            np.asarray(v, dtype=d) for v, d in zip(s[2 + n_carry:], row_np)
+        ]
+        new = []
+        for pdf in pdf_iter:
+            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
+            ok, payload = family.ingest(pdf)
+            live = us >= wm_us  # the late rule
+            if ok is not None:
+                live &= ok
+            cols = (pdf[key_col].to_numpy(), us, pdf[order_col].to_numpy())
+            new.append([a[live] for a in (*cols, *payload)])
+        if new:
+            new_keys, *new_rows = map(np.concatenate, zip(*new))
+            # codes in first-appearance order keep the stored keys' codes
+            codes, keys = pd.factorize(
+                np.concatenate([keys, new_keys.astype(key_np)]),
+                use_na_sentinel=False,
+            )
+            new_rows.insert(0, codes[len(codes) - len(new_keys):])
+            rows = [np.concatenate(r) for r in zip(rows, new_rows)]
+            carry = [
+                np.concatenate(
+                    [c, np.full((len(keys) - len(c), *shape), init, "int64")]
+                )
+                for c, (_, shape, init) in zip(carry, family.carry)
+            ]
+        k, ts, order, *payload = rows
+        out = None
+        if len(ts):
+            o = np.lexsort((order, ts, k))
+            k, ts, order = k[o], ts[o], order[o]
+            payload = [p[o] for p in payload]
+            emit, cols, keep, carry = family.step(k, ts, payload, carry, wm_us)
+            if len(emit):
+                cols[key_col], cols[order_col] = keys[k[emit]], order[emit]
+                cols["ts_us"] = ts[emit]
+                out = pd.DataFrame({c.name: cols[c.name] for c in out_schema})
+            k, ts, order = k[keep], ts[keep], order[keep]
+            payload = [p[keep] for p in payload]
+        counts = np.bincount(k, minlength=len(keys))
+        stored = counts > 0
+        for c, (_, _, init) in zip(carry, family.carry):
+            stored |= (c != init).any(axis=tuple(range(1, c.ndim)))
+        if not stored.any():
+            if state.exists:
+                state.remove()
+        else:
+            state.update(
+                (
+                    keys[stored].tolist(),
+                    *(c[stored].ravel().tolist() for c in carry),
+                    counts[stored].tolist(),
+                    ts.tolist(),
+                    order.tolist(),
+                    *(p.tolist() for p in payload),
+                )
+            )
+            if len(ts):
+                state.setTimeoutTimestamp(
+                    max(int(ts.min()) // 1000 + 1, wm_ms + 1)
+                )
+        if out is not None:
+            yield out
+
+    src = events.select(
+        *dict.fromkeys([key_col, ts_col, order_col, *family.inputs])
+    )
+    if n_state_buckets is None:
+        grouped = src.withWatermark(ts_col, watermark).groupBy(key_col)
+    else:
+        grouped = (
+            src.withColumn(
+                "__bucket",
+                F.pmod(F.hash(F.col(key_col)), F.lit(n_state_buckets)),
+            )
+            .withWatermark(ts_col, watermark)
+            .groupBy("__bucket")
+        )
+    return grouped.applyInPandasWithState(
+        fold,
+        out_schema,
+        state_schema,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _segments(k: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """For key-sorted codes ``k``: the mask of each key run's first and
+    last row, and each row's rank within its run."""
+    start = np.ones(len(k), dtype=bool)
+    start[1:] = k[1:] != k[:-1]
+    end = np.ones(len(k), dtype=bool)
+    end[:-1] = start[1:]
+    idx = np.arange(len(k))
+    return start, end, idx - np.maximum.accumulate(np.where(start, idx, 0))
+
+
+def _cents(pdf: pd.DataFrame, col: str, scale: int):
+    """``floor(value * scale + 0.5)`` as int64 (0 where NULL) and the
+    non-NULL mask: the same double expression as the batch twins."""
+    v = pdf[col].to_numpy(dtype="float64")
+    ok = ~np.isnan(v)
+    return np.floor(np.where(ok, v, 0.0) * scale + 0.5).astype("int64"), ok
+
+
 def stream_keep_latest(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
-) -> DataFrame:
-    """Custom stateful operator: latest row per key, emitted once the
-    watermark closes the key's quiet period (B8's streaming twin — the
-    stale-attempt filter of PartitionPipeReader.java:150-170 as a live op).
-
-    Built on ``applyInPandasWithState``: state = the current winner per key;
-    each micro-batch folds its rows in; on event-time timeout the winner is
-    emitted and state freed.  The payload is the events-table shape
-    (event_id tiebreak + event_type), FIXED: a payload_cols parameter
-    previously accepted here was silently ignored — for arbitrary payload
-    columns use the batch twin ``dedup.keep_latest`` or the foreachBatch
-    sink ``run_upsert_sink``, which honor them.  Output schema: key,
-    ts_us (epoch micros), event_id, event_type.
-    """
-    out_fields = [
-        T.StructField(key_col, T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ]
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            ts_us, event_id, event_type = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "ts_us": [ts_us],
-                    "event_id": [event_id],
-                    "event_type": [event_type],
-                }
-            )
-            return
-        best = state.get if state.exists else None
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # total order (ts, event_id) — deterministic like the
-            # reference's attemptId tiebreak.  Pure-numpy argmax: this
-            # closure runs once per KEY per batch (tens of thousands of
-            # calls), so pandas sort_values/assign copies here were the
-            # dominant stream cost.
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            eid = pdf["event_id"].values.astype("int64")
-            i = int(np.lexsort((eid, us))[-1])
-            cand = (int(us[i]), int(eid[i]), str(pdf["event_type"].values[i]))
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        if best is not None:
-            state.update(best)
-            # emit once the watermark passes the key's last-seen event time
-            # (timeout must stay ahead of the current watermark)
-            state.setTimeoutTimestamp(
-                max(best[0] // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        return
-        yield  # pragma: no cover — marks this function as a generator
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            T.StructType(out_fields),
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_keep_latest_packed(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
     watermark: str = "2 hours",
-    n_state_buckets: int = 32,
+    n_state_buckets: int | None = None,
 ) -> DataFrame:
-    """``stream_keep_latest`` with PACKED state (VERDICT r10 item 6) —
-    the second family to ship the ``stream_locf_packed`` transform, the
-    100 TB state-scaling answer to applyInPandasWithState's per GROUP
-    INVOCATION constant, re-measured at ~1.1 ms of wall per group
-    (see ``replay_partitions``): per-key state pays keys x batches x
-    that constant (the whole budget at a 10M-key stream), packed state
-    pays it once per BUCKET per batch and runs the per-key argmax
-    vectorized over the bucket's rows.
+    """Latest row per key, emitted once the watermark closes the key's
+    quiet period (B8's streaming twin — the stale-attempt filter of
+    PartitionPipeReader.java:150-170 as a live op).  A key's winner is
+    its max row under the total (ts, event_id) order; it is emitted when
+    ``ts_ms < watermark_ms`` and its pending entry is dropped.
 
-    At bench scale the per-group constant was not this operator's main
-    cost: the contract replay (sf0.1, local[4], median of 3 warm runs)
-    read 3.07 s with Spark's stock worker daemon, mostly because every
-    Python task re-read the Spark jar and pyspark.zip directories
-    (0.17-0.35 s per task).  With the engine daemon
-    (``shuttle_spark.pydaemon``) it reads 1.90 s; the per-key
-    ``stream_keep_latest`` went 5.00 -> 4.17 s.
+    The payload is the events-table shape (event_id tiebreak +
+    event_type), FIXED: for arbitrary payload columns use the batch twin
+    ``dedup.keep_latest`` or the foreachBatch sink ``run_upsert_sink``.
+    Output: key, ts_us (epoch micros), event_id, event_type.
 
-    Bucketing is ``pmod(key, n_state_buckets)`` like the locf twin;
-    state per bucket = the pending winners as flat parallel arrays
-    (key, ts_us, event_id, event_type) — O(quiescing keys/bucket), and
-    a key's entry is freed the moment its row is emitted.
+    Strictly-late rows (before the watermark) are dropped by the kernel's
+    late rule; earlier versions folded them into the winner.  No
+    in-order replay produces such rows.  State, late rule, timeout and
+    layouts: ``_keyed_recurrence``; the stream_replay benchmark runs the
+    ``n_state_buckets=32`` layout."""
 
-    Emission protocol is OBSERVATIONALLY IDENTICAL to the per-key
-    operator (asserted by the packed-vs-per-key parity test and by
-    sharing the batch keep-latest oracle verbatim): a key's winner — the
-    max row under the total (ts, event_id) order — is emitted once the
-    watermark passes its event time (``ts_ms < watermark_ms``, exactly
-    the per-key ``setTimeoutTimestamp(best_ts_ms + 1)`` firing rule),
-    and the bucket re-arms its timeout at the EARLIEST pending winner's
-    emission time, so every key emits in the same micro-batch the
-    per-key form would have emitted it."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
+    def step(k, ts, payload, carry, wm_us):
+        _, last, _ = _segments(k)
+        emit = last & (ts // 1000 < wm_us // 1000)
+        cols = {"event_type": payload[0][emit]}
+        return np.flatnonzero(emit), cols, last & ~emit, carry
+
+    family = _Family(
+        out=[
+            ("ts_us", T.LongType()),
+            ("event_id", T.LongType()),
+            ("event_type", T.StringType()),
+        ],
+        inputs=["event_type"],
+        ingest=lambda pdf: (None, [pdf["event_type"].to_numpy(object)]),
+        payload=[("p_type", T.StringType())],
+        carry=[],
+        step=step,
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("k_ids", T.ArrayType(T.LongType())),
-            T.StructField("k_ts", T.ArrayType(T.LongType())),
-            T.StructField("k_eid", T.ArrayType(T.LongType())),
-            T.StructField("k_type", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            k_ids = np.asarray(state.get[0], dtype="int64")
-            k_ts = np.asarray(state.get[1], dtype="int64")
-            k_eid = np.asarray(state.get[2], dtype="int64")
-            k_type = np.asarray(list(state.get[3]), dtype=object)
-        else:
-            k_ids = k_ts = k_eid = np.empty(0, dtype="int64")
-            k_type = np.empty(0, dtype=object)
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                k_ids = np.concatenate(
-                    [k_ids, pdf[key_col].values.astype("int64")]
-                )
-                k_ts = np.concatenate([k_ts, us])
-                k_eid = np.concatenate(
-                    [k_eid, pdf["event_id"].values.astype("int64")]
-                )
-                k_type = np.concatenate(
-                    [k_type, pdf["event_type"].values.astype(object)]
-                )
-        if len(k_ids):
-            # per-key winner under the total (ts, event_id) order: sort
-            # by (key, ts, eid) and keep each key's LAST row — one
-            # vectorized pass for the whole bucket instead of a group
-            # invocation per key
-            order = np.lexsort((k_eid, k_ts, k_ids))
-            sorted_keys = k_ids[order]
-            last = np.empty(len(sorted_keys), dtype=bool)
-            last[:-1] = sorted_keys[1:] != sorted_keys[:-1]
-            last[-1] = True
-            sel = order[last]
-            k_ids, k_ts, k_eid, k_type = (
-                k_ids[sel], k_ts[sel], k_eid[sel], k_type[sel],
-            )
-            emit = (k_ts // 1000) < wm_ms
-            out = None
-            if emit.any():
-                out = pd.DataFrame(
-                    {
-                        key_col: k_ids[emit],
-                        "ts_us": k_ts[emit],
-                        "event_id": k_eid[emit],
-                        "event_type": k_type[emit],
-                    }
-                )
-                keep = ~emit
-                k_ids, k_ts, k_eid, k_type = (
-                    k_ids[keep], k_ts[keep], k_eid[keep], k_type[keep],
-                )
-            if len(k_ids):
-                state.update(
-                    (
-                        [int(x) for x in k_ids],
-                        [int(x) for x in k_ts],
-                        [int(x) for x in k_eid],
-                        [str(x) for x in k_type],
-                    )
-                )
-                state.setTimeoutTimestamp(
-                    max(int(k_ts.min()) // 1000 + 1, wm_ms + 1)
-                )
-            elif state.exists:
-                state.remove()
-            if out is not None and len(out):
-                yield out
-        elif state.exists:
-            state.remove()
-
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_recurrence(
+        events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
     )
 
 
-def tws_available() -> bool:
-    """Whether Spark's transformWithStateInPandas runner can execute here:
-    its state-server protocol needs ``google.protobuf`` at runtime."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_keep_latest_tws(
+def stream_ewma_deviants(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
+    value_col: str = "value",
+    threshold_cents: int = 10000,
+    window: int = 8,
+    min_lags: int = 4,
+    watermark: str = "2 hours",
+    n_state_buckets: int | None = None,
 ) -> DataFrame:
-    """Keep-latest on Spark 4's ``transformWithStateInPandas`` — the
-    successor API to ``applyInPandasWithState`` (typed ValueState handles,
-    RocksDB-backed).  Each micro-batch emits the key's current winner
-    (update mode); the winner sequence per key is monotone in
-    (ts_us, event_id), so the LAST update per key is the stream's final
-    answer — the contract reduces the update log with the batch
-    keep-latest and matches the all-events oracle.
+    """Streaming twin of ``relational.ewma_deviants``: per-key EWMA
+    anomaly detection over EVENT-time order.  Rows with a NULL value are
+    not ingested; the others score once the watermark finalizes them
+    (``ts_us <= watermark_us``) against the key's last ``window``
+    finalized cents — exactly the batch operator's lag window, with the
+    same all-integer FIR (cents, dyadic weights, integer
+    cross-multiplied threshold), so stream == batch bit-for-bit on the
+    finalized subset.  Emits the deviant rows as (key, event_id, ts_us,
+    cents, wsum, denom).
 
-    Same semantics as stream_keep_latest (the reference's stale-attempt
-    filter, PartitionPipeReader.java:150-170); kept separate so both
-    stateful APIs stay covered.  On this machine google.protobuf is
-    absent and unobtainable, so this path raises the gated ImportError —
-    closed as a documented environment constraint (ENVIRONMENT.md §1);
-    stream_keep_latest is the shipped engine path.
+    Carry per key = the last ``window`` cents, right-aligned, and their
+    count.  State, late rule, timeout and layouts:
+    ``_keyed_recurrence``."""
+    weights = np.array([1 << (window - j) for j in range(1, window + 1)])
+    cumdenom = np.concatenate([[0], np.cumsum(weights)])
+    lag = np.arange(window + 1)
 
-    ENVIRONMENT NOTE: the transformWithState Python runner requires the
-    ``google.protobuf`` package (its state-server protocol) and the
-    RocksDB state store provider; without protobuf the runner would crash
-    mid-query with an opaque executor error, so this operator probes the
-    import up front and fails fast with a clear message.  The parity test
-    (tests/test_streaming.py) asserts BOTH branches — protobuf present =>
-    batch equality, absent => this exact fail-fast — so the suite carries
-    no environment skip; the contract (stream_keep_latest_tws) is
-    registered only where the runtime can execute it, and the
-    applyInPandasWithState path (stream_keep_latest) plus the foreachBatch
-    sink (run_upsert_sink) carry the always-on oracle gates.
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires the google.protobuf package"
-            " (the state-server protocol of Spark's Python TWS runner),"
-            " which is not installed in this environment; use"
-            " stream_keep_latest (applyInPandasWithState) or run_upsert_sink"
-            " (foreachBatch) for the same keep-latest semantics."
+    def step(k, ts, payload, carry, wm_us):
+        hist, h_len = carry
+        fin = ts <= wm_us
+        f = np.flatnonzero(fin)
+        x, kf = payload[0][f], k[f]
+        _, end, r = _segments(kf)
+        # lags[i, j] = the value j finalized rows before row i (j = 0 is
+        # the row itself); lags past the row's own run read the carry
+        back = lag - r[:, None]
+        lags = np.where(
+            back <= 0,
+            x[np.maximum(np.arange(len(x))[:, None] - lag, 0)],
+            hist[kf[:, None], np.clip(window - back, 0, window - 1)],
         )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
+        n_lags = np.minimum(window, h_len[kf] + r)
+        wsum = (lags[:, 1:] * weights * (lag[1:] <= n_lags[:, None])).sum(1)
+        denom = cumdenom[n_lags]
+        alert = (n_lags >= min_lags) & (
+            np.abs(x * denom - wsum) > threshold_cents * denom
+        )
+        n_new = np.minimum(window, h_len[kf[end]] + r[end] + 1)
+        hist[kf[end]] = np.where(
+            lag[:window] < n_new[:, None], lags[end, :window], 0
+        )[:, ::-1]
+        h_len[kf[end]] = n_new
+        cols = {"cents": x[alert], "wsum": wsum[alert], "denom": denom[alert]}
+        return f[alert], cols, ~fin, [hist, h_len]
+
+    def ingest(pdf):
+        cents, ok = _cents(pdf, value_col, 100)
+        return ok, [cents]
+
+    long = T.LongType()
+    family = _Family(
+        out=[
+            ("event_id", long),
+            ("ts_us", long),
+            ("cents", long),
+            ("wsum", long),
+            ("denom", long),
+        ],
+        inputs=[value_col],
+        ingest=ingest,
+        payload=[("p_cents", long)],
+        carry=[("hist", (window,), 0), ("h_len", (), 0)],
+        step=step,
+    )
+    return _keyed_recurrence(
+        events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
+
+def stream_locf(
+    events: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    value_col: str = "value",
+    watermark: str = "2 hours",
+    n_state_buckets: int | None = None,
+) -> DataFrame:
+    """Streaming twin of ``relational.locf_impute``: last observation
+    carried forward — the online feature-serving shape, where each
+    event's NULL value is filled with the key's most recent observation.
+    Every row (NULL values included: they are what gets imputed) is
+    emitted once the watermark finalizes it (``ts_us <= watermark_us``),
+    in (ts, event_id) order, so the carried value is exactly the batch
+    operator's unbounded-preceding window, bit-for-bit in the cents
+    domain (floor(value*100 + 0.5)).
+
+    Carry per key = the last observed cents.  Emits (key, event_id,
+    ts_us, cents, was_filled); cents is NULL only for leading-NULL rows
+    with no prior observation.  State, late rule, timeout and layouts:
+    ``_keyed_recurrence``."""
+
+    def step(k, ts, payload, carry, wm_us):
+        (last,) = carry
+        fin = ts <= wm_us
+        f = np.flatnonzero(fin)
+        raw, kf = payload[0][f], k[f]
+        _, end, r = _segments(kf)
+        idx = np.arange(len(f))
+        # the latest observation at or before each row, if in its own run
+        seen = np.maximum.accumulate(np.where(raw != _NULL_CENTS, idx, -1))
+        own = seen >= idx - r
+        eff = np.where(own, raw[np.maximum(seen, 0)], last[kf])
+        last[kf[end]] = eff[end]
+        null = eff == _NULL_CENTS
+        cols = {
+            "cents": pd.arrays.IntegerArray(np.where(null, 0, eff), null),
+            "was_filled": (raw == _NULL_CENTS) & ~null,
+        }
+        return f, cols, ~fin, [last]
+
+    def ingest(pdf):
+        cents, ok = _cents(pdf, value_col, 100)
+        cents[~ok] = _NULL_CENTS
+        return None, [cents]
+
+    long = T.LongType()
+    family = _Family(
+        out=[
+            ("event_id", long),
+            ("ts_us", long),
+            ("cents", long),
+            ("was_filled", T.BooleanType()),
+        ],
+        inputs=[value_col],
+        ingest=ingest,
+        payload=[("p_cents", long)],
+        carry=[("last_cents", (), _NULL_CENTS)],
+        step=step,
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
+    return _keyed_recurrence(
+        events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
     )
 
-    class KeepLatest(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._winner = handle.getValueState("winner", state_schema)
 
-        def handleInputRows(self, key, rows, timerValues):
-            best = tuple(self._winner.get()) if self._winner.exists() else None
-            for pdf in rows:
-                for ts_us, event_id, event_type in zip(
-                    pdf["ts_us"], pdf["event_id"], pdf["event_type"]
-                ):
-                    cand = (int(ts_us), int(event_id), str(event_type))
-                    if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                        best = cand
-            self._winner.update(best)
-            yield pd.DataFrame(
-                [(key[0], *best)],
-                columns=[key_col, "ts_us", "event_id", "event_type"],
-            )
+def stream_cusum(
+    events: DataFrame,
+    key_col: str = "event_type",
+    ts_col: str = "ts",
+    value_col: str = "value",
+    target_cents: int = 5000,
+    slack_cents: int = 200,
+    threshold_cents: int = 20000,
+    watermark: str = "2 hours",
+    tiebreak_col: str = "event_id",
+    scale: int = 2,
+    n_state_buckets: int | None = None,
+) -> DataFrame:
+    """Streaming twin of ``relational.cusum_points``: Page's one-sided
+    CUSUM drift detector — the online alerting shape ("page me when the
+    metric stream drifts").  The batch closed form (cumsum - clamped
+    running min) becomes TWO long counters of carry per key: ``c``, the
+    running deviation sum, and ``m``, min(0, running min of c), updated
+    per finalized row (``ts_us <= watermark_us``) in (ts, tiebreak)
+    order.  The emitted statistic ``c - m`` is bit-equal to the batch
+    operator on the finalized subset.  NULL values are filtered before
+    the watermark, like the batch operator's filter.
 
-        def close(self) -> None:
-            pass
+    ``tiebreak_col`` and ``scale`` mirror ``cusum_points``' signature
+    (defaults ``event_id`` / 2); ``tiebreak_col`` must be integral.
+    Emits ``(key, tiebreak, ts_us, stat_cents, is_alert)``.  State, late
+    rule, timeout and layouts: ``_keyed_recurrence``."""
+    drift = target_cents + slack_cents
 
-    # fixed events-table payload, matching the state/output schemas above
-    # (see stream_keep_latest's docstring for the generic-payload routes)
-    prepared = events.select(
-        F.col(key_col),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col("event_id"),
-        F.col("event_type"),
+    def step(k, ts, payload, carry, wm_us):
+        c0, m0 = carry
+        fin = ts <= wm_us
+        f = np.flatnonzero(fin)
+        d, kf = payload[0][f] - drift, k[f]
+        start, end, r = _segments(kf)
+        run = np.cumsum(d)
+        first = np.arange(len(f)) - r
+        c = c0[kf] + run - (run - d)[first]
+        # running min of c restarted at every key run, exact: ranks of
+        # later runs are offset below every rank of earlier runs
+        uniq, rank = np.unique(c, return_inverse=True)
+        off = (np.cumsum(start) - 1) * len(uniq)
+        m = np.minimum(m0[kf], uniq[np.minimum.accumulate(rank - off) + off])
+        c0[kf[end]], m0[kf[end]] = c[end], m[end]
+        stat = c - m
+        cols = {"stat_cents": stat, "is_alert": stat > threshold_cents}
+        return f, cols, ~fin, [c0, m0]
+
+    long = T.LongType()
+    family = _Family(
+        out=[
+            (tiebreak_col, long),
+            ("ts_us", long),
+            ("stat_cents", long),
+            ("is_alert", T.BooleanType()),
+        ],
+        inputs=[value_col],
+        ingest=lambda pdf: (None, [_cents(pdf, value_col, 10**scale)[0]]),
+        payload=[("p_cents", long)],
+        carry=[("c", (), 0), ("m", (), 0)],
+        step=step,
     )
-    return prepared.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=KeepLatest(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
+    return _keyed_recurrence(
+        events.filter(F.col(value_col).isNotNull()),
+        key_col,
+        ts_col,
+        tiebreak_col,
+        family,
+        n_state_buckets,
+        watermark,
     )
 
 
@@ -988,16 +1152,11 @@ def run_available_now(
     stream_df: DataFrame,
     query_name: str | None = None,
     shuffle_partitions: int | None = None,
-    output_mode: str = "append",
-    session_conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Replay a stream to completion (Trigger.AvailableNow) into a memory
-    sink and return the result as a batch DataFrame — the harness that lets
-    tests assert stream == batch.  Complete/append mode is chosen by Spark
-    from the plan; we use append for watermarked aggs (final results only)
-    and update for transformWithState operators.  ``session_conf`` entries
-    are set for the query and restored afterwards (e.g. the RocksDB state
-    store provider transformWithState requires).
+    sink in append mode (watermarked operators emit final results only)
+    and return the result as a batch DataFrame — the harness that lets
+    tests assert stream == batch.
 
     ``shuffle_partitions`` sizes the stateful-operator partition count for
     THIS query only (pinned into its checkpoint at first start; the session
@@ -1010,7 +1169,7 @@ def run_available_now(
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     ckpt = tracked_mkdtemp(f"ckpt_{name}_")
     spark = stream_df.sparkSession
-    overrides = dict(session_conf or {})
+    overrides = {}
     if shuffle_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     restore = _scoped_conf(spark, overrides)
@@ -1018,7 +1177,7 @@ def run_available_now(
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
-            .outputMode(output_mode)
+            .outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -1027,321 +1186,6 @@ def run_available_now(
     finally:
         restore()
     return spark.table(name)
-
-
-def stream_ewma_deviants(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    threshold_cents: int = 10000,
-    window: int = 8,
-    min_lags: int = 4,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming twin of ``relational.ewma_deviants``: per-key EWMA anomaly
-    detection as a live stateful operator (``applyInPandasWithState``).
-
-    Micro-batches deliver rows in arrival order, but the EWMA recurrence is
-    defined over EVENT-time order — so rows buffer in state and score only
-    once the watermark passes them (the finalize-at-watermark pattern of
-    this module's window/session operators, applied to a custom
-    recurrence).  A finalized row's predecessors have smaller-or-equal
-    event time, hence are finalized with or before it, so the scored
-    history is exactly the batch operator's lag window: stream == batch on
-    the watermark-finalized subset, bit-for-bit (the arithmetic is the
-    same all-integer FIR — cents, dyadic weights, integer
-    cross-multiplied threshold).
-
-    State per key = (last ``window`` finalized cents, pending rows); the
-    watermark bounds pending state exactly like the reference's stage TTL
-    bounds its seen-sets (ShuffleDataExecutor.java:279-313).  At scale the
-    state is O(window + in-flight disorder) per key and spills to RocksDB.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("wsum", T.LongType()),
-            T.StructField("denom", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("hist", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-    weights = [1 << (window - j) for j in range(1, window + 1)]
-    thr = int(threshold_cents)
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        hist, p_ts, p_eid, p_c = (
-            ([*state.get[0]], [*state.get[1]], [*state.get[2]], [*state.get[3]])
-            if state.exists
-            else ([], [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                pdf = pdf[pdf[value_col].notna()]
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-                # true-late rows (event time strictly before the batch's
-                # watermark) are DROPPED, the same rule the built-in
-                # stateful operators apply: their predecessors were already
-                # finalized, so scoring them now would replay history out
-                # of order.  Rows AT the watermark are kept (>=): the
-                # finalize step below scores pending rows at p_ts <= wm_us,
-                # so a strict > here would silently drop an at-watermark
-                # row the finalizer would have scored — batch/stream
-                # divergence on the boundary (ADVICE r6).  In-order
-                # sources (range-staged replay, a production landing zone)
-                # never produce late rows at all.
-                live = us >= wm_us
-                if not live.all():
-                    pdf = pdf[live]
-                    us = us[live]
-                    if not len(pdf):
-                        continue
-                # same double expression as the batch twin / oracle:
-                # floor(value*100 + 0.5) on the identical float64 inputs
-                cents = np.floor(
-                    pdf[value_col].values.astype("float64") * 100 + 0.5
-                ).astype("int64")
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                x = p_c[i]
-                n_hist = len(hist)
-                if n_hist >= min_lags:
-                    k = min(window, n_hist)
-                    wsum = sum(hist[-j] * weights[j - 1] for j in range(1, k + 1))
-                    denom = sum(weights[:k])
-                    if abs(x * denom - wsum) > thr * denom:
-                        out_rows.append(
-                            (key[0], p_eid[i], p_ts[i], x, wsum, denom)
-                        )
-                hist.append(x)
-                if len(hist) > window:
-                    hist = hist[-window:]
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((hist[-window:], p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, "event_id", "ts_us", "cents", "wsum", "denom"],
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_ewma_packed(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    threshold_cents: int = 10000,
-    window: int = 8,
-    min_lags: int = 4,
-    watermark: str = "2 hours",
-    n_state_buckets: int = 32,
-) -> DataFrame:
-    """``stream_ewma_deviants`` with PACKED state — third family on the
-    packed-state transform (after locf and keep-latest): keys share
-    ``pmod`` hash buckets so the ~1.3 ms applyInPandasWithState
-    per-group constant is paid per BUCKET per batch, not per key.
-
-    The EWMA recurrence is history-dependent per key, so unlike locf's
-    groupby-ffill the finalize walk stays a Python loop — but the SAME
-    per-row loop the per-key operator runs; what packing removes is the
-    Arrow slicing + state round-trip per key, which dominates (the fold
-    body is microseconds/row).  State per bucket = per-key histories as
-    (u_ids, flattened last-``window`` cents, per-key lengths) plus the
-    pending-row arrays; identical finalize rule (score rows once the
-    watermark passes them, drop true-late rows, (ts, event_id) order).
-
-    Emission parity with the per-key operator is exceptAll-both-ways
-    tested (single- and multi-batch) and the contract shares
-    ``stream_ewma_deviants``' batch oracle shape."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("wsum", T.LongType()),
-            T.StructField("denom", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("u_ids", T.ArrayType(T.LongType())),
-            T.StructField("h_flat", T.ArrayType(T.LongType())),
-            T.StructField("h_len", T.ArrayType(T.LongType())),
-            T.StructField("p_u", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-    weights = [1 << (window - j) for j in range(1, window + 1)]
-    cumdenom = [sum(weights[:k]) for k in range(window + 1)]
-    thr = int(threshold_cents)
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        hist: dict = {}
-        if state.exists:
-            u_ids, h_flat, h_len, p_u, p_ts, p_eid, p_c = state.get
-            pos = 0
-            for uid, ln in zip(u_ids, h_len):
-                hist[int(uid)] = [int(x) for x in h_flat[pos:pos + ln]]
-                pos += ln
-            p_u = [int(x) for x in p_u]
-            p_ts = [int(x) for x in p_ts]
-            p_eid = [int(x) for x in p_eid]
-            p_c = [int(x) for x in p_c]
-        else:
-            p_u, p_ts, p_eid, p_c = [], [], [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                pdf = pdf[pdf[value_col].notna()]
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                # same boundary rule as the per-key operator: true-late
-                # rows (strictly before the watermark) drop, at-watermark
-                # rows stay
-                live = us >= wm_us
-                if not live.all():
-                    pdf = pdf[live]
-                    us = us[live]
-                    if not len(pdf):
-                        continue
-                cents = np.floor(
-                    pdf[value_col].values.astype("float64") * 100 + 0.5
-                ).astype("int64")
-                p_u.extend(int(x) for x in pdf[key_col].values)
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            # finalize in (key, ts, eid) order: per-key subsequences come
-            # out contiguous and event-time-ordered, so the sequential
-            # recurrence walk below is key-correct in one pass
-            order = np.lexsort(
-                (np.asarray(p_eid), np.asarray(p_ts), np.asarray(p_u))
-            )
-            rem_u, rem_ts, rem_eid, rem_c = [], [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_u.append(p_u[i])
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                u = p_u[i]
-                x = p_c[i]
-                h = hist.get(u)
-                if h is None:
-                    h = hist[u] = []
-                n_hist = len(h)
-                if n_hist >= min_lags:
-                    k = min(window, n_hist)
-                    wsum = sum(
-                        h[-j] * weights[j - 1] for j in range(1, k + 1)
-                    )
-                    denom = cumdenom[k]
-                    if abs(x * denom - wsum) > thr * denom:
-                        out_rows.append(
-                            (u, p_eid[i], p_ts[i], x, wsum, denom)
-                        )
-                h.append(x)
-                if len(h) > window:
-                    del h[:-window]
-            p_u, p_ts, p_eid, p_c = rem_u, rem_ts, rem_eid, rem_c
-        u_ids = sorted(hist)
-        h_flat: list = []
-        h_len = []
-        for u in u_ids:
-            h = hist[u][-window:]
-            h_flat.extend(h)
-            h_len.append(len(h))
-        if not u_ids and not p_ts:
-            # fully drained (timeout flushed the last pending rows, or
-            # every ingested value was null): drop the entry instead of
-            # storing empty arrays with no timeout that nothing would
-            # ever remove — state-store hygiene, matching
-            # keep_latest_packed's remove-on-empty (ADVICE r11)
-            if state.exists:
-                state.remove()
-            return
-        state.update((u_ids, h_flat, h_len, p_u, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    key_col, "event_id", "ts_us", "cents", "wsum", "denom",
-                ],
-            )
-
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def stream_mv_maintenance(
@@ -1444,648 +1288,3 @@ def stream_mv_maintenance(
     )
     q.awaitTermination()
     return state["totals"]
-
-
-def stream_locf(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming twin of ``relational.locf_impute``: last-observation-
-    carried-forward as a live stateful operator (applyInPandasWithState)
-    — the online feature-serving shape, where each event's NULL value
-    must be filled with the key's most recent observation AT ARRIVAL.
-
-    Same finalize-at-watermark protocol as ``stream_ewma_deviants``:
-    rows (NULL values included — they're what gets imputed) buffer in
-    state and emit only once the watermark passes them, processed in
-    (ts, event_id) order.  A finalized row's predecessors are finalized
-    with or before it, so the carried value is exactly the batch
-    operator's unbounded-preceding window: stream == batch on the
-    finalized subset, bit-for-bit in the cents domain
-    (floor(value*100 + 0.5), this module's money convention).
-
-    State per key = (last finalized cents, pending rows) — O(1 +
-    in-flight disorder), the smallest state any operator in this module
-    carries.  Emits (key, event_id, ts_us, cents, was_filled): cents
-    NULL only for leading-NULL rows with no prior observation."""
-    NULL_SENT = -(2**62)  # NULL cents inside the long-array state
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("was_filled", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_cents", T.LongType()),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        last, p_ts, p_eid, p_c = (
-            (state.get[0], [*state.get[1]], [*state.get[2]], [*state.get[3]])
-            if state.exists
-            else (NULL_SENT, [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-                live = us >= wm_us  # same boundary rule as stream_ewma
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                nan = np.isnan(vals)
-                # mask BEFORE the int64 cast: NaN->int is undefined-result
-                # territory and numpy emits a RuntimeWarning per micro-batch
-                # (the sentinel overwrite below made it benign but noisy)
-                cents = np.where(nan, 0.0, np.floor(vals * 100 + 0.5)).astype(
-                    "int64"
-                )
-                cents[nan] = NULL_SENT
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                raw = p_c[i]
-                filled = raw == NULL_SENT and last != NULL_SENT
-                eff = last if raw == NULL_SENT else raw
-                out_rows.append(
-                    (
-                        key[0],
-                        p_eid[i],
-                        p_ts[i],
-                        None if eff == NULL_SENT else eff,
-                        bool(filled),
-                    )
-                )
-                if raw != NULL_SENT:
-                    last = raw
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((last, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, "event_id", "ts_us", "cents", "was_filled"],
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_locf_packed(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "2 hours",
-    n_state_buckets: int = 32,
-) -> DataFrame:
-    """``stream_locf`` with PACKED state: many logical keys share one
-    physical state group — the 100 TB state-scaling technique this
-    module's per-key operators eventually need.
-
-    Why it exists (measured, round 9): ``applyInPandasWithState`` costs
-    ~1.3 ms per GROUP INVOCATION regardless of fold body (a trivial
-    count-fold at 1500 keys replays in 2.9 s vs 0.96 s at 10 keys on
-    the same data — pure Arrow group slicing + state round-trip), so a
-    per-key operator pays keys x batches x 1.3 ms: at a production
-    10M-key stream that is the whole budget.  Packing keys into
-    ``n_state_buckets`` hash buckets (pmod of the key — deterministic,
-    uniform for long ids) makes the per-group constant pay once per
-    BUCKET per batch, and the per-key logic runs vectorized
-    (pandas groupby-ffill over the bucket's rows) instead of once per
-    key.  Size ``n_state_buckets`` ~= shuffle partitions x small
-    constant: enough groups to keep every core busy, few enough that
-    the group constant vanishes.
-
-    Semantics are IDENTICAL to ``stream_locf`` (same watermark boundary
-    rule, same finalize-in-(ts,event_id)-order, same carry/was_filled
-    definitions) — asserted by the packed-vs-per-key parity test and by
-    sharing the batch census oracle verbatim.  State per bucket =
-    (keys with a last observation, their last cents) + pending rows as
-    flat parallel arrays — O(keys/bucket + in-flight disorder)."""
-    NULL_SENT = -(2**62)
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("was_filled", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("u_ids", T.ArrayType(T.LongType())),
-            T.StructField("u_last", T.ArrayType(T.LongType())),
-            T.StructField("p_u", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            u_ids, u_last, p_u, p_ts, p_eid, p_c = (
-                np.asarray(x, dtype="int64") for x in state.get
-            )
-        else:
-            u_ids = u_last = p_u = p_ts = p_eid = p_c = np.empty(
-                0, dtype="int64"
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                live = us >= wm_us  # same boundary rule as stream_locf
-                if not live.any():
-                    continue
-                pdf, us = pdf[live], us[live]
-                vals = pdf[value_col].values.astype("float64")
-                nan = np.isnan(vals)
-                cents = np.where(
-                    nan, 0.0, np.floor(vals * 100 + 0.5)
-                ).astype("int64")
-                cents[nan] = NULL_SENT
-                p_u = np.concatenate(
-                    [p_u, pdf[key_col].values.astype("int64")]
-                )
-                p_ts = np.concatenate([p_ts, us])
-                p_eid = np.concatenate(
-                    [p_eid, pdf["event_id"].values.astype("int64")]
-                )
-                p_c = np.concatenate([p_c, cents])
-        out = None
-        if len(p_ts):
-            fin = p_ts <= wm_us
-            if fin.any():
-                fu, ft, fe, fc = p_u[fin], p_ts[fin], p_eid[fin], p_c[fin]
-                order = np.lexsort((fe, ft, fu))
-                fu, ft, fe, fc = fu[order], ft[order], fe[order], fc[order]
-                raw = fc.astype("float64")
-                raw[fc == NULL_SENT] = np.nan
-                # last-known value per key, seeded from bucket state
-                seed_map = pd.Series(
-                    u_last.astype("float64"), index=u_ids
-                )
-                seed_map[seed_map == float(NULL_SENT)] = np.nan
-                eff = (
-                    pd.Series(raw)
-                    .groupby(pd.Series(fu), sort=False)
-                    .ffill()
-                    .to_numpy()
-                )
-                head = np.isnan(eff)  # rows before a key's first non-NULL
-                if head.any():
-                    eff[head] = seed_map.reindex(fu[head]).to_numpy()
-                filled = np.isnan(raw) & ~np.isnan(eff)
-                # new last per key = last non-NULL RAW in (ts, eid) order
-                valid = ~np.isnan(raw)
-                if valid.any():
-                    lasts = (
-                        pd.Series(raw[valid])
-                        .groupby(pd.Series(fu[valid]), sort=False)
-                        .last()
-                    )
-                    seed_map = seed_map.reindex(
-                        seed_map.index.union(lasts.index)
-                    )
-                    seed_map[lasts.index] = lasts.to_numpy()
-                u_ids = seed_map.index.to_numpy(dtype="int64")
-                u_last = np.where(
-                    np.isnan(seed_map.to_numpy()),
-                    NULL_SENT,
-                    np.nan_to_num(seed_map.to_numpy()),
-                ).astype("int64")
-                out = pd.DataFrame(
-                    {
-                        key_col: fu,
-                        "event_id": fe,
-                        "ts_us": ft,
-                        "cents": pd.array(
-                            np.where(np.isnan(eff), 0, eff).astype("int64"),
-                            dtype="Int64",
-                        ),
-                        "was_filled": filled,
-                    }
-                )
-                out.loc[np.isnan(eff), "cents"] = None
-                rem = ~fin
-                p_u, p_ts, p_eid, p_c = (
-                    p_u[rem], p_ts[rem], p_eid[rem], p_c[rem],
-                )
-        state.update(
-            (
-                [int(x) for x in u_ids],
-                [int(x) for x in u_last],
-                [int(x) for x in p_u],
-                [int(x) for x in p_ts],
-                [int(x) for x in p_eid],
-                [int(x) for x in p_c],
-            )
-        )
-        if len(p_ts):
-            state.setTimeoutTimestamp(
-                max(
-                    int(p_ts.min()) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        if out is not None and len(out):
-            yield out
-
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_cusum(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    target_cents: int = 5000,
-    slack_cents: int = 200,
-    threshold_cents: int = 20000,
-    watermark: str = "2 hours",
-    tiebreak_col: str = "event_id",
-    scale: int = 2,
-) -> DataFrame:
-    """Streaming twin of ``relational.cusum_points``: Page's one-sided
-    CUSUM drift detector as a live stateful operator — the online
-    alerting shape ("page me when the metric stream drifts"), where the
-    batch closed form (cumsum - clamped running min) becomes TWO long
-    counters of carried state: ``c`` (running deviation sum) and ``m``
-    (min(0, running min of c)), updated per finalized row in (ts,
-    event_id) order; the emitted statistic is ``c - m``, bit-equal to
-    the batch operator on the finalized subset.
-
-    Same finalize-at-watermark protocol as ``stream_locf``: rows buffer
-    in state, emit once the watermark passes them, late/disordered rows
-    inside the watermark are re-sorted before folding.  NULL values are
-    excluded upstream (they carry no evidence, matching the batch
-    operator's filter).  State per key = two longs + the in-flight
-    disorder buffer — CUSUM is the textbook case for why streaming drift
-    detection is cheap: the entire history compresses to (c, m).
-
-    ``tiebreak_col`` and ``scale`` mirror ``cusum_points``' signature
-    exactly (defaults ``event_id`` / 2), so non-default batch callers
-    get the same stream twin, not a silently divergent one.
-    ``tiebreak_col`` MUST be an integral column (it is carried through
-    state arrays and the output schema as a long) — validated below
-    rather than failing at Arrow conversion or silently truncating a
-    float (ADVICE r10).
-
-    Emits ``(key, tiebreak, ts_us, stat_cents, is_alert)``."""
-    tb_type = {f.name: f.dataType for f in events.schema.fields}.get(
-        tiebreak_col
-    )
-    if tb_type is not None and not isinstance(
-        tb_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise ValueError(
-            f"stream_cusum tiebreak_col {tiebreak_col!r} must be an"
-            f" integral column (got {tb_type.simpleString()}); its value"
-            " rides the LongType state/output schema exactly like batch"
-            " cusum_points' long tiebreak"
-        )
-    drift = target_cents + slack_cents
-    m_scale = 10 ** scale
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(tiebreak_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("stat_cents", T.LongType()),
-            T.StructField("is_alert", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("c_cum", T.LongType()),
-            T.StructField("c_min", T.LongType()),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        c, mn, p_ts, p_eid, p_c = (
-            (
-                state.get[0],
-                state.get[1],
-                [*state.get[2]],
-                [*state.get[3]],
-                [*state.get[4]],
-            )
-            if state.exists
-            else (0, 0, [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                live = us >= wm_us
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                ok = ~np.isnan(vals)
-                cents = np.zeros(len(vals), dtype="int64")
-                cents[ok] = np.floor(vals[ok] * m_scale + 0.5).astype(
-                    "int64"
-                )
-                p_ts.extend(int(x) for x in us[ok])
-                p_eid.extend(int(x) for x in pdf[tiebreak_col].values[ok])
-                p_c.extend(int(x) for x in cents[ok])
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                c += p_c[i] - drift
-                mn = min(mn, c)
-                s = c - mn
-                out_rows.append(
-                    (key[0], p_eid[i], p_ts[i], s, s > threshold_cents)
-                )
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((c, mn, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, tiebreak_col, "ts_us", "stat_cents",
-                         "is_alert"],
-            )
-
-    return (
-        events.filter(F.col(value_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_cusum_packed(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    target_cents: int = 5000,
-    slack_cents: int = 200,
-    threshold_cents: int = 20000,
-    watermark: str = "2 hours",
-    tiebreak_col: str = "event_id",
-    scale: int = 2,
-    n_state_buckets: int = 32,
-) -> DataFrame:
-    """``stream_cusum`` with PACKED state — fourth family on the
-    packed-state transform (after locf, keep-latest and ewma): keys
-    share ``pmod(hash(key), n_state_buckets)`` buckets so the measured
-    ~1.3 ms applyInPandasWithState per-GROUP-invocation constant is
-    paid per bucket per batch, not per key — at a 10M-key stream the
-    per-key form's whole budget is that constant.
-
-    CUSUM is the friendliest recurrence for packing: the entire per-key
-    history compresses to TWO long counters (``c`` running deviation
-    sum, ``m`` its clamped running min), so bucket state is three flat
-    parallel arrays (key, c, m) plus the in-flight disorder buffer.
-    The finalize walk stays the per-key operator's fold VERBATIM — rows
-    sort by (key, ts, tiebreak) so per-key subsequences come out
-    contiguous and event-time-ordered, and the two counters thread
-    through exactly as the per-key state would.  The hash bucketing
-    (rather than locf/ewma's ``pmod(key)``) keeps the transform
-    key-type-generic: ``stream_cusum`` keys on a STRING metric name.
-
-    Emission protocol, null handling, the true-late drop rule
-    (``ts < watermark`` drops, at-watermark stays), the
-    round-half-up cents conversion and the integral-tiebreak
-    validation are all identical to ``stream_cusum``; packed == per-key
-    is exceptAll-both-ways parity-tested and the contract shares the
-    per-key operator's batch-closed-form oracle verbatim.
-
-    Emits ``(key, tiebreak, ts_us, stat_cents, is_alert)``."""
-    tb_type = {f.name: f.dataType for f in events.schema.fields}.get(
-        tiebreak_col
-    )
-    if tb_type is not None and not isinstance(
-        tb_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise ValueError(
-            f"stream_cusum_packed tiebreak_col {tiebreak_col!r} must be"
-            f" an integral column (got {tb_type.simpleString()}); its"
-            " value rides the LongType state/output schema exactly like"
-            " batch cusum_points' long tiebreak"
-        )
-    drift = target_cents + slack_cents
-    m_scale = 10 ** scale
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(tiebreak_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("stat_cents", T.LongType()),
-            T.StructField("is_alert", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("k_ids", T.ArrayType(T.StringType())),
-            T.StructField("k_c", T.ArrayType(T.LongType())),
-            T.StructField("k_min", T.ArrayType(T.LongType())),
-            T.StructField("p_k", T.ArrayType(T.StringType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        counters: dict = {}
-        if state.exists:
-            k_ids, k_c, k_min, p_k, p_ts, p_eid, p_c = state.get
-            for kk, cc, mm in zip(k_ids, k_c, k_min):
-                counters[str(kk)] = [int(cc), int(mm)]
-            p_k = [str(x) for x in p_k]
-            p_ts = [int(x) for x in p_ts]
-            p_eid = [int(x) for x in p_eid]
-            p_c = [int(x) for x in p_c]
-        else:
-            p_k, p_ts, p_eid, p_c = [], [], [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                # same boundary rule as the per-key operator: true-late
-                # rows (strictly before the watermark) drop
-                live = us >= wm_us
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                ok = ~np.isnan(vals)
-                cents = np.zeros(len(vals), dtype="int64")
-                cents[ok] = np.floor(vals[ok] * m_scale + 0.5).astype(
-                    "int64"
-                )
-                p_k.extend(str(x) for x in pdf[key_col].values[ok])
-                p_ts.extend(int(x) for x in us[ok])
-                p_eid.extend(int(x) for x in pdf[tiebreak_col].values[ok])
-                p_c.extend(int(x) for x in cents[ok])
-        out_rows = []
-        if p_ts:
-            # finalize in (key, ts, eid) order: per-key subsequences come
-            # out contiguous and event-time-ordered, so the two-counter
-            # walk below threads each key's state exactly like the
-            # per-key fold
-            kidx = {}
-            k_codes = np.fromiter(
-                (kidx.setdefault(k, len(kidx)) for k in p_k),
-                dtype="int64",
-                count=len(p_k),
-            )
-            order = np.lexsort(
-                (np.asarray(p_eid), np.asarray(p_ts), k_codes)
-            )
-            rem_k, rem_ts, rem_eid, rem_c = [], [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_k.append(p_k[i])
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                k = p_k[i]
-                st = counters.get(k)
-                if st is None:
-                    st = counters[k] = [0, 0]
-                st[0] += p_c[i] - drift
-                if st[0] < st[1]:
-                    st[1] = st[0]
-                s = st[0] - st[1]
-                out_rows.append(
-                    (k, p_eid[i], p_ts[i], s, s > threshold_cents)
-                )
-            p_k, p_ts, p_eid, p_c = rem_k, rem_ts, rem_eid, rem_c
-        if not counters and not p_ts:
-            # fully drained: no counters and nothing pending — drop the
-            # entry instead of parking empty arrays with no timeout
-            # (the ADVICE r11 hygiene rule all packed families follow)
-            if state.exists:
-                state.remove()
-            return
-        k_ids = sorted(counters)
-        state.update(
-            (
-                k_ids,
-                [counters[k][0] for k in k_ids],
-                [counters[k][1] for k in k_ids],
-                p_k,
-                p_ts,
-                p_eid,
-                p_c,
-            )
-        )
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, tiebreak_col, "ts_us", "stat_cents",
-                         "is_alert"],
-            )
-
-    bucketed = events.filter(F.col(value_col).isNotNull()).withColumn(
-        "__bucket", F.pmod(F.hash(F.col(key_col)), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )

@@ -234,7 +234,7 @@ def test_fuzz_stream_dedup_window_parity(spark, window, delay, filt, by_type):
 
 
 # ---------------------------------------------------------------------------
-# Packed-state LOCF parity: stream_locf_packed must equal stream_locf
+# Packed-state LOCF parity: stream_locf packed must equal per-key
 # row-for-row under randomized bucket counts (1 bucket = every key in one
 # group; large = effectively per-key), NULL moduli, and replay shapes.
 # Each example runs TWO real AvailableNow replays (~4 s/example), so the
@@ -261,7 +261,7 @@ def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
         events_stream_multi,
         run_available_now,
     )
-    from shuttle_spark.streaming.core import stream_locf, stream_locf_packed
+    from shuttle_spark.streaming.core import stream_locf
 
     tag = f"{n_buckets}_{null_mod}_{int(multi)}"
 
@@ -283,7 +283,7 @@ def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
         stream_locf(src()), f"fzl_{tag}", shuffle_partitions=4
     ).select(*cols)
     packed = run_available_now(
-        stream_locf_packed(src(), n_state_buckets=n_buckets),
+        stream_locf(src(), n_state_buckets=n_buckets),
         f"fzp_{tag}",
         shuffle_partitions=4,
     ).select(*cols)
@@ -311,10 +311,7 @@ def test_fuzz_stream_keep_latest_packed_parity(
         events_stream_multi,
         run_available_now,
     )
-    from shuttle_spark.streaming.core import (
-        stream_keep_latest,
-        stream_keep_latest_packed,
-    )
+    from shuttle_spark.streaming.core import stream_keep_latest
 
     tag = f"kl_{n_buckets}_{key_mod}_{int(multi)}"
 
@@ -336,7 +333,7 @@ def test_fuzz_stream_keep_latest_packed_parity(
         stream_keep_latest(src()), f"fkl_{tag}", shuffle_partitions=4
     ).select(*cols)
     packed = run_available_now(
-        stream_keep_latest_packed(src(), n_state_buckets=n_buckets),
+        stream_keep_latest(src(), n_state_buckets=n_buckets),
         f"fkp_{tag}",
         shuffle_partitions=4,
     ).select(*cols)
@@ -372,10 +369,7 @@ def test_fuzz_stream_ewma_packed_parity(
         events_stream_multi,
         run_available_now,
     )
-    from shuttle_spark.streaming.core import (
-        stream_ewma_deviants,
-        stream_ewma_packed,
-    )
+    from shuttle_spark.streaming.core import stream_ewma_deviants
 
     tag = f"ew_{n_buckets}_{window}_{min_lags}_{int(multi)}"
     dials = dict(window=window, min_lags=min_lags)
@@ -393,7 +387,7 @@ def test_fuzz_stream_ewma_packed_parity(
         f"fep_{tag}", shuffle_partitions=4,
     ).select(*cols)
     packed = run_available_now(
-        stream_ewma_packed(src(), n_state_buckets=n_buckets, **dials),
+        stream_ewma_deviants(src(), n_state_buckets=n_buckets, **dials),
         f"fep2_{tag}",
         shuffle_partitions=4,
     ).select(*cols)
@@ -431,7 +425,7 @@ def test_fuzz_stream_cusum_packed_parity(
         events_stream_multi,
         run_available_now,
     )
-    from shuttle_spark.streaming.core import stream_cusum, stream_cusum_packed
+    from shuttle_spark.streaming.core import stream_cusum
 
     tag = f"cu_{n_buckets}_{key_mod}_{dials['threshold_cents']}_{int(multi)}"
 
@@ -455,7 +449,7 @@ def test_fuzz_stream_cusum_packed_parity(
         stream_cusum(src(), **dials), f"fcu_{tag}", shuffle_partitions=4
     ).select(*cols)
     packed = run_available_now(
-        stream_cusum_packed(src(), n_state_buckets=n_buckets, **dials),
+        stream_cusum(src(), n_state_buckets=n_buckets, **dials),
         f"fcp_{tag}",
         shuffle_partitions=4,
     ).select(*cols)

@@ -13,6 +13,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,61 +202,6 @@ def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
     state = run_upsert_sink(stream, state_path, shuffle_partitions=2)
     assert state.count() == 0
     assert set(state.columns) == {"user_id", "ts", "event_id", "event_type"}
-
-
-def test_stream_keep_latest_tws_matches_batch(spark):
-    """transformWithState (Spark 4 successor stateful API) twin of
-    stream_keep_latest: the last update per key equals the batch
-    keep-latest.  Requires google.protobuf (the TWS python runner's
-    state-server protocol); where it is absent the operator must fail
-    fast with a clear ImportError BEFORE any query starts — both branches
-    are asserted, so this test never skips."""
-    import pytest
-
-    from shuttle_spark.streaming.core import tws_available
-
-    if not tws_available():
-        from shuttle_spark.streaming.core import (
-            events_stream_multi,
-            stream_keep_latest_tws,
-        )
-
-        with pytest.raises(ImportError, match="google.protobuf"):
-            stream_keep_latest_tws(
-                events_stream_multi(spark, "/root/testdata/sf0.001", n_files=4)
-            )
-        return
-
-    from pyspark.sql import functions as F
-
-    from shuttle_spark.catalog import load_table
-    from shuttle_spark.operators import dedup as D
-    from shuttle_spark.streaming.core import (
-        events_stream_multi,
-        run_available_now,
-        stream_keep_latest_tws,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    out = run_available_now(
-        stream_keep_latest_tws(events_stream_multi(spark, sf, n_files=4)),
-        output_mode="update",
-        shuffle_partitions=4,
-        session_conf={
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-        },
-    )
-    final = D.keep_latest(
-        out, ["user_id"], [F.col("ts_us").desc(), F.col("event_id").desc()]
-    )
-    want = D.keep_latest(
-        load_table(spark, sf, "events"),
-        ["user_id"],
-        [F.col("ts").desc(), F.col("event_id").desc()],
-    ).select("user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "event_type")
-    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_decontaminate_sink_zero_batch_stream_is_empty_corpus(spark):
@@ -576,23 +523,22 @@ def test_stream_mv_maintenance_equals_recompute(spark):
     )
 
 
-def test_stream_locf_equals_batch_single_and_multi_batch(spark):
-    """stream_locf == relational.locf_impute (cents domain) on the
-    finalized subset, in both replay shapes — cross-batch carry of the
-    last observation is the multi-batch case's whole point."""
-    from shuttle_spark.operators import relational as R
-    from shuttle_spark.streaming import events_stream_multi
-    from shuttle_spark.streaming.core import stream_locf
+def _null_if(c):
+    """Deterministic NULL injection: sf0.001's value column has none, and
+    a fill-free LOCF run would prove nothing about the carry."""
+    return F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(c)
 
-    # inject NULLs deterministically: sf0.001's value column has none,
-    # and a fill-free parity run would prove nothing about the carry
-    null_if = lambda c: F.when(  # noqa: E731
-        F.col("event_id") % 5 == 0, F.lit(None)
-    ).otherwise(c)
+
+def _locf_batch(spark):
+    """The batch LOCF (cents domain) of ``_null_if``-ed events on the
+    finalized subset, and that subset's ts_us cutoff: 1 s inside the 2 h
+    watermark (ms-grain watermark vs µs-grain event time)."""
+    from shuttle_spark.operators import relational as R
+
     ev = _events(spark).select(
         "user_id", "ts", "event_id",
-        null_if(F.col("value")).alias("value"),
-        null_if(F.col("value")).alias("__orig"),
+        _null_if(F.col("value")).alias("value"),
+        _null_if(F.col("value")).alias("__orig"),
     )
     batch = R.locf_impute(ev, ["user_id"], ["ts", "event_id"], ["value"])
     cutoff = _cutoff(spark) - dt.timedelta(seconds=1)
@@ -611,11 +557,22 @@ def test_stream_locf_equals_batch_single_and_multi_batch(spark):
         _events(spark).agg(F.max(F.unix_micros("ts"))).collect()[0][0]
         - 7_201_000_000
     )
+    return want, cutoff_us
+
+
+def test_stream_locf_equals_batch_single_and_multi_batch(spark):
+    """stream_locf == relational.locf_impute (cents domain) on the
+    finalized subset, in both replay shapes — cross-batch carry of the
+    last observation is the multi-batch case's whole point."""
+    from shuttle_spark.streaming import events_stream_multi
+    from shuttle_spark.streaming.core import stream_locf
+
+    want, cutoff_us = _locf_batch(spark)
     for src, name in (
         (events_stream(spark, SF), "slocf_one"),
         (events_stream_multi(spark, SF, n_files=4), "slocf_multi"),
     ):
-        src = src.withColumn("value", null_if(F.col("value")))
+        src = src.withColumn("value", _null_if(F.col("value")))
         got = _rows(
             run_available_now(stream_locf(src), name, shuffle_partitions=4)
             .filter(F.col("ts_us") <= cutoff_us)
@@ -626,7 +583,7 @@ def test_stream_locf_equals_batch_single_and_multi_batch(spark):
 
 @pytest.mark.slow
 def test_stream_locf_packed_parity_and_batch_equality(spark):
-    """stream_locf_packed == stream_locf row-for-row (exceptAll both
+    """stream_locf packed == per-key row-for-row (exceptAll both
     ways, full output including the not-yet-finalized-free tail) AND ==
     the batch LOCF on the finalized subset, single- and multi-batch —
     packing keys into shared state groups is a pure physical-layout
@@ -634,7 +591,7 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
     at a bucket count that forces real multi-key packing (sf0.001 has
     ~150 keys -> ~19 keys per bucket at 8 buckets)."""
     from shuttle_spark.streaming import events_stream_multi
-    from shuttle_spark.streaming.core import stream_locf, stream_locf_packed
+    from shuttle_spark.streaming.core import stream_locf
 
     null_if = lambda c: F.when(  # noqa: E731
         F.col("event_id") % 5 == 0, F.lit(None)
@@ -650,7 +607,7 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
             shuffle_partitions=4,
         ).select(*cols)
         packed = run_available_now(
-            stream_locf_packed(
+            stream_locf(
                 mk().withColumn("value", null_if(F.col("value"))),
                 n_state_buckets=8,
             ),
@@ -665,17 +622,12 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
 
 @pytest.mark.slow
 def test_stream_keep_latest_packed_parity(spark):
-    """stream_keep_latest_packed == stream_keep_latest row-for-row
+    """stream_keep_latest packed == per-key row-for-row
     (exceptAll both ways), single- and multi-batch — the packed form is
     a pure physical-layout change (shared state groups + vectorized
     per-bucket argmax), so ANY divergence is a bug.  Bucket count forces
     real multi-key packing (sf0.001 has ~150 keys -> ~19/bucket at 8)."""
     from shuttle_spark.streaming import events_stream_multi
-    from shuttle_spark.streaming.core import (
-        stream_keep_latest,
-        stream_keep_latest_packed,
-    )
-
     cols = ["user_id", "ts_us", "event_id", "event_type"]
     for mk, name in (
         (lambda: events_stream(spark, SF), "pkl_one"),
@@ -685,7 +637,7 @@ def test_stream_keep_latest_packed_parity(spark):
             stream_keep_latest(mk()), f"{name}_a", shuffle_partitions=4
         ).select(*cols)
         packed = run_available_now(
-            stream_keep_latest_packed(mk(), n_state_buckets=8),
+            stream_keep_latest(mk(), n_state_buckets=8),
             f"{name}_b",
             shuffle_partitions=4,
         ).select(*cols)
@@ -735,15 +687,12 @@ def test_stream_cusum_equals_batch_single_and_multi_batch(spark):
 
 @pytest.mark.slow
 def test_stream_ewma_packed_parity(spark):
-    """stream_ewma_packed == stream_ewma_deviants row-for-row (exceptAll
+    """stream_ewma_deviants packed == per-key row-for-row (exceptAll
     both ways), single- and multi-batch — packing is a physical layout
     change; the per-key FIR recurrence walk is byte-identical, so ANY
     divergence is a bug.  8 buckets force real multi-key packing."""
     from shuttle_spark.streaming import events_stream_multi
-    from shuttle_spark.streaming.core import (
-        stream_ewma_deviants,
-        stream_ewma_packed,
-    )
+    from shuttle_spark.streaming.core import stream_ewma_deviants
 
     cols = ["user_id", "event_id", "ts_us", "cents", "wsum", "denom"]
     for mk, name in (
@@ -754,7 +703,7 @@ def test_stream_ewma_packed_parity(spark):
             stream_ewma_deviants(mk()), f"{name}_a", shuffle_partitions=4
         ).select(*cols)
         packed = run_available_now(
-            stream_ewma_packed(mk(), n_state_buckets=8),
+            stream_ewma_deviants(mk(), n_state_buckets=8),
             f"{name}_b",
             shuffle_partitions=4,
         ).select(*cols)
@@ -763,23 +712,364 @@ def test_stream_ewma_packed_parity(spark):
         assert packed.exceptAll(plain).count() == 0, name
 
 
-def test_stream_ewma_packed_all_null_values_clean(spark):
-    """ADVICE r11 state hygiene: a bucket whose every ingested value is
-    NULL (the upstream filter drops them all) must not park an empty,
-    timeout-less state entry — the fold skips update / removes instead.
-    Externally: empty output, clean replay, no crash."""
-    from shuttle_spark.streaming import events_stream
-    from shuttle_spark.streaming.core import stream_ewma_packed
+# The four keyed-recurrence families (streaming.core._keyed_recurrence)
+# and the dials the shared tests below run them with.
+_FAMILIES = {
+    "keep_latest": ("stream_keep_latest", {}),
+    "ewma": ("stream_ewma_deviants", {"threshold_cents": 0, "min_lags": 1}),
+    "locf": ("stream_locf", {}),
+    "cusum": ("stream_cusum", {}),
+}
+_LAYOUTS = {"per_key": None, "packed": 8}
 
+
+def _family_op(family: str, layout: str):
+    from shuttle_spark.streaming import core as SC
+
+    name, dials = _FAMILIES[family]
+    op = getattr(SC, name)
+    return lambda src: op(src, n_state_buckets=_LAYOUTS[layout], **dials)
+
+
+def _replay_to(spark, df, ckpt, fmt="memory", path=None):
+    """AvailableNow replay with a caller-owned checkpoint (and, for a
+    file sink, output path) at 4 shuffle partitions."""
+    from shuttle_spark.streaming import core as SC
+
+    restore = SC._scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"})
+    try:
+        w = df.writeStream.format(fmt).option("checkpointLocation", ckpt)
+        if path is None:
+            w = w.queryName(f"q_{os.path.basename(ckpt)}")
+        else:
+            w = w.option("path", path)
+        w.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        restore()
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_keyed_recurrence_all_null_values_leave_no_drained_state(
+    spark, tmp_path, family, layout
+):
+    """State hygiene: no group may be left in the state store with
+    nothing pending (a drained entry has no timeout, so nothing would
+    ever remove it).  With every value NULL, ewma and cusum ingest
+    nothing, so the store must be empty; keep_latest and locf still
+    buffer the rows the final watermark has not passed, so only those
+    groups may remain."""
     src = events_stream(spark, SF).withColumn(
         "value", F.lit(None).cast("double")
     )
-    out = run_available_now(
-        stream_ewma_packed(src, n_state_buckets=8),
-        "pew_allnull",
+    ckpt = str(tmp_path / f"ckpt_{family}_{layout}")
+    _replay_to(spark, _family_op(family, layout)(src), ckpt)
+    store = spark.read.format("statestore").load(ckpt)
+    drained = store.filter(F.size("value.groupState.p_ts") == 0)
+    assert drained.count() == 0
+    if family in ("ewma", "cusum"):
+        assert store.count() == 0
+
+
+def _write_events(path, rows) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(cols[0], pa.int64()),
+                "user_id": pa.array(cols[1], pa.int64()),
+                "event_type": pa.array([f"k{u}" for u in cols[1]]),
+                "ts": pa.array(cols[2], pa.timestamp("us", tz="UTC")),
+                "value": pa.array(cols[3], pa.float64()),
+                "props": pa.array([None] * len(rows), pa.string()),
+            }
+        ),
+        path,
+    )
+
+
+_EVENTS_SCHEMA = (
+    "event_id long, user_id long, event_type string,"
+    " ts timestamp, value double, props string"
+)
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_keyed_recurrence_late_rule(spark, tmp_path, family, layout):
+    """The kernel's late rule is the only filter of strictly-late rows
+    (Spark passes them into the fold).  Two files, one per micro-batch:
+    the first sets the watermark to t0 + 1 h; the second holds a row
+    1 s before it (key 1, must be dropped), a row exactly at it (key 2,
+    must be kept and finalized) and a later row (key 3) that moves the
+    watermark past both.  Keys are user_id k / event_type "k<k>"."""
+    from shuttle_spark.sources.io import read_stream
+
+    t0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    h = dt.timedelta(hours=1)
+    land = tmp_path / "land"
+    land.mkdir()
+    files = [
+        [(1, 1, t0, 10.0), (2, 2, t0, 10.0), (3, 3, t0 + 3 * h, 10.0)],
+        [
+            (10, 1, t0 + h - dt.timedelta(seconds=1), 99.0),  # late
+            (11, 2, t0 + h, 20.0),  # exactly at the watermark
+            (12, 3, t0 + 10 * h, 10.0),
+        ],
+    ]
+    for i, rows in enumerate(files):
+        path = str(land / f"part-{i}.parquet")
+        _write_events(path, rows)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    src = read_stream(spark, str(land), _EVENTS_SCHEMA, max_files_per_trigger=1)
+    ckpt = str(tmp_path / "ckpt")
+    _replay_to(spark, _family_op(family, layout)(src), ckpt)
+    out = spark.table(f"q_{os.path.basename(ckpt)}")
+    got = sorted(r[0] for r in out.select("event_id").collect())
+    # keep_latest: key 1's winner stays event 1 (event 10 would have won),
+    # key 2's winner is the at-watermark row, key 3's is not yet passed;
+    # ewma (threshold 0, one lag) flags event 11 against event 2's
+    # history (event 10 would be flagged against event 1's);
+    # locf and cusum emit every finalized row
+    want = {
+        "keep_latest": [1, 11],
+        "ewma": [11],
+        "locf": [1, 2, 3, 11],
+        "cusum": [1, 2, 3, 11],
+    }[family]
+    assert got == want
+
+
+class _FakeGroupState:
+    """The slice of pyspark's GroupState the kernel's fold uses."""
+
+    def __init__(self):
+        self.value, self.timeout, self.wm_ms, self.hasTimedOut = None, None, 0, False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+
+def _drive_fold(fold, batches, group_of, delay_ms):
+    """Run ``fold`` over micro-batches of (eid, key, ts_us, value) rows
+    the way Spark's runner does: groups with rows first, then groups
+    whose event-time timeout the watermark has passed; the timeout is
+    reset before every call.  A final batch with an unbounded watermark
+    flushes every pending row.  Returns the emitted rows, the rows that
+    were live when they arrived, and the states left behind."""
+    states, out, live, wm_ms = {}, [], [], 0
+    for rows in [*batches, []]:
+        if not rows:
+            wm_ms = 2**50
+        by_group = {}
+        for r in rows:
+            by_group.setdefault(group_of(r[1]), []).append(r)
+            if r[2] >= wm_ms * 1000:
+                live.append(r)
+        calls = [(g, rs) for g, rs in sorted(by_group.items())] + [
+            (g, None)
+            for g, st in sorted(states.items())
+            if g not in by_group and st.timeout is not None and st.timeout < wm_ms
+        ]
+        for g, rs in calls:
+            st = states.setdefault(g, _FakeGroupState())
+            st.wm_ms, st.hasTimedOut, st.timeout = wm_ms, rs is None, None
+            pdfs = []
+            if rs:
+                eid, key, us, val = map(list, zip(*rs))
+                pdfs = [
+                    pd.DataFrame(
+                        {
+                            "event_id": eid,
+                            "user_id": key,
+                            "event_type": [f"k{k}" for k in key],
+                            "ts": pd.to_datetime(us, unit="us"),
+                            "value": np.array(val, dtype="float64"),
+                        }
+                    )
+                ]
+            for frame in fold((g,), iter(pdfs), st):
+                out.extend(
+                    tuple(None if v is pd.NA else v for v in row)
+                    for row in frame.itertuples(index=False, name=None)
+                )
+        wm_ms = max([wm_ms] + [r[2] // 1000 - delay_ms for r in rows])
+    return out, live, {g: st for g, st in states.items() if st.exists}
+
+
+def _loop_reference(family, live):
+    """Each family's recurrence as a per-row Python loop over the live
+    rows of each key in (ts, event_id) order: the reference the
+    vectorized steps must equal exactly."""
+    import math
+
+    out = []
+    by_key = {}
+    for r in sorted(live, key=lambda r: (r[1], r[2], r[0])):
+        by_key.setdefault(r[1], []).append(r)
+    for key, rows in by_key.items():
+        last, hist, c, m = None, [], 0, 0
+        for eid, _, us, v in rows:
+            x = None if math.isnan(v) else math.floor(v * 100 + 0.5)
+            if family == "locf":
+                eff = x if x is not None else last
+                out.append((key, eid, us, eff, x is None and last is not None))
+                last = eff
+            elif family == "ewma" and x is not None:
+                w = [1 << (8 - j) for j in range(1, 9)]
+                k = min(8, len(hist))
+                wsum = sum(hist[-j] * w[j - 1] for j in range(1, k + 1))
+                denom = sum(w[:k])
+                if k >= 1 and abs(x * denom - wsum) > 0:
+                    out.append((key, eid, us, x, wsum, denom))
+                hist = (hist + [x])[-8:]
+            elif family == "cusum":
+                c += x - 5200
+                m = min(m, c)
+                out.append((f"k{key}", eid, us, c - m, c - m > 20000))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_keyed_recurrence_steps_equal_loop_reference(
+    spark, monkeypatch, family, layout
+):
+    """The kernel's fold, driven directly on random disordered
+    micro-batches (several keys per group in the packed layout, NULL
+    values, true-late rows), equals a per-row Python loop of each
+    recurrence (keep_latest: each key's last emission is its max live
+    row).  Every state left after the final flush holds a carry."""
+    import random
+
+    from pyspark.sql.group import GroupedData
+
+    monkeypatch.setattr(
+        GroupedData, "applyInPandasWithState", lambda self, fold, *a: fold
+    )
+    events = spark.createDataFrame([], _EVENTS_SCHEMA)
+    fold = _family_op(family, layout)(events)
+    rng = random.Random(7)
+    rows = []
+    for eid in range(400):
+        us = rng.randrange(0, 40 * 3_600_000_000)
+        null = family != "cusum" and rng.random() < 0.2
+        value = float("nan") if null else rng.randrange(-10**6, 10**6) / 100
+        rows.append((eid, rng.randrange(6), us, value))
+    # arrival order = event time + up to 3 h of jitter, so some rows come
+    # in after the watermark (delay 2 h) has passed them
+    rows.sort(key=lambda r: r[2] + rng.randrange(3 * 3_600_000_000))
+    batches = [rows[i : i + 50] for i in range(0, len(rows), 50)]
+    group_of = (lambda k: k) if layout == "per_key" else (lambda k: k % 2)
+    got, live, left = _drive_fold(fold, batches, group_of, 7_200_000)
+    assert 0 < len(live) < len(rows)
+    if family == "keep_latest":
+        best = {}
+        for eid, key, us, _ in live:
+            best[key] = max(best.get(key, (0, -1)), (us, eid))
+        final = {}
+        for key, us, eid, _ in sorted(got):
+            assert (eid, key, us) in {r[:3] for r in live}
+            final[key] = (us, eid)
+        assert final == best
+    else:
+        assert sorted(got) == _loop_reference(family, live)
+    for st in left.values():  # (c_keys, *carry, p_keys, p_ts, p_ord, payload)
+        assert st.get[0] and not st.get[-3]
+
+
+_RESTART_CASES = [
+    ("locf", "per_key"),
+    pytest.param("locf", "packed", marks=pytest.mark.slow),
+    pytest.param("keep_latest", "per_key", marks=pytest.mark.slow),
+    pytest.param("keep_latest", "packed", marks=pytest.mark.slow),
+]
+
+
+@pytest.mark.parametrize("family,layout", _RESTART_CASES)
+def test_keyed_recurrence_restarts_from_checkpoint(
+    spark, tmp_path, family, layout
+):
+    """Stop after 2 of 4 range-staged events files, add the other 2 and
+    restart from the same checkpoint: the carry and the pending rows
+    survive the state encoding across the restart.  locf's parquet sink
+    output equals an uninterrupted replay and the batch twin on the
+    finalized subset.  keep_latest emits a key again when it resumes
+    after the watermark passed its winner, and the closing batch of the
+    first run is such a point; so its restarted output holds every row
+    of the uninterrupted replay plus those earlier winners, and each
+    key's last emission equals both the uninterrupted replay's and the
+    batch keep-latest of the quiesced keys."""
+    import shutil
+
+    from shuttle_spark.sources.io import read_stream
+    from shuttle_spark.streaming import events_stream_multi, staged_events_files
+
+    op = _family_op(family, layout)
+
+    def prep(src):
+        if family == "locf":
+            src = src.withColumn("value", _null_if(F.col("value")))
+        return op(src)
+
+    staged = staged_events_files(spark, SF, 4)
+    parts = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    assert len(parts) == 4
+    land, sink, ckpt = (str(tmp_path / d) for d in ("land", "sink", "ckpt"))
+    os.mkdir(land)
+    for files in (parts[:2], parts[2:]):
+        for f in files:  # copy2 keeps the staged range-order modtimes
+            shutil.copy2(os.path.join(staged, f), os.path.join(land, f))
+        src = read_stream(spark, land, _EVENTS_SCHEMA, max_files_per_trigger=1)
+        _replay_to(spark, prep(src), ckpt, fmt="parquet", path=sink)
+    restarted = spark.read.parquet(sink)
+    whole = run_available_now(
+        prep(events_stream_multi(spark, SF, n_files=4, files_per_trigger=1)),
         shuffle_partitions=4,
     )
-    assert out.count() == 0
+    got = _rows(restarted.select(*whole.columns))
+    assert got
+    if family == "keep_latest":
+        assert set(_rows(whole)) <= set(got)
+        got = sorted({r[0]: r for r in got}.values())  # last per key
+        assert got == sorted({r[0]: r for r in _rows(whole)}.values())
+    else:
+        assert got == _rows(whole)
+
+    if family == "locf":
+        want, cutoff_us = _locf_batch(spark)
+        assert [r for r in got if r[2] <= cutoff_us] == want
+    else:
+        latest = D.keep_latest(
+            _events(spark), ["user_id"], [F.desc("ts"), F.desc("event_id")]
+        )
+        want = _rows(
+            latest.filter(F.col("ts") < F.lit(_cutoff(spark))).select(
+                "user_id", F.unix_micros("ts").alias("ts_us"), "event_id",
+                "event_type",
+            )
+        )
+        assert got == want
 
 
 def test_stream_cusum_rejects_non_integral_tiebreak(spark):
@@ -790,25 +1080,26 @@ def test_stream_cusum_rejects_non_integral_tiebreak(spark):
 
     from shuttle_spark.streaming import events_stream
     from shuttle_spark.streaming.core import stream_cusum
-    from shuttle_spark.streaming.core import stream_cusum_packed
 
     src = events_stream(spark, SF)
-    with pytest.raises(ValueError, match="must be an integral column"):
-        stream_cusum(src, tiebreak_col="value")  # value is a double
-    with pytest.raises(ValueError, match="must be an integral column"):
-        stream_cusum_packed(src, tiebreak_col="value")
+    for n_state_buckets in (None, 8):
+        with pytest.raises(ValueError, match="must be an integral column"):
+            # value is a double
+            stream_cusum(
+                src, tiebreak_col="value", n_state_buckets=n_state_buckets
+            )
 
 
 @pytest.mark.slow
 def test_stream_cusum_packed_parity(spark):
-    """stream_cusum_packed == stream_cusum row-for-row (exceptAll both
+    """stream_cusum packed == per-key row-for-row (exceptAll both
     ways), single- and multi-batch — packing is a physical layout
     change; the two-counter recurrence walk is byte-identical per key,
     so ANY divergence is a bug.  The key space is inflated (event_type
     x user_id % 7) so 8 buckets force real multi-key packing, and the
     output must contain real alerts (the dials bite)."""
     from shuttle_spark.streaming import events_stream_multi
-    from shuttle_spark.streaming.core import stream_cusum, stream_cusum_packed
+    from shuttle_spark.streaming.core import stream_cusum
 
     ktag = F.concat_ws("_", F.col("event_type"), F.col("user_id") % 7)
     cols = ["event_type", "event_id", "ts_us", "stat_cents", "is_alert"]
@@ -822,7 +1113,7 @@ def test_stream_cusum_packed_parity(spark):
             shuffle_partitions=4,
         ).select(*cols)
         packed = run_available_now(
-            stream_cusum_packed(
+            stream_cusum(
                 mk().withColumn("event_type", ktag), n_state_buckets=8
             ),
             f"{name}_b",

@@ -1,5 +1,5 @@
 """Round-13: root-cause probe for the streaming family's 32-core
-anti-scaling (VERDICT r12 item 3 — stream_ewma_packed ratio 0.34,
+anti-scaling (VERDICT r12 item 3 — stream_ewma_packed_anomalies ratio 0.34,
 stream_keep_latest 0.64, stream_stream_join 0.77 between local[8] and
 local[32] in the driver's scaling block).
 

@@ -2,10 +2,11 @@
 item 4).
 
 The packed-state transform's whole claim is about key-count scaling:
-``applyInPandasWithState`` costs ~1.3 ms per GROUP invocation (Arrow
-slicing + state round-trip, independent of the fold body), so the
-per-key operators pay keys x batches x that constant while the packed
-twins pay it once per BUCKET per batch.  The r11 evidence was two spot
+``applyInPandasWithState`` costs ~1.1 ms of wall per GROUP invocation
+(Arrow slicing + state round-trip, independent of the fold body; see
+``streaming.core._keyed_recurrence``), so the per-key layout pays keys x
+batches x that constant while the packed layout (``n_state_buckets``)
+pays it once per BUCKET per batch.  The r11 evidence was two spot
 walls; this study is the measured curve — each family's per-key and
 packed forms replayed at 2-3 key-count points (the key space inflated
 the same way the parity fuzzers do, so winners/histories reshuffle but
@@ -51,11 +52,8 @@ def main() -> None:
     from shuttle_spark.streaming import events_stream, run_available_now
     from shuttle_spark.streaming.core import (
         stream_cusum,
-        stream_cusum_packed,
         stream_ewma_deviants,
-        stream_ewma_packed,
         stream_keep_latest,
-        stream_keep_latest_packed,
     )
 
     spark = get_session("stream-state-scale")
@@ -82,19 +80,19 @@ def main() -> None:
         # name -> (per_key_op, packed_op, key inflater, distinct-key col)
         "stream_keep_latest": (
             stream_keep_latest,
-            lambda s: stream_keep_latest_packed(s, n_state_buckets=32),
+            lambda s: stream_keep_latest(s, n_state_buckets=32),
             inflate_uid,
             "user_id",
         ),
         "stream_ewma": (
             stream_ewma_deviants,
-            lambda s: stream_ewma_packed(s, n_state_buckets=32),
+            lambda s: stream_ewma_deviants(s, n_state_buckets=32),
             inflate_uid,
             "user_id",
         ),
         "stream_cusum": (
             stream_cusum,
-            lambda s: stream_cusum_packed(s, n_state_buckets=32),
+            lambda s: stream_cusum(s, n_state_buckets=32),
             inflate_type,
             "event_type",
         ),
@@ -124,7 +122,7 @@ def main() -> None:
             " 32 buckets): same rows, key space inflated m x like the"
             " parity fuzzers; walls are full AvailableNow replays at"
             f" {os.path.basename(sf_dir)}.  The per-key wall prices the"
-            " ~1.3 ms/group applyInPandasWithState constant at that key"
+            " ~1.1 ms/group applyInPandasWithState constant at that key"
             " count; the packed wall pays it per bucket per batch."
         )
         for m in KEY_MULTS:
