@@ -21,11 +21,16 @@ here:
 
 `tools/plan_report.py` uses `measure` to publish a per-contract
 stage/shuffle/spill table into PLANS.md ("Observed runtime metrics").
+
+* **Streaming progress** (`last_replay`) — ``run_available_now`` records
+  the finished query's ``recentProgress``: per-micro-batch phase
+  durations and, per stateful operator, state-store commit and update
+  time and the rows the watermark dropped.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -136,3 +141,67 @@ def measure(spark: SparkSession, action: Callable[[], object]) -> tuple[object, 
     high = max((s.stage_id for s in before), default=-1)
     result = action()
     return result, RunMetrics(stage_metrics(spark, min_stage_id=high))
+
+
+@dataclass(frozen=True)
+class StateOperatorProgress:
+    """One stateful operator in one micro-batch; times are summed over the
+    operator's state-store instances (one per shuffle partition)."""
+
+    name: str
+    state_store_instances: int
+    commit_ms: int
+    all_updates_ms: int
+    rows_dropped_by_watermark: int
+
+
+@dataclass(frozen=True)
+class BatchProgress:
+    batch_id: int
+    input_rows: int
+    duration_ms: dict[str, int]  # StreamingQueryProgress.durationMs
+    state_operators: tuple[StateOperatorProgress, ...]
+
+
+@dataclass(frozen=True)
+class ReplayProgress:
+    """The micro-batches of one finished stream replay, in order."""
+
+    query_name: str
+    batches: tuple[BatchProgress, ...]
+
+
+_last_replay: ReplayProgress | None = None
+
+
+def record_replay(query_name: str, progress: Iterable) -> None:
+    """Keep a finished query's ``recentProgress`` (pyspark
+    ``StreamingQueryProgress`` objects) as the process's last replay."""
+    global _last_replay
+    _last_replay = ReplayProgress(
+        query_name,
+        tuple(
+            BatchProgress(
+                batch_id=p.batchId,
+                input_rows=p.numInputRows,
+                duration_ms=dict(p.durationMs),
+                state_operators=tuple(
+                    StateOperatorProgress(
+                        name=op.operatorName,
+                        state_store_instances=op.numStateStoreInstances,
+                        commit_ms=op.commitTimeMs,
+                        all_updates_ms=op.allUpdatesTimeMs,
+                        rows_dropped_by_watermark=op.numRowsDroppedByWatermark,
+                    )
+                    for op in p.stateOperators
+                ),
+            )
+            for p in progress
+        ),
+    )
+
+
+def last_replay() -> ReplayProgress | None:
+    """Progress of the last stream replayed by
+    ``streaming.run_available_now`` in this process (None before any)."""
+    return _last_replay

@@ -48,6 +48,13 @@ _PR_N_CACHE_MAX = 16
 _pr_n_cache: dict[tuple, int] = {}
 
 
+def clear_components_cache() -> None:
+    """Unpersist and drop every staged relation (components, oriented
+    triangle edges, pagerank edges/nodes) and the pagerank |V| scalars."""
+    _cc_cache.clear()
+    _pr_n_cache.clear()
+
+
 def _canon(e: DataFrame) -> DataFrame:
     """Canonical undirected edge set: (a, b) with a > b, no self-loops."""
     return (

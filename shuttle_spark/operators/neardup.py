@@ -429,13 +429,17 @@ def minhash_candidates(
     # on (id, band_idx, band_key), so the join/dedup above runs on ~40-byte
     # rows and the gram sets join back HERE, each moving exactly once per
     # side from the session-staged (persisted) gram relation.  Same rows,
-    # same schema: pairs are unique by (id_a, id_b) before the attach and
-    # gram sets are unique per id.
+    # same schema: pairs are unique by (id_a, id_b) before the attach.
+    # Gram sets are made unique per id here: docs sharing an id would
+    # otherwise fan one pair out into a row per doc combination.  Such an
+    # id keeps its least gram set (array order), so the choice does not
+    # depend on partitioning; both attaches read the same relation.
+    per_id = grams.groupBy("id").agg(F.min("grams").alias("grams"))
     return pairs.join(
-        grams.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a")),
+        per_id.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a")),
         "id_a",
     ).join(
-        grams.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b")),
+        per_id.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b")),
         "id_b",
     ).select("id_a", "id_b", "grams_a", "grams_b")
 

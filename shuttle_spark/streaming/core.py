@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from shuttle_spark.catalog import normalize_events_ts, table_path
+from shuttle_spark.observability import record_replay
 
 
 def events_raw_schema(sf_dir: str) -> T.StructType:
@@ -95,12 +96,14 @@ _TMP_DIRS: list[str] = []
 def _scratch_root(min_free_bytes: int = 1 << 30) -> str | None:
     """Preferred base for streaming scratch (checkpoints, staged landing
     dirs, sink versions): a tmpfs mount when one exists AND has headroom.
-    Checkpoint commits fsync every delta/offset file; on tmpfs that's a
-    memory write, which removes the per-micro-batch disk floor from
-    replay-style tests (measured ~15% off each streaming contract at
-    sf0.1).  In production the checkpoint location is a DURABLE path the
-    caller passes — this root only serves the harness's ephemeral replay
-    checkpoints, which die with the process anyway.
+    The medium does not set the commit cost: a probe at sf0.1 measured
+    the same state-store commit time with checkpoints on ext4 and on
+    tmpfs.  Commits were bound by Hadoop's per-file ``chmod``/``readlink``
+    spawns, which the engine filesystem removes (``session.py``); tmpfs
+    only keeps throwaway replay scratch off the disk.  In production the
+    checkpoint location is a DURABLE path the caller passes — this root
+    only serves the harness's ephemeral replay checkpoints, which die with
+    the process anyway.
 
     tmpfs is RAM-backed (typically capped at 50% of memory), so it
     COMPETES with executor memory: writing data-sized scratch there at
@@ -1121,7 +1124,11 @@ def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
     (applyInPandasWithState over a wide key space): the per-GROUP runner
     constant parallelizes across partitions while each partition adds a
     fixed state-store commit, so the sweet spot tracks the local core
-    count.  Measured at sf0.1 (round 13, interleaved medians):
+    count.  That commit is now ~5-20 ms per partition per micro-batch
+    (engine filesystem, sf0.1, local[4]); every figure below was taken
+    when it was ~95-145 ms, Hadoop spawning a ``chmod``/``readlink`` per
+    checkpoint file, and the dial is unchanged until it is re-measured.
+    Measured at sf0.1 (round 13, interleaved medians):
     stream_locf at local[32] reads 5.85/4.07/3.48/4.01 s for 4/8/16/32
     partitions and at local[8] reads 6.49/5.29/6.87/9.82 —
     ``min(cores, 16)`` picks the winner at both; keep_latest and ewma
@@ -1160,11 +1167,17 @@ def run_available_now(
 
     ``shuffle_partitions`` sizes the stateful-operator partition count for
     THIS query only (pinned into its checkpoint at first start; the session
-    value is restored afterwards).  State-store commit cost scales with
-    partition count, so small replays want few partitions (4 at bench SF
-    measured 2-3x faster than 32) while a 100 TB stream wants hundreds —
-    it is the streaming twin of the reference's workers-per-app sizing
-    (Ors2ShuffleManager.scala:372-398).
+    value is restored afterwards).  Each stateful partition commits its
+    state store once per micro-batch: ~5-20 ms per partition on the engine
+    filesystem (sf0.1, local[4], stream_window_agg and
+    stream_keep_latest_packed), against ~95-145 ms when Hadoop spawned a
+    ``chmod``/``readlink`` per checkpoint file (``session.py``).  The
+    contracts' ``shuffle_partitions=4`` predates that: it was chosen when
+    small replays at 4 partitions measured 2-3x faster than at 32.  A 100 TB
+    stream still wants hundreds — it is the streaming twin of the
+    reference's workers-per-app sizing (Ors2ShuffleManager.scala:372-398).
+    The finished query's progress stays readable as
+    ``observability.last_replay()``.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     ckpt = tracked_mkdtemp(f"ckpt_{name}_")
@@ -1183,6 +1196,7 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
+        record_replay(name, q.recentProgress)
     finally:
         restore()
     return spark.table(name)

@@ -33,3 +33,26 @@ def test_measure_scopes_to_action(spark):
     _, m = O.measure(spark, lambda: df.count())
     # second run sees only its own stages, not cumulative history
     assert 0 < m.n_stages <= warm.n_stages + 1
+
+
+def test_last_replay_records_stream_progress(spark, sf_dir):
+    """run_available_now keeps the finished query's progress: per-batch
+    phase durations and the state operator's commit/update time and
+    watermark drops (stream_window_agg: one watermarked window agg over
+    4 shuffle partitions, replayed in order)."""
+    from shuttle_spark.catalog import load_table
+    from shuttle_spark.contracts import REGISTRY
+
+    REGISTRY["stream_window_agg"].build(spark, sf_dir).collect()
+    rep = O.last_replay()
+    assert rep is not None and rep.query_name.startswith("swa_")
+    assert rep.batches and [b.batch_id for b in rep.batches] == sorted(
+        b.batch_id for b in rep.batches
+    )
+    assert sum(b.input_rows for b in rep.batches) == load_table(spark, sf_dir, "events").count()
+    for b in rep.batches:
+        assert b.duration_ms["triggerExecution"] > 0 and "walCommit" in b.duration_ms
+        (op,) = b.state_operators
+        assert op.state_store_instances == 4
+        assert op.commit_ms >= 0 and op.all_updates_ms >= 0
+    assert sum(op.rows_dropped_by_watermark for b in rep.batches for op in b.state_operators) == 0

@@ -197,6 +197,22 @@ def test_connected_components_known_graph(spark):
     assert got == want
 
 
+def test_clear_components_cache_unpersists(spark):
+    from shuttle_spark.operators import components as CC
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    cc = CC.connected_components(pairs)
+    assert cc.is_cached and CC.connected_components(pairs) is cc
+    CC.pagerank(pairs, "id_a", "id_b").count()
+    assert CC._pr_n_cache
+    CC.clear_components_cache()
+    assert not CC._cc_cache._entries and not CC._pr_n_cache
+    assert not cc.is_cached
+    rebuilt = CC.connected_components(pairs)
+    assert rebuilt is not cc
+    assert sorted(map(tuple, rebuilt.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+
 def test_cluster_dedup_transitive(spark):
     """a~b and b~c collapse to ONE survivor even though a!~c pairwise."""
     from shuttle_spark.operators import components as CC

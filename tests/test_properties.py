@@ -11,7 +11,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -117,6 +117,39 @@ def test_exact_jaccard_pairs_match_reference(spark, texts):
             if jac >= 0.3:
                 want[(i, j)] = round(jac, 6)
     assert got == want
+
+
+@given(
+    docs=st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.lists(st.sampled_from("abc"), max_size=6).map(" ".join),
+        ),
+        min_size=2,
+        max_size=10,
+    )
+)
+@example(docs=[(1, "a b c d"), (1, "a b c d e"), (2, "a b c d")])
+@settings(SLOW, max_examples=6)
+def test_minhash_pairs_unique_under_duplicate_ids(spark, docs):
+    """Docs sharing an id give exactly one candidate row per (id_a, id_b),
+    the same pairs as the narrow form, and each side carries the least
+    gram set among the docs with that id."""
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    kw = dict(n=2, n_perm=32, bands=8)
+    rows = N.minhash_candidates(df, carry_grams=True, **kw).collect()
+    keys = [(r.id_a, r.id_b) for r in rows]
+    assert len(keys) == len(set(keys)), keys
+    narrow = {(r.id_a, r.id_b) for r in N.minhash_candidates(df, **kw).collect()}
+    assert set(keys) == narrow
+    least: dict[int, list[str]] = {}
+    for i, t in docs:
+        toks = t.lower().split()
+        g = list(dict.fromkeys(" ".join(toks[j : j + 2]) for j in range(len(toks) - 1)))
+        if g:
+            least[i] = min(least.get(i, g), g)
+    for r in rows:
+        assert (list(r.grams_a), list(r.grams_b)) == (least[r.id_a], least[r.id_b])
 
 
 @pytest.mark.slow

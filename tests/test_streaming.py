@@ -1003,7 +1003,40 @@ _RESTART_CASES = [
     pytest.param("locf", "packed", marks=pytest.mark.slow),
     pytest.param("keep_latest", "per_key", marks=pytest.mark.slow),
     pytest.param("keep_latest", "packed", marks=pytest.mark.slow),
+    ("ewma", "packed"),
+    pytest.param("ewma", "per_key", marks=pytest.mark.slow),
+    pytest.param("cusum", "per_key", marks=pytest.mark.slow),
+    pytest.param("cusum", "packed", marks=pytest.mark.slow),
 ]
+
+
+def _restart_batch_twin(spark, family):
+    """ewma/cusum batch twin at the ``_FAMILIES`` dials on the finalized
+    subset: (rows, their columns, the subset's ts_us cutoff)."""
+    from shuttle_spark.operators import relational as R
+
+    ev = _events(spark)
+    if family == "ewma":
+        cols = ["user_id", "event_id", "ts_us", "cents", "wsum", "denom"]
+        batch = R.ewma_deviants(
+            ev, ["user_id"], ["ts", "event_id"], "value", **_FAMILIES["ewma"][1]
+        )
+    else:
+        cols = ["event_type", "event_id", "ts_us", "stat_cents", "is_alert"]
+        batch = R.cusum_points(
+            ev, ["event_type"], "ts", "event_id", "value",
+            target_cents=5000, slack_cents=200, threshold_cents=20000,
+        )
+    cutoff = _cutoff(spark) - dt.timedelta(seconds=1)
+    want = _rows(
+        batch.filter(F.col("ts") <= F.lit(cutoff))
+        .withColumn("ts_us", F.unix_micros("ts"))
+        .select(*cols)
+    )
+    cutoff_us = int(
+        ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] - 7_201_000_000
+    )
+    return want, cols, cutoff_us
 
 
 @pytest.mark.parametrize("family,layout", _RESTART_CASES)
@@ -1012,9 +1045,9 @@ def test_keyed_recurrence_restarts_from_checkpoint(
 ):
     """Stop after 2 of 4 range-staged events files, add the other 2 and
     restart from the same checkpoint: the carry and the pending rows
-    survive the state encoding across the restart.  locf's parquet sink
-    output equals an uninterrupted replay and the batch twin on the
-    finalized subset.  keep_latest emits a key again when it resumes
+    survive the state encoding across the restart.  The parquet sink
+    output of locf, ewma and cusum equals an uninterrupted replay and the
+    batch twin on the finalized subset.  keep_latest emits a key again when it resumes
     after the watermark passed its winner, and the closing batch of the
     first run is such a point; so its restarted output holds every row
     of the uninterrupted replay plus those earlier winners, and each
@@ -1059,6 +1092,10 @@ def test_keyed_recurrence_restarts_from_checkpoint(
     if family == "locf":
         want, cutoff_us = _locf_batch(spark)
         assert [r for r in got if r[2] <= cutoff_us] == want
+    elif family in ("ewma", "cusum"):
+        want, cols, cutoff_us = _restart_batch_twin(spark, family)
+        assert want
+        assert _rows(restarted.filter(F.col("ts_us") <= cutoff_us).select(*cols)) == want
     else:
         latest = D.keep_latest(
             _events(spark), ["user_id"], [F.desc("ts"), F.desc("event_id")]
