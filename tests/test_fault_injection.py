@@ -77,7 +77,6 @@ _SCRIPT = textwrap.dedent(
 )
 
 
-@pytest.mark.slow
 def test_injected_task_failure_is_exactly_once():
     r = subprocess.run(
         [sys.executable, "-c", _SCRIPT],

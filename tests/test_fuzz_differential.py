@@ -691,7 +691,6 @@ def test_fuzz_string_functions(spark, duck, expr, n, filters):
 # engines, including the |z| boundary itself)
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 @given(
     keys=st.sampled_from(
         [("l_returnflag",), ("l_linestatus",), ("l_returnflag", "l_linestatus")]
@@ -1233,7 +1232,6 @@ def test_fuzz_doc_typicality(spark, duck, n, doc_mod):
     _check(sdf, duck, sql)
 
 
-@pytest.mark.slow
 @given(
     hours=st.integers(1, 96),
     at_type=st.sampled_from(["purchase", "signup"]),
@@ -1431,7 +1429,6 @@ def test_fuzz_ohlc_bars(spark, duck, key, key_mod):
     _check(sdf, duck, sql)
 
 
-@pytest.mark.slow
 @given(
     keys=st.sampled_from(
         [("l_returnflag",), ("l_linestatus",), ("l_returnflag", "l_linestatus")]
@@ -1660,7 +1657,6 @@ def test_fuzz_changeset_apply_arriving(spark, duck, u_mod, d_mod, i_mod):
 # Mode 38: exact time-decay engagement — randomized half-life and key
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 @given(
     key=st.sampled_from(["event_type", "user_id"]),
     half_life=st.integers(1, 48),

@@ -197,7 +197,6 @@ def test_fuzz_stream_window_parity(spark, spec):
 # docstring).
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 @given(
     window=st.sampled_from(_WINDOWS),
     delay=st.sampled_from(sorted(_DELAYS)),

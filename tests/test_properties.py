@@ -461,7 +461,6 @@ edges_strategy = st.lists(
 )
 
 
-@pytest.mark.slow
 @given(edges=edges_strategy, k=st.integers(1, 5))
 @SLOW
 def test_kcore_matches_sequential_peel(spark, edges, k):
@@ -496,7 +495,6 @@ snapshot_strategy = st.lists(
 )
 
 
-@pytest.mark.slow
 @given(old_rows=snapshot_strategy, new_rows=snapshot_strategy)
 @SLOW
 def test_changeset_roundtrip_property(spark, old_rows, new_rows):

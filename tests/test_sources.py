@@ -216,7 +216,6 @@ def test_compact_small_files(spark, tmp_path):
         assert hi1 <= lo2  # disjoint -> skippable
 
 
-@pytest.mark.slow
 def test_zorder_write_bounds_both_dims(spark, tmp_path):
     """Z-order clustering: after a 2-dim Z-curve write, parquet row-group
     min/max stats are bounded on BOTH dimensions, so filters on either

@@ -88,7 +88,6 @@ def test_session_stream_equals_batch(spark):
     assert _rows(got.filter(F.col("session_end") <= F.lit(cutoff))) == want
 
 
-@pytest.mark.slow
 def test_stream_dedup_is_exact_on_unique_keys(spark):
     got = run_available_now(
         stream_dedup(events_stream(spark, SF), ["event_id"], "2 hours"),
