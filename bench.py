@@ -65,7 +65,7 @@ def main() -> None:
     # that cost (measured 6-15 s, amplified when the session starts in a
     # slow host window) landed inside stream_ewma_packed_anomalies' timed
     # runs — three independent 32-core suite runs read it at 10.6-11.0 s
-    # vs 2.7-3.2 s isolated (tools/stream_scaling_probe.py), which is also
+    # vs 2.7-3.2 s isolated (git show d5ab06c:tools/stream_scaling_probe.py), which is also
     # what produced the r12 scaling block's spurious <1 low/high-core
     # ratios on streaming rows.  One throwaway stateful replay here moves
     # the machinery cost into the (unmeasured) warm-up, exactly like the

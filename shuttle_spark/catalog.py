@@ -113,8 +113,6 @@ def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     The staging cost is paid once per session and is charged to the
     suite's cold numbers (BASELINE.md).
     """
-    if os.environ.get("SPARK_GRAFT_RELAYOUT", "1") != "1":
-        return None
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if key in _relayout_cache:
         return _relayout_cache[key]

@@ -8229,8 +8229,9 @@ def q_ivf_upsert_equal(spark: SparkSession, sf: str) -> DataFrame:
     # |m exceptAll r| + |r exceptAll m| (multiset symmetric difference),
     # and mismatch==0 already implies n_maintained == n_post because
     # `rebuilt` is row-for-row with `post` — so the old n_m == n_post
-    # conjunct is subsumed.  Interleaved A/B (tools/ivf_upsert_ab.py,
-    # 4 paired rounds): unionw median 4.8 s vs tagged 9.9 / sequential
+    # conjunct is subsumed.  Interleaved A/B (OPTIMIZATION_r13.md; script
+    # `git show d5ab06c:tools/ivf_upsert_ab.py`), 4 paired rounds:
+    # unionw median 4.8 s vs tagged 9.9 / sequential
     # 8.5; plans/r13/ivf_upsert_verifyjob_{tagged,unionw}.txt show the
     # Python assignment stages drop from 5-dup to single evaluation.
     row = (

@@ -14,13 +14,15 @@ here:
   At 100 TB an extra `count()` is a full job; an observation is free.
 * **AppStatusStore** (`stage_metrics` / `measure`) — Spark's own
   listener-fed store of per-stage input/output/shuffle-read/shuffle-write
-  bytes+records and spill, the same data the UI/REST API serves (works with
-  the UI disabled).  `measure(fn)` snapshots stage ids, runs an action, and
-  returns only the stages that action created — per-contract shuffle-byte
-  accounting with no extra listener plumbing on the Python side.
+  bytes+records, spill and executor run/CPU/GC time, the same data the
+  UI/REST API serves (works with the UI disabled).  `measure(fn)`
+  snapshots stage ids, runs an action, and returns only the stages that
+  action created — per-contract shuffle-byte accounting with no extra
+  listener plumbing on the Python side.
 
 `tools/plan_report.py` uses `measure` to publish a per-contract
-stage/shuffle/spill table into PLANS.md ("Observed runtime metrics").
+stage/shuffle/spill table into PLANS.md ("Observed runtime metrics"), and
+`tools/ab.py` splits each timed run of an interleaved A/B by it.
 
 * **Streaming progress** (`last_replay`) — ``run_available_now`` records
   the finished query's ``recentProgress``: per-micro-batch phase
@@ -69,6 +71,9 @@ class StageMetrics:
     shuffle_write_records: int
     memory_spill_bytes: int
     disk_spill_bytes: int
+    executor_run_ms: int  # wall time of the stage's tasks, summed
+    executor_cpu_ns: int  # their executor-thread CPU time, summed
+    gc_ms: int  # their JVM GC time, summed
 
 
 @dataclass
@@ -95,25 +100,51 @@ class RunMetrics:
     def n_stages(self) -> int:
         return len(self.stages)
 
+    @property
+    def executor_run_s(self) -> float:
+        return sum(s.executor_run_ms for s in self.stages) / 1e3
 
-def stage_metrics(spark: SparkSession, min_stage_id: int = -1) -> list[StageMetrics]:
-    """Per-stage metrics from Spark's AppStatusStore (listener-fed; the
-    backing data of the UI/REST API, available even with the UI off)."""
+    @property
+    def executor_cpu_s(self) -> float:
+        """Wall rising while this stays flat is host noise, not work."""
+        return sum(s.executor_cpu_ns for s in self.stages) / 1e9
+
+    @property
+    def gc_s(self) -> float:
+        return sum(s.gc_ms for s in self.stages) / 1e3
+
+
+def _stage_list(spark: SparkSession):
+    """The AppStatusStore's stages, newest first: its stage view is keyed
+    by (stage id, attempt) and listed in reverse, and stage ids only grow."""
     sc = spark.sparkContext
     gw = sc._gateway
-    store = sc._jsc.sc().statusStore()
-    raw = store.stageList(
+    return sc._jsc.sc().statusStore().stageList(
         gw.jvm.java.util.ArrayList(),  # all statuses
         False,  # details
         False,  # withSummaries
         gw.new_array(gw.jvm.double, 0),
         gw.jvm.java.util.ArrayList(),
     )
+
+
+def _drain(spark: SparkSession) -> None:
+    """Wait until the status store has seen every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def stage_metrics(spark: SparkSession, min_stage_id: int = -1) -> list[StageMetrics]:
+    """Per-stage metrics from Spark's AppStatusStore (listener-fed; the
+    backing data of the UI/REST API, available even with the UI off) for
+    the stages above ``min_stage_id``, oldest first.  The scan stops at the
+    first stage at or below ``min_stage_id``, so it costs O(new stages),
+    not O(retained stages)."""
+    raw = _stage_list(spark)
     out = []
     for i in range(raw.size()):
         s = raw.apply(i)
         if s.stageId() <= min_stage_id:
-            continue
+            break
         out.append(
             StageMetrics(
                 stage_id=s.stageId(),
@@ -129,17 +160,24 @@ def stage_metrics(spark: SparkSession, min_stage_id: int = -1) -> list[StageMetr
                 shuffle_write_records=s.shuffleWriteRecords(),
                 memory_spill_bytes=s.memoryBytesSpilled(),
                 disk_spill_bytes=s.diskBytesSpilled(),
+                executor_run_ms=s.executorRunTime(),
+                executor_cpu_ns=s.executorCpuTime(),
+                gc_ms=s.jvmGcTime(),
             )
         )
-    return sorted(out, key=lambda m: m.stage_id)
+    return out[::-1]
 
 
 def measure(spark: SparkSession, action: Callable[[], object]) -> tuple[object, RunMetrics]:
     """Run ``action`` and return (its result, metrics of ONLY the stages it
-    submitted) — per-query shuffle/spill accounting."""
-    before = stage_metrics(spark)
-    high = max((s.stage_id for s in before), default=-1)
+    submitted) — per-query shuffle/spill accounting.  The listener bus is
+    drained on both sides, so no earlier stage leaks in and none of the
+    action's own stages is missed."""
+    _drain(spark)
+    head = _stage_list(spark)
+    high = head.apply(0).stageId() if head.size() else -1
     result = action()
+    _drain(spark)
     return result, RunMetrics(stage_metrics(spark, min_stage_id=high))
 
 

@@ -1119,7 +1119,12 @@ def _local_cores(master: str) -> int | None:
     return (os.cpu_count() or 1) if m.group(1) == "*" else int(m.group(1))
 
 
-def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
+# Bounds of the per-key replay partition count (see replay_partitions).
+_REPLAY_PARTITIONS_MIN = 4
+_REPLAY_PARTITIONS_MAX = 16
+
+
+def replay_partitions(spark: SparkSession) -> int:
     """Bench-scale partition count for PER-KEY Python-state replays
     (applyInPandasWithState over a wide key space): the per-GROUP runner
     constant parallelizes across partitions while each partition adds a
@@ -1152,7 +1157,7 @@ def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
     cores = _local_cores(spark.sparkContext.master or "")
     if cores is None:
         cores = spark.sparkContext.defaultParallelism
-    return max(lo, min(hi, cores))
+    return max(_REPLAY_PARTITIONS_MIN, min(_REPLAY_PARTITIONS_MAX, cores))
 
 
 def run_available_now(

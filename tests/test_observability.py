@@ -56,3 +56,27 @@ def test_last_replay_records_stream_progress(spark, sf_dir):
         assert op.state_store_instances == 4
         assert op.commit_ms >= 0 and op.all_updates_ms >= 0
     assert sum(op.rows_dropped_by_watermark for b in rep.batches for op in b.state_operators) == 0
+
+
+def test_measure_matches_full_scan_after_many_stages(spark):
+    """measure reads the status store's newest-first head only; with >= 50
+    stages retained it must still return exactly the stages a full scan,
+    filtered by id, attributes to the action."""
+    df = spark.range(0, 1000).withColumn("k", F.col("id") % 7)
+    while len(O.stage_metrics(spark)) < 50:
+        df.groupBy("k").count().collect()
+    high = max(s.stage_id for s in O.stage_metrics(spark))
+    _, m = O.measure(spark, lambda: df.groupBy("k").count().collect())
+    full = [s for s in O.stage_metrics(spark) if s.stage_id > high]
+    assert m.stages and m.stages == full
+    assert [s.stage_id for s in m.stages] == sorted(s.stage_id for s in m.stages)
+
+
+def test_measure_reports_executor_time(spark):
+    """Executor CPU time is the host-noise signal (wall up, CPU flat): it
+    is read for every stage and does not exceed the tasks' run time, which
+    Spark records in whole milliseconds per task."""
+    df = spark.range(0, 500_000).withColumn("k", F.col("id") % 97)
+    _, m = O.measure(spark, lambda: df.groupBy("k").count().collect())
+    tasks = sum(s.num_tasks for s in m.stages)
+    assert 0 < m.executor_cpu_s <= m.executor_run_s + 1e-3 * tasks

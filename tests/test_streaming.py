@@ -1176,8 +1176,6 @@ def test_replay_partitions_tracks_local_cores(spark):
     if master.startswith("local[") and master[6:-1].isdigit():
         cores = int(master[6:-1])
         assert p == max(4, min(16, cores))
-    # bounds are parameters, not constants
-    assert replay_partitions(spark, lo=2, hi=8) <= 8
 
 
 @pytest.mark.parametrize(
@@ -1200,10 +1198,10 @@ def test_replay_partitions_parses_every_master_form(master, cores):
     only the leading thread count sizes the replay."""
     from types import SimpleNamespace
 
-    from shuttle_spark.streaming.core import replay_partitions
+    from shuttle_spark.streaming.core import _local_cores, replay_partitions
 
     fake = SimpleNamespace(
         sparkContext=SimpleNamespace(master=master, defaultParallelism=7)
     )
-    assert replay_partitions(fake, lo=1, hi=64) == cores
+    assert (_local_cores(master) or fake.sparkContext.defaultParallelism) == cores
     assert replay_partitions(fake) == max(4, min(16, cores))
