@@ -1,24 +1,45 @@
-"""Session-scoped persisted-DataFrame caches.
+"""Session caches: one policy for every staged relation, plan and table
+statistic the engine reuses within a Spark application.
 
 Several contract families fan out from one expensive staged relation (the
-(id, grams) shingle sets; the exact near-dup pair list; the IVF-indexed
-corpus).  A real pipeline materializes such a relation once and reuses it;
-the engine mirrors that with small LRU caches of persisted DataFrames.
+(id, grams) shingle sets, the exact near-dup pair list, the IVF-indexed
+corpus); range-bucketed operators reuse table statistics (approxQuantile
+boundaries, rank-bucket histograms, pagerank's |V|); ``zorder_value``
+reuses a costly plan.  Every such store is a ``DFCache`` instance, and
+every instance follows the same policy:
 
-Keys include the source DataFrame's SEMANTIC identity — the canonicalized
-analyzed plan's hash (``semantic_key``), so a caller that recreates the
-same DataFrame (same source, same transformations, fresh object) still
-hits — plus every parameter that changes the result.  A strong reference
-to the source is held alongside each entry, which also keeps the fallback
-``id(df)`` key (used only if the JVM plan call fails) un-recyclable.
-Bounded: inserting beyond ``max_size`` unpersists and drops the least-
-recently-used entry, so derived-DataFrame callers cannot grow the cache
-without bound.  MEMORY_AND_DISK: at 100 TB a hot staged relation spills
-instead of OOMing.
+* Key.  ``cache_key(*sources, params=...)`` builds it, and no caller does:
+  the application id, each source DataFrame's ``semantic_key`` (its
+  canonicalized analyzed plan, so a caller that recreates the same
+  DataFrame still hits) and ``source_fingerprint`` (the files under its
+  scans, with size and mtime), then the parameters that change the result.
+  The key holds strong refs to its sources, so the ``id(df)`` fallback of
+  ``semantic_key`` cannot be recycled while an entry lives.
+* Freshness.  Overwriting a source path in-session changes the
+  fingerprint, so the next call misses and rebuilds.  Spark refreshes a
+  persisted relation over a rewritten path itself, but not a cached plan
+  (which then reads deleted files) nor a driver-side value (a stale
+  statistic); one rule for every key covers all three.
+* Bound.  An instance holds at most ``max_size`` entries.  A hit makes its
+  entry the most recent; an insert beyond the bound drops the least
+  recently used entry.
+* Persistence.  An instance with a ``storage_level`` persists DataFrame
+  values (a DataFrame, or each DataFrame of a tuple value) on insert and
+  unpersists them when the entry is evicted, replaced or cleared.  An
+  instance without one stores plans and driver-side values as they are.
+  MEMORY_AND_DISK is the usual level: at 100 TB a hot staged relation
+  spills instead of OOMing.
+
+Each module clears its own instances through its public ``clear_*``
+function.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -38,20 +59,24 @@ def semantic_key(df: DataFrame) -> tuple:
 
 
 def source_fingerprint(df: DataFrame) -> tuple:
-    """Cheap freshness token for correctness-bearing statistic caches: a
-    hash over the source scan's file list with each file's (size, mtime).
-    Rewriting a table at the same path in-session changes the fingerprint,
-    so stale statistics are never served against fresh data (the risk the
-    plan-identity key alone cannot see — the rewritten table has the SAME
-    analyzed plan).  Driver-side metadata only: ``inputFiles()`` is the
-    listing Spark already performs to plan the scan, and the result is
-    folded to one int so wide tables don't bloat cache keys.  Returns
-    ``("nofp",)`` for non-file sources or on any listing failure — no
-    worse than the plain plan key."""
-    import os
-
+    """Freshness token of a DataFrame's source files: a hash over the files
+    under every file scan of its ANALYZED plan, each with (size, mtime).
+    Rewriting a table at the same path in-session changes it, which the
+    plan identity cannot see (the rewritten table has the SAME analyzed
+    plan).  The analyzed plan, not ``df.inputFiles()``: that reads the
+    optimized plan, where a subtree matching a persisted relation is an
+    in-memory scan without files, so a source built on a staged relation
+    would read as file-less.  Driver-side metadata only: the listing Spark
+    already holds to plan the scan, folded to one int.  ``("fp", 0, 0)``
+    for sources without files; ``("nofp",)`` when a listed file is gone or
+    the plan cannot be read — no worse than the plan key alone."""
     try:
-        files = df.inputFiles()
+        files = []
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() == "LogicalRelation":
+                files += leaf.relation().inputFiles()
         acc = 0
         for uri in sorted(files):
             path = uri[7:] if uri.startswith("file://") else uri
@@ -62,111 +87,110 @@ def source_fingerprint(df: DataFrame) -> tuple:
         return ("nofp",)
 
 
-# Session-scoped approxQuantile boundary cache.  Range-bucketed operators
-# (global_rank / global_percent_rank, zorder_value) spend one full-scan job
-# per call computing quantile boundaries whose exact values only affect
-# bucket BALANCE, never correctness (buckets are value-disjoint for any
-# boundary set; ranking and the Z-curve layout stay exact).  A long-lived
-# engine computes such table statistics once and reuses them — the same
-# staging discipline as the gram caches — so boundaries are cached per
-# (application, source plan, columns, grid, error) and the warm path skips
-# the scan entirely.  Entries are driver-side float lists (≤ a few KB);
-# a strong ref to the source DataFrame keeps the fallback id() key stable.
-_QUANTILE_CACHE_MAX = 64
-_quantile_cache: dict[tuple, tuple[object, list]] = {}
+class CacheKey(tuple):
+    """A session-cache key (see the module docstring).  Hashing and
+    equality are the tuple's; ``sources`` keeps the sources alive."""
+
+    sources: tuple
+
+
+def cache_key(*sources: DataFrame, params: tuple = ()) -> CacheKey:
+    """The key of a value computed from ``sources`` under ``params``.
+    Build it once per call and use it for every instance the call reads."""
+    key = CacheKey((
+        sources[0].sparkSession.sparkContext.applicationId,
+        tuple((semantic_key(s), source_fingerprint(s)) for s in sources),
+        params,
+    ))
+    key.sources = sources
+    return key
+
+
+def _frames(value: object) -> list[DataFrame]:
+    return [v for v in (value if isinstance(value, tuple) else (value,))
+            if isinstance(v, DataFrame)]
+
+
+class DFCache:
+    """LRU session cache under the module's policy.  ``storage_level``
+    (a ``pyspark.StorageLevel`` name) makes it persist DataFrame values;
+    caches holding fan-out relations much larger than their source (e.g.
+    the exploded per-token relation, 100-200x the document count) pass
+    ``"DISK_ONLY"`` so a hot staged relation never crowds working executor
+    memory."""
+
+    def __init__(self, max_size: int, storage_level: str | None = None) -> None:
+        self.max_size = max_size
+        self.storage_level = storage_level
+        self._entries: dict[CacheKey, object] = {}
+
+    def get(self, key: CacheKey):
+        """The value under ``key`` (now the most recent entry), or None."""
+        if key not in self._entries:
+            return None
+        value = self._entries[key] = self._entries.pop(key)
+        return value
+
+    def put(self, key: CacheKey, value):
+        """Insert ``value`` under ``key``, persisting its DataFrames on a
+        persisting instance; returns it."""
+        if key in self._entries:
+            self._release(self._entries.pop(key))
+        while len(self._entries) >= self.max_size:
+            self._release(self._entries.pop(next(iter(self._entries))))
+        if self.storage_level:
+            for df in _frames(value):
+                df.persist(getattr(StorageLevel, self.storage_level))
+        self._entries[key] = value
+        return value
+
+    def cached(self, key: CacheKey, build: Callable[[], object]):
+        """The value under ``key``, built and inserted on a miss."""
+        hit = self.get(key)
+        return hit if hit is not None else self.put(key, build())
+
+    def clear(self) -> None:
+        for value in self._entries.values():
+            self._release(value)
+        self._entries.clear()
+
+    def _release(self, value: object) -> None:
+        if not self.storage_level:
+            return
+        for df in _frames(value):
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # the session is already stopped: nothing to free
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+_quantile_cache = DFCache(max_size=64)
 
 
 def approx_quantiles_cached(
-    df,
+    df: DataFrame,
     cols: list[str],
     probs: list[float],
     err: float,
 ) -> list[list[float]]:
-    """``df.approxQuantile(cols, probs, err)`` with session-scoped reuse."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df),
+    """``df.approxQuantile(cols, probs, err)``, session-cached: the
+    boundaries only steer the bucket BALANCE of range-bucketed operators
+    (global_rank, zorder_value), never their correctness, so a long-lived
+    engine computes them once per table and the warm path skips the scan."""
+    key = cache_key(df, params=(
         tuple(cols),
         # the FULL (rounded) probability vector: len+endpoints alone
         # collide for non-uniform grids with shared ends
         tuple(round(p, 12) for p in probs),
         err,
+    ))
+    return _quantile_cache.cached(
+        key, lambda: df.approxQuantile(list(cols), list(probs), err)
     )
-    hit = _quantile_cache.get(key)
-    if hit is not None:
-        self_touch = _quantile_cache.pop(key)  # LRU touch: re-insert on hit
-        _quantile_cache[key] = self_touch
-        return hit[1]
-    bounds = df.approxQuantile(list(cols), list(probs), err)
-    while len(_quantile_cache) >= _QUANTILE_CACHE_MAX:
-        _quantile_cache.pop(next(iter(_quantile_cache)))
-    _quantile_cache[key] = (df, bounds)
-    return bounds
 
 
 def clear_quantile_cache() -> None:
-    """Pairs with ``relational.clear_bucket_counts_cache()`` on in-session
-    table rewrites: boundaries only steer balance (stale is safe), but
-    clearing both keeps the statistic caches mutually consistent."""
     _quantile_cache.clear()
-
-
-class DFCache:
-    """LRU cache of persisted DataFrames keyed by (source identity, params).
-
-    ``storage_level`` defaults to MEMORY_AND_DISK; caches holding fan-out
-    relations much larger than their source (e.g. the exploded per-token
-    relation, 100-200x the document count) should pass ``"DISK_ONLY"`` so a
-    hot staged relation never crowds working executor memory — spilling a
-    cheap-to-recompute explosion to disk costs far less than evicting live
-    shuffle/agg pages at scale."""
-
-    def __init__(self, max_size: int = 8, storage_level: str = "MEMORY_AND_DISK") -> None:
-        self.max_size = max_size
-        self.storage_level = storage_level
-        self._entries: dict[tuple, tuple[object, DataFrame]] = {}
-
-    def get(self, key: tuple) -> DataFrame | None:
-        hit = self._entries.get(key)
-        if hit is None:
-            return None
-        self._entries[key] = self._entries.pop(key)  # LRU touch
-        return hit[1]
-
-    def put(self, key: tuple, source: object, df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        # replacing an existing key must unpersist the old relation —
-        # silently overwriting leaks its MEMORY_AND_DISK blocks for the
-        # session's lifetime (the eviction loop only sees live entries)
-        old = self._entries.pop(key, None)
-        if old is not None:
-            try:
-                old[1].unpersist()
-            except Exception:
-                pass
-        while len(self._entries) >= self.max_size:
-            _, old = self._entries.pop(next(iter(self._entries)))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        df = df.persist(getattr(StorageLevel, self.storage_level))
-        self._entries[key] = (source, df)
-        return df
-
-    def clear(self) -> None:
-        for _, df in self._entries.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._entries.clear()
-
-    def keys(self) -> list[tuple]:
-        """Live cache keys — lets callers keep side tables (e.g. the IVF
-        centroid arrays) in sync with this cache's eviction."""
-        return list(self._entries)
-
-    def __len__(self) -> int:
-        return len(self._entries)

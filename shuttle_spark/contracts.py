@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shuttle_spark.cache import DFCache, cache_key
 from shuttle_spark.catalog import load_table
 from shuttle_spark.functions import text as TX
 from shuttle_spark.operators import components as CC
@@ -86,9 +87,8 @@ def ensure_conf(spark: SparkSession) -> None:
 
 
 # Session-memoized mergeSchema read relations (schema_evolution_read):
-# keyed by (appId, fixture dir) like catalog._df_cache — schema
-# resolution is once-per-session catalog work, not per-query work.
-_evolve_read_cache: dict[tuple[str, str], DataFrame] = {}
+# schema resolution is once-per-session catalog work, not per-query work.
+_evolve_read_cache = DFCache(max_size=4)
 
 
 def _fixture_dir(sf: str, kind: str, table: str) -> str:
@@ -99,10 +99,7 @@ def _fixture_dir(sf: str, kind: str, table: str) -> str:
     attempt/evolve/landing fixtures built from the PREVIOUS corpus — a
     persistent oracle mismatch no rerun clears.  Stale same-prefix
     fixtures are deleted on sight, so /tmp holds at most one generation."""
-    import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     from shuttle_spark.catalog import source_bytes, table_path
 
@@ -125,22 +122,30 @@ def _fixture_dir(sf: str, kind: str, table: str) -> str:
         f"shuttle_{kind}_{os.path.basename(sf.rstrip('/'))}_",
     )
     cur = prefix + tag
-    # Stale GENERATIONS are cleaned up age-gated (>2h): a concurrently
-    # running sibling process of the same vintage must never have its live
-    # fixture rmtree'd mid-read, while dirs from a previous testdata
-    # generation are hours old by the time a new one exists.  Fixture
-    # BUILDS assume one writer per generation (the driver's gate is a
-    # single process; concurrent ad-hoc harnesses share the built result).
-    import time as _time
+    # Stale GENERATIONS are cleaned up age-gated: dirs from a previous
+    # testdata generation are hours old by the time a new one exists.
+    # Fixture BUILDS assume one writer per generation (the correctness gate is
+    # a single process; concurrent ad-hoc harnesses share the built result).
+    _sweep_stale_siblings(prefix, cur)
+    return cur
 
-    for d in _glob.glob(prefix + "*"):
+
+def _sweep_stale_siblings(prefix: str, cur: str) -> None:
+    """Delete the ``prefix*`` dirs other than ``cur`` that are over 2 h
+    old.  The age gate keeps a live sibling process's dir from being
+    rmtree'd mid-read: harness processes live minutes, not hours."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    for d in glob.glob(prefix + "*"):
         if d != cur:
             try:
-                if _time.time() - os.path.getmtime(d) > 7200:
+                if time.time() - os.path.getmtime(d) > 7200:
                     shutil.rmtree(d, ignore_errors=True)
             except OSError:
                 pass
-    return cur
 
 
 def _scratch_dir(spark: SparkSession, sf: str, kind: str) -> str:
@@ -148,14 +153,9 @@ def _scratch_dir(spark: SparkSession, sf: str, kind: str) -> str:
     concurrent harness processes (pytest + bench on one machine — the
     scenario q_bucketed_join already defends against with app-scoped
     table names) must not overwrite each other's sink mid-read-back.
-    Stale sibling app dirs are left alone — deleting them would be the
-    very race this scoping exists to avoid; /tmp is per-round scratch."""
+    Sibling app dirs are deleted only once over 2 h old: deleting a live
+    one would be the very race this scoping exists to avoid."""
     import os
-    import tempfile
-
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
 
     app = spark.sparkContext.applicationId.replace("-", "_")[-12:]
     from shuttle_spark.streaming.core import scratch_tempdir
@@ -165,17 +165,9 @@ def _scratch_dir(spark: SparkSession, sf: str, kind: str) -> str:
         f"shuttle_{kind}_{os.path.basename(sf.rstrip('/'))}_",
     )
     cur = base + app
-    # age-gated GC of other sessions' sink copies (>2h old): without it
-    # every session leaks a full table copy per sink kind into /tmp; the
-    # age gate keeps the no-delete-a-live-sibling guarantee (harness
-    # processes live minutes, not hours)
-    for d in _glob.glob(base + "*"):
-        if d != cur:
-            try:
-                if _time.time() - os.path.getmtime(d) > 7200:
-                    _shutil.rmtree(d, ignore_errors=True)
-            except OSError:
-                pass
+    # without the sweep every session leaks a full table copy per sink
+    # kind into /tmp
+    _sweep_stale_siblings(base, cur)
     return cur
 
 
@@ -250,20 +242,17 @@ def davg(col: str | F.Column, alias: str, scale: int = 2, nd: int = 6) -> F.Colu
 # Session cache of similarity-search query vectors: several B29 contracts
 # open with "fetch the query embedding" (vec_id=0) — a real engine keeps the
 # query set driver-side; re-collecting it per query is pure floor cost.
-_qvec_cache: dict[tuple, list[float]] = {}
+_qvec_cache = DFCache(max_size=8)
 
 
 def query_vector(spark: SparkSession, sf: str, vid: int = 0) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf, vid)
-    if key not in _qvec_cache:
-        emb = load_table(spark, sf, "embeddings")
-        _qvec_cache[key] = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == vid)
-            .select("embedding")
-            .head()[0]
-        ]
-    return _qvec_cache[key]
+    emb = load_table(spark, sf, "embeddings")
+    return _qvec_cache.cached(cache_key(emb, params=(vid,)), lambda: [
+        float(x)
+        for x in emb.filter(F.col("vec_id") == vid)
+        .select("embedding")
+        .head()[0]
+    ])
 
 
 def _osum(expr: str, alias: str, scale: int = 2) -> str:
@@ -1019,7 +1008,6 @@ def q_write_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     md5 prefix with an int64 accumulator (integrity.md5_prefix32 — exact
     below 2^31 rows; the DECIMAL path stays available for beyond)."""
     import os
-    import tempfile
 
     from shuttle_spark.operators.integrity import md5_prefix32
     from shuttle_spark.sources import io as IO
@@ -1321,7 +1309,7 @@ def q_chunk_text_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_mm_feats_cache = None
+_mm_feats_cache = DFCache(max_size=2, storage_level="MEMORY_AND_DISK")
 
 
 def _multimodal_feats(spark: SparkSession, sf: str) -> DataFrame:
@@ -1330,21 +1318,12 @@ def _multimodal_feats(spark: SparkSession, sf: str) -> DataFrame:
     pipeline — computed once, then served to every ANN probe — so the
     cold run pays synthesize + decode + featurize (two mapInPandas
     stages) and warm probes read the persisted features."""
-    global _mm_feats_cache
-
-    from shuttle_spark.cache import DFCache
     from shuttle_spark.operators import multimodal as M
 
-    if _mm_feats_cache is None:
-        _mm_feats_cache = DFCache(max_size=2)
-    key = (spark.sparkContext.applicationId, sf, "mm_feats")
-    hit = _mm_feats_cache.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    media = M.synthesize_media(docs, width=16, height=16)
-    feats = M.extract_features(media, dim=16)
-    return _mm_feats_cache.put(key, docs, feats)
+    return _mm_feats_cache.cached(cache_key(docs), lambda: M.extract_features(
+        M.synthesize_media(docs, width=16, height=16), dim=16
+    ))
 
 
 def _multimodal_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -3716,7 +3695,6 @@ def q_zorder_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     linear-layout baseline for the non-sorted dim is ~100%."""
     import glob
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -3820,7 +3798,6 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     their exact decimal rendering, so the scaled-long checksum proves the
     round-trip is value-exact, not just row-count-preserving."""
     import os
-    import tempfile
 
     from shuttle_spark.operators.integrity import md5_prefix32
     from shuttle_spark.sources import io as IO
@@ -3861,7 +3838,6 @@ def q_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     newline-delimited JSON, read back with a declared schema, checksummed
     against the parquet-sourced oracle."""
     import os
-    import tempfile
 
     from shuttle_spark.operators.integrity import md5_prefix32
     from shuttle_spark.sources import io as IO
@@ -3930,13 +3906,12 @@ def q_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
         o.filter(F.col("o_orderkey") % 2 == 0).write.mode(
             "overwrite"
         ).parquet(out + "/b2")
-    memo_key = (spark.sparkContext.applicationId, out)
-    back = _evolve_read_cache.get(memo_key)
-    if back is None:
-        back = spark.read.option("mergeSchema", "true").parquet(
+    back = _evolve_read_cache.cached(
+        cache_key(o, params=(out,)),
+        lambda: spark.read.option("mergeSchema", "true").parquet(
             out + "/b1", out + "/b2"
-        )
-        _evolve_read_cache[memo_key] = back
+        ),
+    )
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("cnt"),
         F.sum(F.coalesce(F.col("o_custkey"), F.lit(0)))
@@ -4288,7 +4263,6 @@ def q_stream_dedup_dup(spark: SparkSession, sf: str) -> DataFrame:
     dropped on read).  Exact because a duplicate pair shares its event
     time, so it is always inside the watermark window."""
     import os
-    import tempfile
 
     from shuttle_spark.catalog import table_path
     from shuttle_spark.streaming import run_available_now
@@ -5729,7 +5703,6 @@ def q_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     accumulated clean corpus must count-match the all-at-once batch
     oracle.  Decontamination against a static benchmark is per-document,
     so incremental == batch exactly (streaming/core.run_stream_decontaminate)."""
-    import tempfile
 
     from shuttle_spark.streaming.core import (
         run_stream_decontaminate,

@@ -34,18 +34,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from shuttle_spark.cache import DFCache, semantic_key
+from shuttle_spark.cache import DFCache, cache_key
 
-# (app id, pairs identity, cols) -> (node, comp) mapping.  The near-dup
+# Staged relations of the graph operators: the (node, comp) mapping, the
+# oriented triangle edges, and pagerank's (edges, nodes) pair.  The near-dup
 # pair relation is itself session-cached (neardup._pairs_cache returns a
 # stable DataFrame object), so clustering and cluster-dedup contracts share
 # one converged iteration instead of re-running it.
-_cc_cache = DFCache(max_size=6)
-
-# (app, edges identity, cols) -> |V| for pagerank: a driver-side scalar
-# statistic cached beside the staged relations (bounded; oldest-out).
-_PR_N_CACHE_MAX = 16
-_pr_n_cache: dict[tuple, int] = {}
+_cc_cache = DFCache(max_size=6, storage_level="MEMORY_AND_DISK")
+# pagerank's |V|: a driver-side scalar under the pagerank entry's key
+_pr_n_cache = DFCache(max_size=16)
 
 
 def clear_components_cache() -> None:
@@ -119,11 +117,8 @@ def connected_components(
                 f" {c!r} is {kind!r} — map ids to longs first (xxhash64 /"
                 " a staged dense-id join)"
             )
-    cache_key = (
-        pairs.sparkSession.sparkContext.applicationId,
-        semantic_key(pairs), a_col, b_col,
-    )
-    hit = _cc_cache.get(cache_key)
+    key = cache_key(pairs, params=(a_col, b_col))
+    hit = _cc_cache.get(key)
     if hit is not None:
         return hit
 
@@ -163,7 +158,7 @@ def connected_components(
     out = e.select(F.col("a").alias("node"), F.col("b").alias("comp")).union(
         roots.select("node", F.col("node").alias("comp"))
     )
-    return _cc_cache.put(cache_key, pairs, out)
+    return _cc_cache.put(key, out)
 
 
 def cluster_dedup(
@@ -238,14 +233,8 @@ def triangle_count(
     # wedge sides + the closing semi-join) and recomputed per call
     # otherwise — the degree aggregate alone re-reads the edge set twice
     # (VERDICT r5: stage the degree relation).
-    cache_key = (
-        pairs.sparkSession.sparkContext.applicationId,
-        "tri_oriented",
-        semantic_key(pairs),
-        a_col,
-        b_col,
-    )
-    oriented = _cc_cache.get(cache_key)
+    key = cache_key(pairs, params=("tri_oriented", a_col, b_col))
+    oriented = _cc_cache.get(key)
     if oriented is None:
         e = _canon(
             pairs.select(
@@ -275,7 +264,7 @@ def triangle_count(
             )
             .select("st.s", "st.t")
         )
-        oriented = _cc_cache.put(cache_key, pairs, oriented)
+        oriented = _cc_cache.put(key, oriented)
     w1 = oriented.select(F.col("s"), F.col("t").alias("u"))
     w2 = oriented.select(F.col("s"), F.col("t").alias("v"))
     wedges = w1.join(w2, "s").filter(F.col("u") < F.col("v"))
@@ -328,16 +317,9 @@ def pagerank(
     # and oriented-triangle relations above).  |V| rides along as a driver
     # scalar — one count job on first build, a bounded statistic exactly
     # like the CC convergence signature.
-    key = (
-        edges.sparkSession.sparkContext.applicationId,
-        semantic_key(edges),
-        src_col,
-        dst_col,
-    )
-    e = _cc_cache.get(key + ("pr_edges",))
-    nodes = _cc_cache.get(key + ("pr_nodes",))
-    n = _pr_n_cache.get(key)
-    if e is None or nodes is None or n is None:
+    key = cache_key(edges, params=("pagerank", src_col, dst_col))
+    staged = _cc_cache.get(key)
+    if staged is None:
         raw = (
             edges.select(
                 F.col(src_col).cast("long").alias("src"),
@@ -347,18 +329,14 @@ def pagerank(
             .distinct()
         )
         deg = raw.groupBy("src").agg(F.count("*").alias("__od"))
-        e = _cc_cache.put(key + ("pr_edges",), edges, raw.join(deg, "src"))
-        nodes = _cc_cache.put(
-            key + ("pr_nodes",),
-            edges,
+        staged = _cc_cache.put(key, (
+            raw.join(deg, "src"),
             raw.select(F.col("src").alias("node"))
             .union(raw.select(F.col("dst").alias("node")))
             .distinct(),
-        )
-        n = nodes.count()
-        while len(_pr_n_cache) >= _PR_N_CACHE_MAX:
-            _pr_n_cache.pop(next(iter(_pr_n_cache)))
-        _pr_n_cache[key] = n
+        ))
+    e, nodes = staged
+    n = _pr_n_cache.cached(key, nodes.count)
     # Both constants stay IN-PLAN (Catalyst constant-folds them) so the
     # quantization uses Spark's ROUND semantics, never Python's banker's
     # rounding — the oracle folds the identical expressions in DuckDB.

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from shuttle_spark.cache import DFCache, semantic_key
+from shuttle_spark.cache import DFCache, cache_key
 from shuttle_spark.functions import text as TX
 
 # Mersenne prime 2^31-1: permutation hash space.  a*h+b stays < 2^62, no
@@ -48,27 +48,14 @@ _SEED = 42
 # Shingling + exact Jaccard (the oracle-matchable baseline)
 # ---------------------------------------------------------------------------
 
-def word_ngram_set(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of normalized text (single-expression form)."""
-    return F.array_distinct(TX.word_ngrams(text, n))
-
-
-# Session-scoped materialization of shingle sets: every near-dup variant
-# (exact Jaccard, MinHash-LSH, dedup, recall checks) starts from the same
-# (id, grams) relation, and the Arrow gram-building UDF is the dominant cost
-# of the family.  A real pipeline stages this relation once and fans out, so
-# the engine does too: first caller persists (MEMORY_AND_DISK — spills at
-# 100 TB instead of OOM), later callers reuse.  Keyed by the source
-# DataFrame identity (the catalog returns one object per table), with a
-# strong ref held so id() cannot be recycled.  LRU-bounded (cache.DFCache):
-# callers that pass many derived DataFrames (each .filter() is a new
-# identity) evict+unpersist the oldest entry.  The exact pair list gets the
-# same treatment: four contracts (pairs, pairwise dedup, clusters, cluster
-# dedup) fan out from one tau-filtered pair relation.
-_gram_cache = DFCache(max_size=8)
-_pairs_cache = DFCache(max_size=8)
-# Back-compat alias for tests inspecting cache internals.
-_GRAM_CACHE_MAX = _gram_cache.max_size
+# Staged relations of the near-dup family: every variant (exact Jaccard,
+# MinHash-LSH, dedup, recall checks) starts from the same (id, grams)
+# relation, and the Arrow gram-building UDF is the family's dominant cost.
+# The exact pair list is staged the same way: four contracts (pairs,
+# pairwise dedup, clusters, cluster dedup) fan out from one tau-filtered
+# pair relation.
+_gram_cache = DFCache(max_size=8, storage_level="MEMORY_AND_DISK")
+_pairs_cache = DFCache(max_size=8, storage_level="MEMORY_AND_DISK")
 
 
 def clear_gram_cache() -> None:
@@ -82,7 +69,6 @@ def gram_sets(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    reuse: bool = True,
 ) -> DataFrame:
     """(id, grams) with grams = distinct word n-grams.
 
@@ -94,17 +80,10 @@ def gram_sets(
     batch loop is ~1 µs/doc and materializes the array once, so explodes and
     self-joins downstream touch a bound column.  Output is identical (same
     strings; DISTINCT semantics preserved)."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df),
-        id_col,
-        text_col,
-        n,
-    )
-    if reuse:
-        hit = _gram_cache.get(key)
-        if hit is not None:
-            return hit
+    key = cache_key(df, params=(id_col, text_col, n))
+    hit = _gram_cache.get(key)
+    if hit is not None:
+        return hit
 
     @F.pandas_udf("array<string>")
     def _grams(tok_arrays: pd.Series) -> pd.Series:
@@ -126,9 +105,7 @@ def gram_sets(
         F.col(id_col).alias("id"), TX.tokens(F.col(text_col)).alias("__toks")
     )
     out = toks.select("id", _grams(F.col("__toks")).alias("grams"))
-    if reuse:
-        out = _gram_cache.put(key, df, out)
-    return out
+    return _gram_cache.put(key, out)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -148,7 +125,6 @@ def near_dup_pairs_exact(
     text_col: str = "text",
     n: int = 3,
     max_df: int | None = None,
-    reuse: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard pairs (id_a < id_b, j >= tau) via inverted-index
     join: explode grams, equi-join on the gram, count shared grams per pair,
@@ -160,15 +136,11 @@ def near_dup_pairs_exact(
     the contract matches the brute-force oracle).  The (small, tau-filtered)
     pair relation is session-cached: pairwise dedup, clustering, and cluster
     dedup all fan out from it."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df), id_col, text_col, n, max_df, tau,
-    )
-    if reuse:
-        hit = _pairs_cache.get(key)
-        if hit is not None:
-            return hit
-    grams = gram_sets(df, id_col, text_col, n, reuse=reuse)
+    key = cache_key(df, params=(id_col, text_col, n, max_df, tau))
+    hit = _pairs_cache.get(key)
+    if hit is not None:
+        return hit
+    grams = gram_sets(df, id_col, text_col, n)
     # Inverted index carrying the set size: the pair aggregation then needs
     # NO size-lookup joins (na/nb are functionally dependent on the ids, so
     # grouping by them is free) — one self-join + one groupBy total.
@@ -208,9 +180,7 @@ def near_dup_pairs_exact(
         .filter(F.col("jac") >= tau)
         .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
     )
-    if reuse:
-        out = _pairs_cache.put(key, df, out)
-    return out
+    return _pairs_cache.put(key, out)
 
 
 def near_dup_pairs_between(
@@ -221,7 +191,6 @@ def near_dup_pairs_between(
     text_col: str = "text",
     n: int = 3,
     max_df: int | None = None,
-    reuse: bool = True,
 ) -> DataFrame:
     """Incremental near-dup join: exact Jaccard pairs between a NEW batch
     and an EXISTING corpus only (no corpus x corpus work) — the daily-
@@ -232,19 +201,14 @@ def near_dup_pairs_between(
     near_dup_pairs_exact, the (small, tau-filtered) pair relation is
     session-cached: admission filtering and audit queries over the same
     batch fan out from one materialization."""
-    key = (
-        new_df.sparkSession.sparkContext.applicationId,
-        "between",
-        semantic_key(new_df),
-        semantic_key(corpus_df),
-        id_col, text_col, n, max_df, tau,
+    key = cache_key(
+        new_df, corpus_df, params=("between", id_col, text_col, n, max_df, tau)
     )
-    if reuse:
-        hit = _pairs_cache.get(key)
-        if hit is not None:
-            return hit
-    ga = gram_sets(new_df, id_col, text_col, n, reuse=reuse)
-    gb = gram_sets(corpus_df, id_col, text_col, n, reuse=reuse)
+    hit = _pairs_cache.get(key)
+    if hit is not None:
+        return hit
+    ga = gram_sets(new_df, id_col, text_col, n)
+    gb = gram_sets(corpus_df, id_col, text_col, n)
     inv_a = ga.select("id", F.size("grams").alias("na"), F.explode("grams").alias("g"))
     inv_b = gb.select("id", F.size("grams").alias("nb"), F.explode("grams").alias("g"))
     if max_df is not None:
@@ -280,9 +244,7 @@ def near_dup_pairs_between(
         .filter(F.col("jac") >= tau)
         .select("id_new", "id_corpus", F.round("jac", 6).alias("jac"))
     )
-    if reuse:
-        out = _pairs_cache.put(key, (new_df, corpus_df), out)
-    return out
+    return _pairs_cache.put(key, out)
 
 
 def dedup_against_corpus(
@@ -622,7 +584,6 @@ def fuzzy_string_join(
     right_str: str = "rs",
     n: int = 3,
     max_df: int | None = None,
-    reuse: bool = True,
 ) -> DataFrame:
     """Bipartite fuzzy join: (left_id, right_id, jac) for every cross pair
     whose character-trigram Jaccard similarity >= tau — entity matching /
@@ -638,7 +599,7 @@ def fuzzy_string_join(
     Corpus-derived sides are merge-hinted (the round-2 broadcast-estimate
     lesson).
 
-    ``reuse`` stages each side's exploded trigram index per session (the
+    Each side's exploded trigram index per session (the
     gram-cache discipline, VERDICT r5 item 6): a record-linkage pipeline
     probes the SAME corpus with batch after batch of candidates, so the
     corpus index is the natural staged relation.  Staged indexes are
@@ -646,24 +607,17 @@ def fuzzy_string_join(
     co-partitioned in-memory blocks and elide both exchanges."""
 
     def _inv(side: DataFrame, id_in: str, str_in: str, id_out: str, sz: str):
-        key = (
-            side.sparkSession.sparkContext.applicationId,
-            "fuzzy_inv",
-            semantic_key(side),
-            id_in,
-            str_in,
-            id_out,
-            n,
+        key = cache_key(side, params=(
+            "fuzzy_inv", id_in, str_in, id_out, n,
             # layout differs by path: the direct-join form pre-partitions
             # on g, the max_df form does not — same rows either way, but a
             # key collision would silently trade away the warm-join
             # exchange elision
             max_df is None,
-        )
-        if reuse:
-            hit = _gram_cache.get(key)
-            if hit is not None:
-                return hit
+        ))
+        hit = _gram_cache.get(key)
+        if hit is not None:
+            return hit
         t = side.select(F.col(id_in).alias(id_out), F.col(str_in).alias("__s"))
         t = t.select(id_out, _char_trigram_set_expr("__s", n).alias("gs"))
         out = t.select(
@@ -675,9 +629,7 @@ def fuzzy_string_join(
             # max_df the downstream stop-gram filter + per-id count window
             # re-exchange anyway, so the extra shuffle would be pure cost
             out = out.repartition("g")
-        if reuse:
-            out = _gram_cache.put(key, side, out)
-        return out
+        return _gram_cache.put(key, out)
 
     inv_l = _inv(left, left_id, left_str, "lid", "na")
     inv_r = _inv(right, right_id, right_str, "rid", "nb")
@@ -739,7 +691,6 @@ def near_dup_pairs_prefix(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    reuse: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard pairs via PREFIX FILTERING (the PPJoin-family
     candidate pruning): same output as ``near_dup_pairs_exact``, but the
@@ -768,17 +719,13 @@ def near_dup_pairs_prefix(
     max_df exists to cap) never enter the index at all, with no recall
     cost.  Rarity ordering maximizes pruning but ANY consistent global
     order preserves exactness."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df), id_col, text_col, n, tau, "prefix",
-    )
-    if reuse:
-        hit = _pairs_cache.get(key)
-        if hit is not None:
-            return hit
+    key = cache_key(df, params=(id_col, text_col, n, tau, "prefix"))
+    hit = _pairs_cache.get(key)
+    if hit is not None:
+        return hit
     # floor, not round: tau_bp must never exceed tau*10000 (see docstring)
     tau_bp = int(math.floor(tau * 10000))
-    grams = gram_sets(df, id_col, text_col, n, reuse=reuse)
+    grams = gram_sets(df, id_col, text_col, n)
     inv = grams.select(
         "id", F.size("grams").alias("ng"), F.explode("grams").alias("g")
     )
@@ -822,6 +769,4 @@ def near_dup_pairs_prefix(
         .filter(F.col("jac") >= tau)
         .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
     )
-    if reuse:
-        out = _pairs_cache.put(key, df, out)
-    return out
+    return _pairs_cache.put(key, out)

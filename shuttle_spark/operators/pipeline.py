@@ -32,21 +32,20 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from shuttle_spark.cache import DFCache, semantic_key
+from shuttle_spark.cache import DFCache, cache_key
 from shuttle_spark.functions import text as TX
 
 # Session-staged text relations, same discipline as neardup's gram cache:
 # every text-analysis operator (tf-idf, decontamination, token stats)
 # opens with "tokenize the corpus" — a real pipeline materializes that
-# relation once and fans out, so the engine does too.  MEMORY_AND_DISK
-# persisted, LRU-bounded; keys carry the source plan's semantic hash.
-# The exploded (doc, token) relation is 100-200x the document count; at
-# large SF four memory-resident copies would dominate executor storage for
-# a relation that is cheap to recompute relative to its size.  DISK_ONLY +
+# relation once and fans out, so the engine does too.  The exploded
+# (doc, token) relation is 100-200x the document count; at large SF four
+# memory-resident copies would dominate executor storage for a relation
+# that is cheap to recompute relative to its size.  DISK_ONLY +
 # a 2-corpus cap keeps the staging win (skip re-tokenization) without
 # competing with shuffle/agg memory (ADVICE r5).
 _words_cache = DFCache(max_size=2, storage_level="DISK_ONLY")
-_gram_cache = DFCache(max_size=4)
+_gram_cache = DFCache(max_size=4, storage_level="MEMORY_AND_DISK")
 
 
 def clear_text_caches() -> None:
@@ -58,30 +57,18 @@ def words_relation(
     docs: DataFrame,
     keep: tuple[str, ...] = ("doc_id", "source"),
     text_col: str = "text",
-    reuse: bool = True,
 ) -> DataFrame:
     """(keep..., term) — the exploded token relation of a corpus, staged
     per session.  The regex tokenizer is the dominant per-row kernel of
     the text family (java.util.regex, the named residual); staging makes
     every downstream aggregate touch a bound column instead of re-running
     it."""
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        "words",
-        semantic_key(docs),
-        keep,
-        text_col,
+    return _words_cache.cached(
+        cache_key(docs, params=(keep, text_col)),
+        lambda: docs.select(
+            *keep, F.explode(TX.tokens(F.col(text_col))).alias("term")
+        ),
     )
-    if reuse:
-        hit = _words_cache.get(key)
-        if hit is not None:
-            return hit
-    out = docs.select(
-        *keep, F.explode(TX.tokens(F.col(text_col))).alias("term")
-    )
-    if reuse:
-        out = _words_cache.put(key, docs, out)
-    return out
 
 
 def _doc_grams(
@@ -93,27 +80,19 @@ def _doc_grams(
     the relation per session (the corpus side of decontamination is
     re-probed by every new benchmark suite; the benchmark side is tiny
     and not worth an entry)."""
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        "grams",
-        semantic_key(docs),
-        id_col,
-        n,
-    )
-    if reuse:
-        hit = _gram_cache.get(key)
-        if hit is not None:
-            return hit
-    toks = docs.select(id_col, TX.tokens(F.col("text")).alias("toks"))
-    out = toks.select(
-        id_col,
-        F.explode(
-            F.array_distinct(TX.ngrams_from_tokens(F.col("toks"), n))
-        ).alias("gram"),
-    )
-    if reuse:
-        out = _gram_cache.put(key, docs, out)
-    return out
+
+    def build() -> DataFrame:
+        toks = docs.select(id_col, TX.tokens(F.col("text")).alias("toks"))
+        return toks.select(
+            id_col,
+            F.explode(
+                F.array_distinct(TX.ngrams_from_tokens(F.col("toks"), n))
+            ).alias("gram"),
+        )
+
+    if not reuse:
+        return build()
+    return _gram_cache.cached(cache_key(docs, params=(id_col, n)), build)
 
 
 def contaminated_ids(

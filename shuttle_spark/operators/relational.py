@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shuttle_spark.cache import DFCache, approx_quantiles_cached, cache_key
+
 
 # ---------------------------------------------------------------------------
 # Scan / project / filter (B1-B3) — declarative so Catalyst pushes down.
@@ -416,13 +418,9 @@ def ranked(
     return df.withColumn(alias, fns[method]().over(w))
 
 
-# Session cache of per-bucket rank histograms (global_rank/pctrank):
-# (app, source, range_col, boundaries) -> (source df, sorted (bucket,
-# count) pairs <= buckets+1 longs, memoized offsets local relation).
-# Strong source ref keeps the id()-fallback semantic key stable; clear
-# with clear_bucket_counts_cache().
-_BUCKET_COUNTS_CACHE_MAX = 64
-_bucket_counts_cache: dict[tuple, tuple[object, list, object]] = {}
+# Session cache of per-bucket rank offsets (global_rank/pctrank): a local
+# relation of <= buckets+1 rows per (source, range_col, boundaries).
+_bucket_counts_cache = DFCache(max_size=64)
 
 
 def clear_bucket_counts_cache() -> None:
@@ -455,8 +453,6 @@ def global_rank(
     spec.  ``range_col`` must be the leading, ascending sort key; quantile
     skew only unbalances bucket sizes, never correctness.
     """
-    from shuttle_spark.cache import approx_quantiles_cached
-
     probs = [i / buckets for i in range(1, buckets)]
     # Boundary values only steer bucket BALANCE (correctness holds for any
     # value-disjoint bucketing), so they are session-cached like any other
@@ -500,57 +496,29 @@ def global_rank(
     # Per-bucket counts -> exclusive prefix-sum offsets.  Like the quantile
     # boundaries above, the bucket histogram is a TABLE STATISTIC a
     # long-lived engine computes once (ANALYZE) and reuses: it is cached
-    # per (source, boundary set) as <= buckets+1 driver-side longs, so the
-    # warm path runs ONE job (the final ranked scan), not two.  Unlike the
+    # per (source, boundary set) as the exclusive prefix-sum offsets (a
+    # local relation of <= buckets+1 rows, so a warm build re-plans zero
+    # local relations), and the warm path runs ONE job (the final ranked
+    # scan), not two.  Unlike the
     # boundaries, counts affect CORRECTNESS — but they are a pure function
-    # of the same source relation the cache key identifies.  Like every
-    # session cache here (grams, pairs, IVF), the key is the ANALYZED PLAN,
-    # so it assumes in-session-immutable sources (write-once corpus): after
-    # rewriting a table at the same path in-session, call
-    # clear_bucket_counts_cache() — stale counts with fresh data would rank
-    # silently wrong, which is worse than the stale-but-consistent reads
-    # the persisted-DataFrame caches degrade to.
-    from shuttle_spark.cache import semantic_key as _sk
-    from shuttle_spark.cache import source_fingerprint as _fp
-
-    # The key also carries a source-file freshness fingerprint (size+mtime
-    # fold): rewriting a table at the same path in-session changes the
-    # fingerprint and misses the cache, so stale counts can never rank
-    # fresh data silently wrong.  clear_bucket_counts_cache() remains the
-    # manual escape hatch for non-file sources (fingerprint degrades to a
-    # constant there).
-    ckey = (
-        df.sparkSession.sparkContext.applicationId,
-        _sk(df),
-        _fp(df),
-        range_col,
-        tuple(bounds),
-    )
-    hit = _bucket_counts_cache.get(ckey)
-    if hit is not None:
-        cnt_rows, offsets = hit[1], hit[2]
-    else:
+    # of the same source relation the cache key identifies.
+    key = cache_key(df, params=(range_col, tuple(bounds)))
+    offsets = _bucket_counts_cache.get(key)
+    if offsets is None:
         cnt_rows = sorted(
             (r["__bucket"], r["__cnt"])
             for r in with_b.groupBy("__bucket")
             .agg(F.count("*").alias("__cnt"))
             .collect()
         )
-        # The exclusive prefix-sum offsets relation (<= buckets+1 local
-        # rows) is a pure function of the cached counts, so the DataFrame
-        # itself is memoized alongside them — a warm build re-plans zero
-        # local relations.
         total = sum(c for _, c in cnt_rows)
         off_rows, acc = [], 0
         for b, c in cnt_rows:
             off_rows.append((b, acc, total))
             acc += c
-        offsets = df.sparkSession.createDataFrame(
+        offsets = _bucket_counts_cache.put(key, df.sparkSession.createDataFrame(
             off_rows, "__bucket int, __off long, __n long"
-        )
-        while len(_bucket_counts_cache) >= _BUCKET_COUNTS_CACHE_MAX:
-            _bucket_counts_cache.pop(next(iter(_bucket_counts_cache)))
-        _bucket_counts_cache[ckey] = (df, cnt_rows, offsets)
+        ))
     if not keep_total:
         offsets = offsets.drop("__n")
     w_local = Window.partitionBy("__bucket").orderBy(*order)

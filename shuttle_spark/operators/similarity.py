@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from shuttle_spark.cache import DFCache, semantic_key
+from shuttle_spark.cache import DFCache, cache_key
 from shuttle_spark.functions.vectors import (
     cosine,
     cosine_pairs_vectorized,
@@ -303,20 +303,14 @@ def _exact_all_pairs(
 # centroids partition the corpus; queries probe only the nearest cells.
 # ---------------------------------------------------------------------------
 
-# Session cache of built indexes: (source df identity, params) -> persisted
-# indexed df, via the shared DFCache (LRU touch, size cap, unpersist on
-# evict — one implementation, not a hand-rolled twin).  The tiny centroid
-# arrays ride a side dict under the same keys, pruned to the cache's live
-# keys after every put.  An IVF index exists to be probed many times;
-# rebuilding it per query would repeat the training collect and the
-# assignment scan.
-_ivf_cache = DFCache(max_size=4)
-_ivf_cents: dict[tuple, np.ndarray] = {}
+# Session cache of built indexes: an IVF index exists to be probed many
+# times; rebuilding it per query would repeat the training collect and the
+# assignment scan.  Entries are (indexed df, centroid array).
+_ivf_cache = DFCache(max_size=4, storage_level="MEMORY_AND_DISK")
 
 
 def clear_ivf_cache() -> None:
     _ivf_cache.clear()
-    _ivf_cents.clear()
 
 
 def _nearest_centroid(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -400,7 +394,6 @@ def ivf_build(
     vec_col: str = "embedding",
     sample_fraction: float | None = None,
     max_train_rows: int = 100_000,
-    reuse: bool = True,
 ) -> tuple[DataFrame, np.ndarray]:
     """Assign every vector to its nearest coarse centroid (one scan).
 
@@ -413,14 +406,12 @@ def ivf_build(
     (`ivf_full_probe_topk` equals brute force for ANY centroids).  Returns
     (df + ``cell`` column, centroids array).
     """
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df), id_col, vec_col, n_cells, sample_fraction, max_train_rows,
+    key = cache_key(
+        df, params=(id_col, vec_col, n_cells, sample_fraction, max_train_rows)
     )
-    if reuse:
-        hit = _ivf_cache.get(key)
-        if hit is not None and key in _ivf_cents:
-            return hit, _ivf_cents[key].copy()
+    hit = _ivf_cache.get(key)
+    if hit is not None:
+        return hit[0], hit[1].copy()
     # NULL embeddings carry no training signal and np.stack(None) would
     # crash the collect — drop them from the SAMPLE only (the corpus keeps
     # its rows; they get a NULL cell below and never match a probe)
@@ -439,11 +430,7 @@ def ivf_build(
             if len(members):
                 centroids[c] = members.mean(0)
     indexed = assign_cells(df, centroids, vec_col)
-    if reuse:
-        indexed = _ivf_cache.put(key, df, indexed)
-        _ivf_cents[key] = centroids.copy()
-        for stale in [k for k in _ivf_cents if k not in _ivf_cache.keys()]:
-            del _ivf_cents[stale]
+    _ivf_cache.put(key, (indexed, centroids.copy()))
     return indexed, centroids
 
 

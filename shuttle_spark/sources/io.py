@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from shuttle_spark.cache import DFCache, approx_quantiles_cached, cache_key
+
 _SELF_DESCRIBING = {"parquet", "orc", "avro"}
 _TEXTUAL = {"csv", "json", "text"}
 
@@ -331,19 +333,16 @@ def _bucket_index(col_sql: str, boundaries: list[float]):
     return F.expr(tree(0, len(boundaries)))
 
 
-# Session cache of z-keyed DataFrames: a zorder_value plan is ~500 driver-
-# side expression nodes (measured 0.37 s to rebuild per call); DataFrames
-# are immutable, so the keyed relation is reused outright.  Entries are
-# unevaluated plans (never persisted); a strong ref keeps the id() fallback
-# key stable.
-_ZVALUE_CACHE_MAX = 16
-_zvalue_cache: dict[tuple, tuple[object, "DataFrame", int]] = {}
+# Session cache of z-keyed plans: a zorder_value plan is ~500 driver-side
+# expression nodes (measured 0.37 s to rebuild per call); DataFrames are
+# immutable, so the keyed relation is reused outright.  Entries are
+# (unevaluated plan, max occupied key).
+_zvalue_cache = DFCache(max_size=16)
 
 
 def clear_zvalue_cache() -> None:
-    """Evict cached z-keyed plans — the cold-path hook every other session
-    cache exposes (cache.clear_quantile_cache, neardup.clear_gram_cache),
-    so benches and tests can charge the plan-build cost cold."""
+    """Evict cached z-keyed plans, so benches and tests can charge the
+    plan-build cost cold."""
     _zvalue_cache.clear()
 
 
@@ -395,21 +394,13 @@ def zorder_value(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from shuttle_spark.cache import approx_quantiles_cached, semantic_key
-
     n = len(cols)
     if n * bits > 62:
         raise ValueError(f"{n} cols x {bits} bits exceeds a long")
-    ckey = (
-        df.sparkSession.sparkContext.applicationId,
-        semantic_key(df),
-        tuple(cols),
-        bits,
-        quantile_error,
-    )
-    hit = _zvalue_cache.get(ckey)
+    key = cache_key(df, params=(tuple(cols), bits, quantile_error))
+    hit = _zvalue_cache.get(key)
     if hit is not None:
-        return hit[1], "__z", hit[2]
+        return hit[0], "__z", hit[1]
     nb = (1 << bits) - 1  # buckets per dim - 1 boundaries
     probs = [i / (nb + 1) for i in range(1, nb + 1)]
     # ONE quantile job for all dimensions (multi-column approxQuantile),
@@ -482,9 +473,7 @@ def zorder_value(
             )
         ),
     )
-    while len(_zvalue_cache) >= _ZVALUE_CACHE_MAX:
-        _zvalue_cache.pop(next(iter(_zvalue_cache)))
-    _zvalue_cache[ckey] = (df, out, z_hi)
+    _zvalue_cache.put(key, (out, z_hi))
     return out, "__z", z_hi
 
 

@@ -72,9 +72,11 @@ def test_fixture_dir_tracks_source_fingerprint(tmp_path):
     — a regenerated testdata dir can never resurrect a fixture built from
     the previous corpus.  Stale generations are cleaned AGE-GATED (>2h):
     a same-vintage sibling process must never lose its live fixture, so a
-    fresh stale dir survives and an hours-old one is removed."""
+    fresh stale dir survives and an hours-old one is removed.  The same
+    age gate holds for _scratch_dir's per-application sink dirs."""
     import os
     import time
+    from types import SimpleNamespace
 
     import shuttle_spark.contracts as C
 
@@ -91,14 +93,26 @@ def test_fixture_dir_tracks_source_fingerprint(tmp_path):
     # (could belong to a live same-vintage process)
     t.write_bytes(b"y" * 101)
     os.utime(t, ns=(1, 1))
-    d2 = C._fixture_dir(str(sf), "unittest", "lineitem")
-    assert d2 != d1
-    assert os.path.exists(d1)
-    # ...but an hours-old stale generation is removed on sight
-    old = time.time() - 3 * 3600
-    os.utime(d1, (old, old))
-    assert C._fixture_dir(str(sf), "unittest", "lineitem") == d2
-    assert not os.path.exists(d1)
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    for stale, current in [
+        (d1, lambda: C._fixture_dir(str(sf), "unittest", "lineitem")),
+        (
+            C._scratch_dir(app("local-1111"), str(sf), "unittest_sink"),
+            lambda: C._scratch_dir(app("local-2222"), str(sf), "unittest_sink"),
+        ),
+    ]:
+        os.makedirs(stale, exist_ok=True)
+        cur = current()
+        assert cur != stale
+        assert os.path.exists(stale)
+        # ...but an hours-old stale sibling is removed on sight
+        old = time.time() - 3 * 3600
+        os.utime(stale, (old, old))
+        assert current() == cur
+        assert not os.path.exists(stale)
 
 
 def test_driver_gate_covers_every_b_family():

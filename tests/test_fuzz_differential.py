@@ -1369,7 +1369,7 @@ def test_fuzz_prefix_jaccard(spark, duck, tau_pct, doc_mod):
     docs = load_table(spark, SF, "documents").filter(
         F.col("doc_id") % doc_mod == 0
     )
-    sdf = N.near_dup_pairs_prefix(docs, tau, reuse=False)
+    sdf = N.near_dup_pairs_prefix(docs, tau)
     # the n=3 brute-force twin the full-index contract gates on,
     # parameterized by tau and the doc subset
     sql = (

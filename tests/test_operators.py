@@ -171,10 +171,10 @@ def test_gram_cache_bounded(spark):
 
     N.clear_gram_cache()
     docs = spark.read.parquet(SF + "/documents.parquet").limit(50)
-    for i in range(N._GRAM_CACHE_MAX + 3):
+    for i in range(N._gram_cache.max_size + 3):
         d = docs.filter(F.col("doc_id") >= i)  # new DataFrame identity
         N.gram_sets(d).count()
-    assert len(N._gram_cache) <= N._GRAM_CACHE_MAX
+    assert len(N._gram_cache) <= N._gram_cache.max_size
     N.clear_gram_cache()
     assert not N._gram_cache
 
@@ -408,7 +408,7 @@ def test_zero_norm_vectors_score_zero_never_nan(spark):
     assert all(2 not in pair for pair in lsh)
 
     # IVF probe: degenerate vector scores 0.0, never NaN
-    indexed, cents = S.ivf_build(emb, 4, n_cells=2, reuse=False)
+    indexed, cents = S.ivf_build(emb, 4, n_cells=2)
     ivf = {
         r["vec_id"]: r["sim"]
         for r in S.ivf_topk(
@@ -438,7 +438,7 @@ def test_near_dup_paths_survive_null_and_short_text(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    exact = N.near_dup_pairs_exact(docs, 0.3, reuse=False).collect()
+    exact = N.near_dup_pairs_exact(docs, 0.3).collect()
     mh = N.minhash_near_dup_pairs(docs, 0.3, n_perm=32, bands=8).collect()
     for pairs in (exact, mh):
         ids = {r["id_a"] for r in pairs} | {r["id_b"] for r in pairs}
@@ -632,7 +632,7 @@ def test_null_embedding_does_not_crash_scoring(spark):
     assert {r["vec_id"] for r in knn} == {0, 2}
     # IVF: NULL embeddings get a NULL cell (excluded by probe filters),
     # training drops them — no np.stack crash anywhere
-    indexed, cents = S.ivf_build(emb, dim=2, n_cells=2, reuse=False)
+    indexed, cents = S.ivf_build(emb, dim=2, n_cells=2)
     cells = {r["vec_id"]: r["cell"] for r in indexed.collect()}
     assert cells[1] is None and cells[0] is not None
     ivf = S.ivf_topk(indexed, cents, [1.0, 0.0], 3, n_probe=2).collect()
@@ -699,15 +699,75 @@ def test_dfcache_put_overwrite_unpersists_old(spark):
     silent overwrite pins its blocks for the session's lifetime."""
     from shuttle_spark.cache import DFCache
 
-    c = DFCache(max_size=4)
+    c = DFCache(max_size=4, storage_level="MEMORY_AND_DISK")
     df1 = spark.range(10).toDF("v")
     df2 = spark.range(20).toDF("v")
-    p1 = c.put(("k",), None, df1)
+    p1 = c.put(("k",), df1)
     assert p1.storageLevel.useMemory or p1.storageLevel.useDisk
-    c.put(("k",), None, df2)
+    c.put(("k",), df2)
     assert len(c) == 1
     assert not (p1.storageLevel.useMemory or p1.storageLevel.useDisk)
     c.clear()
+
+
+def test_source_fingerprint_sees_files_under_a_persisted_relation(spark, tmp_path):
+    """A source that matches a persisted relation still fingerprints its
+    files: the optimized plan (what df.inputFiles() reads) shows only an
+    in-memory scan there, so a cache over a staged relation (components
+    over the staged pair list) would never see a rewrite."""
+    from pyspark.sql import functions as F
+
+    from shuttle_spark.cache import source_fingerprint
+
+    p = str(tmp_path / "t")
+    spark.range(10).repartition(3).write.mode("overwrite").parquet(p)
+
+    def staged():
+        return spark.read.parquet(p).filter(F.col("id") > 2)
+
+    n_files = len(staged().inputFiles())
+    assert n_files > 0
+    first = staged().persist()
+    try:
+        assert source_fingerprint(staged())[:2] == ("fp", n_files)
+    finally:
+        first.unpersist()
+
+
+def test_dfcache_lru_bound_and_persistence(spark):
+    """The one session-cache policy: a hit makes its entry the most recent,
+    so an insert past the bound evicts the least recently USED entry (not
+    the oldest insert); eviction and clear unpersist what a persisting
+    instance persisted (DataFrames of tuple values too); an instance
+    without a storage level never persists."""
+    from shuttle_spark.cache import DFCache, cache_key
+
+    def persisted(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    c = DFCache(max_size=2, storage_level="MEMORY_AND_DISK")
+    src = spark.range(5).toDF("v")
+    ka, kb, kc = (cache_key(src, params=(p,)) for p in "abc")
+    a = c.put(ka, spark.range(10).toDF("v"))
+    b, b_stat = c.put(kb, (spark.range(11).toDF("v"), 3))
+    assert persisted(a) and persisted(b)
+    assert c.get(cache_key(src, params=("a",))) is a  # rebuilt key hits
+    built = []
+    c.cached(kc, lambda: built.append(1) or spark.range(12).toDF("v"))
+    assert built == [1]
+    assert c.get(kb) is None and c.get(ka) is a  # b was least recently used
+    assert not persisted(b)
+    c.clear()
+    assert len(c) == 0 and not persisted(a)
+
+    plain = DFCache(max_size=2)
+    p = plain.cached(ka, lambda: spark.range(13).toDF("v"))
+    assert plain.cached(ka, lambda: None) is p
+    assert not persisted(p)
+    own = plain.put(kb, spark.range(14).toDF("v").persist())
+    plain.clear()  # leaves the caller's own persistence alone
+    assert persisted(own)
+    own.unpersist()
 
 
 def test_scd2_intervals_semantics(spark):
@@ -851,6 +911,57 @@ def test_global_rank_bucket_cache_survives_table_rewrite(spark, tmp_path):
     # a stale cached histogram would produce max rank 100 (or garbage
     # offsets); the fingerprint forces a fresh count of the 250-row table
     assert r2.agg(F.max("rk")).collect()[0][0] == 250
+
+
+def test_zorder_value_cache_survives_table_rewrite(spark, tmp_path):
+    """A cached z-keyed PLAN over a rewritten path would read the deleted
+    files; the key's fingerprint makes the re-read miss and re-plan."""
+    import time as _time
+
+    from pyspark.sql import functions as F
+
+    from shuttle_spark.sources import io as IO
+
+    p = str(tmp_path / "z")
+
+    def write(n):
+        spark.range(n).select(
+            F.col("id").alias("x"), (F.col("id") % 7).alias("y")
+        ).coalesce(1).write.mode("overwrite").parquet(p)
+
+    write(100)
+    z1, _, _ = IO.zorder_value(spark.read.parquet(p), ["x", "y"])
+    assert len(z1.collect()) == 100
+    _time.sleep(0.05)  # distinct mtime_ns for the rewrite
+    write(250)
+    z2, _, _ = IO.zorder_value(spark.read.parquet(p), ["x", "y"])
+    assert len(z2.collect()) == 250
+
+
+def test_pagerank_cache_survives_edge_table_rewrite(spark, tmp_path):
+    """pagerank's |V| is a driver-side value Spark cannot refresh: after
+    the edge table is rewritten (3-cycle -> 4-cycle) the call must equal
+    a fresh one, not score four nodes against the old |V| of 3."""
+    import time as _time
+
+    from shuttle_spark.operators import components as CC
+
+    p = str(tmp_path / "e")
+
+    def write(edges):
+        spark.createDataFrame(edges, "src long, dst long").coalesce(
+            1
+        ).write.mode("overwrite").parquet(p)
+
+    write([(1, 2), (2, 3), (3, 1)])
+    CC.pagerank(spark.read.parquet(p)).collect()
+    _time.sleep(0.05)  # distinct mtime_ns for the rewrite
+    write([(i, i % 4 + 1) for i in range(1, 5)])
+    got = {r.node: r.score for r in CC.pagerank(spark.read.parquet(p)).collect()}
+    CC.clear_components_cache()
+    fresh = {r.node: r.score for r in CC.pagerank(spark.read.parquet(p)).collect()}
+    assert got == fresh
+    assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
 # ---------------------------------------------------------------------------
@@ -1353,11 +1464,11 @@ def test_prefix_filtered_jaccard_equals_full_index(spark):
     for tau in (0.5, 0.6, 2 / 3, 0.8):
         full = {
             (r.id_a, r.id_b, r.jac)
-            for r in N.near_dup_pairs_exact(docs, tau, reuse=False).collect()
+            for r in N.near_dup_pairs_exact(docs, tau).collect()
         }
         pre = {
             (r.id_a, r.id_b, r.jac)
-            for r in N.near_dup_pairs_prefix(docs, tau, reuse=False).collect()
+            for r in N.near_dup_pairs_prefix(docs, tau).collect()
         }
         assert pre == full, f"tau={tau}"
     assert full  # corpus has qualifying pairs at 0.8, else vacuous

@@ -203,7 +203,7 @@ def main() -> None:
                     from shuttle_spark.operators import components, pipeline
 
                     neardup.clear_gram_cache()
-                    components._cc_cache.clear()
+                    components.clear_components_cache()
                     pipeline.clear_text_caches()
             neardup.clear_gram_cache()
             try:
