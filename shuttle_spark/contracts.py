@@ -181,9 +181,9 @@ def _readback_checksum(df: DataFrame, key_col) -> int:
     preserving row count would pass both).  The scan is column-pruned to
     the key expression's inputs, so this costs one md5 pass over the
     OUTPUT, not the r4 double full-table re-read."""
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
-    v = df.agg(F.sum(md5_prefix32(key_col))).collect()[0][0]
+    v = df.agg(F.sum(md5_prefix(key_col, 32))).collect()[0][0]
     return int(v) if v is not None else 0
 
 
@@ -1005,11 +1005,11 @@ def q_write_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     fail the hash against the source-table oracle.  Write-path cost trims
     (VERDICT r3 item 3): the combined key is computed BEFORE the write (two
     columns written, not three) and the read-back hash uses the 32-bit
-    md5 prefix with an int64 accumulator (integrity.md5_prefix32 — exact
+    md5 prefix with an int64 accumulator (integrity.md5_prefix — exact
     below 2^31 rows; the DECIMAL path stays available for beyond)."""
     import os
 
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
     from shuttle_spark.sources import io as IO
 
     # NOTE (measured, sf0.1): forcing smaller scan splits to parallelize
@@ -1030,7 +1030,7 @@ def q_write_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     key = F.concat_ws("|", F.col("k").cast("string"), F.col("l_returnflag"))
     return back.agg(
         F.count("*").alias("cnt"),
-        F.sum(md5_prefix32(key)).alias("checksum"),
+        F.sum(md5_prefix(key, 32)).alias("checksum"),
     )
 
 
@@ -1060,7 +1060,7 @@ def q_compact_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     row groups so later scans fan back out to
     parallel tasks (io.compact row_group_bytes — the read-parallelism dial
     a 128 MB-file compaction uses at production scale); the integrity hash
-    (int64-accumulated 32-bit md5 prefix, integrity.md5_prefix32 — exact
+    (int64-accumulated 32-bit md5 prefix, integrity.md5_prefix — exact
     below 2^31 rows) rides the WRITE job itself as observed metrics
     (io.compact's ``observation`` hook, a zero-shuffle accumulator over
     the rows entering the writer, carries the row COUNT); the reported
@@ -3799,7 +3799,7 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     round-trip is value-exact, not just row-count-preserving."""
     import os
 
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
     from shuttle_spark.sources import io as IO
 
     c = load_table(spark, sf, "customer").select(
@@ -3819,7 +3819,7 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
     return back.agg(
         F.count("*").alias("cnt"),
-        F.sum(md5_prefix32(key)).alias("checksum"),
+        F.sum(md5_prefix(key, 32)).alias("checksum"),
     )
 
 
@@ -3839,7 +3839,7 @@ def q_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     against the parquet-sourced oracle."""
     import os
 
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
     from shuttle_spark.sources import io as IO
 
     s = load_table(spark, sf, "supplier").select(
@@ -3859,7 +3859,7 @@ def q_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
     return back.agg(
         F.count("*").alias("cnt"),
-        F.sum(md5_prefix32(key)).alias("checksum"),
+        F.sum(md5_prefix(key, 32)).alias("checksum"),
     )
 
 
@@ -7290,16 +7290,17 @@ def _cdc_base_totals(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _mv_checksum(mv: DataFrame) -> DataFrame:
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.coalesce(F.col("o_custkey"), F.lit(-1)).cast("string"),
             F.lit(":"),
             F.col("n_rows").cast("string"),
             F.lit(":"),
             F.col("sum_cents").cast("string"),
-        )
+        ),
+        32,
     )
     return mv.agg(
         F.count("*").alias("n_groups"),
@@ -7340,7 +7341,7 @@ def q_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     O(churn).  The hashed cents coalesce to -1 for deletes (md5(NULL)
     would silently drop them from the sum)."""
     from shuttle_spark.operators import lineage as L
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     d = L.snapshot_diff(
         _cdc_old(spark, sf),
@@ -7348,14 +7349,15 @@ def q_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
         ["o_orderkey"],
         ["o_custkey", "o_totalprice"],
     )
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.col("o_orderkey").cast("string"),
             F.lit(":"),
             F.coalesce(
                 F.round(F.col("o_totalprice") * 100).cast("long"), F.lit(-1)
             ).cast("string"),
-        )
+        ),
+        32,
     )
     return d.groupBy("op").agg(
         F.count("*").alias("n"), F.sum(term).alias("chk")
@@ -7384,7 +7386,7 @@ def q_changeset_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     table byte-for-byte; this is the strongest oracle shape available
     for a pair of inverse operators."""
     from shuttle_spark.operators import lineage as L
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     old = _cdc_old(spark, sf)
     changes = L.snapshot_diff(
@@ -7393,14 +7395,15 @@ def q_changeset_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         keys_nullable=False,  # o_orderkey is the PK — NULL-free
     )
     applied = L.apply_changeset(old, changes, ["o_orderkey"])
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.col("o_orderkey").cast("string"),
             F.lit(":"),
             F.col("o_custkey").cast("string"),
             F.lit(":"),
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        )
+        ),
+        32,
     )
     return applied.agg(
         F.count("*").alias("n_rows"), F.sum(term).alias("chk")
@@ -7449,12 +7452,13 @@ def q_ab_test(spark: SparkSession, sf: str) -> DataFrame:
     stats, and identical IEEE arithmetic in both engines (no p-value by
     design: erf is transcendental and libm-divergent; consumers
     threshold |t|)."""
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     ev = load_table(spark, sf, "events").filter(F.col("value").isNotNull())
     arm = F.when(
-        md5_prefix32(
-            F.concat(F.col("user_id").cast("string"), F.lit(":ab7"))
+        md5_prefix(
+            F.concat(F.col("user_id").cast("string"), F.lit(":ab7")),
+            32,
         )
         % 2
         == 0,
@@ -7590,19 +7594,20 @@ def q_changeset_apply_arriving(spark: SparkSession, sf: str) -> DataFrame:
     100 TB the touched-key relation is churn-sized and AQE broadcasts
     it; the base is scanned exactly once."""
     from shuttle_spark.operators import lineage as L
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     merged = L.apply_changeset(
         _cdc_old(spark, sf), _cdc_arriving(spark, sf), ["o_orderkey"]
     )
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.col("o_orderkey").cast("string"),
             F.lit(":"),
             F.col("o_custkey").cast("string"),
             F.lit(":"),
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        )
+        ),
+        32,
     )
     return merged.agg(
         F.count("*").alias("n_rows"), F.sum(term).alias("chk")
@@ -7958,7 +7963,7 @@ def q_table_recon_drill(spark: SparkSession, sf: str) -> DataFrame:
     re-derives the suspect buckets itself in SQL, so the hash can only
     match if BOTH phases agree end-to-end."""
     from shuttle_spark.operators.integrity import (
-        md5_prefix32,
+        md5_prefix,
         table_recon,
         table_recon_drill,
     )
@@ -7980,13 +7985,14 @@ def q_table_recon_drill(spark: SparkSession, sf: str) -> DataFrame:
         for r in census.filter(F.col("status") != "match").collect()
     ]
     drilled = table_recon_drill(left, right, cols, bad)
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.col("bucket").cast("string"), F.lit(":"),
             F.col("o_orderkey").cast("string"), F.lit(":"),
             F.col("o_custkey").cast("string"), F.lit(":"),
             F.col("cents").cast("string"),
-        )
+        ),
+        32,
     )
     return drilled.groupBy("side").agg(
         F.count("*").alias("n_rows"), F.sum(term).alias("chk")

@@ -678,7 +678,7 @@ def hash_split(
     32-bit md5 prefix modulo 1e6 compared against cumulative boundaries —
     row-local JVM expressions only, no shuffle, pushed-through scan.
     Refresh the assignment by bumping ``seed``."""
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     # F.concat (NULL-propagating), NOT concat_ws (NULL-skipping): a NULL id
     # must yield a NULL bucket so it falls through every boundary into the
@@ -686,8 +686,9 @@ def hash_split(
     # + CASE does.  concat_ws would hash just the seed and send every
     # NULL-id row to one arbitrary bucket, silently diverging from the
     # oracle (review catch).
-    bucket = md5_prefix32(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed)))
+    bucket = md5_prefix(
+        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed))),
+        32,
     ) % F.lit(1_000_000)
     names = list(fractions)
     cum = 0.0
@@ -841,10 +842,11 @@ def stratified_split(
     stratum exceeds executor memory at 100 TB."""
     from pyspark.sql import Window as W
 
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
-    rank_key = md5_prefix32(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed)))
+    rank_key = md5_prefix(
+        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed))),
+        32,
     )
     w = W.partitionBy(*strata_cols).orderBy(rank_key, F.col(id_col))
     ranked = df.withColumn("__rn", F.row_number().over(w))

@@ -815,14 +815,15 @@ def sample_k_per_group(
     carries at most ``k`` rows per group per input partition, not the
     fact table.  The hash tie-breaks by id, so duplicate ids cannot make
     the cut order ambiguous."""
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     # NULL-propagating concat (not concat_ws) so a NULL id sorts as a NULL
     # hash — identical to the oracle's `id || ':' || seed`, which is NULL
     # for NULL ids; concat_ws would hash just ':seed' and rank NULL ids
     # deterministically-but-differently from the SQL twin
-    sort_key = md5_prefix32(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed)))
+    sort_key = md5_prefix(
+        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed))),
+        32,
     )
     w = (
         Window.partitionBy(*keys)
@@ -874,17 +875,18 @@ def priority_sample_per_group(
     exchange).  Per-group state is O(group), shuffled rows are the
     filtered input — at 100 TB pre-filter with the weight predicate
     pushed to the scan."""
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     m = 10 ** weight_scale
     wc = F.floor(F.col(weight_col) * m + F.lit(0.5)).cast("long")
     # NULL-propagating concat (see sample_k_per_group): NULL ids must
     # hash NULL and be excluded with the NULL weights below
     u = (
-        md5_prefix32(
+        md5_prefix(
             F.concat(
                 F.col(id_col).cast("string"), F.lit(":"), F.lit(str(seed))
-            )
+            ),
+            32,
         )
         % F.lit(1 << _PS_U_BITS)
         + 1

@@ -1597,7 +1597,7 @@ def test_fuzz_locf_impute(spark, duck, key, null_mod):
 @FUZZ
 def test_fuzz_changeset_apply_arriving(spark, duck, u_mod, d_mod, i_mod):
     from shuttle_spark.operators import lineage as L
-    from shuttle_spark.operators.integrity import md5_prefix32
+    from shuttle_spark.operators.integrity import md5_prefix
 
     o = load_table(spark, SF, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1620,12 +1620,13 @@ def test_fuzz_changeset_apply_arriving(spark, duck, u_mod, d_mod, i_mod):
     merged = L.apply_changeset(
         o, upd.unionByName(dele).unionByName(ins), ["o_orderkey"]
     )
-    term = md5_prefix32(
+    term = md5_prefix(
         F.concat(
             F.col("o_orderkey").cast("string"), F.lit(":"),
             F.col("o_custkey").cast("string"), F.lit(":"),
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-        )
+        ),
+        32,
     )
     sdf = merged.agg(F.count("*").alias("n_rows"), F.sum(term).alias("chk"))
     sql = (

@@ -1,7 +1,8 @@
 """The engine's fork-free local filesystem (shuttle_spark/jvm/).
 
 1. ``resolve_conf`` registers it for the ``file:`` scheme and puts its
-   classes ahead of a caller's driver classpath;
+   classes ahead of a caller's driver classpath; without a compiler it
+   registers neither the filesystem nor the checksum kernel;
 2. a stream replay and a partitioned parquet write through ``get_session``
    make the Spark JVM spawn no ``chmod``/``readlink``/``ls``/``stat``;
 3. it keeps stock Hadoop semantics: mode bits of new files and
@@ -21,11 +22,14 @@ import textwrap
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from shuttle_spark import session as S
+from shuttle_spark.operators.integrity import md5_prefix
 
 needs_javac = pytest.mark.skipif(
-    S.local_fs_classes() is None, reason="no javac: stock local filesystem"
+    S.jvm_classes() is None, reason="no javac: stock local filesystem"
 )
 
 STOCK_FS = "org.apache.hadoop.fs.LocalFileSystem"
@@ -42,7 +46,7 @@ def _cls(jvm, name):
 
 @needs_javac
 def test_resolve_conf_registers_fs_ahead_of_caller_classpath():
-    classes = S.local_fs_classes()
+    classes = S.jvm_classes()
     assert os.path.isfile(
         os.path.join(classes, "shuttle_spark", "jvm", "NioLocalFs.class")
     )
@@ -54,11 +58,17 @@ def test_resolve_conf_registers_fs_ahead_of_caller_classpath():
     assert over["spark.driver.extraClassPath"] == os.pathsep.join([classes, "a.jar:b/"])
 
 
-def test_resolve_conf_without_compiler_keeps_stock_fs(monkeypatch):
-    monkeypatch.setattr(S, "local_fs_classes", lambda: None)
+def test_resolve_conf_without_compiler_keeps_stock_fs(monkeypatch, spark):
+    monkeypatch.setattr(S, "jvm_classes", lambda: None)
     conf = S.resolve_conf(overrides={"spark.driver.extraClassPath": "a.jar"})
     assert not set(S._LOCAL_FS_CONF) & set(conf)
     assert conf["spark.driver.extraClassPath"] == "a.jar"
+    # no checksum kernel either: nothing registered, md5_prefix is SQL
+    fresh = spark.newSession()
+    S._register_md5_prefix(fresh)
+    assert not fresh.catalog.functionExists(S.MD5_PREFIX_FUNCTION)
+    monkeypatch.setattr(SparkSession, "_activeSession", fresh)
+    assert "substring(md5(" in str(md5_prefix(F.col("x"), 32))
 
 
 _WRAPPED = ("chmod", "readlink", "ls", "stat")

@@ -12,7 +12,9 @@ contract:
 2. the precedence chain (defaults < profile < env dials < overrides);
 3. the benchmark harnesses use ONLY public engine entry points — no
    bench-local `spark.*` conf literals anywhere in bench.py or
-   tools/bench_ratio.py, asserted at source level.
+   tools/bench_ratio.py, asserted at source level;
+4. the driver heap default: half the host's memory, clamped to [2g, 48g],
+   below SPARK_GRAFT_DRIVER_MEM and explicit overrides.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import re
 
 import pytest
 
+from shuttle_spark import session as S
 from shuttle_spark.session import (
     _DEFAULTS,
     _SMALL_CORPUS_BYTES,
@@ -107,3 +110,17 @@ def test_defaults_unchanged_by_profile_module_state():
     profile_for_corpus(SF01)
     resolve_conf(SF01, {"spark.sql.shuffle.partitions": "2"})
     assert _DEFAULTS == before
+
+
+@pytest.mark.parametrize(
+    "host_gib, want",
+    [(1, "2g"), (4, "2g"), (15.6, "7g"), (64, "32g"), (128, "48g"), (512, "48g")],
+)
+def test_driver_memory_is_half_the_host_clamped(monkeypatch, host_gib, want):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(S, "_host_memory_bytes", lambda: int(host_gib * 2**30))
+    assert resolve_conf()["spark.driver.memory"] == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert resolve_conf()["spark.driver.memory"] == "3g"
+    over = resolve_conf(overrides={"spark.driver.memory": "5g"})
+    assert over["spark.driver.memory"] == "5g"
