@@ -31,12 +31,13 @@ every instance follows the same policy:
   spills instead of OOMing.
 
 Each module clears its own instances through its public ``clear_*``
-function.
+function; ``clear_all`` clears every instance alive in the process.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from collections.abc import Callable
 
 from pyspark import StorageLevel
@@ -111,6 +112,16 @@ def _frames(value: object) -> list[DataFrame]:
             if isinstance(v, DataFrame)]
 
 
+_instances: weakref.WeakSet[DFCache] = weakref.WeakSet()
+
+
+def clear_all() -> None:
+    """Clear every ``DFCache`` instance, unpersisting what each holds: a
+    timed run after it pays for every staged relation it reads."""
+    for instance in list(_instances):
+        instance.clear()
+
+
 class DFCache:
     """LRU session cache under the module's policy.  ``storage_level``
     (a ``pyspark.StorageLevel`` name) makes it persist DataFrame values;
@@ -123,6 +134,7 @@ class DFCache:
         self.max_size = max_size
         self.storage_level = storage_level
         self._entries: dict[CacheKey, object] = {}
+        _instances.add(self)
 
     def get(self, key: CacheKey):
         """The value under ``key`` (now the most recent entry), or None."""

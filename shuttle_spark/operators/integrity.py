@@ -56,7 +56,7 @@ def md5_prefix(col: Column, bits: int) -> Column:
     rows."""
     if bits % 4 or not 0 < bits <= 60:
         raise ValueError(f"bits must be a multiple of 4 in [4, 60], got {bits}")
-    if S.md5_prefix_kernel():
+    if S.kernel_session():
         return F.call_function(
             S.MD5_PREFIX_FUNCTION, col.cast("string").cast("binary"), F.lit(bits)
         )

@@ -3,20 +3,24 @@
 The LLM-pipeline dedup family (SURVEY.md §2.B B28).  Design notes for the
 100 TB posture:
 
-* **JVM-side by default, Arrow where measured faster.**  Hashing, MinHash
-  permutations and SimHash bit counting are built from higher-order
-  functions (transform/aggregate/zip_with) over arrays.  SHINGLING is the
-  deliberate exception: Spark executes array HOFs interpreted (not
-  codegen'd), and the round-6 measurement showed the per-doc HOF shingle
-  pipeline at ~2 ms/doc vs ~1 µs/doc for a vectorized Arrow
-  (pandas_udf) stage — so shingling runs as one Arrow batch stage and
-  everything downstream of the exploded gram relation stays JVM-side.
+* **JVM-side by default.**  Hashing, MinHash permutations and SimHash bit
+  counting are built from higher-order functions (transform/aggregate/
+  zip_with) over arrays.  SHINGLING is not: Spark interprets array HOFs
+  (no codegen), and a per-doc HOF shingle pipeline measured ~2 ms/doc.
+  It runs in the engine's JVM kernel ``shuttle_shingles``
+  (``shuttle_spark/jvm/Shingles.java``), one call per row in the scan
+  stage with no Python worker; hosts without ``javac`` keep the Arrow
+  (pandas_udf) form.  Everything downstream of the gram relation stays
+  JVM-side.
 * **Candidate generation is a hash-partitioned equi-join** on
   (band_idx, band_key) — exactly the shuffle shape the reference's service
   exists to execute (partition -> group-by-key -> merge); AQE skew-join
   splits hot buckets (a universal shingle at 100 TB is a skewed key).
 * **Exact verification is join-local**: candidates carry their shingle
   arrays, so Jaccard is computed without another shuffle.
+* **The exact pair builds prune by length** before the pair count's
+  shuffle: ``jac <= min(na, nb) / max(na, nb)``, so a candidate whose set
+  sizes alone miss tau is dropped in the gram join (``_size_bound``).
 * ``max_df`` stop-gram filtering caps the blow-up of ubiquitous shingles at
   scale (a shingle occurring in f docs contributes O(f²) candidate pairs).
 
@@ -35,6 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shuttle_spark import session as S
 from shuttle_spark.cache import DFCache, cache_key
 from shuttle_spark.functions import text as TX
 
@@ -70,20 +75,31 @@ def gram_sets(
     text_col: str = "text",
     n: int = 3,
 ) -> DataFrame:
-    """(id, grams) with grams = distinct word n-grams.
+    """(id, grams) with grams = the distinct word n-grams of the normalized
+    text (``TX.normalize``), in first-seen order; NULL text has none.
 
-    Tokenization (regex) stays JVM-side; the gram windowing runs in an
-    Arrow-vectorized pandas UDF.  Rationale: Spark's higher-order array
-    functions are CodegenFallback — a transform/slice/array_join tree is
-    interpreted per row per element, and downstream Generate/Filter nodes
-    re-evaluate it (no CSE into lambdas) — measured ~2 ms/doc; the Arrow
-    batch loop is ~1 µs/doc and materializes the array once, so explodes and
-    self-joins downstream touch a bound column.  Output is identical (same
-    strings; DISTINCT semantics preserved)."""
+    In a session built by ``get_session`` the grams come from the JVM
+    kernel ``shuttle_shingles`` (``shuttle_spark/jvm/Shingles.java``), one
+    call per row inside the scan stage.  Elsewhere (no ``javac``) the
+    tokens (``TX.tokens``) go through Arrow to a pandas UDF that windows
+    them in Python, with the same rows.  Both replace a higher-order
+    transform/slice/array_join tree, which Spark interprets per row per
+    element (CodegenFallback; ~2 ms/doc).  A traced perfbench text_dedup
+    pass (sf0.1, local[4], 4-core host) with the kernel returned 3.1 MB
+    from Python workers instead of 8.2 MB.  The array is materialized
+    once, so explodes and self-joins downstream touch a bound column."""
+    if n < 1:
+        raise ValueError(f"n must be at least 1, got {n}")
     key = cache_key(df, params=(id_col, text_col, n))
     hit = _gram_cache.get(key)
     if hit is not None:
         return hit
+    if S.kernel_session():
+        grams = F.call_function(
+            S.SHINGLES_FUNCTION, TX.normalize(F.col(text_col)), F.lit(n)
+        )
+        out = df.select(F.col(id_col).alias("id"), grams.alias("grams"))
+        return _gram_cache.put(key, out)
 
     @F.pandas_udf("array<string>")
     def _grams(tok_arrays: pd.Series) -> pd.Series:
@@ -118,6 +134,21 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(den == 0, F.lit(0.0)).otherwise(inter / den)
 
 
+def _size_bound(na: Column, nb: Column, tau: float) -> Column:
+    """The length filter of the exact pair builds: False only for a pair of
+    gram-set sizes that cannot reach Jaccard ``tau``.  ``inter <= min`` and
+    ``union >= max``, so ``jac <= min / max``; the test is
+    ``tau_bp * max <= 10000 * min`` with ``tau_bp = floor(tau * 10000)``,
+    whose floor only widens it (2/3 is off the basis-point grid).  The
+    sizes are the ones the Jaccard divides by, taken before ``max_df``
+    drops any gram, so the filter stays exact under it.  In the join
+    condition it drops a candidate row before the pair aggregation's
+    shuffle; long arithmetic, as an int product overflows (ANSI raises)
+    past 214,748 grams."""
+    tau_bp = F.lit(math.floor(tau * 10000)).cast("long")
+    return tau_bp * F.greatest(na, nb) <= 10000 * F.least(na, nb).cast("long")
+
+
 def near_dup_pairs_exact(
     df: DataFrame,
     tau: float,
@@ -135,7 +166,8 @@ def near_dup_pairs_exact(
     expansion of ubiquitous grams — essential at 100 TB, off by default so
     the contract matches the brute-force oracle).  The (small, tau-filtered)
     pair relation is session-cached: pairwise dedup, clustering, and cluster
-    dedup all fan out from it."""
+    dedup all fan out from it.  The join drops candidates whose set sizes
+    alone rule out ``tau`` (``_size_bound``)."""
     key = cache_key(df, params=(id_col, text_col, n, max_df, tau))
     hit = _pairs_cache.get(key)
     if hit is not None:
@@ -163,7 +195,12 @@ def near_dup_pairs_exact(
     # sides.
     a, b = inv.alias("a").hint("merge"), inv.alias("b")
     shared = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
+        a.join(
+            b,
+            (F.col("a.g") == F.col("b.g"))
+            & (F.col("a.id") < F.col("b.id"))
+            & _size_bound(F.col("a.ng"), F.col("b.ng"), tau),
+        )
         .groupBy(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -200,7 +237,8 @@ def near_dup_pairs_between(
     cost.  Output: (id_new, id_corpus, jac >= tau).  Like
     near_dup_pairs_exact, the (small, tau-filtered) pair relation is
     session-cached: admission filtering and audit queries over the same
-    batch fan out from one materialization."""
+    batch fan out from one materialization, and the join applies the same
+    length filter (``_size_bound``)."""
     key = cache_key(
         new_df, corpus_df, params=("between", id_col, text_col, n, max_df, tau)
     )
@@ -228,7 +266,11 @@ def near_dup_pairs_between(
     shared = (
         inv_a.alias("a")
         .hint("merge")  # corpus-derived sides: never a static broadcast
-        .join(inv_b.alias("b"), F.col("a.g") == F.col("b.g"))
+        .join(
+            inv_b.alias("b"),
+            (F.col("a.g") == F.col("b.g"))
+            & _size_bound(F.col("a.na"), F.col("b.nb"), tau),
+        )
         .groupBy(
             F.col("a.id").alias("id_new"),
             F.col("b.id").alias("id_corpus"),

@@ -67,9 +67,19 @@ aggregate of ``write_roundtrip_checksum`` over the 6M-row sf1 lineitem
 (local[4], 4-core host, 4 interleaved warm repetitions, medians): executor
 CPU 7.05 -> 2.98 s, wall 2.94 -> 1.52 s, identical sums.
 
+Shingle kernel: the near-dup family's exact pair builds shuffle more
+than any other text operator, and every one of them starts from the
+(id, distinct word n-grams) relation of ``operators/neardup.gram_sets``.
+Spark SQL has no shingle function and interprets a higher-order
+transform/slice/array_join tree per element; a pandas UDF ships the tokens
+through Arrow to a Python worker and the grams back.  ``get_session``
+therefore registers ``shuttle_spark/jvm/Shingles`` beside the checksum
+kernel as ``shuttle_shingles``, which takes the normalized text and
+returns the grams in the scan stage, one substring per gram.
+
 Compiler guard: with no ``javac``, or in a session ``get_session`` did not
-build, the session keeps Hadoop's stock filesystem and the checksum the
-SQL form above (same values).
+build, the session keeps Hadoop's stock filesystem, the checksum the SQL
+form above and the shingles the pandas UDF (same values).
 
 Driver memory: ``spark.driver.memory`` is half the host's physical memory,
 clamped to [2g, 48g], unless ``SPARK_GRAFT_DRIVER_MEM`` sets it.
@@ -87,7 +97,7 @@ import tempfile
 import weakref
 
 from pyspark.sql import SparkSession
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType, StringType
 
 # Tuned for the local[32] test harness; on a real cluster the same builder is
 # used with master/memory supplied by the cluster manager.  Shuffle partition
@@ -166,7 +176,8 @@ _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 # The engine's JVM classes (module docstring): Java sources, the
 # compiled-class cache beneath them, the two conf keys that register the
 # fork-free filesystem for the file: scheme, the Spark-home jars javac
-# compiles against, and the SQL name of the checksum kernel.
+# compiles against, and the SQL names of the kernels with their classes
+# and return types.
 _JVM_DIR = os.path.join(_PACKAGE_ROOT, "shuttle_spark", "jvm")
 _JVM_CLASSES = os.path.join(_JVM_DIR, "classes")
 _DRIVER_CLASSPATH = "spark.driver.extraClassPath"
@@ -176,6 +187,11 @@ _LOCAL_FS_CONF = {
 }
 _COMPILE_JARS = ("hadoop-client-api", "spark-sql-api")
 MD5_PREFIX_FUNCTION = "shuttle_md5_prefix"
+SHINGLES_FUNCTION = "shuttle_shingles"
+_KERNELS = (
+    (MD5_PREFIX_FUNCTION, "shuttle_spark.jvm.Md5Prefix", LongType()),
+    (SHINGLES_FUNCTION, "shuttle_spark.jvm.Shingles", ArrayType(StringType())),
+)
 _KERNEL_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
@@ -184,8 +200,8 @@ def jvm_classes() -> str | None:
     """Directory of the compiled ``shuttle_spark/jvm`` classes, compiled on
     first use into ``jvm/classes/<hash of sources and jar names>`` and
     reused by every later session; None when there is no ``javac`` (the
-    session then keeps Hadoop's stock local filesystem and the SQL form of
-    the md5-prefix checksum)."""
+    session then keeps Hadoop's stock local filesystem, the SQL form of
+    the md5-prefix checksum and the pandas form of shingling)."""
     javac = shutil.which("javac")
     if javac is None:
         return None
@@ -295,7 +311,7 @@ def get_session(
     SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_AQE env dials < explicit
     ``overrides``.  Conf only binds on the FIRST session in a process
     (getOrCreate semantics) — the standard Spark caveat.  The session gets
-    the md5-prefix checksum kernel (module docstring).
+    the md5-prefix checksum and shingle kernels (module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
@@ -303,29 +319,29 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _register_md5_prefix(spark)
+    _register_kernels(spark)
     return spark
 
 
-def _register_md5_prefix(spark: SparkSession) -> None:
-    """Register the md5-prefix kernel as ``shuttle_md5_prefix`` once per
-    session, when the engine classes are on this session's driver
-    classpath (a session started elsewhere and fetched here has none)."""
+def _register_kernels(spark: SparkSession) -> None:
+    """Register the JVM kernels (``shuttle_md5_prefix``,
+    ``shuttle_shingles``) once per session, when the engine classes are on
+    this session's driver classpath (a session started elsewhere and
+    fetched here has none)."""
     classes = jvm_classes()
     if not classes or spark in _KERNEL_SESSIONS:
         return
     classpath = spark.sparkContext.getConf().get(_DRIVER_CLASSPATH, "")
     if classes in classpath.split(os.pathsep):
-        spark.udf.registerJavaFunction(
-            MD5_PREFIX_FUNCTION, "shuttle_spark.jvm.Md5Prefix", LongType()
-        )
+        for name, cls, return_type in _KERNELS:
+            spark.udf.registerJavaFunction(name, cls, return_type)
         _KERNEL_SESSIONS.add(spark)
 
 
-def md5_prefix_kernel() -> bool:
-    """Whether the active session has ``shuttle_md5_prefix``, read from the
-    record ``get_session`` keeps of the sessions it registered the kernel
-    in (``catalog.functionExists`` would be a JVM catalog lookup, 5-10 ms,
+def kernel_session() -> bool:
+    """Whether the active session has the JVM kernels, read from the
+    record ``get_session`` keeps of the sessions it registered them in
+    (``catalog.functionExists`` would be a JVM catalog lookup, 5-10 ms,
     per column built)."""
     return SparkSession.getActiveSession() in _KERNEL_SESSIONS
 

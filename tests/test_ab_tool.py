@@ -1,6 +1,7 @@
 """tools/ab.py, the one interleaved A/B tool: run order, the equality gate
-before timing, variant resolution and the streaming layer fields; plus a
-guard that every tools/<name>.py the code cites exists."""
+before timing, cleared caches before every run, variant resolution and the
+streaming layer fields; plus a guard that every tools/<name>.py the code
+cites exists."""
 
 from __future__ import annotations
 
@@ -53,6 +54,18 @@ def test_ab_interleaves_rounds_and_summarizes(spark, sf_dir, capsys):
         assert v["medians"]["stages"] >= 1
     # the tool never stops a session it did not create
     assert spark.range(3).count() == 3
+
+
+def test_ab_times_staged_contracts_from_cleared_caches(spark, sf_dir, capsys):
+    """ngram_jaccard_pairs reads a session-cached pair relation: the tool
+    clears every cache before each run, so every round builds it again
+    (the same nonzero stage count, and shuffle bytes, in every round)
+    instead of reading what the warm-up left."""
+    _ab().main(["ngram_jaccard_pairs", "--sf", sf_dir, "--rounds", "3"])
+    runs = _runs(capsys.readouterr().out)
+    assert len(runs) == 3
+    assert len({r["stages"] for r in runs}) == 1 and runs[0]["stages"] > 0
+    assert all(r["shuffle_write_bytes"] > 0 for r in runs)
 
 
 def test_ab_refuses_to_time_variants_whose_rows_differ(spark, sf_dir, capsys, tmp_path):

@@ -63,10 +63,11 @@ def test_resolve_conf_without_compiler_keeps_stock_fs(monkeypatch, spark):
     conf = S.resolve_conf(overrides={"spark.driver.extraClassPath": "a.jar"})
     assert not set(S._LOCAL_FS_CONF) & set(conf)
     assert conf["spark.driver.extraClassPath"] == "a.jar"
-    # no checksum kernel either: nothing registered, md5_prefix is SQL
+    # no JVM kernels either: nothing registered, md5_prefix is SQL
     fresh = spark.newSession()
-    S._register_md5_prefix(fresh)
+    S._register_kernels(fresh)
     assert not fresh.catalog.functionExists(S.MD5_PREFIX_FUNCTION)
+    assert not fresh.catalog.functionExists(S.SHINGLES_FUNCTION)
     monkeypatch.setattr(SparkSession, "_activeSession", fresh)
     assert "substring(md5(" in str(md5_prefix(F.col("x"), 32))
 

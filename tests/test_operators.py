@@ -1474,6 +1474,94 @@ def test_prefix_filtered_jaccard_equals_full_index(spark):
     assert full  # corpus has qualifying pairs at 0.8, else vacuous
 
 
+def _brute_pairs(left, right, tau, n, max_df=None, df_side=None):
+    """Brute-force exact Jaccard pairs (id_l, id_r, round(jac, 6)) with
+    jac >= tau over ``left`` x ``right`` (lists of (id, text)); with
+    ``max_df`` a gram present in more than max_df docs of ``df_side`` is
+    not counted as shared, and set sizes stay those before the cut."""
+    def grams(text):
+        toks = text.lower().split()
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    stop = set()
+    if max_df is not None:
+        counts = {}
+        for _, t in df_side:
+            for g in grams(t):
+                counts[g] = counts.get(g, 0) + 1
+        stop = {g for g, c in counts.items() if c > max_df}
+    out = set()
+    for i, ta in left:
+        for j, tb in right:
+            if left is right and i >= j:
+                continue
+            ga, gb = grams(ta), grams(tb)
+            inter = len((ga & gb) - stop)
+            if inter and inter / (len(ga) + len(gb) - inter) >= tau:
+                out.add((i, j, round(inter / (len(ga) + len(gb) - inter), 6)))
+    return out
+
+
+# Length-filter boundary corpus (n=1): doc 1 holds 3 of doc 2's 5 grams
+# (jac 3/5 with unequal sizes), doc 3 holds 2 of doc 4's 3 (jac 2/3);
+# the "s" gram is in every doc, a stop gram once max_df < 6.
+_BOUNDARY_DOCS = [
+    (1, "s a b"),
+    (2, "s a b c d"),
+    (3, "s x"),
+    (4, "s x y"),
+    (5, "s a b c d e f g h"),
+    (6, "s x y z"),
+]
+# the pair whose jac equals tau, and whose sizes sit on the bound
+_ON_BOUNDARY = {0.6: (1, 2, 0.6), 2 / 3: (3, 4, round(2 / 3, 6))}
+
+
+@pytest.mark.parametrize("tau", [0.5, 0.6, 2 / 3, 0.75])
+@pytest.mark.parametrize("max_df", [None, 4])
+def test_exact_pairs_length_filter_is_exact(spark, tau, max_df):
+    """The size bound of the exact self-join (``_size_bound``) drops no
+    qualifying pair: the pairs equal brute force at a pair with jac == tau
+    and unequal sizes (3 of 5 at 0.6; 2 of 3 at 2/3, which is off the
+    basis-point grid, so a rounded tau_bp of 6667 would drop it), and on
+    the ``max_df`` path, where the sizes are those before the cut."""
+    from shuttle_spark.operators import neardup as N
+
+    docs = spark.createDataFrame(_BOUNDARY_DOCS, "doc_id long, text string")
+    got = {
+        (r.id_a, r.id_b, r.jac)
+        for r in N.near_dup_pairs_exact(docs, tau, n=1, max_df=max_df).collect()
+    }
+    want = _brute_pairs(_BOUNDARY_DOCS, _BOUNDARY_DOCS, tau, 1, max_df, _BOUNDARY_DOCS)
+    assert got == want
+    if max_df is None and tau in _ON_BOUNDARY:
+        assert _ON_BOUNDARY[tau] in got
+
+
+@pytest.mark.parametrize("tau", [0.5, 0.6, 2 / 3])
+@pytest.mark.parametrize("max_df", [None, 2])
+def test_between_pairs_length_filter_is_exact(spark, tau, max_df):
+    """The same bound in ``near_dup_pairs_between``: batch x corpus pairs
+    equal brute force on the boundary pairs, with ``max_df`` counted on
+    the corpus side."""
+    from shuttle_spark.operators import neardup as N
+
+    new = [d for d in _BOUNDARY_DOCS if d[0] in (1, 3)]
+    corpus = [d for d in _BOUNDARY_DOCS if d[0] not in (1, 3)]
+    schema = "doc_id long, text string"
+    got = {
+        (r.id_new, r.id_corpus, r.jac)
+        for r in N.near_dup_pairs_between(
+            spark.createDataFrame(new, schema),
+            spark.createDataFrame(corpus, schema),
+            tau, n=1, max_df=max_df,
+        ).collect()
+    }
+    assert got == _brute_pairs(new, corpus, tau, 1, max_df, corpus)
+    if max_df is None and tau in _ON_BOUNDARY:
+        assert _ON_BOUNDARY[tau] in got
+
+
 def test_session_copresence_lift_semantics(spark):
     """Constructed calendar pins the composite: a >gap pause splits the
     session (so types on opposite sides never co-occur), a ==gap pause

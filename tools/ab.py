@@ -13,11 +13,14 @@ session-level dial (cores, conf, env) needs its own session, so sweep it by
 running the command once per value.
 
 Protocol: one session (``main`` called in-process uses the active session
-unchanged and never stops it); one untimed warm-up run per variant, whose
-canonical rows (``testing.canon_rows``) must be identical across variants
-or the tool exits non-zero before timing anything; then N rounds, in
-variant order on even rounds and reversed on odd ones, so no variant always
-runs first.  Each timed run (``build`` + ``collect``) is wrapped in
+unchanged and never stops it); every run, warm-up included, starts with
+every session cache cleared (``cache.clear_all``, outside the timed
+interval), so a run pays for the staged relations it reads instead of
+timing a hit left by the run before; one untimed warm-up run per variant,
+whose canonical rows (``testing.canon_rows``) must be identical across
+variants or the tool exits non-zero before timing anything; then N rounds,
+in variant order on even rounds and reversed on odd ones, so no variant
+always runs first.  Each timed run (``build`` + ``collect``) is wrapped in
 ``observability.measure``; a run that replayed a stream also reports its
 ``observability.last_replay()``.
 
@@ -53,6 +56,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from shuttle_spark import get_session  # noqa: E402
 from shuttle_spark import observability as O  # noqa: E402
+from shuttle_spark.cache import clear_all  # noqa: E402
 from shuttle_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from shuttle_spark.contracts import REGISTRY  # noqa: E402
 from shuttle_spark.testing import canon_rows  # noqa: E402
@@ -74,7 +78,8 @@ def resolve(variant: str) -> Callable:
 
 
 def timed_run(spark: SparkSession, build: Callable, sf: str, group: str) -> dict:
-    """One timed ``build`` + ``collect`` and its layer fields."""
+    """One timed ``build`` + ``collect`` from cleared session caches, and
+    its layer fields."""
     sc = spark.sparkContext
     replay_before = O.last_replay()
 
@@ -83,6 +88,7 @@ def timed_run(spark: SparkSession, build: Callable, sf: str, group: str) -> dict
         build(spark, sf).collect()
         return time.perf_counter() - t0
 
+    clear_all()
     sc.setJobGroup(group, "ab.py timed run")
     try:
         wall, m = O.measure(spark, action)
@@ -159,6 +165,7 @@ def main(argv: list[str] | None = None) -> dict:
     try:
         expected = None
         for name, build in zip(args.variants, builds):
+            clear_all()
             rows = canon_rows(build(spark, args.sf).collect())
             if expected is None:
                 expected = rows
