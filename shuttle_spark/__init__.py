@@ -12,14 +12,20 @@ stale-attempt filtering, duplicate-block dedup) are exposed as first-class
 operators.
 
 Layout:
-  session.py    SparkSession factory (conf embodiment of SURVEY §4)
-  catalog.py    testdata parquet catalog -> temp views
-  operators/    relational + dedup + similarity + integrity operators
-  functions/    column-level helpers (text analysis, vectors, checksums)
-  sources/      readers and multimodal binary-column plumbing
-  streaming/    Structured Streaming twins of the batch operators
-  plans/        physical-plan audit helpers (pushdown/broadcast/partial-agg)
-  contracts.py  the SURVEY §2.B contract registry (queries + DuckDB oracles)
+  session.py        SparkSession factory (conf embodiment of SURVEY §4)
+  catalog.py        testdata parquet catalog -> temp views
+  cache.py          the one session-cache policy (DFCache, cache_key)
+  observability.py  observe() metrics and per-stage status-store accounting
+  pydaemon.py       Python-worker daemon module (spark.python.daemon.module)
+  testing.py        Spark-vs-DuckDB row comparison helpers
+  jvm/              Java kernels and local filesystem, compiled by session.py
+  operators/        multi-call operators (relational, dedup, near-dup,
+                    similarity, integrity, lineage, pipeline, multimodal)
+  functions/        column-level helpers (text analysis, vectors, checksums)
+  sources/          readers and multimodal binary-column plumbing
+  streaming/        Structured Streaming twins of the batch operators
+  plans/            physical-plan audit helpers (pushdown/broadcast/partial-agg)
+  contracts.py      the SURVEY §2.B contract registry (queries + DuckDB oracles)
 """
 
 __version__ = "0.1.0"

@@ -127,19 +127,6 @@ def fingerprint64(text: Column) -> Column:
     return F.xxhash64(normalize(text))
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Character k-gram shingle array over normalized text (for MinHash).
-    Documents shorter than k chars yield their whole text as one shingle."""
-    t = normalize(text)
-    n = F.length(t)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
-
-
 def ngrams_from_tokens(toks: Column, n: int = 3) -> Column:
     """Word n-gram array from an ALREADY-MATERIALIZED token array column.
 

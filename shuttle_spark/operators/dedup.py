@@ -2,10 +2,10 @@
 
 Engine-level twins of the reference's exactly-once read path:
 
-* ``exact_dedup`` / ``distinct_keys`` — duplicate-block dedup via seen-set of
-  (taskId, seqId) in /root/reference/src/main/java/com/oppo/shuttle/rss/
-  clients/ShufflePartitionReader.java:378-393 -> engine analog is
-  ``dropDuplicates`` on key columns (B7).
+* duplicate-block dedup via seen-set of (taskId, seqId) in the reference's
+  ShufflePartitionReader.java:378-393 -> engine analog is ``distinct()`` /
+  ``dropDuplicates`` on key columns (B7), called directly on the DataFrame
+  at the call site; there is no wrapper for a single method.
 * ``keep_latest`` — stale-attempt filtering (keep only the newest attempt per
   map) in PartitionPipeReader.java:150-170 + latest-attempt map in
   Ors2Util.scala:54-87 -> engine analog is keep-latest-version-by-key (B8).
@@ -15,28 +15,16 @@ Engine-level twins of the reference's exactly-once read path:
 Scale notes (100 TB): all of these are single-shuffle, key-partitioned
 operations; `dropDuplicates` plans as a partial+final HashAggregate so the
 map-side already collapses duplicates before the exchange (same motivation as
-the reference's map-side combine).  `keep_latest` uses max_by-style
-aggregation instead of a window when the payload is small — one shuffle, no
-sort — and the window variant when full rows must survive.
+the reference's map-side combine).  `keep_latest` is a row_number() window
+over the key (one shuffle plus a partition-local sort), so full rows survive.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def distinct_rows(df: DataFrame) -> DataFrame:
-    """DISTINCT over all columns (B7)."""
-    return df.distinct()
-
-
-def distinct_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """dropDuplicates on a key subset — keeps an arbitrary witness row,
-    mirroring the reference's keep-first-block-seen semantics."""
-    return df.dropDuplicates(list(keys))
 
 
 def keep_latest(

@@ -16,8 +16,8 @@ DECIMAL(38,0) on BOTH engines (Spark decimal sum / DuckDB HUGEINT cast to
 DECIMAL(38,0)): an int64 accumulator would wrap silently past ~2^23 rows in
 Spark's non-ANSI mode while DuckDB widens to HUGEINT — exactly the scale
 divergence this module exists to catch.  DECIMAL(38,0) holds sums of 2^40-bit
-row hashes exactly up to ~10^26 rows.  Spark-native crc32/xxhash64 variants
-are also exposed for intra-engine use (they ARE the reference's semantics).
+row hashes exactly up to ~10^26 rows.  A Spark-native xxhash64 variant
+(``xxhash_checksum``) is also exposed for intra-engine use.
 """
 
 from __future__ import annotations
@@ -72,14 +72,6 @@ def checksum(df: DataFrame, col: Column, alias: str = "checksum") -> DataFrame:
     return df.agg(
         F.sum(md5_prefix(col, 40).cast(T.DecimalType(38, 0))).alias(alias)
     )
-
-
-def crc32_checksum(df: DataFrame, col: Column, alias: str = "checksum") -> DataFrame:
-    """Spark-native CRC32 sum — the literal function family the reference
-    uses (A10/A21); not DuckDB-portable, used intra-engine.  CRC32 terms
-    are 32-bit, so the int64 sum is exact below 2^31 rows (same bound as
-    ``md5_prefix(col, 32)``); past that use ``checksum`` (DECIMAL accumulator)."""
-    return df.agg(F.sum(F.crc32(col.cast("string"))).alias(alias))
 
 
 def xxhash_checksum(df: DataFrame, cols: list[Column], alias: str = "checksum") -> DataFrame:

@@ -581,32 +581,14 @@ def simhash_near_dup_pairs(
 # Fuzzy string join (entity matching over short strings)
 # ---------------------------------------------------------------------------
 
-def char_trigram_set(col: Column, n: int = 3) -> Column:
-    """Distinct character n-gram set of a string, EMPTY for strings shorter
-    than n (mirrors generate_series(1, len-n+1) semantics so the DuckDB
-    oracle twin is element-identical; contrast functions.text.char_shingles,
-    which falls back to the whole text for MinHash use).  No normalization
-    here — the caller chooses it (and the oracle applies the same)."""
-    ln = F.length(col)
-    return F.when(
-        ln >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), ln - F.lit(n - 1)),
-                lambda i: col.substr(i, F.lit(n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _char_trigram_set_expr(colname: str, n: int = 3) -> Column:
-    """``char_trigram_set`` over a NAMED column, built as ONE parsed SQL
-    expression instead of a py4j call tree.  Semantically identical
-    (verified element-wise in tests); exists because constructing the
-    lambda tree costs ~0.2 s of py4j round-trips per call (the documented
-    plan-construction tax), while parsing this string costs ~1 ms — the
-    difference is pure driver overhead, so the hot builders use this
-    form."""
+    """Distinct character n-gram set of the string column ``colname``,
+    EMPTY for strings shorter than n (mirrors generate_series(1,
+    len-n+1) semantics so the DuckDB oracle twin is element-identical).
+    No normalization here — the caller chooses it (and the oracle applies
+    the same).  Built as ONE parsed SQL expression instead of a py4j call
+    tree: constructing the equivalent lambda tree costs ~0.2 s of py4j
+    round-trips per call, parsing this string ~1 ms."""
     c = f"`{colname}`"
     return F.expr(
         f"CASE WHEN length({c}) >= {n} THEN array_distinct("

@@ -1,9 +1,14 @@
-"""Relational core operators (SURVEY.md §2.B B1-B19).
+"""Relational operators that take more than one DataFrame call (SURVEY.md
+§2.B B11-B19 and the analytics extensions).
 
-These wrap the idiomatic DataFrame API so that every operator family the
-reference's shuffle service exists to serve (map-side combine + final agg,
-hash partitioning, sort-by-partition, reduce-side sort/combine — SURVEY §2.A
-A1-A5, A24-A25) has an explicit, documented, testable engine surface.
+Shapes that are one DataFrame method — projection, filter, repartition,
+sort, ORDER BY ... LIMIT, equi/broadcast/semi/anti join, set operations,
+DISTINCT, ROLLUP/CUBE — are written as that method at the call site (the
+B1-B4 and B7-B16 contracts in ``shuttle_spark/contracts.py``); Spark plans
+their shuffles, and Shuttle's job is to move that shuffle data, not to add
+operators.  What lives here composes several calls: decomposed grouping
+sets, salted aggregation, top-k per group, range and as-of joins, windows
+and the time-series, sampling and statistics operators.
 
 Nothing here fights Catalyst: projections/filters are declared so pushdown and
 pruning reach the parquet scan; aggregations rely on Spark planning
@@ -26,73 +31,8 @@ from shuttle_spark.cache import DFCache, approx_quantiles_cached, cache_key
 
 
 # ---------------------------------------------------------------------------
-# Scan / project / filter (B1-B3) — declarative so Catalyst pushes down.
+# Grouping sets (B16) and skewed aggregation.
 # ---------------------------------------------------------------------------
-
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Projection (B2).  Column pruning reaches the scan via Catalyst."""
-    return df.select(*cols)
-
-
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Filter (B3).  Predicates on scan columns become parquet PushedFilters."""
-    return df.filter(predicate)
-
-
-# ---------------------------------------------------------------------------
-# Exchange / partitioning (B4, A1) — the reference's hash partitioner
-# (Ors2BypassShuffleWriter.scala:48-54) is Spark's HashPartitioning.
-# ---------------------------------------------------------------------------
-
-def exchange(df: DataFrame, num_partitions: int, *keys: str | Column) -> DataFrame:
-    """Hash-repartition by key (A1).  Result-invariant for downstream aggs."""
-    return df.repartition(num_partitions, *keys) if keys else df.repartition(num_partitions)
-
-
-def range_exchange(df: DataFrame, num_partitions: int, *keys: Column | str) -> DataFrame:
-    """Range-repartition (for globally sorted output without a single reducer)."""
-    return df.repartitionByRange(num_partitions, *keys)
-
-
-# ---------------------------------------------------------------------------
-# Aggregation (B5, B6) — partial/final agg is planned by Spark automatically;
-# plan-shape tests in tests/test_plans.py assert the partial mode exists
-# (A2/A3/A24 parity as *plan* tests, per SURVEY §7 Phase 1).
-# ---------------------------------------------------------------------------
-
-def hash_aggregate(
-    df: DataFrame, keys: Sequence[str | Column], aggs: Sequence[Column]
-) -> DataFrame:
-    """groupBy + multi-function agg (B5/B6).  Shuffles once on the keys."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def rollup_aggregate(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """GROUP BY ROLLUP (B16).  General form: correct for ANY aggregate
-    (incl. avg / count-distinct), at the cost of Spark's Expand operator
-    multiplying every FACT row by the number of grouping levels before the
-    shuffle.  For decomposable aggregates use
-    ``grouping_aggregate_decomposed`` — identical results, Expand over the
-    finest-grain partial instead of the fact table.
-
-    Known cross-engine semantic gap (found by the round-5 differential
-    fuzzer, pinned in tests/test_fuzz_differential.py): over an EMPTY
-    input, SQL-standard ROLLUP/CUBE still emits the ``()`` grouping-set
-    row — (NULL..., count=0) — because grouping by the empty set is a
-    global aggregate (DuckDB and Postgres do this); Spark emits ZERO
-    rows.  Queries whose filter may eliminate every row and that must
-    match ANSI engines should union a guarded grand-total row or check
-    emptiness explicitly."""
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_aggregate(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """GROUP BY CUBE (B16 sibling).  Same Expand caveat as
-    ``rollup_aggregate``."""
-    return df.cube(*keys).agg(*aggs)
-
 
 def grouping_aggregate_decomposed(
     df: DataFrame,
@@ -116,8 +56,8 @@ def grouping_aggregate_decomposed(
     final re-aggregation, exactly like the single-stage form.
 
     Not applicable to non-decomposable aggregates (avg must be carried as
-    sum+count, count-distinct not at all) — that is why the general
-    ``rollup_aggregate`` stays.
+    sum+count, count-distinct not at all) — those keep the general
+    ``df.rollup(...)`` / ``df.cube(...)``.
 
     Each sum spec is ``(col, alias, scale)``: both stages accumulate as
     scaled longs (``sum(round(col * 10^scale) as long)``) — exact,
@@ -186,39 +126,9 @@ def salted_aggregate(
     return stage1.groupBy(*keys).agg(*stage2_exprs)
 
 
-def pivot_aggregate(
-    df: DataFrame,
-    key: str,
-    pivot_col: str,
-    pivot_values: Sequence[str],
-    agg: Column,
-) -> DataFrame:
-    """Pivot: one output column per pivot value.  Values are supplied
-    explicitly so the plan stays a single pass (no values-discovery job)."""
-    return df.groupBy(key).pivot(pivot_col, list(pivot_values)).agg(agg)
-
-
 # ---------------------------------------------------------------------------
-# Sorts (B9-B11, A4/A25).
+# Top-k per group (B11) and joins beyond the equi-join (B12-B14).
 # ---------------------------------------------------------------------------
-
-def order_by(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Global sort (A25 reduce-side key sort -> SortExec + range exchange)."""
-    return df.orderBy(*cols)
-
-
-def sort_within_partitions(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Partition-local sort (A4: the reference sorts by partition id only and
-    leaves key order to the reducer; this is the exposed analog)."""
-    return df.sortWithinPartitions(*cols)
-
-
-def top_k(df: DataFrame, k: int, *cols: Column | str) -> DataFrame:
-    """ORDER BY ... LIMIT k.  Spark plans TakeOrderedAndProject: per-partition
-    top-k then a single merge — no global sort materialization, which is the
-    scale-correct plan at 100 TB."""
-    return df.orderBy(*cols).limit(k)
-
 
 def top_k_per_group(
     df: DataFrame, partition_keys: Sequence[str], order: Sequence[Column], k: int
@@ -230,36 +140,6 @@ def top_k_per_group(
         .filter(F.col("__rn") <= k)
         .drop("__rn")
     )
-
-
-# ---------------------------------------------------------------------------
-# Joins (B12-B14).  Catalyst picks broadcast/sort-merge/shuffled-hash from
-# stats + AQE; broadcast() pins the small side explicitly.
-# ---------------------------------------------------------------------------
-
-def equi_join(
-    left: DataFrame, right: DataFrame, on: Column | str | list[str], how: str = "inner"
-) -> DataFrame:
-    return left.join(right, on, how)
-
-
-def broadcast_join(
-    left: DataFrame, small: DataFrame, on: Column | str | list[str], how: str = "inner"
-) -> DataFrame:
-    """Explicit broadcast hint (B13): skips the shuffle of the big side's
-    partner entirely — at 100 TB this is the difference between a map-side
-    join and a 100 TB exchange."""
-    return left.join(F.broadcast(small), on, how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: Column | str | list[str]) -> DataFrame:
-    """EXISTS (B14)."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: Column | str | list[str]) -> DataFrame:
-    """NOT EXISTS (B14)."""
-    return left.join(right, on, "left_anti")
 
 
 def range_join(
@@ -329,22 +209,6 @@ def as_of_join(
 
 
 # ---------------------------------------------------------------------------
-# Set operations (B15).
-# ---------------------------------------------------------------------------
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
-def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
-
-
-# ---------------------------------------------------------------------------
 # Windows (B17-B18).
 # ---------------------------------------------------------------------------
 
@@ -387,22 +251,6 @@ def gap_fill_time_series(
         "bucket",
         *[F.coalesce(F.col(n), F.lit(fill)).alias(n) for n in aggs],
     )
-
-
-def running_agg(
-    df: DataFrame,
-    partition_keys: Sequence[str],
-    order: Sequence[Column | str],
-    agg_col: Column,
-    alias: str,
-) -> DataFrame:
-    """Cumulative window aggregate (UNBOUNDED PRECEDING..CURRENT ROW)."""
-    w = (
-        Window.partitionBy(*partition_keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(alias, agg_col.over(w))
 
 
 def ranked(

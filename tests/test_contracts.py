@@ -155,3 +155,61 @@ def test_driver_gate_covers_every_b_family():
     finally:
         C.REGISTRY.clear()
         C.REGISTRY.update(original)
+
+
+def test_every_public_operator_is_referenced():
+    """Every public top-level function in operators/*.py, functions/*.py
+    and streaming/core.py is referenced in code outside its own def — as
+    a name, an attribute or an import — somewhere in shuttle_spark/,
+    tools/, bench.py, perfbench/ or tests/.  A mention in a comment or a
+    docstring does not count.  A function nothing calls is dead surface:
+    delete it rather than keep it documented."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "shuttle_spark"
+    defining = [
+        *sorted((pkg / "operators").glob("*.py")),
+        *sorted((pkg / "functions").glob("*.py")),
+        pkg / "streaming" / "core.py",
+    ]
+    public = {
+        (path, node.name)
+        for path in defining
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+    }
+    sources = [
+        *pkg.rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        root / "bench.py",
+        *(root / "perfbench").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+    ]
+    # (file, name, name of the enclosing top-level def or None)
+    refs: set[tuple[Path, str, str | None]] = set()
+    for path in sources:
+        for top in ast.parse(path.read_text()).body:
+            owner = (
+                top.name
+                if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else None
+            )
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    refs.add((path, node.id, owner))
+                elif isinstance(node, ast.Attribute):
+                    refs.add((path, node.attr, owner))
+                elif isinstance(node, ast.alias):
+                    refs.add((path, node.name.rsplit(".", 1)[-1], owner))
+    unreferenced = sorted(
+        f"{path.relative_to(root)}:{name}"
+        for path, name in public
+        if not any(
+            n == name and not (p == path and owner == name)
+            for p, n, owner in refs
+        )
+    )
+    assert not unreferenced, f"unreferenced public functions: {unreferenced}"

@@ -317,13 +317,15 @@ def test_fuzz_rollup_agg(spark, duck, filters, aggs):
     srows = canon_rows([tuple(r) for r in sdf.collect()])
     orows = canon_rows(duck.execute(sql).fetchall())
     if not srows and len(orows) == 1:
-        # REAL cross-engine gap, FOUND BY THIS FUZZER (round 5): over an
-        # empty input, SQL-standard ROLLUP still emits the () grouping-set
-        # row — a global aggregate over zero rows — so DuckDB (and
-        # Postgres) return one (NULL, NULL, count=0, ...) row while Spark's
-        # rollup returns zero rows.  Pinned here as the exact divergence
-        # (anything else still fails); documented in
-        # operators/relational.py rollup_aggregate.
+        # REAL cross-engine gap, found by this fuzzer: over an empty
+        # input, SQL-standard ROLLUP (and CUBE) still emits the ()
+        # grouping-set row — grouping by the empty set is a global
+        # aggregate over zero rows — so DuckDB (and Postgres) return one
+        # (NULL, NULL, count=0, ...) row while Spark's rollup returns zero
+        # rows.  Pinned here as the exact divergence (anything else still
+        # fails).  A query whose filter may remove every row and that must
+        # match ANSI engines has to union a guarded grand-total row or
+        # check for emptiness itself.
         row = orows[0]
         assert row[0] == row[1] == "∅", f"unexpected shape: {row} for {sql}"
         return

