@@ -250,32 +250,44 @@ def keyed_stream_contracts(
 
     ``per_key`` is ``(name, query-name prefix, shuffle partitions)``; a
     None partition count means ``replay_partitions(spark)``, the core-
-    scaled count for Python-state replays over the ~1500 user keys.
+    scaled count for per-key replays over the ~1500 user keys.
     ``packed`` is ``(name, query-name prefix)``: it calls the operator
-    with ``n_state_buckets=32``, so many logical keys share one physical
-    state group and the per-group runner constant (cost model:
+    with ``n_state_buckets=32`` on 4 partitions.  In a kernel session
+    (``session.kernel_session``) both rows run the JVM kernel, which is
+    always per key, so they differ only in partition count and query
+    name.  In the ``applyInPandasWithState`` twin (no ``javac``) the
+    packed row shares one physical state group among many keys, so the
+    Python runner's per-group constant (cost model, twin only:
     ``streaming.core._keyed_recurrence``) is paid per bucket per batch
-    instead of per key, on 4 partitions (JVM-state commits dominate
-    there).  Both rows share the oracle verbatim; pytest parity gates
-    hold packed == per-key row for row, and the per-key layout stays
-    contracted as regression coverage."""
+    instead of per key.  Both rows share the oracle verbatim; pytest
+    parity gates hold the kernel == the twin, per key and packed, row
+    for row.  Every replay must drop no late row (the sources are
+    in-order): a nonzero ``last_replay().rows_dropped_late`` raises."""
 
     def deco(fn: Callable[..., DataFrame]) -> Builder:
         def variant(
             prefix: str, partitions: int | None, buckets: int | None
         ) -> Builder:
             def build(spark: SparkSession, sf: str) -> DataFrame:
+                from shuttle_spark.observability import last_replay
                 from shuttle_spark.streaming import run_available_now
                 from shuttle_spark.streaming.core import replay_partitions
 
                 def replay(op, src: DataFrame) -> DataFrame:
-                    return run_available_now(
+                    out = run_available_now(
                         op(src, n_state_buckets=buckets),
                         f"{prefix}_{abs(hash(sf)) % 99999}",
                         shuffle_partitions=replay_partitions(spark)
                         if partitions is None
                         else partitions,
                     )
+                    late = last_replay().rows_dropped_late
+                    if late:
+                        raise RuntimeError(
+                            f"{prefix}: the in-order replay dropped {late}"
+                            " late rows"
+                        )
+                    return out
 
                 return fn(spark, sf, replay)
 
@@ -4143,7 +4155,7 @@ _STREAM_KEEP_LATEST_ORACLE = (
     "B8",
 )
 def q_stream_keep_latest(spark: SparkSession, sf: str, replay) -> DataFrame:
-    """The custom STATEFUL streaming operator (applyInPandasWithState):
+    """The custom STATEFUL streaming operator (the keyed-recurrence fold):
     latest event per user, emitted when the 2 h watermark passes the user's
     quiet period — hash-matched against the batch keep-latest oracle
     restricted to quiesced users.  This is the reference's stale-attempt
@@ -6112,7 +6124,7 @@ def q_pack_greedy_bins(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_stream_ewma_anomalies(spark: SparkSession, sf: str, replay) -> DataFrame:
     """EWMA anomaly detection as an ACTUAL Structured Streaming replay
-    (file stream -> watermark -> applyInPandasWithState buffering rows
+    (file stream -> watermark -> the keyed-recurrence fold buffering rows
     until the watermark finalizes them -> AvailableNow to memory sink),
     hash-matched against the batch-recurrence oracle on the finalized
     subset.  The 1 s guard inside the 2 h cutoff absorbs the watermark's

@@ -20,14 +20,16 @@ here:
   action created — per-contract shuffle-byte accounting with no extra
   listener plumbing on the Python side.
 
-`tools/plan_report.py` uses `measure` to publish a per-contract
-stage/shuffle/spill table into PLANS.md ("Observed runtime metrics"), and
-`tools/ab.py` splits each timed run of an interleaved A/B by it.
+`tools/plan_report.py` uses `measure` to print a per-contract
+stage/shuffle/spill table ("Observed runtime metrics"; it moves from run
+to run, so it is kept out of PLANS.md), and `tools/ab.py` splits each
+timed run of an interleaved A/B by it.
 
 * **Streaming progress** (`last_replay`) — ``run_available_now`` records
   the finished query's ``recentProgress``: per-micro-batch phase
   durations and, per stateful operator, state-store commit and update
-  time and the rows the watermark dropped.
+  time and the rows the watermark dropped, and the strictly-late rows
+  the keyed recurrences dropped.
 """
 
 from __future__ import annotations
@@ -203,18 +205,24 @@ class BatchProgress:
 
 @dataclass(frozen=True)
 class ReplayProgress:
-    """The micro-batches of one finished stream replay, in order."""
+    """The micro-batches of one finished stream replay, in order, and the
+    strictly-late rows its keyed recurrences dropped (Spark's
+    ``numRowsDroppedByWatermark`` does not count them)."""
 
     query_name: str
     batches: tuple[BatchProgress, ...]
+    rows_dropped_late: int
 
 
 _last_replay: ReplayProgress | None = None
 
 
-def record_replay(query_name: str, progress: Iterable) -> None:
+def record_replay(
+    query_name: str, progress: Iterable, rows_dropped_late: int
+) -> None:
     """Keep a finished query's ``recentProgress`` (pyspark
-    ``StreamingQueryProgress`` objects) as the process's last replay."""
+    ``StreamingQueryProgress`` objects) and its late-row count as the
+    process's last replay."""
     global _last_replay
     _last_replay = ReplayProgress(
         query_name,
@@ -236,6 +244,7 @@ def record_replay(query_name: str, progress: Iterable) -> None:
             )
             for p in progress
         ),
+        rows_dropped_late,
     )
 
 

@@ -49,7 +49,7 @@ Hadoop's ``LocalFileSystem`` otherwise: ``.crc`` checksums stay.  (Without
 the key, ``file:`` resolved to the service-loaded Hive
 ``ProxyLocalFileSystem``, a proxy over the same class.)  The classes of
 ``shuttle_spark/jvm/`` are compiled once per source hash by ``javac``
-against the Hadoop client and Spark SQL API jars and put first on
+against the Hadoop client, Spark SQL API and Spark core jars and put first on
 ``spark.driver.extraClassPath`` (``get_session`` builds ``local[N]``
 masters, whose executors run in the driver JVM).
 
@@ -77,9 +77,24 @@ therefore registers ``shuttle_spark/jvm/Shingles`` beside the checksum
 kernel as ``shuttle_shingles``, which takes the normalized text and
 returns the grams in the scan stage, one substring per gram.
 
+Keyed-recurrence kernel: the reference's stateful shuffle step never
+leaves its JVM service between partitioning and merging; the engine's
+four stateful stream families (keep-latest, EWMA, LOCF, CUSUM) handed
+every state group of every micro-batch to a Python worker through
+``applyInPandasWithState``, at ~1.1 ms of wall per group invocation.  In
+sessions ``get_session`` built, ``streaming/core._keyed_recurrence``
+instead applies ``shuttle_spark/jvm/KeyedRecurrence`` per key through
+``flatMapGroupsWithState`` (late rule, (ts, order) ordering, carry,
+pending rows, timeout and state removal in Java; the four steps are the
+numpy steps' integer arithmetic).  It needs no registration, only the
+classes on the driver classpath, and counts the strictly-late rows it
+drops in a ``LongAccumulator`` (the reason ``spark-core`` is a compile
+jar).
+
 Compiler guard: with no ``javac``, or in a session ``get_session`` did not
 build, the session keeps Hadoop's stock filesystem, the checksum the SQL
-form above and the shingles the pandas UDF (same values).
+form above, the shingles the pandas UDF and the keyed recurrences the
+``applyInPandasWithState`` fold (same values).
 
 Driver memory: ``spark.driver.memory`` is half the host's physical memory,
 clamped to [2g, 48g], unless ``SPARK_GRAFT_DRIVER_MEM`` sets it.
@@ -176,8 +191,9 @@ _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 # The engine's JVM classes (module docstring): Java sources, the
 # compiled-class cache beneath them, the two conf keys that register the
 # fork-free filesystem for the file: scheme, the Spark-home jars javac
-# compiles against, and the SQL names of the kernels with their classes
-# and return types.
+# compiles against, and the SQL names of the registered kernels with
+# their classes and return types (KeyedRecurrence is applied by
+# streaming.core, not registered).
 _JVM_DIR = os.path.join(_PACKAGE_ROOT, "shuttle_spark", "jvm")
 _JVM_CLASSES = os.path.join(_JVM_DIR, "classes")
 _DRIVER_CLASSPATH = "spark.driver.extraClassPath"
@@ -185,7 +201,7 @@ _LOCAL_FS_CONF = {
     "spark.hadoop.fs.file.impl": "shuttle_spark.jvm.NioLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl": "shuttle_spark.jvm.NioLocalFs",
 }
-_COMPILE_JARS = ("hadoop-client-api", "spark-sql-api")
+_COMPILE_JARS = ("hadoop-client-api", "spark-sql-api", "spark-core")
 MD5_PREFIX_FUNCTION = "shuttle_md5_prefix"
 SHINGLES_FUNCTION = "shuttle_shingles"
 _KERNELS = (
@@ -201,7 +217,8 @@ def jvm_classes() -> str | None:
     first use into ``jvm/classes/<hash of sources and jar names>`` and
     reused by every later session; None when there is no ``javac`` (the
     session then keeps Hadoop's stock local filesystem, the SQL form of
-    the md5-prefix checksum and the pandas form of shingling)."""
+    the md5-prefix checksum, the pandas form of shingling and the
+    ``applyInPandasWithState`` keyed-recurrence fold)."""
     javac = shutil.which("javac")
     if javac is None:
         return None
@@ -311,7 +328,8 @@ def get_session(
     SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_AQE env dials < explicit
     ``overrides``.  Conf only binds on the FIRST session in a process
     (getOrCreate semantics) — the standard Spark caveat.  The session gets
-    the md5-prefix checksum and shingle kernels (module docstring).
+    the md5-prefix checksum and shingle kernels and the keyed-recurrence
+    kernel (module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)

@@ -6,8 +6,10 @@ shuttle/rss/clients/ShufflePartitionReader.java:134-153) — is the moral
 ancestor of the watermark: both declare "this slice of input is complete, you
 may emit".  Our engine exposes the Spark-native version: file-source streams,
 event-time watermarks, tumbling/session windows, stream dedup, and four
-stateful keyed recurrences (keep-latest, EWMA, LOCF, CUSUM) on one
-``applyInPandasWithState`` kernel, ``_keyed_recurrence``.
+stateful keyed recurrences (keep-latest, EWMA, LOCF, CUSUM) on one fold,
+``_keyed_recurrence``: the JVM ``flatMapGroupsWithState`` kernel
+``jvm/KeyedRecurrence.java`` in sessions ``get_session`` built, its
+``applyInPandasWithState`` twin elsewhere.
 
 Correctness protocol (tested in tests/test_streaming.py): every streaming
 operator replayed to completion over a static directory must equal its batch
@@ -21,7 +23,7 @@ Scale notes (100 TB / real cluster):
 * Watermark + append mode bounds state: window state is dropped once the
   watermark passes window end.  Without a watermark, 100 TB of keys would pin
   unbounded state — every stateful op here therefore requires one.
-* ``applyInPandasWithState`` state lives in the state store (RocksDB in
+* Keyed-recurrence state lives in the state store (RocksDB in
   production via ``spark.sql.streaming.stateStore.providerClass``); the
   shuffle before it hash-partitions by key — the same exchange shape the
   reference's workers implement server-side.
@@ -36,16 +38,19 @@ import shutil
 import tempfile
 import time
 import uuid
+import weakref
 from collections.abc import Callable, Iterable, Sequence
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from shuttle_spark import session as S
 from shuttle_spark.catalog import normalize_events_ts, table_path
 from shuttle_spark.observability import record_replay
 
@@ -283,7 +288,7 @@ class _Family(NamedTuple):
 
     * ``out``: the output columns after the key, in order.  The kernel
       fills ``ts_us`` and the order column; ``step`` fills the rest.
-    * ``inputs``: the event columns ``ingest`` reads.
+    * ``inputs``: the one event column ``ingest`` reads.
     * ``ingest(pdf) -> (ok, payload)``: the per-row arrays kept while a
       row is pending, plus a mask of the rows to ingest (None = all).
     * ``payload``: the state types of those arrays.
@@ -292,7 +297,10 @@ class _Family(NamedTuple):
       carry)``: takes the pending rows sorted by (key, ts, order), with
       ``k`` indexing the per-key ``carry`` arrays, and returns the
       indices of the emitted rows, their ``cols``, the mask of rows
-      still pending and the new carry."""
+      still pending and the new carry.
+    * ``kernel``: the family's ``KeyedRecurrence`` factory in
+      ``jvm/KeyedRecurrence.java`` and its arguments after the late-row
+      accumulator; the kernel's step is ``step`` in Java."""
 
     out: list[tuple[str, T.DataType]]
     inputs: list[str]
@@ -300,6 +308,7 @@ class _Family(NamedTuple):
     payload: list[tuple[str, T.DataType]]
     carry: list[tuple[str, tuple[int, ...], int]]
     step: Callable
+    kernel: tuple
 
 
 def _keyed_recurrence(
@@ -311,26 +320,34 @@ def _keyed_recurrence(
     n_state_buckets: int | None,
     watermark: str,
 ) -> DataFrame:
-    """The one ``applyInPandasWithState`` fold behind every stateful
-    stream family in this module (keep-latest, EWMA, LOCF, CUSUM).
+    """The one stateful fold behind every keyed stream family in this
+    module (keep-latest, EWMA, LOCF, CUSUM).
 
-    Rows buffer in state as pending ``(key, ts_us, order, payload)``
-    arrays next to a per-key carry.  Each invocation drops true-late
-    rows, sorts the pending rows by (key, ts, order) and hands them to
-    the family's ``step``, which emits what the watermark has finalized
-    and threads the carry through.  A finalized row's predecessors have
-    smaller or equal event time, so they finalized with or before it,
-    and a step sees each key's history in batch order: stream == batch
-    on the finalized subset.
+    Rows buffer in state as pending ``(ts_us, order, payload)`` rows next
+    to a per-key carry.  Each invocation drops true-late rows, sorts the
+    pending rows by (key, ts, order) and hands them to the family's step,
+    which emits what the watermark has finalized and threads the carry
+    through.  A finalized row's predecessors have smaller or equal event
+    time, so they finalized with or before it, and a step sees each key's
+    history in batch order: stream == batch on the finalized subset.
+
+    **Kernel.**  In a session ``get_session`` built (``kernel_session``)
+    the fold is ``shuttle_spark/jvm/KeyedRecurrence.java``, applied per
+    key by ``flatMapGroupsWithState`` with no Python worker; its four
+    steps are the integer arithmetic of the numpy steps below.  Elsewhere
+    (no ``javac``) the fold is the ``applyInPandasWithState`` twin below,
+    whose state encoding differs; the parity tests pin the two together.
 
     **Late rule.**  A row whose event time is strictly before the
     batch's watermark (``us < wm_us``) is dropped; a row AT the
     watermark is kept, because the ewma/locf/cusum steps finalize
     ``ts_us <= wm_us``.  On Spark 4.1.2 this rule is the only filter:
-    Spark passes strictly-late rows into the fold and reports
-    ``numRowsDroppedByWatermark = 0``, so streaming progress does not
-    count these drops.  In-order sources (a range-staged replay, a
-    production landing zone) produce no late rows.
+    Spark passes strictly-late rows into either fold and reports
+    ``numRowsDroppedByWatermark = 0``, so the fold counts its drops into
+    the context's late-row counters (``late_rows``), which
+    ``run_available_now`` reports as ``last_replay().rows_dropped_late``.
+    In-order sources (a range-staged replay, a production landing zone)
+    produce no late rows.
 
     **Timeout.**  While rows are pending, the event-time timeout is
     re-armed at ``max(min_pending_ms + 1, wm_ms + 1)``, so the group is
@@ -341,18 +358,19 @@ def _keyed_recurrence(
     not stored, and a group with no stored key and nothing pending is
     removed, so no drained entry without a timeout is left behind.
 
-    **Layouts.**  ``n_state_buckets=None`` makes each key its own state
-    group.  An int packs keys into ``pmod(hash(key), n_state_buckets)``
-    groups; the fold is the same, so the layout changes only how many
-    groups exist.  That count is the cost model: Spark's runner costs
-    ~1.1 ms of wall per group invocation whatever the fold does
-    (local[4], sf0.1, engine worker daemon: a trivial count fold over
-    1,500 keys replays in 2.69 s vs 1.05 s over 10 keys).  Per-key
-    state pays keys x batches x that constant, packed state pays it per
-    bucket per batch, and the steps are vectorized numpy over a group's
-    rows.  Size ``n_state_buckets`` ~= shuffle partitions x a small
-    constant: enough groups to keep every core busy, few enough that
-    the per-group constant vanishes.
+    **Layouts** (the Python twin only; the kernel is always per key).
+    ``n_state_buckets=None`` makes each key its own state group.  An int
+    packs keys into ``pmod(hash(key), n_state_buckets)`` groups; the fold
+    is the same, so the layout changes only how many groups exist.  That
+    count is the twin's cost model: Spark's Python runner costs ~1.1 ms
+    of wall per group invocation whatever the fold does (local[4], sf0.1,
+    engine worker daemon: a trivial count fold over 1,500 keys replays in
+    2.69 s vs 1.05 s over 10 keys).  Per-key state pays keys x batches x
+    that constant, packed state pays it per bucket per batch, and the
+    steps are vectorized numpy over a group's rows.  Size
+    ``n_state_buckets`` ~= shuffle partitions x a small constant: enough
+    groups to keep every core busy, few enough that the per-group
+    constant vanishes.
 
     ``order_col`` must be integral: it rides the LongType state and
     output schemas."""
@@ -365,6 +383,19 @@ def _keyed_recurrence(
             " the LongType state and output schemas"
         )
     key_type = types[key_col]
+    out_schema = T.StructType(
+        [T.StructField(key_col, key_type)]
+        + [T.StructField(name, t) for name, t in family.out]
+    )
+    src = events.select(
+        *dict.fromkeys([key_col, ts_col, order_col, *family.inputs])
+    )
+    late = _late_counters(events.sparkSession)
+    if S.kernel_session():
+        return _kernel_fold(
+            src, key_col, ts_col, order_col, family, out_schema, watermark,
+            late.jvm,
+        )
     key_np = "int64" if isinstance(key_type, _INTEGRAL) else object
     row_np = ["int64", "int64"] + [
         "int64" if isinstance(t, T.LongType) else object
@@ -383,11 +414,8 @@ def _keyed_recurrence(
         ]
         + [T.StructField(name, T.ArrayType(t)) for name, t in family.payload]
     )
-    out_schema = T.StructType(
-        [T.StructField(key_col, key_type)]
-        + [T.StructField(name, t) for name, t in family.out]
-    )
     n_carry = len(family.carry)
+    py_late = late.python  # the closure must not capture the JVM handle
 
     def fold(_key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
         wm_ms = state.getCurrentWatermarkMs()
@@ -402,15 +430,18 @@ def _keyed_recurrence(
         rows = [np.repeat(np.arange(len(keys)), counts)] + [
             np.asarray(v, dtype=d) for v, d in zip(s[2 + n_carry:], row_np)
         ]
-        new = []
+        new, dropped = [], 0
         for pdf in pdf_iter:
             us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
             ok, payload = family.ingest(pdf)
             live = us >= wm_us  # the late rule
+            dropped += int(len(us) - live.sum())
             if ok is not None:
                 live &= ok
             cols = (pdf[key_col].to_numpy(), us, pdf[order_col].to_numpy())
             new.append([a[live] for a in (*cols, *payload)])
+        if dropped:
+            py_late.add(dropped)
         if new:
             new_keys, *new_rows = map(np.concatenate, zip(*new))
             # codes in first-appearance order keep the stored keys' codes
@@ -464,9 +495,6 @@ def _keyed_recurrence(
         if out is not None:
             yield out
 
-    src = events.select(
-        *dict.fromkeys([key_col, ts_col, order_col, *family.inputs])
-    )
     if n_state_buckets is None:
         grouped = src.withWatermark(ts_col, watermark).groupBy(key_col)
     else:
@@ -485,6 +513,97 @@ def _keyed_recurrence(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
+
+
+def _kernel_fold(
+    src: DataFrame,
+    key_col: str,
+    ts_col: str,
+    order_col: str,
+    family: _Family,
+    out_schema: T.StructType,
+    watermark: str,
+    late,
+) -> DataFrame:
+    """``_keyed_recurrence`` as ``jvm/KeyedRecurrence.java`` applied per
+    key by ``flatMapGroupsWithState``.  The kernel reads
+    ``(key, ts, ts_us, order, payload)`` rows and keeps
+    ``(carry, p_ts, p_ord, <payload>)`` per key; strictly-late rows are
+    added to ``late``, the context's JVM late-row accumulator."""
+    spark = src.sparkSession
+    jvm = spark._jvm
+    (payload_col,) = family.inputs
+    ((_, kept),) = family.payload
+    # a step reads a payload kept as text as a string and one kept as
+    # cents as a double, from any numeric column, as the twin's ingest does
+    read = kept if isinstance(kept, T.StringType) else T.DoubleType()
+    rows = src.select(
+        key_col,
+        ts_col,
+        F.unix_micros(ts_col).alias("__us"),
+        F.col(order_col).cast("long").alias("__order"),
+        F.col(payload_col).cast(read).alias("__payload"),
+    ).withWatermark(ts_col, watermark)
+    longs = T.ArrayType(T.LongType())
+    state = T.StructType(
+        [T.StructField(name, longs) for name in ("carry", "p_ts", "p_ord")]
+        + [T.StructField(name, T.ArrayType(t)) for name, t in family.payload]
+    )
+
+    def encoder(schema: T.StructType):
+        return jvm.org.apache.spark.sql.Encoders.row(
+            spark._jsparkSession.parseDataType(schema.json())
+        )
+
+    factory, *args = family.kernel
+    kernel = getattr(jvm.shuttle_spark.jvm.KeyedRecurrence, factory)(late, *args)
+    streaming = jvm.org.apache.spark.sql.streaming
+    by_key = getattr(rows.groupBy(key_col)._jgd, "as")(
+        encoder(rows.select(key_col).schema), encoder(rows.schema)
+    )
+    return DataFrame(
+        by_key.flatMapGroupsWithState(
+            kernel,
+            streaming.OutputMode.Append(),
+            encoder(state),
+            encoder(out_schema),
+            streaming.GroupStateTimeout.EventTimeTimeout(),
+        ),
+        spark,
+    )
+
+
+class _LateCounters(NamedTuple):
+    """Strictly-late rows the keyed recurrences of one Spark context have
+    dropped: ``jvm`` counts the kernel's (a ``LongAccumulator``),
+    ``python`` the ``applyInPandasWithState`` twin's."""
+
+    jvm: object
+    python: Accumulator
+
+
+_LATE_COUNTERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _late_counters(spark: SparkSession) -> _LateCounters:
+    sc = spark.sparkContext
+    counters = _LATE_COUNTERS.get(sc)
+    if counters is None:
+        counters = _LateCounters(
+            sc._jsc.sc().longAccumulator("shuttle_late_rows"), sc.accumulator(0)
+        )
+        _LATE_COUNTERS[sc] = counters
+    return counters
+
+
+def late_rows(spark: SparkSession) -> int:
+    """Strictly-late rows the keyed recurrences of this Spark context have
+    dropped so far (both folds; the count after a replay minus the count
+    before it is the replay's, while no other replay runs)."""
+    counters = _LATE_COUNTERS.get(spark.sparkContext)
+    if counters is None:
+        return 0
+    return counters.jvm.value() + counters.python.value
 
 
 def _segments(k: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -528,7 +647,7 @@ def stream_keep_latest(
     late rule; earlier versions folded them into the winner.  No
     in-order replay produces such rows.  State, late rule, timeout and
     layouts: ``_keyed_recurrence``; the stream_replay benchmark runs the
-    ``n_state_buckets=32`` layout."""
+    ``n_state_buckets=32`` contract, which the JVM kernel folds per key."""
 
     def step(k, ts, payload, carry, wm_us):
         _, last, _ = _segments(k)
@@ -547,6 +666,7 @@ def stream_keep_latest(
         payload=[("p_type", T.StringType())],
         carry=[],
         step=step,
+        kernel=("keepLatest",),
     )
     return _keyed_recurrence(
         events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
@@ -627,6 +747,7 @@ def stream_ewma_deviants(
         payload=[("p_cents", long)],
         carry=[("hist", (window,), 0), ("h_len", (), 0)],
         step=step,
+        kernel=("ewma", threshold_cents, window, min_lags),
     )
     return _keyed_recurrence(
         events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
@@ -692,6 +813,7 @@ def stream_locf(
         payload=[("p_cents", long)],
         carry=[("last_cents", (), _NULL_CENTS)],
         step=step,
+        kernel=("locf",),
     )
     return _keyed_recurrence(
         events, key_col, ts_col, "event_id", family, n_state_buckets, watermark
@@ -759,6 +881,7 @@ def stream_cusum(
         payload=[("p_cents", long)],
         carry=[("c", (), 0), ("m", (), 0)],
         step=step,
+        kernel=("cusum", drift, threshold_cents, 10**scale),
     )
     return _keyed_recurrence(
         events.filter(F.col(value_col).isNotNull()),
@@ -1125,35 +1248,32 @@ _REPLAY_PARTITIONS_MAX = 16
 
 
 def replay_partitions(spark: SparkSession) -> int:
-    """Bench-scale partition count for PER-KEY Python-state replays
-    (applyInPandasWithState over a wide key space): the per-GROUP runner
-    constant parallelizes across partitions while each partition adds a
-    fixed state-store commit, so the sweet spot tracks the local core
-    count.  That commit is now ~5-20 ms per partition per micro-batch
-    (engine filesystem, sf0.1, local[4]); every figure below was taken
-    when it was ~95-145 ms, Hadoop spawning a ``chmod``/``readlink`` per
-    checkpoint file, and the dial is unchanged until it is re-measured.
-    Measured at sf0.1 (round 13, interleaved medians):
-    stream_locf at local[32] reads 5.85/4.07/3.48/4.01 s for 4/8/16/32
-    partitions and at local[8] reads 6.49/5.29/6.87/9.82 —
-    ``min(cores, 16)`` picks the winner at both; keep_latest and ewma
-    show the same shape (4.72→3.8, 5.17→4.52 at local[32]).  JVM-state
-    operators (packed buckets, stream-stream join, session windows) are
-    commit-dominated and measured WORSE above 4 partitions (ssjoin
-    3.19→8.68) — they keep the fixed small count.  Production sizes
-    stateful partitions by state volume, not by this bench dial (see
-    run_available_now).  Results are partition-count-invariant (per-key
-    state is key-local); only scheduling changes.
+    """Bench-scale partition count for PER-KEY keyed-recurrence replays
+    over a wide key space (the ~1,500 user keys at sf0.1): the local core
+    count, clamped to [4, 16].  Results are partition-count-invariant
+    (per-key state is key-local); only scheduling changes.  Production
+    sizes stateful partitions by state volume, not by this bench dial
+    (see run_available_now).
 
-    Those figures predate the engine worker daemon (``pydaemon``), so
-    they also carried 0.17-0.35 s per Python TASK of zip-directory
-    re-reads, which penalized extra partitions.  Re-measured with it
-    (sf0.1, one micro-batch, local[4], median of 3 warm runs, a trivial
-    count fold): 1,500 keys 2.69 s vs 10 keys 1.05 s at 4 partitions,
-    i.e. ~1.1 ms of wall per group, the same as with Spark's stock
-    daemon (2.53 vs 1.18 s) — the per-group constant is real and the
-    daemon does not move it, so the ``min(cores, 16)`` dial stands.
-    16 partitions read 3.02 s (3.87 s stock)."""
+    The dial was fitted to the ``applyInPandasWithState`` twin, whose
+    Python runner costs ~1.1 ms of wall per group invocation whatever the
+    fold does (sf0.1, local[4], engine worker daemon, a trivial count
+    fold over 1,500 keys: 2.69 s vs 1.05 s over 10 keys), so more
+    partitions spread that constant over more cores while each adds a
+    state-store commit per micro-batch.  Measured at sf0.1 (round 13,
+    interleaved medians, when a commit still cost ~95-145 ms per
+    partition): stream_locf at local[32] read 5.85/4.07/3.48/4.01 s for
+    4/8/16/32 partitions and at local[8] 6.49/5.29/6.87/9.82 s, so
+    ``min(cores, 16)`` picked the winner at both.
+
+    The JVM kernel has no per-group constant, and JVM-state operators
+    (stream-stream join, session windows) measured worse above 4
+    partitions.  On a 4-core host the dial reads 4 either way; the one
+    reading above that, ``tools/ab.py`` of the four per-key contracts at
+    8 vs 4 partitions with local[8] on 4 cores (sf0.1, 6 interleaved
+    rounds), favoured 4 (stream_keep_latest 0.80 -> 0.64 s,
+    stream_cusum_census 1.56 -> 1.45 s), but 8 task threads on 4 cores
+    is not an 8-core host, so the dial stays until one is measured."""
     cores = _local_cores(spark.sparkContext.master or "")
     if cores is None:
         cores = spark.sparkContext.defaultParallelism
@@ -1191,6 +1311,7 @@ def run_available_now(
     if shuffle_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     restore = _scoped_conf(spark, overrides)
+    late_before = late_rows(spark)
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -1201,7 +1322,9 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-        record_replay(name, q.recentProgress)
+        record_replay(
+            name, q.recentProgress, late_rows(spark) - late_before
+        )
     finally:
         restore()
     return spark.table(name)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -8,6 +9,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shuttle_spark import get_session  # noqa: E402
+from shuttle_spark import session as S  # noqa: E402
 
 SMOKE_SF = "/root/testdata/sf0.001"
 ORACLE_SF = os.environ.get("SHUTTLE_TEST_SF_DIR", SMOKE_SF)
@@ -22,6 +24,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return ORACLE_SF
+
+
+@pytest.fixture(scope="session")
+def without_kernels():
+    """A context manager: plans built inside it take the Python and SQL
+    twins of the JVM kernels (``session.kernel_session()`` reads False),
+    the side the kernel parity tests compare against."""
+
+    @contextlib.contextmanager
+    def twins():
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(S, "kernel_session", lambda: False)
+            yield
+
+    return twins
 
 
 # ---------------------------------------------------------------------------

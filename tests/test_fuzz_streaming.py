@@ -238,6 +238,9 @@ def test_fuzz_stream_dedup_window_parity(spark, window, delay, filt, by_type):
 # group; large = effectively per-key), NULL moduli, and replay shapes.
 # Each example runs TWO real AvailableNow replays (~4 s/example), so the
 # default example count is small; FUZZ_STREAM_PACKED_EXAMPLES deepens.
+# The packed side is built under the ``without_kernels`` fixture: the
+# packed layout exists only in the Python twin, so in a kernel session
+# each example pins the JVM kernel (per key) to the packed twin.
 # ---------------------------------------------------------------------------
 
 FUZZ_PACKED = settings(
@@ -254,7 +257,9 @@ FUZZ_PACKED = settings(
     multi=st.booleans(),
 )
 @FUZZ_PACKED
-def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
+def test_fuzz_stream_locf_packed_parity(
+    spark, without_kernels, n_buckets, null_mod, multi
+):
     from shuttle_spark.streaming import (
         events_stream,
         events_stream_multi,
@@ -281,11 +286,12 @@ def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
     plain = run_available_now(
         stream_locf(src()), f"fzl_{tag}", shuffle_partitions=4
     ).select(*cols)
-    packed = run_available_now(
-        stream_locf(src(), n_state_buckets=n_buckets),
-        f"fzp_{tag}",
-        shuffle_partitions=4,
-    ).select(*cols)
+    with without_kernels():  # the packed layout is the twin's
+        packed = run_available_now(
+            stream_locf(src(), n_state_buckets=n_buckets),
+            f"fzp_{tag}",
+            shuffle_partitions=4,
+        ).select(*cols)
     assert plain.count() == packed.count() > 0
     assert plain.exceptAll(packed).count() == 0
     assert packed.exceptAll(plain).count() == 0
@@ -299,7 +305,7 @@ def test_fuzz_stream_locf_packed_parity(spark, n_buckets, null_mod, multi):
 )
 @FUZZ_PACKED
 def test_fuzz_stream_keep_latest_packed_parity(
-    spark, n_buckets, key_mod, multi
+    spark, without_kernels, n_buckets, key_mod, multi
 ):
     """r11 packed twin under the same replay-space fuzz: bucket counts
     from degenerate (1 = every key in one group) to one-key-per-bucket,
@@ -331,11 +337,12 @@ def test_fuzz_stream_keep_latest_packed_parity(
     plain = run_available_now(
         stream_keep_latest(src()), f"fkl_{tag}", shuffle_partitions=4
     ).select(*cols)
-    packed = run_available_now(
-        stream_keep_latest(src(), n_state_buckets=n_buckets),
-        f"fkp_{tag}",
-        shuffle_partitions=4,
-    ).select(*cols)
+    with without_kernels():  # the packed layout is the twin's
+        packed = run_available_now(
+            stream_keep_latest(src(), n_state_buckets=n_buckets),
+            f"fkp_{tag}",
+            shuffle_partitions=4,
+        ).select(*cols)
     assert plain.count() == packed.count() > 0
     assert plain.exceptAll(packed).count() == 0
     assert packed.exceptAll(plain).count() == 0
@@ -350,7 +357,7 @@ def test_fuzz_stream_keep_latest_packed_parity(
 )
 @FUZZ_PACKED
 def test_fuzz_stream_ewma_packed_parity(
-    spark, n_buckets, window, min_lags, multi
+    spark, without_kernels, n_buckets, window, min_lags, multi
 ):
     """r11 third packed family under replay-space fuzz: the FIR
     recurrence's dials (window width, warm-up lag floor) vary with the
@@ -385,11 +392,12 @@ def test_fuzz_stream_ewma_packed_parity(
         stream_ewma_deviants(src(), **dials),
         f"fep_{tag}", shuffle_partitions=4,
     ).select(*cols)
-    packed = run_available_now(
-        stream_ewma_deviants(src(), n_state_buckets=n_buckets, **dials),
-        f"fep2_{tag}",
-        shuffle_partitions=4,
-    ).select(*cols)
+    with without_kernels():  # the packed layout is the twin's
+        packed = run_available_now(
+            stream_ewma_deviants(src(), n_state_buckets=n_buckets, **dials),
+            f"fep2_{tag}",
+            shuffle_partitions=4,
+        ).select(*cols)
     assert plain.count() == packed.count() > 0
     assert plain.exceptAll(packed).count() == 0
     assert packed.exceptAll(plain).count() == 0
@@ -410,7 +418,7 @@ def test_fuzz_stream_ewma_packed_parity(
 )
 @FUZZ_PACKED
 def test_fuzz_stream_cusum_packed_parity(
-    spark, n_buckets, key_mod, dials, multi
+    spark, without_kernels, n_buckets, key_mod, dials, multi
 ):
     """r12 fourth packed family under replay-space fuzz: CUSUM's
     two-counter recurrence must hand off across micro-batch boundaries
@@ -447,11 +455,12 @@ def test_fuzz_stream_cusum_packed_parity(
     plain = run_available_now(
         stream_cusum(src(), **dials), f"fcu_{tag}", shuffle_partitions=4
     ).select(*cols)
-    packed = run_available_now(
-        stream_cusum(src(), n_state_buckets=n_buckets, **dials),
-        f"fcp_{tag}",
-        shuffle_partitions=4,
-    ).select(*cols)
+    with without_kernels():  # the packed layout is the twin's
+        packed = run_available_now(
+            stream_cusum(src(), n_state_buckets=n_buckets, **dials),
+            f"fcp_{tag}",
+            shuffle_partitions=4,
+        ).select(*cols)
     assert plain.count() == packed.count() > 0
     assert plain.exceptAll(packed).count() == 0
     assert packed.exceptAll(plain).count() == 0

@@ -56,6 +56,7 @@ def test_last_replay_records_stream_progress(spark, sf_dir):
         assert op.state_store_instances == 4
         assert op.commit_ms >= 0 and op.all_updates_ms >= 0
     assert sum(op.rows_dropped_by_watermark for b in rep.batches for op in b.state_operators) == 0
+    assert rep.rows_dropped_late == 0
 
 
 def test_measure_matches_full_scan_after_many_stages(spark):

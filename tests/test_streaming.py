@@ -10,6 +10,7 @@ readers only consume `_final` partition files
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 
@@ -18,6 +19,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from shuttle_spark import observability as O
+from shuttle_spark import session as S
 from shuttle_spark.catalog import load_table
 from shuttle_spark.operators import dedup as D
 from shuttle_spark.streaming import (
@@ -581,14 +584,16 @@ def test_stream_locf_equals_batch_single_and_multi_batch(spark):
 
 
 @pytest.mark.slow
-def test_stream_locf_packed_parity_and_batch_equality(spark):
+def test_stream_locf_packed_parity_and_batch_equality(spark, without_kernels):
     """stream_locf packed == per-key row-for-row (exceptAll both
     ways, full output including the not-yet-finalized-free tail) AND ==
     the batch LOCF on the finalized subset, single- and multi-batch —
     packing keys into shared state groups is a pure physical-layout
     change, so ANY divergence is a bug.  Also pins the packed operator
     at a bucket count that forces real multi-key packing (sf0.001 has
-    ~150 keys -> ~19 keys per bucket at 8 buckets)."""
+    ~150 keys -> ~19 keys per bucket at 8 buckets).  The packed side is
+    the Python twin (``without_kernels``), so in a kernel session this
+    also pins the JVM kernel to it."""
     from shuttle_spark.streaming import events_stream_multi
     from shuttle_spark.streaming.core import stream_locf
 
@@ -605,14 +610,15 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
             f"{name}_a",
             shuffle_partitions=4,
         ).select(*cols)
-        packed = run_available_now(
-            stream_locf(
-                mk().withColumn("value", null_if(F.col("value"))),
-                n_state_buckets=8,
-            ),
-            f"{name}_b",
-            shuffle_partitions=4,
-        ).select(*cols)
+        with without_kernels():  # the packed layout is the twin's
+            packed = run_available_now(
+                stream_locf(
+                    mk().withColumn("value", null_if(F.col("value"))),
+                    n_state_buckets=8,
+                ),
+                f"{name}_b",
+                shuffle_partitions=4,
+            ).select(*cols)
         assert plain.count() == packed.count() > 0, name
         assert plain.exceptAll(packed).count() == 0, name
         assert packed.exceptAll(plain).count() == 0, name
@@ -620,12 +626,13 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
 
 
 @pytest.mark.slow
-def test_stream_keep_latest_packed_parity(spark):
+def test_stream_keep_latest_packed_parity(spark, without_kernels):
     """stream_keep_latest packed == per-key row-for-row
     (exceptAll both ways), single- and multi-batch — the packed form is
     a pure physical-layout change (shared state groups + vectorized
     per-bucket argmax), so ANY divergence is a bug.  Bucket count forces
-    real multi-key packing (sf0.001 has ~150 keys -> ~19/bucket at 8)."""
+    real multi-key packing (sf0.001 has ~150 keys -> ~19/bucket at 8).
+    The packed side is the Python twin (``without_kernels``)."""
     from shuttle_spark.streaming import events_stream_multi
     cols = ["user_id", "ts_us", "event_id", "event_type"]
     for mk, name in (
@@ -635,11 +642,12 @@ def test_stream_keep_latest_packed_parity(spark):
         plain = run_available_now(
             stream_keep_latest(mk()), f"{name}_a", shuffle_partitions=4
         ).select(*cols)
-        packed = run_available_now(
-            stream_keep_latest(mk(), n_state_buckets=8),
-            f"{name}_b",
-            shuffle_partitions=4,
-        ).select(*cols)
+        with without_kernels():  # the packed layout is the twin's
+            packed = run_available_now(
+                stream_keep_latest(mk(), n_state_buckets=8),
+                f"{name}_b",
+                shuffle_partitions=4,
+            ).select(*cols)
         assert plain.count() == packed.count() > 0, name
         assert plain.exceptAll(packed).count() == 0, name
         assert packed.exceptAll(plain).count() == 0, name
@@ -685,11 +693,12 @@ def test_stream_cusum_equals_batch_single_and_multi_batch(spark):
 
 
 @pytest.mark.slow
-def test_stream_ewma_packed_parity(spark):
+def test_stream_ewma_packed_parity(spark, without_kernels):
     """stream_ewma_deviants packed == per-key row-for-row (exceptAll
     both ways), single- and multi-batch — packing is a physical layout
     change; the per-key FIR recurrence walk is byte-identical, so ANY
-    divergence is a bug.  8 buckets force real multi-key packing."""
+    divergence is a bug.  8 buckets force real multi-key packing.  The
+    packed side is the Python twin (``without_kernels``)."""
     from shuttle_spark.streaming import events_stream_multi
     from shuttle_spark.streaming.core import stream_ewma_deviants
 
@@ -701,11 +710,12 @@ def test_stream_ewma_packed_parity(spark):
         plain = run_available_now(
             stream_ewma_deviants(mk()), f"{name}_a", shuffle_partitions=4
         ).select(*cols)
-        packed = run_available_now(
-            stream_ewma_deviants(mk(), n_state_buckets=8),
-            f"{name}_b",
-            shuffle_partitions=4,
-        ).select(*cols)
+        with without_kernels():  # the packed layout is the twin's
+            packed = run_available_now(
+                stream_ewma_deviants(mk(), n_state_buckets=8),
+                f"{name}_b",
+                shuffle_partitions=4,
+            ).select(*cols)
         assert plain.count() == packed.count() > 0, name
         assert plain.exceptAll(packed).count() == 0, name
         assert packed.exceptAll(plain).count() == 0, name
@@ -720,6 +730,16 @@ _FAMILIES = {
     "cusum": ("stream_cusum", {}),
 }
 _LAYOUTS = {"per_key": None, "packed": 8}
+
+
+def _folds(layout: str, twin):
+    """The folds a test case runs, as context managers: the default one
+    (the JVM kernel in a kernel session, always per key) for the per-key
+    cases, and the ``applyInPandasWithState`` twin (``twin``, the
+    ``without_kernels`` fixture) for both layouts."""
+    if layout == "per_key":
+        return [contextlib.nullcontext, twin]
+    return [twin]
 
 
 def _family_op(family: str, layout: str):
@@ -750,7 +770,7 @@ def _replay_to(spark, df, ckpt, fmt="memory", path=None):
 @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 def test_keyed_recurrence_all_null_values_leave_no_drained_state(
-    spark, tmp_path, family, layout
+    spark, tmp_path, family, layout, without_kernels
 ):
     """State hygiene: no group may be left in the state store with
     nothing pending (a drained entry has no timeout, so nothing would
@@ -758,16 +778,18 @@ def test_keyed_recurrence_all_null_values_leave_no_drained_state(
     nothing, so the store must be empty; keep_latest and locf still
     buffer the rows the final watermark has not passed, so only those
     groups may remain."""
-    src = events_stream(spark, SF).withColumn(
-        "value", F.lit(None).cast("double")
-    )
-    ckpt = str(tmp_path / f"ckpt_{family}_{layout}")
-    _replay_to(spark, _family_op(family, layout)(src), ckpt)
-    store = spark.read.format("statestore").load(ckpt)
-    drained = store.filter(F.size("value.groupState.p_ts") == 0)
-    assert drained.count() == 0
-    if family in ("ewma", "cusum"):
-        assert store.count() == 0
+    for i, fold in enumerate(_folds(layout, without_kernels)):
+        src = events_stream(spark, SF).withColumn(
+            "value", F.lit(None).cast("double")
+        )
+        ckpt = str(tmp_path / f"ckpt_{family}_{layout}_{i}")
+        with fold():
+            _replay_to(spark, _family_op(family, layout)(src), ckpt)
+        store = spark.read.format("statestore").load(ckpt)
+        drained = store.filter(F.size("value.groupState.p_ts") == 0)
+        assert drained.count() == 0
+        if family in ("ewma", "cusum"):
+            assert store.count() == 0
 
 
 def _write_events(path, rows) -> None:
@@ -798,13 +820,16 @@ _EVENTS_SCHEMA = (
 
 @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
-def test_keyed_recurrence_late_rule(spark, tmp_path, family, layout):
+def test_keyed_recurrence_late_rule(
+    spark, tmp_path, family, layout, without_kernels
+):
     """The kernel's late rule is the only filter of strictly-late rows
     (Spark passes them into the fold).  Two files, one per micro-batch:
     the first sets the watermark to t0 + 1 h; the second holds a row
     1 s before it (key 1, must be dropped), a row exactly at it (key 2,
     must be kept and finalized) and a later row (key 3) that moves the
-    watermark past both.  Keys are user_id k / event_type "k<k>"."""
+    watermark past both.  Keys are user_id k / event_type "k<k>".  The
+    replay reports the one dropped row (``last_replay``)."""
     from shuttle_spark.sources.io import read_stream
 
     t0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
@@ -824,10 +849,6 @@ def test_keyed_recurrence_late_rule(spark, tmp_path, family, layout):
         _write_events(path, rows)
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     src = read_stream(spark, str(land), _EVENTS_SCHEMA, max_files_per_trigger=1)
-    ckpt = str(tmp_path / "ckpt")
-    _replay_to(spark, _family_op(family, layout)(src), ckpt)
-    out = spark.table(f"q_{os.path.basename(ckpt)}")
-    got = sorted(r[0] for r in out.select("event_id").collect())
     # keep_latest: key 1's winner stays event 1 (event 10 would have won),
     # key 2's winner is the at-watermark row, key 3's is not yet passed;
     # ewma (threshold 0, one lag) flags event 11 against event 2's
@@ -839,7 +860,119 @@ def test_keyed_recurrence_late_rule(spark, tmp_path, family, layout):
         "locf": [1, 2, 3, 11],
         "cusum": [1, 2, 3, 11],
     }[family]
-    assert got == want
+    for fold in _folds(layout, without_kernels):
+        with fold():
+            op = _family_op(family, layout)
+            out = run_available_now(op(src), shuffle_partitions=4)
+        assert sorted(r[0] for r in out.select("event_id").collect()) == want
+        assert O.last_replay().rows_dropped_late == 1
+
+
+needs_javac = pytest.mark.skipif(
+    S.jvm_classes() is None, reason="no javac: no JVM kernel"
+)
+
+
+def _parity_fixture(land) -> None:
+    """Three one-batch files (watermark delay 2 h): NULL values, ts ties
+    on one key that arrive in reverse order of event_id (inside a batch
+    and across batches), a strictly-late row (event 8), a row exactly at
+    the watermark of its batch (event 9), one exactly at the final
+    watermark (event 17: the no-data batch that closes the replay
+    finalizes it, invoked by the timeout of event 15) and keys that only
+    finalize in a later batch.  Rows
+    are (event_id, user_id, ts, value); event_type is "k<user_id>"."""
+    t0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    h, s = dt.timedelta(hours=1), dt.timedelta(seconds=1)
+    files = [
+        [
+            (1, 1, t0, 10.0), (2, 2, t0, None), (3, 1, t0 + h / 2, 12.5),
+            (5, 3, t0 + h, 7.0), (4, 3, t0 + h, 9.0),
+            (6, 2, t0 + 3 * h, 3.0), (7, 1, t0 + 3 * h, None),
+        ],
+        [
+            (8, 1, t0 + h - s, 99.0), (9, 2, t0 + h, 20.0),
+            (10, 3, t0 + h, 8.0), (11, 1, t0 + 4 * h, None),
+            (12, 2, t0 + 5 * h, -6.0),
+        ],
+        [
+            (13, 3, t0 + 5 * h, 1.0), (14, 1, t0 + 9 * h, 2.0),
+            (15, 2, t0 + 9 * h, 0.5), (16, 3, t0 + 12 * h, 4.0),
+            (17, 2, t0 + 10 * h, 5.0),
+        ],
+    ]
+    for i, rows in enumerate(files):
+        path = str(land / f"part-{i}.parquet")
+        _write_events(path, rows)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+@needs_javac
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_keyed_recurrence_kernel_equals_twin(
+    spark, tmp_path, family, without_kernels
+):
+    """The JVM kernel returns what the Python twin returns, per key and
+    packed, row for row, and counts the same late row: on the hand-made
+    three-batch fixture (NULLs, ts ties broken by event_id, a row at the
+    watermark, a late row; CUSUM keys on the string event_type), on it
+    with the value column cast to bigint and to decimal (both folds read
+    any numeric value column) and on a four-batch replay of the sf0.001
+    events with every fifth value NULL."""
+    from shuttle_spark.sources.io import read_stream
+    from shuttle_spark.streaming import events_stream_multi
+
+    land = tmp_path / "land"
+    land.mkdir()
+    _parity_fixture(land)
+    def fixture(value_type="double"):
+        return read_stream(
+            spark, str(land), _EVENTS_SCHEMA, max_files_per_trigger=1
+        ).withColumn("value", F.col("value").cast(value_type))
+
+    sources = {
+        "fixture": fixture,
+        "fixture_long": lambda: fixture("bigint"),
+        "fixture_decimal": lambda: fixture("decimal(12,2)"),
+        "sf": lambda: events_stream_multi(spark, SF, n_files=4).withColumn(
+            "value", _null_if(F.col("value"))
+        ),
+    }
+    for name, src in sources.items():
+        runs = {}
+        for fold, layout in (
+            (contextlib.nullcontext, "per_key"),
+            (without_kernels, "per_key"),
+            (without_kernels, "packed"),
+        ):
+            with fold():
+                df = _family_op(family, layout)(src())
+                out = run_available_now(df, shuffle_partitions=4)
+            runs[fold, layout] = (_rows(out), O.last_replay().rows_dropped_late)
+        kernel, *twins = runs.values()
+        assert kernel[0], name
+        assert all(t == kernel for t in twins), name
+        assert kernel[1] == (1 if name.startswith("fixture") else 0)
+
+
+@needs_javac
+def test_kernel_session_folds_in_the_jvm(spark, without_kernels):
+    """In a kernel session every keyed family plans the JVM
+    ``FlatMapGroupsWithState`` and no Python-state operator; the twin
+    plans ``FlatMapGroupsInPandasWithState``."""
+    assert S.kernel_session()
+    src = events_stream(spark, SF)
+    for family in _FAMILIES:
+        for fold, want, other in (
+            (contextlib.nullcontext, "FlatMapGroupsWithState",
+             "FlatMapGroupsInPandasWithState"),
+            (without_kernels, "FlatMapGroupsInPandasWithState",
+             "FlatMapGroupsWithState"),
+        ):
+            with fold():
+                df = _family_op(family, "per_key")(src)
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert want in plan and other not in plan, (family, want)
 
 
 class _FakeGroupState:
@@ -954,7 +1087,7 @@ def _loop_reference(family, live):
 def test_keyed_recurrence_steps_equal_loop_reference(
     spark, monkeypatch, family, layout
 ):
-    """The kernel's fold, driven directly on random disordered
+    """The Python twin's fold, driven directly on random disordered
     micro-batches (several keys per group in the packed layout, NULL
     values, true-late rows), equals a per-row Python loop of each
     recurrence (keep_latest: each key's last emission is its max live
@@ -963,6 +1096,7 @@ def test_keyed_recurrence_steps_equal_loop_reference(
 
     from pyspark.sql.group import GroupedData
 
+    monkeypatch.setattr(S, "kernel_session", lambda: False)
     monkeypatch.setattr(
         GroupedData, "applyInPandasWithState", lambda self, fold, *a: fold
     )
@@ -1040,18 +1174,25 @@ def _restart_batch_twin(spark, family):
 
 @pytest.mark.parametrize("family,layout", _RESTART_CASES)
 def test_keyed_recurrence_restarts_from_checkpoint(
-    spark, tmp_path, family, layout
+    spark, tmp_path, family, layout, without_kernels
 ):
     """Stop after 2 of 4 range-staged events files, add the other 2 and
     restart from the same checkpoint: the carry and the pending rows
-    survive the state encoding across the restart.  The parquet sink
-    output of locf, ewma and cusum equals an uninterrupted replay and the
-    batch twin on the finalized subset.  keep_latest emits a key again when it resumes
-    after the watermark passed its winner, and the closing batch of the
-    first run is such a point; so its restarted output holds every row
-    of the uninterrupted replay plus those earlier winners, and each
-    key's last emission equals both the uninterrupted replay's and the
-    batch keep-latest of the quiesced keys."""
+    survive the state encoding across the restart, on each fold of
+    ``_folds``.  The parquet sink output of locf, ewma and cusum equals an
+    uninterrupted replay and the batch twin on the finalized subset.
+    keep_latest emits a key again when it resumes after the watermark
+    passed its winner, and the closing batch of the first run is such a
+    point; so its restarted output holds every row of the uninterrupted
+    replay plus those earlier winners, and each key's last emission equals
+    both the uninterrupted replay's and the batch keep-latest of the
+    quiesced keys."""
+    for i, fold in enumerate(_folds(layout, without_kernels)):
+        with fold():
+            _check_restart(spark, tmp_path / str(i), family, layout)
+
+
+def _check_restart(spark, tmp_path, family, layout):
     import shutil
 
     from shuttle_spark.sources.io import read_stream
@@ -1068,7 +1209,7 @@ def test_keyed_recurrence_restarts_from_checkpoint(
     parts = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
     assert len(parts) == 4
     land, sink, ckpt = (str(tmp_path / d) for d in ("land", "sink", "ckpt"))
-    os.mkdir(land)
+    os.makedirs(land)
     for files in (parts[:2], parts[2:]):
         for f in files:  # copy2 keeps the staged range-order modtimes
             shutil.copy2(os.path.join(staged, f), os.path.join(land, f))
@@ -1127,13 +1268,14 @@ def test_stream_cusum_rejects_non_integral_tiebreak(spark):
 
 
 @pytest.mark.slow
-def test_stream_cusum_packed_parity(spark):
+def test_stream_cusum_packed_parity(spark, without_kernels):
     """stream_cusum packed == per-key row-for-row (exceptAll both
     ways), single- and multi-batch — packing is a physical layout
     change; the two-counter recurrence walk is byte-identical per key,
     so ANY divergence is a bug.  The key space is inflated (event_type
     x user_id % 7) so 8 buckets force real multi-key packing, and the
-    output must contain real alerts (the dials bite)."""
+    output must contain real alerts (the dials bite).  The packed side
+    is the Python twin (``without_kernels``)."""
     from shuttle_spark.streaming import events_stream_multi
     from shuttle_spark.streaming.core import stream_cusum
 
@@ -1148,13 +1290,14 @@ def test_stream_cusum_packed_parity(spark):
             f"{name}_a",
             shuffle_partitions=4,
         ).select(*cols)
-        packed = run_available_now(
-            stream_cusum(
-                mk().withColumn("event_type", ktag), n_state_buckets=8
-            ),
-            f"{name}_b",
-            shuffle_partitions=4,
-        ).select(*cols)
+        with without_kernels():  # the packed layout is the twin's
+            packed = run_available_now(
+                stream_cusum(
+                    mk().withColumn("event_type", ktag), n_state_buckets=8
+                ),
+                f"{name}_b",
+                shuffle_partitions=4,
+            ).select(*cols)
         assert plain.count() == packed.count() > 0, name
         assert plain.exceptAll(packed).count() == 0, name
         assert packed.exceptAll(plain).count() == 0, name

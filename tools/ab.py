@@ -35,7 +35,8 @@ micro-batch jobs run in the query's own group); ``stages``, ``tasks``,
 ``shuffle_write_bytes``, ``spill_bytes``; for a stream replay also
 ``batches``, ``<phase>_ms`` (``durationMs`` summed over micro-batches) and
 ``state_commit_ms`` / ``state_update_ms`` (summed over batches and stateful
-operators).
+operators) and ``rows_dropped_late`` (strictly-late rows the keyed
+recurrences dropped).
 """
 
 from __future__ import annotations
@@ -115,6 +116,7 @@ def timed_run(spark: SparkSession, build: Callable, sf: str, group: str) -> dict
         ops = [op for b in replay.batches for op in b.state_operators]
         rec["state_commit_ms"] = sum(op.commit_ms for op in ops)
         rec["state_update_ms"] = sum(op.all_updates_ms for op in ops)
+        rec["rows_dropped_late"] = replay.rows_dropped_late
     return rec
 
 

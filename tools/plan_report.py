@@ -1,6 +1,13 @@
 """Generate PLANS.md: the physical-plan audit of every contract query.
 
 Run: python tools/plan_report.py [sf_dir]
+
+PLANS.md holds only what is stable between two runs of the same builders,
+the plan-audit table, so a diff of it is a plan change.  Two sections move
+from run to run and go to stdout: the observed runtime metrics (stages,
+tasks, bytes per contract; AQE re-plans at run time) and the formatted
+plans of the flagship queries (their scan paths name per-session scratch
+directories and their expression ids depend on every plan built before).
 """
 
 from __future__ import annotations
@@ -93,9 +100,8 @@ def main() -> None:
     from shuttle_spark import observability as O
 
     mb = lambda b: round(b / 1048576, 2)  # noqa: E731
-    lines += [
-        "",
-        "## Observed runtime metrics (per contract, sf as above)",
+    printed = [
+        f"## Observed runtime metrics (per contract, `{sf}`)",
         "",
         "Captured by `shuttle_spark.observability.measure` from Spark's",
         "status store: stages the contract actually ran, bytes scanned,",
@@ -109,18 +115,19 @@ def main() -> None:
     ]
     for name, c in REGISTRY.items():
         rows, m = O.measure(spark, lambda c=c: c.build(spark, sf).collect())
-        lines.append(
+        printed.append(
             f"| {name} | {m.n_stages} | {sum(s.num_tasks for s in m.stages)} |"
             f" {mb(m.input_bytes)} | {mb(m.shuffle_write_bytes)} |"
             f" {mb(m.shuffle_read_bytes)} | {mb(m.spill_bytes)} |"
             f" {len(rows)} |"
         )
-
-    lines += ["", "## Formatted plans of flagship queries", ""]
+    printed += ["", "## Formatted plans of flagship queries", ""]
     for name in FLAGSHIPS:
-        lines += [f"### {name}", "", "```"]
-        lines.append(P.explain_formatted(REGISTRY[name].build(spark, sf)).strip())
-        lines += ["```", ""]
+        printed += [f"### {name}", "", "```"]
+        printed.append(P.explain_formatted(REGISTRY[name].build(spark, sf)).strip())
+        printed += ["```", ""]
+    print("\n".join(printed))
+
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
