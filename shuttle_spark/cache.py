@@ -32,16 +32,39 @@ every instance follows the same policy:
 
 Each module clears its own instances through its public ``clear_*``
 function; ``clear_all`` clears every instance alive in the process.
+
+* Staged directories.  Every directory the engine writes (staged landing
+  zones, ingest relayout copies, sink scratch, contract fixtures, the
+  bucketed-table database, stream checkpoints) comes from here.
+  ``staged_dir(spark, *sources, params=..., build=...)`` memoizes one per
+  key under the same rule, where a source may also be a file path
+  (identity: the path; freshness: its files' size and mtime), and builds
+  it once; a failed build leaves no entry and no directory, so a memoized
+  directory is always complete.  ``scratch_dir(prefix)`` is the
+  unmemoized form (one per stream replay's checkpoint).  Root: one
+  directory per process under ``_scratch_root``: ``SPARK_GRAFT_SCRATCH``,
+  else a tmpfs with headroom (two size classes: staged copies need 8 GiB
+  free, scratch 1 GiB), else the system tempdir.  Lifetime: the process's
+  directory is removed at interpreter exit; the first use of a root in a
+  process removes the directories there of processes that are gone and
+  over 2 h old.  ``clear_all`` leaves directories alone: relations
+  memoized elsewhere (``catalog.load_table``) read them for the life of
+  the process.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import tempfile
+import time
 import weakref
 from collections.abc import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def semantic_key(df: DataFrame) -> tuple:
@@ -59,9 +82,11 @@ def semantic_key(df: DataFrame) -> tuple:
         return ("id", id(df))
 
 
-def source_fingerprint(df: DataFrame) -> tuple:
-    """Freshness token of a DataFrame's source files: a hash over the files
-    under every file scan of its ANALYZED plan, each with (size, mtime).
+def source_fingerprint(source: DataFrame | str) -> tuple:
+    """Freshness token of a source's files: a hash over each file's (size,
+    mtime).  A path source lists itself (a file) or its data files (a
+    directory); a DataFrame lists the files under every file scan of its
+    ANALYZED plan.
     Rewriting a table at the same path in-session changes it, which the
     plan identity cannot see (the rewritten table has the SAME analyzed
     plan).  The analyzed plan, not ``df.inputFiles()``: that reads the
@@ -72,12 +97,18 @@ def source_fingerprint(df: DataFrame) -> tuple:
     for sources without files; ``("nofp",)`` when a listed file is gone or
     the plan cannot be read — no worse than the plan key alone."""
     try:
-        files = []
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-        while leaves.hasNext():
-            leaf = leaves.next()
-            if leaf.getClass().getSimpleName() == "LogicalRelation":
-                files += leaf.relation().inputFiles()
+        if isinstance(source, str):
+            files = [source] if os.path.isfile(source) else [
+                os.path.join(source, f) for f in os.listdir(source)
+                if not f.startswith(("_", "."))
+            ]
+        else:
+            files = []
+            leaves = source._jdf.queryExecution().analyzed().collectLeaves().iterator()
+            while leaves.hasNext():
+                leaf = leaves.next()
+                if leaf.getClass().getSimpleName() == "LogicalRelation":
+                    files += leaf.relation().inputFiles()
         acc = 0
         for uri in sorted(files):
             path = uri[7:] if uri.startswith("file://") else uri
@@ -98,9 +129,17 @@ class CacheKey(tuple):
 def cache_key(*sources: DataFrame, params: tuple = ()) -> CacheKey:
     """The key of a value computed from ``sources`` under ``params``.
     Build it once per call and use it for every instance the call reads."""
+    return _key(sources[0].sparkSession, sources, params)
+
+
+def _key(spark: SparkSession, sources: tuple, params: tuple) -> CacheKey:
     key = CacheKey((
-        sources[0].sparkSession.sparkContext.applicationId,
-        tuple((semantic_key(s), source_fingerprint(s)) for s in sources),
+        spark.sparkContext.applicationId,
+        tuple(
+            (("path", os.path.abspath(s)) if isinstance(s, str)
+             else semantic_key(s), source_fingerprint(s))
+            for s in sources
+        ),
         params,
     ))
     key.sources = sources
@@ -206,3 +245,119 @@ def approx_quantiles_cached(
 
 def clear_quantile_cache() -> None:
     _quantile_cache.clear()
+
+
+def _scratch_root(min_free_bytes: int = 1 << 30) -> str | None:
+    """Preferred root for staged directories: a tmpfs mount when one exists
+    AND has headroom.  The medium does not set the commit cost: a probe at
+    sf0.1 measured the same state-store commit time with checkpoints on
+    ext4 and on tmpfs.  Commits were bound by Hadoop's per-file
+    ``chmod``/``readlink`` spawns, which the engine filesystem removes
+    (``session.py``); tmpfs only keeps throwaway scratch off the disk.  In
+    production a checkpoint location is a DURABLE path the caller passes.
+
+    tmpfs is RAM-backed (typically capped at 50% of memory), so it
+    COMPETES with executor memory: writing data-sized scratch there at
+    larger SF risks ENOSPC with no recovery.  The gate is a free-space
+    check (``os.statvfs``) against ``min_free_bytes``: staged table copies
+    pass a much larger floor than checkpoint writers.  SPARK_GRAFT_SCRATCH
+    overrides unconditionally; None falls back to the system tempdir."""
+    override = os.environ.get("SPARK_GRAFT_SCRATCH")
+    if override:
+        os.makedirs(override, exist_ok=True)
+        return override
+    shm = "/dev/shm"
+    if os.path.isdir(shm) and os.access(shm, os.W_OK):
+        try:
+            st = os.statvfs(shm)
+            if st.f_bavail * st.f_frsize < min_free_bytes:
+                return None
+        except OSError:
+            return None
+        d = os.path.join(shm, "shuttle_spark_scratch")
+        try:
+            os.makedirs(d, exist_ok=True)
+            return d
+        except OSError:
+            return None
+    return None
+
+
+# root -> this process's directory under it
+_process_dirs: dict[str, str] = {}
+_PROCESS_DIR = re.compile(r"shuttle_(\d+)_\w+")
+_SWEEP_AGE_S = 2 * 3600
+
+
+def _process_dir(min_free_bytes: int) -> str:
+    root = _scratch_root(min_free_bytes) or tempfile.gettempdir()
+    d = _process_dirs.get(root)
+    if d is None:
+        _sweep(root)
+        d = _process_dirs[root] = tempfile.mkdtemp(
+            prefix=f"shuttle_{os.getpid()}_", dir=root
+        )
+    return d
+
+
+def _sweep(root: str) -> None:
+    """Remove the process directories under ``root`` whose process is
+    gone and that are over 2 h old: the age gate spares a directory whose
+    pid a live process took over."""
+    for name in os.listdir(root):
+        m = _PROCESS_DIR.fullmatch(name)
+        if m is None:
+            continue
+        path = os.path.join(root, name)
+        try:
+            os.kill(int(m.group(1)), 0)
+            continue  # the owner (or a process reusing its pid) is alive
+        except ProcessLookupError:
+            pass
+        except (OSError, OverflowError):
+            continue
+        try:
+            if time.time() - os.path.getmtime(path) > _SWEEP_AGE_S:
+                shutil.rmtree(path, ignore_errors=True)
+        except OSError:
+            pass
+
+
+@atexit.register
+def _remove_process_dirs() -> None:
+    # a forked child inherits the table but owns none of it
+    for d in _process_dirs.values():
+        if os.path.basename(d).startswith(f"shuttle_{os.getpid()}_"):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory, unmemoized, removed at interpreter exit."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_process_dir(1 << 30))
+
+
+_staged: dict[CacheKey, str] = {}
+
+
+def staged_dir(
+    spark: SparkSession,
+    *sources: DataFrame | str,
+    params: tuple,
+    build: Callable[[str], None] | None = None,
+) -> str:
+    """The directory staged from ``sources`` under ``params`` (the first
+    param names it), made and passed to ``build`` on the first call with
+    this key in the process.  ``build`` may replace the directory's
+    contents and the directory itself (a Spark overwrite does)."""
+    key = _key(spark, sources, params)
+    d = _staged.get(key)
+    if d is None:
+        d = tempfile.mkdtemp(prefix=f"{params[0]}_", dir=_process_dir(8 << 30))
+        try:
+            if build is not None:
+                build(d)
+        except BaseException:
+            shutil.rmtree(d, ignore_errors=True)
+            raise
+        _staged[key] = d
+    return d

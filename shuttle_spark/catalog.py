@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shuttle_spark.cache import staged_dir
+from shuttle_spark.session import _scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -31,10 +34,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # query re-lists files and re-reads footers; the logical plan is immutable so
 # sharing it is safe.  Keyed by application id so a fresh session misses.
 _df_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-# Ingest relayout decisions, keyed like _df_cache; value is the staged path
-# or None (source layout already fine).
-_relayout_cache: dict[tuple[str, str, str], str | None] = {}
 
 # Below this size a 1-task scan is cheaper than any relayout.
 _RELAYOUT_MIN_BYTES = 256 << 10
@@ -91,8 +90,8 @@ def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     (README.md:7 "small random IO into sequential IO";
     ShuffleStageSpace.java:181-205 per-partition writers).  Here: the first
     ``load_table`` of an affected table rewrites it into 1 MiB row groups
-    in session-scoped scratch (removed at exit), and every subsequent scan
-    splits across cores.
+    in a staged directory (``cache.staged_dir``), and every subsequent
+    scan splits across cores.
 
     Two regimes (Spark's split planner works on COMPRESSED file bytes and
     bin-packs small files, so row groups alone cannot parallelize a small
@@ -113,10 +112,6 @@ def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     The staging cost is paid once per session and is charged to the
     suite's cold numbers (BASELINE.md).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _relayout_cache:
-        return _relayout_cache[key]
-    staged: str | None = None
     src = table_path(sf_dir, name)
     try:
         # Source may be one parquet file (the driver's testdata) or a
@@ -154,48 +149,45 @@ def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
                 and meta.metadata.num_row_groups < min(4, cores)
             )
             if few_groups or needs_variant:
-                from shuttle_spark.streaming.core import tracked_mkdtemp
-
-                out = os.path.join(
-                    tracked_mkdtemp(f"shuttle_relayout_{name}_"),
-                    f"{name}.parquet",
+                d = staged_dir(
+                    spark, src, params=("relayout",),
+                    build=lambda d: _relayout(spark, src, name, size, cores, d),
                 )
-                df = spark.read.parquet(src)
-                if name == "events" and "props" in df.columns:
-                    # Parse-once VARIANT shredding at ingest: events.props
-                    # is a JSON *string* in the source, and re-parsing it
-                    # with Jackson on every JSON-touching query was the
-                    # single worst kernel residual vs DuckDB's yyjson
-                    # (29.6x marginal on the scale curve).  The relayout
-                    # already rewrites the table once per session, so the
-                    # parse rides that write: props_v is stored as a
-                    # parquet VARIANT column and every subsequent
-                    # variant_get is binary traversal, no JSON parse.  The
-                    # raw string column stays for the compat twin
-                    # (json_extract_agg_compat).  This mirrors the reference's
-                    # consumption pattern — aggregate over pre-structured
-                    # data (Ors2ShuffleManagerTest.scala:74-79), parse
-                    # paid once at ingest.  try_parse_json: a malformed
-                    # props string yields NULL (the get_json_object
-                    # tolerance), never a failed ingest — one bad row
-                    # must not take down the corpus restage.
-                    from pyspark.sql import functions as F
-
-                    df = df.withColumn("props_v", F.try_parse_json("props"))
-                if size < _RELAYOUT_SPLIT_BYTES:
-                    df = df.repartition(min(_RELAYOUT_SMALL_FILES, cores))
-                (
-                    df.write.option(
-                        "parquet.block.size", _RELAYOUT_ROW_GROUP_BYTES
-                    )
-                    .mode("overwrite")
-                    .parquet(out)
-                )
-                staged = out
+                return os.path.join(d, f"{name}.parquet")
     except Exception:
-        staged = None  # any probe/write hiccup -> scan the source as-is
-    _relayout_cache[key] = staged
-    return staged
+        pass  # any probe/write hiccup -> scan the source as-is
+    return None
+
+
+def _relayout(
+    spark: SparkSession, src: str, name: str, size: int, cores: int, d: str
+) -> None:
+    df = spark.read.parquet(src)
+    if name == "events" and "props" in df.columns:
+        # Parse-once VARIANT shredding at ingest: events.props is a JSON
+        # *string* in the source, and re-parsing it with Jackson on every
+        # JSON-touching query was the single worst kernel residual vs
+        # DuckDB's yyjson (29.6x marginal on the scale curve).  The
+        # relayout already rewrites the table once per session, so the
+        # parse rides that write: props_v is stored as a parquet VARIANT
+        # column and every subsequent variant_get is binary traversal, no
+        # JSON parse.  The raw string column stays for the compat twin
+        # (json_extract_agg_compat).  This mirrors the reference's
+        # consumption pattern — aggregate over pre-structured data
+        # (Ors2ShuffleManagerTest.scala:74-79), parse paid once at ingest.
+        # try_parse_json: a malformed props string yields NULL (the
+        # get_json_object tolerance), never a failed ingest — one bad row
+        # must not take down the corpus restage.
+        from pyspark.sql import functions as F
+
+        df = df.withColumn("props_v", F.try_parse_json("props"))
+    if size < _RELAYOUT_SPLIT_BYTES:
+        df = df.repartition(min(_RELAYOUT_SMALL_FILES, cores))
+    (
+        df.write.option("parquet.block.size", _RELAYOUT_ROW_GROUP_BYTES)
+        .mode("overwrite")
+        .parquet(os.path.join(d, f"{name}.parquet"))
+    )
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -244,8 +236,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # effect is on TIMESTAMP(NANOS) columns, which vanilla Spark
         # cannot read at all.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        restore = _scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"})
         try:
             path = _ingest_relayout(spark, sf_dir, name) or table_path(sf_dir, name)
             df = normalize_events_ts(spark.read.parquet(path))
@@ -258,10 +249,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
                 df = df.withColumn("props_v", F.try_parse_json("props"))
         finally:
-            if prev_tz is None:
-                spark.conf.unset("spark.sql.session.timeZone")
-            else:
-                spark.conf.set("spark.sql.session.timeZone", prev_tz)
+            restore()
     else:
         path = _ingest_relayout(spark, sf_dir, name) or table_path(sf_dir, name)
         df = spark.read.parquet(path)

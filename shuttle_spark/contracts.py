@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from shuttle_spark.cache import DFCache, cache_key
+from shuttle_spark.cache import DFCache, cache_key, scratch_dir, staged_dir
 from shuttle_spark.catalog import load_table
 from shuttle_spark.functions import text as TX
 from shuttle_spark.operators import components as CC
@@ -90,86 +90,6 @@ def ensure_conf(spark: SparkSession) -> None:
 # Session-memoized mergeSchema read relations (schema_evolution_read):
 # schema resolution is once-per-session catalog work, not per-query work.
 _evolve_read_cache = DFCache(max_size=4)
-
-
-def _fixture_dir(sf: str, kind: str, table: str) -> str:
-    """Memoized-fixture root in /tmp for ``kind``, fingerprinted by the
-    source table's (bytes, newest-mtime) so a regenerated testdata dir can
-    never resurrect a stale fixture: the driver rewrites /root/testdata
-    between rounds, and a basename-only key (``sf0.1``) would keep serving
-    attempt/evolve/landing fixtures built from the PREVIOUS corpus — a
-    persistent oracle mismatch no rerun clears.  Stale same-prefix
-    fixtures are deleted on sight, so /tmp holds at most one generation."""
-    import os
-
-    from shuttle_spark.catalog import source_bytes, table_path
-
-    p = table_path(sf, table)
-    mt = 0
-    if os.path.isdir(p):
-        parts = [
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        ]
-        mt = max((os.stat(q).st_mtime_ns for q in parts), default=0)
-    elif os.path.exists(p):
-        mt = os.stat(p).st_mtime_ns
-    tag = format((source_bytes(p) * 1000003 ^ mt) & 0xFFFFFFFFFF, "x")
-    from shuttle_spark.streaming.core import scratch_tempdir
-
-    prefix = os.path.join(
-        scratch_tempdir(),
-        f"shuttle_{kind}_{os.path.basename(sf.rstrip('/'))}_",
-    )
-    cur = prefix + tag
-    # Stale GENERATIONS are cleaned up age-gated: dirs from a previous
-    # testdata generation are hours old by the time a new one exists.
-    # Fixture BUILDS assume one writer per generation (the correctness gate is
-    # a single process; concurrent ad-hoc harnesses share the built result).
-    _sweep_stale_siblings(prefix, cur)
-    return cur
-
-
-def _sweep_stale_siblings(prefix: str, cur: str) -> None:
-    """Delete the ``prefix*`` dirs other than ``cur`` that are over 2 h
-    old.  The age gate keeps a live sibling process's dir from being
-    rmtree'd mid-read: harness processes live minutes, not hours."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    for d in glob.glob(prefix + "*"):
-        if d != cur:
-            try:
-                if time.time() - os.path.getmtime(d) > 7200:
-                    shutil.rmtree(d, ignore_errors=True)
-            except OSError:
-                pass
-
-
-def _scratch_dir(spark: SparkSession, sf: str, kind: str) -> str:
-    """Overwrite-per-run sink scratch path, scoped by APPLICATION id:
-    concurrent harness processes (pytest + bench on one machine — the
-    scenario q_bucketed_join already defends against with app-scoped
-    table names) must not overwrite each other's sink mid-read-back.
-    Sibling app dirs are deleted only once over 2 h old: deleting a live
-    one would be the very race this scoping exists to avoid."""
-    import os
-
-    app = spark.sparkContext.applicationId.replace("-", "_")[-12:]
-    from shuttle_spark.streaming.core import scratch_tempdir
-
-    base = os.path.join(
-        scratch_tempdir(),
-        f"shuttle_{kind}_{os.path.basename(sf.rstrip('/'))}_",
-    )
-    cur = base + app
-    # without the sweep every session leaks a full table copy per sink
-    # kind into /tmp
-    _sweep_stale_siblings(base, cur)
-    return cur
 
 
 def _readback_checksum(df: DataFrame, key_col) -> int:
@@ -1127,7 +1047,7 @@ def q_write_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         .alias("k"),
         "l_returnflag",
     )
-    out = os.path.join(_scratch_dir(spark, sf, "sink"), "lineitem")
+    out = os.path.join(staged_dir(spark, li, params=("sink",)), "lineitem")
     IO.write_partitioned(li, out, ["l_returnflag"], mode="overwrite")
     back = IO.read(spark, out)
     key = F.concat_ws("|", F.col("k").cast("string"), F.col("l_returnflag"))
@@ -1158,8 +1078,8 @@ def q_compact_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     the landing zone carries ONE combined bigint key column (what the
     checksum hashes — fewer bytes through both writes) and is a MEMOIZED
     FIXTURE (the small-files problem being fixed, deterministic from the
-    source table — rebuilt only when its 32-file layout is absent, exactly
-    like the testdata parquet itself); the compacted output carries 1 MB
+    source table — staged once per source generation,
+    ``cache.staged_dir``); the compacted output carries 1 MB
     row groups so later scans fan back out to
     parallel tasks (io.compact row_group_bytes — the read-parallelism dial
     a 128 MB-file compaction uses at production scale); the integrity hash
@@ -1183,13 +1103,11 @@ def q_compact_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("k")
     )
-    base = _fixture_dir(sf, "compact", "lineitem")
+    base = staged_dir(
+        spark, li, params=("compact", 32),
+        build=lambda d: li.repartition(32).write.parquet(d + "/landing"),
+    )
     src, dst = base + "/landing", base + "/compacted"
-    if (
-        len(glob.glob(src + "/*.parquet")) != 32
-        or not os.path.exists(src + "/_SUCCESS")
-    ):
-        li.repartition(32).write.mode("overwrite").parquet(src)
     n_src = len(glob.glob(src + "/*.parquet"))
     src_bytes = sum(
         os.path.getsize(f) for f in glob.glob(src + "/*.parquet")
@@ -1257,14 +1175,12 @@ def q_lineage_audit(spark: SparkSession, sf: str) -> DataFrame:
     provenance from parquet _metadata (``provenance_ok``).
     ``stale_on_disk`` pins that attempt 0 genuinely survives on disk, so
     the filter is doing real work.  The two-attempt table is a MEMOIZED
-    FIXTURE (deterministic from the source, like the compact landing
-    zone): what the contract tests — and what the warm path measures — is
+    FIXTURE (deterministic from the source, ``cache.staged_dir``): what
+    the contract tests — and what the warm path measures — is
     attempt DISCOVERY + plan-time pruning + the provenance read, the
     per-query cost of a lineage-audited corpus; the write_attempt path
     itself is exercised on the cold build and in
     tests/test_fault_injection.py."""
-    import os
-
     from shuttle_spark.operators import lineage as L
 
     li = (
@@ -1272,19 +1188,19 @@ def q_lineage_audit(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("l_partkey") % 10 == 0)
         .select("l_orderkey", "l_partkey")
     )
-    out = os.path.join(_fixture_dir(sf, "lineage", "lineitem"), "table")
-    if L.attempts(spark, out) != [0, 1] or L.latest_attempt(spark, out) != 1:
-        jvm, root, fs = L._fs(spark, out)
-        fs.delete(root, True)
+
+    def build(d: str) -> None:
         # stale attempt: a zombie wrote half the rows with mangled keys
         L.write_attempt(
             li.filter(F.col("l_orderkey") % 2 == 0).withColumn(
                 "l_orderkey", F.lit(0).cast("long")
             ),
-            out,
+            d + "/table",
             app_attempt=0,
         )
-        L.write_attempt(li, out, app_attempt=1, write_version=1)
+        L.write_attempt(li, d + "/table", app_attempt=1, write_version=1)
+
+    out = staged_dir(spark, li, params=("lineage",), build=build) + "/table"
     back = L.read_latest(spark, out)
     plan = back._jdf.queryExecution().executedPlan().toString()
     pruned = "PartitionFilters: [" in plan and "(_app_attempt" in plan
@@ -3554,9 +3470,6 @@ def q_ivf_full_probe(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("vec_id", F.round("sim", 6).alias("sim"))
 
 
-_IVF_PART_BUILT: set[tuple[str, str]] = set()
-
-
 @property_contract(
     "ivf_partitioned_probe", ("pruned", "match_mem", "nonempty"), "B29", "sink"
 )
@@ -3570,17 +3483,15 @@ def q_ivf_partitioned_probe(spark: SparkSession, sf: str) -> tuple:
     locality, ShuffleFileUtils.java:33-45).  ``match_mem`` pins that the
     pruned-scan probe returns exactly the in-memory index's answer, so
     pruning changes cost, never results.  The partitioned copy is written
-    once per session (app-scoped scratch, same discipline as the other
-    sink fixtures); warm runs measure discovery + pruned probe."""
-    import os
-
+    once per source generation (``cache.staged_dir``); warm runs measure
+    discovery + pruned probe."""
     emb = load_table(spark, sf, "embeddings")
     indexed, cents = S.ivf_build(emb, dim=64, n_cells=8)
-    out = _scratch_dir(spark, sf, "ivfpart")
-    key = (spark.sparkContext.applicationId, out)
-    if key not in _IVF_PART_BUILT or not os.path.isdir(out):
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(out)
-        _IVF_PART_BUILT.add(key)
+    out = staged_dir(
+        spark, emb, params=("ivfpart", 8),
+        build=lambda d: indexed.write.mode("overwrite")
+        .partitionBy("cell").parquet(d),
+    )
     back = spark.read.parquet(out)
     qv = query_vector(spark, sf, 7)
     probed = S.ivf_topk(back, cents, qv, k=10, n_probe=4)
@@ -3732,7 +3643,6 @@ def q_zorder_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     loose because a row group straddles ~2 adjacent curve cells; the
     linear-layout baseline for the non-sorted dim is ~100%."""
     import glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -3741,7 +3651,7 @@ def q_zorder_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     o = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    out = _scratch_dir(spark, sf, "zorder")
+    out = staged_dir(spark, o, params=("zorder",))
     # row-group size targets ~24 groups at ANY sf: enough granularity for
     # the span property, without the per-group writer overhead of hundreds
     # of tiny groups (measured 1.8 s -> 0.7 s for the sf0.1 write).  Row
@@ -3835,15 +3745,13 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     parquet-sourced oracle.  Doubles (c_acctbal) ride the text format as
     their exact decimal rendering, so the scaled-long checksum proves the
     round-trip is value-exact, not just row-count-preserving."""
-    import os
-
     from shuttle_spark.operators.integrity import md5_prefix
     from shuttle_spark.sources import io as IO
 
     c = load_table(spark, sf, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    out = _scratch_dir(spark, sf, "csv")
+    out = staged_dir(spark, c, params=("csv",))
     IO.write(c, out, "csv", mode="overwrite")
     back = IO.read(
         spark, out, "csv",
@@ -3875,15 +3783,13 @@ def q_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """JSON-lines source/sink under the oracle gate: supplier written as
     newline-delimited JSON, read back with a declared schema, checksummed
     against the parquet-sourced oracle."""
-    import os
-
     from shuttle_spark.operators.integrity import md5_prefix
     from shuttle_spark.sources import io as IO
 
     s = load_table(spark, sf, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey"
     )
-    out = _scratch_dir(spark, sf, "json")
+    out = staged_dir(spark, s, params=("json",))
     IO.write(s, out, "json", mode="overwrite")
     back = IO.read(
         spark, out, "json",
@@ -3928,22 +3834,17 @@ def q_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     warm call and dominated the row's wall at ~0.5-1 s).  The first
     call still exercises the full mergeSchema resolution; what every
     call verifies is the NULL-widened union aggregate."""
-    import os
-
     o = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    out = _fixture_dir(sf, "evolve", "orders")
-    if not (
-        os.path.exists(out + "/b1/_SUCCESS")
-        and os.path.exists(out + "/b2/_SUCCESS")
-    ):
-        o.filter(F.col("o_orderkey") % 2 == 1).drop("o_custkey").write.mode(
-            "overwrite"
-        ).parquet(out + "/b1")
-        o.filter(F.col("o_orderkey") % 2 == 0).write.mode(
-            "overwrite"
-        ).parquet(out + "/b2")
+
+    def build(d: str) -> None:
+        o.filter(F.col("o_orderkey") % 2 == 1).drop("o_custkey").write.parquet(
+            d + "/b1"
+        )
+        o.filter(F.col("o_orderkey") % 2 == 0).write.parquet(d + "/b2")
+
+    out = staged_dir(spark, o, params=("evolve",), build=build)
     back = _evolve_read_cache.cached(
         cache_key(o, params=(out,)),
         lambda: spark.read.option("mergeSchema", "true").parquet(
@@ -4273,8 +4174,6 @@ def q_stream_dedup_dup(spark: SparkSession, sf: str) -> DataFrame:
     from shuttle_spark.streaming import run_available_now
     from shuttle_spark.streaming.core import events_raw_schema
 
-    import shutil
-
     src = table_path(sf, "events")
     # per-part symlinks (a directory source cannot be one *.parquet link)
     parts = (
@@ -4286,30 +4185,13 @@ def q_stream_dedup_dup(spark: SparkSession, sf: str) -> DataFrame:
         if os.path.isdir(src)
         else [src]
     )
-    from shuttle_spark.streaming.core import scratch_tempdir
 
-    d = os.path.join(
-        scratch_tempdir(),
-        f"events_dup_{os.path.basename(sf.rstrip('/'))}",
-    )
-    want = {
-        f"events-{i}-{j}.parquet": part
-        for i in range(2)
-        for j, part in enumerate(parts)
-    }
-    # a bare isdir() gate would freeze a half-built fixture forever (crash
-    # between makedirs and the links) — validate every link points at the
-    # current source and rebuild atomically-enough otherwise
-    ok = os.path.isdir(d) and sorted(os.listdir(d)) == sorted(want) and all(
-        os.path.islink(os.path.join(d, name))
-        and os.path.realpath(os.path.join(d, name)) == os.path.realpath(tgt)
-        for name, tgt in want.items()
-    )
-    if not ok:
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d)
-        for name, tgt in want.items():
-            os.symlink(tgt, os.path.join(d, name))
+    def build(d: str) -> None:
+        for i in range(2):
+            for j, part in enumerate(parts):
+                os.symlink(part, os.path.join(d, f"events-{i}-{j}.parquet"))
+
+    d = staged_dir(spark, src, params=("events_dup",), build=build)
     from shuttle_spark.catalog import normalize_events_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -5338,9 +5220,6 @@ def q_price_histogram(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_BUCKETED_WRITTEN: set[tuple[str, str]] = set()
-
-
 @contract(
     "bucketed_join_agg",
     "SELECT o_orderpriority, COUNT(*) AS cnt, " + _osum("o_totalprice", "total")
@@ -5361,33 +5240,26 @@ def q_bucketed_join(spark: SparkSession, sf: str) -> DataFrame:
 
     from shuttle_spark.sources import io as IO
 
-    suffix = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    # An explicit-location database so the physical files land in /tmp even
-    # on a driver-created session whose static warehouse dir defaults to
-    # <cwd>/spark-warehouse (spark.sql.warehouse.dir is not settable after
-    # session start).  Location is scoped by application id so concurrent
-    # harness processes (pytest + bench on one machine) cannot clobber each
-    # other's table directories mid-read.
-    app_id = spark.sparkContext.applicationId.replace("-", "_")
-    from shuttle_spark.streaming.core import track_tmp_dir
+    orders, customer = (load_table(spark, sf, t) for t in ("orders", "customer"))
 
-    spark.sql(
-        "CREATE DATABASE IF NOT EXISTS shuttle_bkt"
-        f" LOCATION '{track_tmp_dir(f'/tmp/shuttle_spark_bkt_{app_id}')}'"
-    )
-    o_tbl = f"shuttle_bkt.orders_bkt_{suffix}"
-    c_tbl = f"shuttle_bkt.customer_bkt_{suffix}"
-    # Bucket ONCE per session per sf (the whole point of bucketing is that
-    # the write-time shuffle amortizes across every subsequent query).
-    memo_key = (spark.sparkContext.applicationId, sf)
-    if memo_key not in _BUCKETED_WRITTEN:
+    def db(d: str) -> str:
+        return f"shuttle_bkt_{os.path.basename(d)}"
+
+    def build(d: str) -> None:
+        # An explicit-location database, one per staged directory: a
+        # driver-created session's static warehouse dir defaults to
+        # <cwd>/spark-warehouse (spark.sql.warehouse.dir is not settable
+        # after session start).
+        spark.sql(f"CREATE DATABASE {db(d)} LOCATION '{d}'")
+        IO.write_bucketed_table(orders, f"{db(d)}.orders_bkt", ["o_custkey"], 8)
         IO.write_bucketed_table(
-            load_table(spark, sf, "orders"), o_tbl, ["o_custkey"], 8
+            customer, f"{db(d)}.customer_bkt", ["c_custkey"], 8
         )
-        IO.write_bucketed_table(
-            load_table(spark, sf, "customer"), c_tbl, ["c_custkey"], 8
-        )
-        _BUCKETED_WRITTEN.add(memo_key)
+
+    # Bucket ONCE per source generation (the whole point of bucketing is
+    # that the write-time shuffle amortizes across every later query).
+    d = staged_dir(spark, orders, customer, params=("bucketed", 8), build=build)
+    o_tbl, c_tbl = f"{db(d)}.orders_bkt", f"{db(d)}.customer_bkt"
     j = (
         spark.table(o_tbl)
         .hint("merge")  # force SMJ so broadcast doesn't mask the bucketing
@@ -5433,7 +5305,7 @@ def q_skew_join_agg(spark: SparkSession, sf: str) -> DataFrame:
     load-aware dispatch (WeightedRandomDispatcher.java:31-47): both route
     a hot partition's bytes across more than one worker."""
     from shuttle_spark.catalog import source_bytes, table_path
-    from shuttle_spark.streaming.core import _scoped_conf
+    from shuttle_spark.session import _scoped_conf
 
     ev = (
         load_table(spark, sf, "events")
@@ -5533,7 +5405,7 @@ def q_runtime_filter_join(spark: SparkSession, sf: str) -> DataFrame:
     broadcast is disabled so the join HAS a shuffle worth pruning —
     with broadcast on, Spark correctly prefers the broadcast-hash path
     and skips the bloom filter."""
-    from shuttle_spark.streaming.core import _scoped_conf
+    from shuttle_spark.session import _scoped_conf
 
     part = (
         load_table(spark, sf, "part")
@@ -5636,9 +5508,8 @@ def q_stream_upsert_sink(spark: SparkSession, sf: str) -> DataFrame:
     watermarked in-flight operator (stream_keep_latest), the durable state
     holds every key."""
     from shuttle_spark.streaming import events_stream_multi, run_upsert_sink
-    from shuttle_spark.streaming.core import tracked_mkdtemp
 
-    out = tracked_mkdtemp("upsert_sink_")
+    out = scratch_dir("upsert_sink_")
     state = run_upsert_sink(
         # 4 files in 2 micro-batches: the cross-batch merge (predecessor
         # version read -> union -> keep-latest -> new version) still runs,
@@ -5704,7 +5575,6 @@ def q_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     from shuttle_spark.streaming.core import (
         run_stream_decontaminate,
         staged_documents_files,
-        tracked_mkdtemp,
     )
 
     bench = load_table(spark, sf, "documents").filter(F.col("doc_id") % 97 == 0)
@@ -5717,7 +5587,7 @@ def q_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         .parquet(d)
         .filter(F.col("doc_id") % 97 != 0)
     )
-    out = tracked_mkdtemp("decon_sink_")
+    out = scratch_dir("decon_sink_")
     clean = run_stream_decontaminate(
         docs_stream, bench, out, n=5, shuffle_partitions=4
     )

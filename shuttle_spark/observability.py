@@ -25,11 +25,12 @@ stage/shuffle/spill table ("Observed runtime metrics"; it moves from run
 to run, so it is kept out of PLANS.md), and `tools/ab.py` splits each
 timed run of an interleaved A/B by it.
 
-* **Streaming progress** (`last_replay`) — ``run_available_now`` records
-  the finished query's ``recentProgress``: per-micro-batch phase
-  durations and, per stateful operator, state-store commit and update
-  time and the rows the watermark dropped, and the strictly-late rows
-  the keyed recurrences dropped.
+* **Streaming progress** (`last_replay`) — every AvailableNow replay
+  the streaming module runs records the finished query's
+  ``recentProgress``: per-micro-batch phase durations and, per stateful
+  operator, state-store commit and update time and the rows the
+  watermark dropped, and the strictly-late rows the keyed recurrences
+  dropped.
 """
 
 from __future__ import annotations
@@ -249,6 +250,8 @@ def record_replay(
 
 
 def last_replay() -> ReplayProgress | None:
-    """Progress of the last stream replayed by
-    ``streaming.run_available_now`` in this process (None before any)."""
+    """Progress of the last stream replayed in this process by
+    ``streaming.run_available_now``, ``run_upsert_sink``,
+    ``run_stream_decontaminate`` or ``stream_mv_maintenance`` (None
+    before any)."""
     return _last_replay

@@ -364,6 +364,26 @@ def kernel_session() -> bool:
     return SparkSession.getActiveSession() in _KERNEL_SESSIONS
 
 
+def _scoped_conf(spark: SparkSession, overrides: dict[str, str]):
+    """Set session confs, returning a restore closure that puts back the
+    explicit prior value or UNSETS keys that had none (a bare
+    ``conf.get(k, None)``-then-``set`` restore would leak the override
+    into the shared session forever)."""
+    saved: dict[str, str | None] = {}
+    for k, v in overrides.items():
+        saved[k] = spark.conf.get(k, None)
+        spark.conf.set(k, v)
+
+    def restore() -> None:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+    return restore
+
+
 def _host_memory_bytes() -> int:
     return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 

@@ -31,11 +31,9 @@ Scale notes (100 TB / real cluster):
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
 import shutil
-import tempfile
 import time
 import uuid
 import weakref
@@ -51,6 +49,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from shuttle_spark import session as S
+from shuttle_spark.cache import scratch_dir, staged_dir
 from shuttle_spark.catalog import normalize_events_ts, table_path
 from shuttle_spark.observability import record_replay
 
@@ -95,95 +94,6 @@ def events_raw_schema(sf_dir: str) -> T.StructType:
     )
 
 
-_TMP_DIRS: list[str] = []
-
-
-def _scratch_root(min_free_bytes: int = 1 << 30) -> str | None:
-    """Preferred base for streaming scratch (checkpoints, staged landing
-    dirs, sink versions): a tmpfs mount when one exists AND has headroom.
-    The medium does not set the commit cost: a probe at sf0.1 measured
-    the same state-store commit time with checkpoints on ext4 and on
-    tmpfs.  Commits were bound by Hadoop's per-file ``chmod``/``readlink``
-    spawns, which the engine filesystem removes (``session.py``); tmpfs
-    only keeps throwaway replay scratch off the disk.  In production the
-    checkpoint location is a DURABLE path the caller passes — this root
-    only serves the harness's ephemeral replay checkpoints, which die with
-    the process anyway.
-
-    tmpfs is RAM-backed (typically capped at 50% of memory), so it
-    COMPETES with executor memory: writing data-sized scratch there at
-    larger SF risks ENOSPC with no recovery.  The gate is a free-space
-    check (``os.statvfs``) against ``min_free_bytes`` — callers staging
-    data-sized fixtures pass a much larger floor than checkpoint writers
-    (ADVICE r6).  SPARK_GRAFT_SCRATCH overrides unconditionally; None
-    falls back to the system tempdir."""
-    override = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if override:
-        os.makedirs(override, exist_ok=True)
-        return override
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        try:
-            st = os.statvfs(shm)
-            if st.f_bavail * st.f_frsize < min_free_bytes:
-                return None
-        except OSError:
-            return None
-        d = os.path.join(shm, "shuttle_spark_scratch")
-        try:
-            os.makedirs(d, exist_ok=True)
-            return d
-        except OSError:
-            return None
-    return None
-
-
-def scratch_tempdir() -> str:
-    """The scratch base for fixture/sink dirs that manage their own
-    age-gated GC (contracts._fixture_dir/_scratch_dir).  These hold FULL
-    parquet fixture copies and sink versions — data-sized, unlike the
-    kilobyte-scale checkpoint deltas — so tmpfs is used only with a
-    generous floor (8 GiB free); otherwise the disk tempdir, which
-    degrades to slower-but-correct instead of ENOSPC."""
-    return _scratch_root(min_free_bytes=8 << 30) or tempfile.gettempdir()
-
-
-def tracked_mkdtemp(prefix: str) -> str:
-    """mkdtemp whose directory is removed at interpreter exit — staging
-    dirs, checkpoints, and sink scratch would otherwise leak disk across
-    repeated harness/bench runs (ADVICE r3).  Lands on tmpfs when
-    available (see _scratch_root)."""
-    d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
-    _TMP_DIRS.append(d)
-    return d
-
-
-def track_tmp_dir(path: str) -> str:
-    """Register an externally-created scratch path for exit-time removal."""
-    _TMP_DIRS.append(path)
-    return path
-
-
-@atexit.register
-def _cleanup_tmp_dirs() -> None:
-    for d in _TMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-_staged: dict[str, str] = {}
-
-
-def _staged_events_dir(sf_dir: str) -> str:
-    """Temp directory containing (a symlink to) the events parquet file."""
-    cached = _staged.get(sf_dir)
-    if cached is not None:
-        return cached
-    d = tracked_mkdtemp("events_stream_")
-    os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events-000.parquet"))
-    _staged[sf_dir] = d
-    return d
-
-
 def events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -194,9 +104,14 @@ def events_stream(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # FileStreamSource ingests *directories* (a landing zone receivers append
-    # to).  The testdata table is a single file, so stage it into a temp dir
-    # by symlink — zero-copy, and the same code path production would use.
-    stream_dir = _staged_events_dir(sf_dir)
+    # to).  The testdata table is a single file, so stage it into a
+    # directory by symlink — zero-copy, and the same code path production
+    # would use.
+    src = table_path(sf_dir, "events")
+    stream_dir = staged_dir(
+        spark, src, params=("events_stream",),
+        build=lambda d: os.symlink(src, os.path.join(d, "events-000.parquet")),
+    )
     reader = spark.readStream.schema(events_raw_schema(sf_dir))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -205,16 +120,11 @@ def events_stream(
     # build exactly like the batch twin (catalog.load_table), else a
     # driver-created session in another zone shifts stream timestamps
     # against batch and breaks the module's stream == batch protocol.
-    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    restore = S._scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"})
     try:
-        df = normalize_events_ts(reader.parquet(stream_dir))
+        return normalize_events_ts(reader.parquet(stream_dir))
     finally:
-        if prev_tz is None:
-            spark.conf.unset("spark.sql.session.timeZone")
-        else:
-            spark.conf.set("spark.sql.session.timeZone", prev_tz)
-    return df
+        restore()
 
 
 def windowed_agg_stream(
@@ -934,44 +844,37 @@ def stream_stream_join(
     ).select(F.col("l_key").alias(key), "l_id", "l_ts", "r_id", "r_ts")
 
 
-_staged_multi: dict[tuple[str, str, str, int], str] = {}
-
-
 def _staged_table_files(
     spark: SparkSession, sf_dir: str, table: str, range_col: str, n_files: int
 ) -> str:
     """A testdata table staged as ``n_files`` range-ordered parquet files
-    in a temp dir — a realistic landing zone whose replay under
+    in a directory — a realistic landing zone whose replay under
     ``maxFilesPerTrigger=1`` yields ``n_files`` real micro-batches (the
     single-file symlink staging gives exactly one)."""
-    # every parameter that changes the layout is in the key — staging the
-    # same table by a different range_col must not hit the other's cache
-    key = (sf_dir, table, range_col, n_files)
-    cached = _staged_multi.get(key)
-    if cached is not None:
-        return cached
     from shuttle_spark.catalog import load_table
 
-    d = tracked_mkdtemp(f"{table}_multi_")
-    load_table(spark, sf_dir, table).repartitionByRange(
-        n_files, range_col
-    ).write.mode("overwrite").parquet(d)
-    # FileStreamSource picks files oldest-modtime-first, but the range
-    # buckets are WRITTEN by parallel tasks whose completion order is
-    # arbitrary — a later range file finishing first would replay first,
-    # advance the watermark past the earlier buckets, and turn their rows
-    # into droppable late data (observed: stream_ewma parity flaked run to
-    # run).  Pin modtimes to part-file NAME order (== sorted range order)
-    # so every replay delivers buckets in range order, the in-order
-    # landing-zone contract a production receiver provides by arrival.
-    parts = sorted(
-        f for f in os.listdir(d) if f.endswith(".parquet")
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, table).repartitionByRange(
+            n_files, range_col
+        ).write.mode("overwrite").parquet(d)
+        # FileStreamSource picks files oldest-modtime-first, but the range
+        # buckets are WRITTEN by parallel tasks whose completion order is
+        # arbitrary — a later range file finishing first would replay
+        # first, advance the watermark past the earlier buckets, and turn
+        # their rows into droppable late data (observed: stream_ewma
+        # parity flaked run to run).  Pin modtimes to part-file NAME order
+        # (== sorted range order) so every replay delivers buckets in
+        # range order, the in-order landing-zone contract a production
+        # receiver provides by arrival.
+        parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        base = time.time() - len(parts)
+        for i, f in enumerate(parts):
+            os.utime(os.path.join(d, f), (base + i, base + i))
+
+    return staged_dir(
+        spark, table_path(sf_dir, table),
+        params=("landing", range_col, n_files), build=build,
     )
-    base = time.time() - len(parts)
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(d, f), (base + i, base + i))
-    _staged_multi[key] = d
-    return d
 
 
 def staged_events_files(spark: SparkSession, sf_dir: str, n_files: int) -> str:
@@ -1003,49 +906,36 @@ def events_stream_multi(
     )
 
 
-def _scoped_conf(spark: SparkSession, overrides: dict[str, str]):
-    """Set session confs, returning a restore closure that puts back the
-    explicit prior value or UNSETS keys that had none (a bare
-    ``conf.get(k, None)``-then-``set`` restore would leak the override
-    into the shared session forever)."""
-    saved: dict[str, str | None] = {}
-    for k, v in overrides.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-
-    def restore() -> None:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-    return restore
-
-
-def _run_foreach_batch(
+def _replay(
     stream_df: DataFrame,
-    fn,
     query_name: str,
     shuffle_partitions: int | None,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
 ) -> None:
-    """Run a foreachBatch query to completion (AvailableNow) with a
-    scoped shuffle-partition override."""
+    """Run ``stream_df`` to completion (Trigger.AvailableNow) in append
+    mode, into ``foreach_batch`` or else a memory sink named
+    ``query_name``, from a fresh checkpoint and with the shuffle-partition
+    override scoped to this query; its progress and late-row count become
+    ``observability.last_replay()``."""
     spark = stream_df.sparkSession
-    ckpt = tracked_mkdtemp(f"ckpt_{query_name}_")
     overrides = {}
     if shuffle_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    restore = _scoped_conf(spark, overrides)
+    restore = S._scoped_conf(spark, overrides)
+    late_before = late_rows(spark)
     try:
+        w = stream_df.writeStream.outputMode("append")
+        w = w.foreachBatch(foreach_batch) if foreach_batch else w.format("memory")
         q = (
-            stream_df.writeStream.foreachBatch(fn)
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
+            w.queryName(query_name)
+            .option("checkpointLocation", scratch_dir(f"ckpt_{query_name}_"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
+        record_replay(
+            query_name, q.recentProgress, late_rows(spark) - late_before
+        )
     finally:
         restore()
 
@@ -1139,7 +1029,7 @@ def run_upsert_sink(
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/v{v}"), True)
 
     name = query_name or f"upsert_{uuid.uuid4().hex[:8]}"
-    _run_foreach_batch(events, merge, name, shuffle_partitions)
+    _replay(events, name, shuffle_partitions, merge)
     # Read THIS run's final version (not the directory max: a previous
     # differently-batched run may have left a stale higher version that
     # this run's GC retained as its own batch ids never reached it).
@@ -1216,7 +1106,7 @@ def run_stream_decontaminate(
         clean.write.mode("overwrite").parquet(f"{out_path}/b{batch_id}")
 
     name = query_name or f"decon_{uuid.uuid4().hex[:8]}"
-    _run_foreach_batch(docs_stream, clean_batch, name, shuffle_partitions)
+    _replay(docs_stream, name, shuffle_partitions, clean_batch)
     dirs = sorted(
         d
         for d in _glob.glob(f"{out_path}/b*")
@@ -1305,29 +1195,8 @@ def run_available_now(
     ``observability.last_replay()``.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    ckpt = tracked_mkdtemp(f"ckpt_{name}_")
-    spark = stream_df.sparkSession
-    overrides = {}
-    if shuffle_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    restore = _scoped_conf(spark, overrides)
-    late_before = late_rows(spark)
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_replay(
-            name, q.recentProgress, late_rows(spark) - late_before
-        )
-    finally:
-        restore()
-    return spark.table(name)
+    _replay(stream_df, name, shuffle_partitions)
+    return stream_df.sparkSession.table(name)
 
 
 def stream_mv_maintenance(
@@ -1361,7 +1230,7 @@ def stream_mv_maintenance(
     from shuttle_spark.operators.lineage import incremental_group_totals
 
     spark = changes.sparkSession
-    land = tracked_mkdtemp("mvstream_land_")
+    land = scratch_dir("mvstream_land_")
     res = F.pmod(
         F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_batches)
     )
@@ -1372,7 +1241,7 @@ def stream_mv_maintenance(
     # in exactly one task, so every __b=i dir holds exactly one part
     # file (partitionBy strips __b from the file contents, identical to
     # the old per-bucket drop("__b") writes).
-    stage = tracked_mkdtemp("mvstream_stage_")
+    stage = scratch_dir("mvstream_stage_")
     (
         ch.repartition(n_batches, "__b")
         .write.partitionBy("__b")
@@ -1394,7 +1263,7 @@ def stream_mv_maintenance(
         elif not data:
             # empty bucket (no key hashed to it): stage an empty
             # changeset file so the micro-batch count is unchanged
-            empty_dir = tracked_mkdtemp(f"mvstream_empty{i}_")
+            empty_dir = scratch_dir(f"mvstream_empty{i}_")
             spark.createDataFrame([], schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(empty_dir)
@@ -1418,15 +1287,12 @@ def stream_mv_maintenance(
             state["totals"], batch_df, group_col, value_col, scale
         ).localCheckpoint(eager=True)
 
-    ckpt = tracked_mkdtemp("mvstream_ckpt_")
-    q = (
+    _replay(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .parquet(land),
+        f"mv_{uuid.uuid4().hex[:8]}",
+        shuffle_partitions=None,
+        foreach_batch=_fold,
     )
-    q.awaitTermination()
     return state["totals"]

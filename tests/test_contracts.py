@@ -67,52 +67,66 @@ def test_full_outer_rewrite_exact_under_null_prices(spark):
     assert got["total_with_sentinel"] == 100 - 1 - 1 + 7 - 1 - 1
 
 
-def test_fixture_dir_tracks_source_fingerprint(tmp_path):
-    """_fixture_dir must change when the source table's bytes/mtime change
-    — a regenerated testdata dir can never resurrect a fixture built from
-    the previous corpus.  Stale generations are cleaned AGE-GATED (>2h):
-    a same-vintage sibling process must never lose its live fixture, so a
-    fresh stale dir survives and an hours-old one is removed.  The same
-    age gate holds for _scratch_dir's per-application sink dirs."""
+def test_fixture_dir_tracks_source_fingerprint(tmp_path, monkeypatch):
+    """A staged directory (``cache.staged_dir``) must change when its
+    source's bytes/mtime change — a regenerated testdata dir can never
+    resurrect a fixture built from the previous corpus — and with the
+    application id.  Directories other processes left in the scratch root
+    are swept AGE-GATED (>2h) at the root's first use: a same-vintage
+    sibling process must never lose its live fixture, so a fresh sibling
+    survives and an hours-old one is removed.  A failed build leaves
+    neither an entry nor a directory."""
     import os
+    import subprocess
     import time
     from types import SimpleNamespace
 
-    import shuttle_spark.contracts as C
+    from shuttle_spark import cache
+
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(root))
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    fresh, old = (root / f"shuttle_{gone.pid}_{n}" for n in ("fresh", "old"))
+    fresh.mkdir()
+    old.mkdir()
+    hours_ago = time.time() - 3 * 3600
+    os.utime(old, (hours_ago, hours_ago))
 
     sf = tmp_path / "sf9"
     sf.mkdir()
     t = sf / "lineitem.parquet"
     t.write_bytes(b"x" * 100)
-    d1 = C._fixture_dir(str(sf), "unittest", "lineitem")
-    os.makedirs(d1, exist_ok=True)
-    # same source -> same dir, still on disk
-    assert C._fixture_dir(str(sf), "unittest", "lineitem") == d1
-    assert os.path.isdir(d1)
-    # regenerate the source -> new dir; the FRESH stale sibling survives
-    # (could belong to a live same-vintage process)
+    built = []
+
+    def stage(app_id="local-1111"):
+        app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+        return cache.staged_dir(app, str(t), params=("unittest",), build=built.append)
+
+    d1 = stage()
+    assert fresh.exists() and not old.exists()
+    assert d1.startswith(str(root) + os.sep) and os.path.isdir(d1)
+    # same source -> same dir, built once
+    assert stage() == d1 and built == [d1]
+    # regenerate the source -> new dir
     t.write_bytes(b"y" * 101)
     os.utime(t, ns=(1, 1))
+    d2 = stage()
+    assert d2 != d1 and built == [d1, d2]
+    # another application -> its own dir
+    d3 = stage("local-2222")
+    assert d3 not in (d1, d2)
 
-    def app(app_id):
-        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+    def fail(d):
+        raise RuntimeError("build failed")
 
-    for stale, current in [
-        (d1, lambda: C._fixture_dir(str(sf), "unittest", "lineitem")),
-        (
-            C._scratch_dir(app("local-1111"), str(sf), "unittest_sink"),
-            lambda: C._scratch_dir(app("local-2222"), str(sf), "unittest_sink"),
-        ),
-    ]:
-        os.makedirs(stale, exist_ok=True)
-        cur = current()
-        assert cur != stale
-        assert os.path.exists(stale)
-        # ...but an hours-old stale sibling is removed on sight
-        old = time.time() - 3 * 3600
-        os.utime(stale, (old, old))
-        assert current() == cur
-        assert not os.path.exists(stale)
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="local-1111"))
+    with pytest.raises(RuntimeError):
+        cache.staged_dir(app, str(t), params=("unittest_fail",), build=fail)
+    assert sorted(os.listdir(os.path.dirname(d1))) == sorted(
+        os.path.basename(d) for d in (d1, d2, d3)
+    )
 
 
 def test_driver_gate_covers_every_b_family():
@@ -213,3 +227,47 @@ def test_every_public_operator_is_referenced():
         )
     )
     assert not unreferenced, f"unreferenced public functions: {unreferenced}"
+
+
+def test_directories_come_from_the_cache_policy():
+    """Every directory shuttle_spark/ creates comes from cache.py
+    (``staged_dir``/``scratch_dir``: one root, one key rule, one
+    lifetime): outside it no ``tempfile.mkdtemp``, no ``gettempdir`` and
+    no string literal starting with /tmp/ or /dev/shm.  Two exceptions:
+    the javac build directory under jvm/classes (``session.jvm_classes``)
+    and the ``spark.sql.warehouse.dir`` deployment default."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "shuttle_spark"
+    allowed = {
+        ("session.py", "jvm_classes", "mkdtemp"),
+        ("session.py", None, "/tmp/shuttle_spark_warehouse"),
+    }
+    found = set()
+    for path in pkg.rglob("*.py"):
+        rel = str(path.relative_to(pkg))
+        if rel == "cache.py":
+            continue
+        for top in ast.parse(path.read_text()).body:
+            owner = (
+                top.name
+                if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else None
+            )
+            for node in ast.walk(top):
+                name = (
+                    node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name)
+                    else node.name if isinstance(node, ast.alias)
+                    else None
+                )
+                if name in ("mkdtemp", "gettempdir"):
+                    found.add((rel, owner, name))
+                elif (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and node.value.startswith(("/tmp/", "/dev/shm"))
+                ):
+                    found.add((rel, owner, node.value))
+    assert found - allowed == set(), sorted(found - allowed, key=str)

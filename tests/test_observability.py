@@ -59,6 +59,39 @@ def test_last_replay_records_stream_progress(spark, sf_dir):
     assert rep.rows_dropped_late == 0
 
 
+def test_last_replay_records_foreach_batch_replays(spark, sf_dir):
+    """The foreachBatch replays leave their progress too: after
+    run_upsert_sink and after stream_mv_maintenance, last_replay() names
+    that query and carries its micro-batches."""
+    from shuttle_spark.cache import scratch_dir
+    from shuttle_spark.catalog import load_table
+    from shuttle_spark.streaming import events_stream_multi, run_upsert_sink
+    from shuttle_spark.streaming.core import stream_mv_maintenance
+
+    run_upsert_sink(
+        events_stream_multi(spark, sf_dir, n_files=4, files_per_trigger=2),
+        scratch_dir("upsert_obs_"),
+        query_name="upsert_obs",
+        shuffle_partitions=4,
+    )
+    rep = O.last_replay()
+    assert rep.query_name == "upsert_obs" and len(rep.batches) == 2
+    assert sum(b.input_rows for b in rep.batches) == load_table(spark, sf_dir, "events").count()
+
+    base = spark.createDataFrame([(1, 1, 1.0)], "k long, g long, v double")
+    totals = base.groupBy("g").agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.round(F.col("v") * 100).cast("long")).alias("sum_cents"),
+    )
+    ch = spark.createDataFrame(
+        [("I", 2, 1, 2.0, None, None), ("D", 1, None, None, 1, 1.0)],
+        "op string, k long, g long, v double, old_g long, old_v double",
+    )
+    stream_mv_maintenance(totals, ch, "g", "v", key_cols=["k"], n_batches=2)
+    rep = O.last_replay()
+    assert rep.query_name.startswith("mv_") and len(rep.batches) == 2
+
+
 def test_measure_matches_full_scan_after_many_stages(spark):
     """measure reads the status store's newest-first head only; with >= 50
     stages retained it must still return exactly the stages a full scan,

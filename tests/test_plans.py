@@ -204,9 +204,11 @@ def test_variant_default_path_reads_staged_column(spark):
     ).agg(F.count("*").alias("cnt"))
     txt = plan_of(df)
     assert "variant_get" in txt
-    key = (spark.sparkContext.applicationId, "/root/testdata/sf0.01", "events")
-    staged = C._relayout_cache.get(key)
+    # the relayout's staged directory is memoized (cache.staged_dir): a
+    # second probe returns the path the loaded relation reads
+    staged = C._ingest_relayout(spark, "/root/testdata/sf0.01", "events")
     if staged is not None:
+        assert all(staged in f for f in ev.inputFiles())
         # staged regime: the plan must not re-parse the JSON string
         assert "parse_json" not in txt and "get_json_object" not in txt
         # and the staged parquet physically carries the variant column

@@ -414,23 +414,24 @@ def test_stream_ewma_equals_batch_single_and_multi_batch(spark):
 def test_scratch_root_free_space_gate(monkeypatch):
     """tmpfs scratch is RAM-backed and competes with executor memory:
     _scratch_root must refuse /dev/shm when free space is below the
-    caller's floor (ADVICE r6) and fall back to the disk tempdir."""
+    caller's floor and fall back to the disk tempdir."""
     import os
 
-    from shuttle_spark.streaming import core as SC
+    from shuttle_spark import cache
 
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
     # nothing has an exbibyte free -> the tmpfs path must be refused
-    assert SC._scratch_root(min_free_bytes=1 << 60) is None
-    root = SC._scratch_root(min_free_bytes=0)
+    assert cache._scratch_root(min_free_bytes=1 << 60) is None
+    root = cache._scratch_root(min_free_bytes=0)
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         assert root is not None and root.startswith("/dev/shm")
-    # scratch_tempdir always yields a usable directory either way
-    d = SC.scratch_tempdir()
+    # scratch_dir always yields a usable directory either way
+    d = cache.scratch_dir("gate_")
     assert os.path.isdir(d)
     # the explicit override wins over any free-space verdict
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", d)
-    assert SC._scratch_root(min_free_bytes=1 << 60) == d
+    assert cache._scratch_root(min_free_bytes=1 << 60) == d
+    assert cache.scratch_dir("gate_").startswith(d + os.sep)
 
 
 def test_stream_ohlc_equals_batch_multi_batch(spark):
@@ -753,9 +754,7 @@ def _family_op(family: str, layout: str):
 def _replay_to(spark, df, ckpt, fmt="memory", path=None):
     """AvailableNow replay with a caller-owned checkpoint (and, for a
     file sink, output path) at 4 shuffle partitions."""
-    from shuttle_spark.streaming import core as SC
-
-    restore = SC._scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"})
+    restore = S._scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"})
     try:
         w = df.writeStream.format(fmt).option("checkpointLocation", ckpt)
         if path is None:
