@@ -44,12 +44,13 @@ function; ``clear_all`` clears every instance alive in the process.
   unmemoized form (one per stream replay's checkpoint).  Root: one
   directory per process under ``_scratch_root``: ``SPARK_GRAFT_SCRATCH``,
   else a tmpfs with headroom (two size classes: staged copies need 8 GiB
-  free, scratch 1 GiB), else the system tempdir.  Lifetime: the process's
-  directory is removed at interpreter exit; the first use of a root in a
-  process removes the directories there of processes that are gone and
-  over 2 h old.  ``clear_all`` leaves directories alone: relations
-  memoized elsewhere (``catalog.load_table``) read them for the life of
-  the process.
+  free, scratch 1 GiB), else a directory of its own in the system
+  tempdir.  Lifetime: the process's directory is removed at interpreter
+  exit; the first use of a root in a process removes every entry there
+  that is over 2 h old and is not a live process's directory (so the
+  root, ``SPARK_GRAFT_SCRATCH`` included, belongs to the engine).
+  ``clear_all`` leaves directories alone: relations memoized elsewhere
+  (``catalog.load_table``) read them for the life of the process.
 """
 
 from __future__ import annotations
@@ -261,7 +262,8 @@ def _scratch_root(min_free_bytes: int = 1 << 30) -> str | None:
     larger SF risks ENOSPC with no recovery.  The gate is a free-space
     check (``os.statvfs``) against ``min_free_bytes``: staged table copies
     pass a much larger floor than checkpoint writers.  SPARK_GRAFT_SCRATCH
-    overrides unconditionally; None falls back to the system tempdir."""
+    overrides unconditionally; None falls back to a directory in the
+    system tempdir (``_process_dir``)."""
     override = os.environ.get("SPARK_GRAFT_SCRATCH")
     if override:
         os.makedirs(override, exist_ok=True)
@@ -291,6 +293,10 @@ _SWEEP_AGE_S = 2 * 3600
 
 def _process_dir(min_free_bytes: int) -> str:
     root = _scratch_root(min_free_bytes) or tempfile.gettempdir()
+    if os.path.realpath(root) == os.path.realpath(tempfile.gettempdir()):
+        # the sweep clears out its root, so never the shared tempdir
+        root = os.path.join(root, "shuttle_spark_scratch")
+        os.makedirs(root, exist_ok=True)
     d = _process_dirs.get(root)
     if d is None:
         _sweep(root)
@@ -301,26 +307,35 @@ def _process_dir(min_free_bytes: int) -> str:
 
 
 def _sweep(root: str) -> None:
-    """Remove the process directories under ``root`` whose process is
-    gone and that are over 2 h old: the age gate spares a directory whose
-    pid a live process took over."""
+    """Remove every entry of ``root`` that is over 2 h old and is not a
+    live process's directory: directories of processes that are gone,
+    and whatever else a crash or earlier code left there.  The age gate
+    spares what another process is making right now."""
     for name in os.listdir(root):
         m = _PROCESS_DIR.fullmatch(name)
-        if m is None:
+        if m is not None and _alive(int(m.group(1))):
             continue
         path = os.path.join(root, name)
         try:
-            os.kill(int(m.group(1)), 0)
-            continue  # the owner (or a process reusing its pid) is alive
-        except ProcessLookupError:
-            pass
-        except (OSError, OverflowError):
-            continue
-        try:
-            if time.time() - os.path.getmtime(path) > _SWEEP_AGE_S:
+            if time.time() - os.lstat(path).st_mtime <= _SWEEP_AGE_S:
+                continue
+            if os.path.isdir(path) and not os.path.islink(path):
                 shutil.rmtree(path, ignore_errors=True)
+            else:
+                os.unlink(path)
         except OSError:
             pass
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` (or one reusing its pid) exists."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except (OSError, OverflowError):
+        return True  # exists, but is not ours to signal
+    return True
 
 
 @atexit.register

@@ -191,21 +191,19 @@ def _relayout(
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
-    """Normalize events.ts to session-timezone TIMESTAMP at microsecond grain.
+    """Normalize events.ts to TIMESTAMP at microsecond grain.
 
     The driver has shipped two physical encodings across rounds:
-    epoch-nanos int64 (parquet TIMESTAMP(NANOS) under nanosAsLong) and
-    plain parquet timestamp[us] (read by Spark as TIMESTAMP_NTZ).  Both map
-    to the same instant DuckDB sees via ``ts::TIMESTAMP`` — nanos floor to
-    micros; NTZ wall-clock is interpreted in the UTC session timezone.
+    epoch-nanos int64 (parquet TIMESTAMP(NANOS) under nanosAsLong), which
+    this floors to micros, and plain parquet timestamp[us], which the
+    engine reads directly as TIMESTAMP (``events_raw_schema``,
+    ``load_table``) and this leaves alone.  Both map to the instant
+    DuckDB sees via ``ts::TIMESTAMP``.
     """
     from pyspark.sql import functions as F
 
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
+    if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -217,26 +215,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     if name == "events":
-        # The driver may hand us a session without these confs; both are
-        # runtime-settable, so set them defensively before the read.  The
-        # timezone matters because the NTZ->TIMESTAMP cast in
-        # normalize_events_ts resolves the session zone at ANALYSIS time
-        # (i.e. here, eagerly) and the result is memoized in _df_cache for
-        # the app's lifetime — so UTC is scoped to this build and the
-        # caller's own session timezone is restored afterwards (contract
-        # comparisons separately pin UTC via contracts.ensure_conf).
+        # A timestamp[us] column without a zone is inferred as TIMESTAMP,
+        # not TIMESTAMP_NTZ: Spark reads its stored micros as the instant
+        # (the UTC wall clock DuckDB's ts::TIMESTAMP sees), whatever the
+        # session zone, so no per-row zone cast follows.  Inference runs
+        # here, eagerly, so the conf is scoped to this build.
         #
-        # nanosAsLong is deliberately NOT restored, unlike the timezone:
-        # the parquet reader re-reads this conf from session state at
-        # every EXECUTION of the memoized relation (each query rebuilds
-        # its Hadoop conf), so unsetting it here would make later actions
-        # on the returned df die with PARQUET_TYPE_ILLEGAL.  It is part of
-        # the engine's session contract (session.py sets it at creation;
-        # this is the self-heal for driver-created sessions), and its only
-        # effect is on TIMESTAMP(NANOS) columns, which vanilla Spark
-        # cannot read at all.
+        # nanosAsLong is deliberately NOT restored: the parquet reader
+        # re-reads this conf from session state at every EXECUTION of the
+        # memoized relation (each query rebuilds its Hadoop conf), so
+        # unsetting it here would make later actions on the returned df
+        # die with PARQUET_TYPE_ILLEGAL.  It is part of the engine's
+        # session contract (session.py sets it at creation; this is the
+        # self-heal for driver-created sessions), and its only effect is
+        # on TIMESTAMP(NANOS) columns, which vanilla Spark cannot read at
+        # all.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        restore = _scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"})
+        restore = _scoped_conf(
+            spark, {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
+        )
         try:
             path = _ingest_relayout(spark, sf_dir, name) or table_path(sf_dir, name)
             df = normalize_events_ts(spark.read.parquet(path))

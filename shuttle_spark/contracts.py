@@ -19,9 +19,10 @@ cross-engine agreement*:
   engines pick the identical row set; non-LIMIT queries need no order (the
   driver's hash is order-insensitive).
 * **Timestamps** — ``events.ts`` has shipped as parquet TIMESTAMP(NANOS)
-  (epoch-nanos long under nanosAsLong) and as timestamp[us] (TIMESTAMP_NTZ)
-  in different testdata rounds; ``catalog.normalize_events_ts`` adapts by
-  schema so Spark always sees microsecond-grain session-TZ timestamps, and
+  (epoch-nanos long under nanosAsLong) and as timestamp[us] in different
+  testdata rounds; ``catalog.load_table`` reads timestamp[us] as TIMESTAMP
+  and ``catalog.normalize_events_ts`` floors nanos, so Spark always sees
+  microsecond-grain timestamps, and
   oracles use ``ts::TIMESTAMP`` which lands on the identical instant in
   DuckDB for both encodings.
 
@@ -3329,11 +3330,14 @@ def q_stream_window_agg(spark: SparkSession, sf: str) -> DataFrame:
     (file stream -> watermark -> window agg -> AvailableNow to memory sink),
     hash-matched against the batch oracle on the finalized subset — windows
     the 2 h watermark has closed, the engine's `_final`-marker analog
-    (ShufflePartitionReader.java:134-153)."""
+    (ShufflePartitionReader.java:134-153).  The watermark alone selects
+    that subset: append mode emits a window once ``end <= watermark``, the
+    closing batch's watermark is ``floor_ms(max ts) - 2 h``, and an
+    hour-aligned end compares the same against it as against the
+    oracle's µs cutoff, so no cutoff job or post-filter runs
+    (``test_stream_window_agg_emits_only_closed_windows`` checks it)."""
     from shuttle_spark.streaming import events_stream, run_available_now
 
-    ev = load_table(spark, sf, "events")
-    cutoff = ev.agg(F.max("ts")).collect()[0][0]
     stream = (
         events_stream(spark, sf)
         .withWatermark("ts", "2 hours")
@@ -3344,20 +3348,14 @@ def q_stream_window_agg(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(
             F.col("win.start").alias("w"),
-            F.col("win.end").alias("w_end"),
             "event_type",
             "cnt",
             (F.col("sv") / F.lit(1000000.0)).alias("sum_value"),
         )
     )
-    out = run_available_now(
+    return run_available_now(
         stream, f"swa_{abs(hash(sf)) % 99999}", shuffle_partitions=4
     )
-    import datetime as dt
-
-    return out.filter(
-        F.col("w_end") <= F.lit(cutoff - dt.timedelta(hours=2))
-    ).select("w", "event_type", "cnt", "sum_value")
 
 
 # ===========================================================================
@@ -4086,7 +4084,10 @@ def q_stream_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     """Session windows computed by an ACTUAL streaming replay
     (session_window + watermark), hash-matched against a lag/cumsum
     sessionization oracle on sessions the watermark has closed
-    (session end + gap <= watermark)."""
+    (session end + gap <= watermark).  The cutoff stays: a session end
+    is µs-grain (an event time plus the gap), so the hour-aligned
+    argument that lets stream_window_agg rest on the watermark alone does
+    not hold here, and the oracle's µs bound stays explicit."""
     import datetime as dt
 
     from shuttle_spark.streaming import events_stream, run_available_now, session_agg_stream
@@ -5999,9 +6000,11 @@ def q_stream_ewma_anomalies(spark: SparkSession, sf: str, replay) -> DataFrame:
     hash-matched against the batch-recurrence oracle on the finalized
     subset.  The 1 s guard inside the 2 h cutoff absorbs the watermark's
     millisecond truncation (wm is ms-grain, event time µs-grain), so both
-    engines filter to a provably-finalized row set.  The arithmetic is
-    the same all-integer FIR as `ewma_anomalies` — stream == batch
-    bit-for-bit, proven by tests/test_streaming.py's parity test."""
+    engines filter to a provably-finalized row set; the cutoff stays,
+    because rows at µs grain within that guard are emitted and must be
+    filtered out.  The arithmetic is the same all-integer FIR as
+    `ewma_anomalies` — stream == batch bit-for-bit, proven by
+    tests/test_streaming.py's parity test."""
     from shuttle_spark.streaming import events_stream, stream_ewma_deviants
 
     ev = load_table(spark, sf, "events")
@@ -6056,8 +6059,9 @@ def q_stream_locf_census(spark: SparkSession, sf: str, replay) -> DataFrame:
     oracle carries the double and converts at the end — identical,
     because floor of the same float64 is deterministic.  Same 1 s guard
     inside the 2 h watermark as the other stream replays (ms-grain
-    watermark vs µs-grain event time); same deterministic NULL injection
-    as locf_impute_cents (the shipped table has no NULLs)."""
+    watermark vs µs-grain event time), and the cutoff stays for the same
+    reason; same deterministic NULL injection as locf_impute_cents (the
+    shipped table has no NULLs)."""
     from shuttle_spark.streaming import events_stream
     from shuttle_spark.streaming.core import stream_locf
 
@@ -6362,7 +6366,8 @@ def q_stream_cusum_census(spark: SparkSession, sf: str, replay) -> DataFrame:
     form's oracle on the finalized subset — stream == batch for the
     online alerting shape.  The entire per-key history compresses to
     two long counters of state; same 1 s guard inside the 2 h watermark
-    as the other stream replays."""
+    as the other stream replays, and the cutoff stays for the same reason
+    (µs-grain rows inside the guard are emitted)."""
     from shuttle_spark.streaming import events_stream
     from shuttle_spark.streaming.core import stream_cusum
 
@@ -6816,11 +6821,11 @@ def q_stream_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     the total-order okey (struct(epoch_micros, event_id), Spark side;
     the order-equivalent lex string in the oracle) makes them
     commutative over ANY micro-batch arrival order (a plain first/last
-    would be replay-order-dependent and could never pass this gate)."""
+    would be replay-order-dependent and could never pass this gate).  As
+    in stream_window_agg, the watermark alone selects the closed hourly
+    bars, so no cutoff job or post-filter runs."""
     from shuttle_spark.streaming import events_stream, run_available_now
 
-    ev = load_table(spark, sf, "events")
-    cutoff = ev.agg(F.max("ts")).collect()[0][0]
     okey = F.struct(
         F.unix_micros(F.col("ts")).alias("t"),
         F.col("event_id").cast("long").alias("i"),
@@ -6839,23 +6844,19 @@ def q_stream_ohlc(spark: SparkSession, sf: str) -> DataFrame:
             F.count("*").alias("volume"),
             F.sum(F.round(v * 100).cast("long")).alias("total_cents"),
         )
+        .select(
+            "event_type",
+            F.col("win.start").alias("bucket"),
+            "open",
+            "close",
+            "high",
+            "low",
+            "volume",
+            "total_cents",
+        )
     )
-    out = run_available_now(
+    return run_available_now(
         stream, f"sohlc_{abs(hash(sf)) % 99999}", shuffle_partitions=4
-    )
-    import datetime as dt
-
-    return out.filter(
-        F.col("win.end") <= F.lit(cutoff - dt.timedelta(hours=2))
-    ).select(
-        "event_type",
-        F.col("win.start").alias("bucket"),
-        "open",
-        "close",
-        "high",
-        "low",
-        "volume",
-        "total_cents",
     )
 
 

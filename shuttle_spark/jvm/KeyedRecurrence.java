@@ -1,6 +1,8 @@
 package shuttle_spark.jvm;
 
 import java.io.Serializable;
+import java.nio.ByteBuffer;
+import java.nio.charset.StandardCharsets;
 import java.util.ArrayList;
 import java.util.Arrays;
 import java.util.Iterator;
@@ -14,8 +16,16 @@ import org.apache.spark.util.LongAccumulator;
 /** The keyed-recurrence fold of {@code streaming/core._keyed_recurrence},
  *  applied per key by {@code flatMapGroupsWithState} with an event-time
  *  timeout.  Input rows are {@code (key, ts, ts_us, order, payload)}; the
- *  state is {@code (carry, p_ts, p_ord, p_<payload>)}, the key's carry and
- *  its pending rows.
+ *  state is the key's carry and its pending rows, packed into one
+ *  {@code byte[]} (a {@code BinaryType} state, big-endian):
+ *  <pre>
+ *  int  carry length c, then c longs: the carry
+ *  int  pending count n
+ *  n x (long ts_us, long order)
+ *  n payloads: a long (cents), or for text an int byte length (-1 for
+ *              NULL) followed by that many bytes of UTF-8
+ *  </pre>
+ *  {@code streaming.core._kernel_state} decodes it in Python.
  *
  *  <p>Each call drops strictly-late rows ({@code ts_us < watermark_us},
  *  counted into {@code late}), appends the rest to the pending rows, sorts
@@ -25,7 +35,7 @@ import org.apache.spark.util.LongAccumulator;
  *  {@code max(min_pending_ms + 1, watermark_ms + 1)}; a key with nothing
  *  pending and its initial carry is removed.  Each step is the same integer
  *  arithmetic as its numpy step in {@code streaming/core.py}. */
-public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row, Row, Row> {
+public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row, byte[], Row> {
   // input row fields
   private static final int US = 2, ORDER = 3, PAYLOAD = 4;
   /** A NULL cents value inside the long carry and pending rows. */
@@ -67,10 +77,10 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
   }
 
   @Override
-  public Iterator<Row> call(Row key, Iterator<Row> rows, GroupState<Row> state) {
+  public Iterator<Row> call(Row key, Iterator<Row> rows, GroupState<byte[]> state) {
     long wmMs = state.getCurrentWatermarkMs();
     long wmUs = wmMs * 1000;
-    Pending p = state.exists() ? new Pending(state.get()) : new Pending(step);
+    Pending p = state.exists() ? new Pending(state.get(), step.text()) : new Pending(step);
     long dropped = 0;
     while (rows.hasNext()) {
       Row r = rows.next();
@@ -94,7 +104,7 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
         state.remove();
       }
     } else {
-      state.update(p.toRow());
+      state.update(p.toBytes(step.text()));
       if (p.n > 0) {
         state.setTimeoutTimestamp(Math.max(Math.floorDiv(p.ts[0], 1000) + 1, wmMs + 1));
       }
@@ -117,23 +127,33 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
       payload = new Object[8];
     }
 
-    Pending(Row s) {
-      carry = longs(s.getList(0));
-      List<Long> t = s.getList(1), o = s.getList(2);
-      List<Object> v = s.getList(3);
-      n = t.size();
-      int cap = Math.max(8, n);
-      ts = Arrays.copyOf(longs(t), cap);
-      ord = Arrays.copyOf(longs(o), cap);
-      payload = Arrays.copyOf(v.toArray(), cap);
-    }
-
-    private static long[] longs(List<Long> xs) {
-      long[] a = new long[xs.size()];
-      for (int i = 0; i < a.length; i++) {
-        a[i] = xs.get(i);
+    /** Unpack a state written by {@link #toBytes}. */
+    Pending(byte[] state, boolean text) {
+      ByteBuffer b = ByteBuffer.wrap(state);
+      carry = new long[b.getInt()];
+      for (int i = 0; i < carry.length; i++) {
+        carry[i] = b.getLong();
       }
-      return a;
+      n = b.getInt();
+      int cap = Math.max(8, n);
+      ts = new long[cap];
+      ord = new long[cap];
+      payload = new Object[cap];
+      for (int i = 0; i < n; i++) {
+        ts[i] = b.getLong();
+        ord[i] = b.getLong();
+      }
+      for (int i = 0; i < n; i++) {
+        if (!text) {
+          payload[i] = b.getLong();
+        } else {
+          int len = b.getInt();
+          if (len >= 0) {
+            payload[i] = new String(state, b.position(), len, StandardCharsets.UTF_8);
+            b.position(b.position() + len);
+          }
+        }
+      }
     }
 
     long cents(int i) {
@@ -189,9 +209,35 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
       System.arraycopy(payload, first, payload, 0, n);
     }
 
-    Row toRow() {
-      return RowFactory.create(
-          carry, Arrays.copyOf(ts, n), Arrays.copyOf(ord, n), Arrays.copyOf(payload, n));
+    /** The state blob of the class doc; {@code text} payloads are
+     *  strings, the others longs. */
+    byte[] toBytes(boolean text) {
+      int size = 8 + 8 * carry.length + 16 * n + (text ? 4 : 8) * n;
+      byte[][] utf8 = new byte[text ? n : 0][];
+      for (int i = 0; i < utf8.length; i++) {
+        String s = (String) payload[i];
+        utf8[i] = s == null ? null : s.getBytes(StandardCharsets.UTF_8);
+        size += s == null ? 0 : utf8[i].length;
+      }
+      ByteBuffer b = ByteBuffer.allocate(size);
+      b.putInt(carry.length);
+      for (long c : carry) {
+        b.putLong(c);
+      }
+      b.putInt(n);
+      for (int i = 0; i < n; i++) {
+        b.putLong(ts[i]).putLong(ord[i]);
+      }
+      for (int i = 0; i < n; i++) {
+        if (!text) {
+          b.putLong((Long) payload[i]);
+        } else if (utf8[i] == null) {
+          b.putInt(-1);
+        } else {
+          b.putInt(utf8[i].length).put(utf8[i]);
+        }
+      }
+      return b.array();
     }
   }
 
@@ -199,6 +245,11 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
    *  of one key emit under watermark {@code wmUs}. */
   abstract static class Step implements Serializable {
     abstract long[] initialCarry();
+
+    /** Whether the payload is text (else a long). */
+    boolean text() {
+      return false;
+    }
 
     /** Whether row {@code r} enters the pending rows. */
     boolean ingest(Row r) {
@@ -240,6 +291,11 @@ public class KeyedRecurrence implements FlatMapGroupsWithStateFunction<Row, Row,
     @Override
     long[] initialCarry() {
       return NONE;
+    }
+
+    @Override
+    boolean text() {
+      return true;
     }
 
     @Override

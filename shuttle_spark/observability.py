@@ -29,12 +29,13 @@ timed run of an interleaved A/B by it.
   the streaming module runs records the finished query's
   ``recentProgress``: per-micro-batch phase durations and, per stateful
   operator, state-store commit and update time and the rows the
-  watermark dropped, and the strictly-late rows the keyed recurrences
-  dropped.
+  watermark dropped, the event-time watermark each batch ran under, and
+  the strictly-late rows the keyed recurrences dropped.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 
@@ -202,6 +203,16 @@ class BatchProgress:
     input_rows: int
     duration_ms: dict[str, int]  # StreamingQueryProgress.durationMs
     state_operators: tuple[StateOperatorProgress, ...]
+    # the event-time watermark the batch ran under, epoch ms (None for a
+    # query without one); append mode emits a window once its end is at
+    # or before it
+    watermark_ms: int | None
+
+
+def _epoch_ms(iso: str) -> int:
+    """Epoch milliseconds of a progress timestamp (``...T..:..:..sssZ``)."""
+    t = dt.datetime.fromisoformat(iso.replace("Z", "+00:00"))
+    return round(t.timestamp() * 1000)
 
 
 @dataclass(frozen=True)
@@ -242,6 +253,9 @@ def record_replay(
                     )
                     for op in p.stateOperators
                 ),
+                watermark_ms=_epoch_ms(p.eventTime["watermark"])
+                if "watermark" in p.eventTime
+                else None,
             )
             for p in progress
         ),

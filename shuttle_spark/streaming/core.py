@@ -34,6 +34,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import struct
 import time
 import uuid
 import weakref
@@ -58,30 +59,28 @@ def events_raw_schema(sf_dir: str) -> T.StructType:
     """Stream-source schema matching the physical events parquet.
 
     The driver has shipped events.ts as parquet TIMESTAMP(NANOS) (read as
-    epoch-nanos long under nanosAsLong) and as timestamp[us] (read as
-    TIMESTAMP_NTZ) in different rounds; probe the footer so the declared
-    stream schema always matches the file.  Parquet file streams match
-    columns by name, so field order is immaterial.
+    epoch-nanos long under nanosAsLong) and as timestamp[us] in different
+    rounds; probe the footer so the declared stream schema always matches
+    the file.  Parquet file streams match columns by name, so field order
+    is immaterial.
     """
     import pyarrow.parquet as pq
 
     ts_type = pq.read_schema(table_path(sf_dir, "events")).field("ts").type
     spark_ts: T.DataType
     if str(ts_type) == "int64" or str(ts_type).startswith("timestamp[ns"):
-        # Deliberately BEFORE the tz branch: ns+tz ("timestamp[ns, tz=...]")
-        # must also be LongType.  Spark has no nanosecond timestamp type —
-        # declaring TimestampType over TIMESTAMP(NANOS) parquet throws
+        # Spark has no nanosecond timestamp type: declaring TimestampType
+        # over TIMESTAMP(NANOS) parquet throws
         # SchemaColumnConvertNotSupportedException (verified on 4.1.2,
-        # adjusted and unadjusted alike); under nanosAsLong both read as
+        # with and without a zone); under nanosAsLong both read as
         # epoch-nano bigint, which normalize_events_ts converts (nanos are
         # UTC-anchored either way, so the conversion is tz-exact).
         spark_ts = T.LongType()
-    elif getattr(ts_type, "tz", None):
-        # tz-annotated (isAdjustedToUTC) micros/millis: Spark's parquet
-        # reader refuses to read these as TIMESTAMP_NTZ; declare TIMESTAMP.
-        spark_ts = T.TimestampType()
     else:
-        spark_ts = T.TimestampNTZType()
+        # micros or millis, with a zone or without: Spark reads the stored
+        # value as the instant, whatever the session zone, so the stream
+        # needs no per-row zone cast (a TIMESTAMP_NTZ read would).
+        spark_ts = T.TimestampType()
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -115,16 +114,7 @@ def events_stream(
     reader = spark.readStream.schema(events_raw_schema(sf_dir))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # The NTZ->TIMESTAMP cast inside normalize_events_ts resolves the
-    # session timezone at ANALYSIS time, i.e. right here — pin UTC for the
-    # build exactly like the batch twin (catalog.load_table), else a
-    # driver-created session in another zone shifts stream timestamps
-    # against batch and breaks the module's stream == batch protocol.
-    restore = S._scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"})
-    try:
-        return normalize_events_ts(reader.parquet(stream_dir))
-    finally:
-        restore()
+    return normalize_events_ts(reader.parquet(stream_dir))
 
 
 def windowed_agg_stream(
@@ -437,9 +427,16 @@ def _kernel_fold(
 ) -> DataFrame:
     """``_keyed_recurrence`` as ``jvm/KeyedRecurrence.java`` applied per
     key by ``flatMapGroupsWithState``.  The kernel reads
-    ``(key, ts, ts_us, order, payload)`` rows and keeps
-    ``(carry, p_ts, p_ord, <payload>)`` per key; strictly-late rows are
-    added to ``late``, the context's JVM late-row accumulator."""
+    ``(key, ts, ts_us, order, payload)`` rows; strictly-late rows are
+    added to ``late``, the context's JVM late-row accumulator.
+
+    Each key's state is one ``BinaryType`` value that the kernel packs
+    with a big-endian ``ByteBuffer``: an int carry length ``c`` and ``c``
+    carry longs, an int pending count ``n``, ``n`` ``(ts_us, order)``
+    long pairs, then ``n`` payloads, each a long (cents) or, for text, an
+    int byte length (-1 for NULL) and that many bytes of UTF-8.
+    ``_kernel_state`` decodes it.  A binary state needs no per-field
+    (de)serializer projections in the state store."""
     spark = src.sparkSession
     jvm = spark._jvm
     (payload_col,) = family.inputs
@@ -454,11 +451,6 @@ def _kernel_fold(
         F.col(order_col).cast("long").alias("__order"),
         F.col(payload_col).cast(read).alias("__payload"),
     ).withWatermark(ts_col, watermark)
-    longs = T.ArrayType(T.LongType())
-    state = T.StructType(
-        [T.StructField(name, longs) for name in ("carry", "p_ts", "p_ord")]
-        + [T.StructField(name, T.ArrayType(t)) for name, t in family.payload]
-    )
 
     def encoder(schema: T.StructType):
         return jvm.org.apache.spark.sql.Encoders.row(
@@ -468,19 +460,48 @@ def _kernel_fold(
     factory, *args = family.kernel
     kernel = getattr(jvm.shuttle_spark.jvm.KeyedRecurrence, factory)(late, *args)
     streaming = jvm.org.apache.spark.sql.streaming
+    # The kernel never reads the value rows' ts (the watermark column the
+    # child must keep): decode it to an Instant, not a rebased
+    # java.sql.Timestamp.  The encoder reads this conf when it is made.
+    restore = S._scoped_conf(spark, {"spark.sql.datetime.java8API.enabled": "true"})
+    try:
+        values = encoder(rows.schema)
+    finally:
+        restore()
     by_key = getattr(rows.groupBy(key_col)._jgd, "as")(
-        encoder(rows.select(key_col).schema), encoder(rows.schema)
+        encoder(rows.select(key_col).schema), values
     )
     return DataFrame(
         by_key.flatMapGroupsWithState(
             kernel,
             streaming.OutputMode.Append(),
-            encoder(state),
+            jvm.org.apache.spark.sql.Encoders.BINARY(),
             encoder(out_schema),
             streaming.GroupStateTimeout.EventTimeTimeout(),
         ),
         spark,
     )
+
+
+def _kernel_state(blob: bytes, text: bool) -> tuple[list[int], list[tuple]]:
+    """One key's kernel state (``_kernel_fold``'s layout) as its carry
+    and its pending ``(ts_us, order, payload)`` rows; ``text`` says the
+    payloads are strings (keep-latest), else longs."""
+    (c,) = struct.unpack_from(">i", blob)
+    carry = list(struct.unpack_from(f">{c}q", blob, 4))
+    (n,) = struct.unpack_from(">i", blob, 4 + 8 * c)
+    pairs = struct.unpack_from(f">{2 * n}q", blob, 8 + 8 * c)
+    off = 8 + 8 * c + 16 * n
+    payload = []
+    for _ in range(n):
+        if not text:
+            payload.append(struct.unpack_from(">q", blob, off)[0])
+            off += 8
+            continue
+        (size,) = struct.unpack_from(">i", blob, off)
+        off += 4 + max(size, 0)
+        payload.append(None if size < 0 else blob[off - size:off].decode())
+    return carry, list(zip(pairs[0::2], pairs[1::2], payload))
 
 
 class _LateCounters(NamedTuple):
@@ -1150,11 +1171,12 @@ def replay_partitions(spark: SparkSession) -> int:
     fold does (sf0.1, local[4], engine worker daemon, a trivial count
     fold over 1,500 keys: 2.69 s vs 1.05 s over 10 keys), so more
     partitions spread that constant over more cores while each adds a
-    state-store commit per micro-batch.  Measured at sf0.1 (round 13,
-    interleaved medians, when a commit still cost ~95-145 ms per
-    partition): stream_locf at local[32] read 5.85/4.07/3.48/4.01 s for
-    4/8/16/32 partitions and at local[8] 6.49/5.29/6.87/9.82 s, so
-    ``min(cores, 16)`` picked the winner at both.
+    state-store commit per micro-batch.  Measured at sf0.1 (interleaved
+    medians, on Hadoop's stock local filesystem, where a commit cost
+    ~95-145 ms per partition): stream_locf at local[32] read
+    5.85/4.07/3.48/4.01 s for 4/8/16/32 partitions and at local[8]
+    6.49/5.29/6.87/9.82 s, so ``min(cores, 16)`` picked the winner at
+    both.
 
     The JVM kernel has no per-group constant, and JVM-state operators
     (stream-stream join, session windows) measured worse above 4
@@ -1180,19 +1202,23 @@ def run_available_now(
     and return the result as a batch DataFrame — the harness that lets
     tests assert stream == batch.
 
+    The result is the sink's view.  Spark plans it as a local scan of
+    the sink's rows, so collecting it as it is runs no job, while a
+    projection or filter over it runs a job of
+    ``spark.default.parallelism`` tasks: a caller that only reads the
+    rows back shapes them inside the stream.  (Folding such work on the
+    driver over a local relation instead costs more than the job once the
+    output is large: ~0.3 s on the ~100k rows of stream_locf_census.)
+
     ``shuffle_partitions`` sizes the stateful-operator partition count for
     THIS query only (pinned into its checkpoint at first start; the session
     value is restored afterwards).  Each stateful partition commits its
     state store once per micro-batch: ~5-20 ms per partition on the engine
     filesystem (sf0.1, local[4], stream_window_agg and
-    stream_keep_latest_packed), against ~95-145 ms when Hadoop spawned a
-    ``chmod``/``readlink`` per checkpoint file (``session.py``).  The
-    contracts' ``shuffle_partitions=4`` predates that: it was chosen when
-    small replays at 4 partitions measured 2-3x faster than at 32.  A 100 TB
-    stream still wants hundreds — it is the streaming twin of the
-    reference's workers-per-app sizing (Ors2ShuffleManager.scala:372-398).
-    The finished query's progress stays readable as
-    ``observability.last_replay()``.
+    stream_keep_latest_packed).  A 100 TB stream still wants hundreds — it
+    is the streaming twin of the reference's workers-per-app sizing
+    (Ors2ShuffleManager.scala:372-398).  The finished query's progress
+    stays readable as ``observability.last_replay()``.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     _replay(stream_df, name, shuffle_partitions)

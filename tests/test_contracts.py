@@ -129,6 +129,49 @@ def test_fixture_dir_tracks_source_fingerprint(tmp_path, monkeypatch):
     )
 
 
+def test_sweep_removes_every_stale_entry(tmp_path, monkeypatch):
+    """One sweep rule for the scratch root: at a root's first use in a
+    process, every entry over 2 h old that is not a live process's
+    directory goes (a gone process's directory, directories and files of
+    other names, a symlink but not its target); a live process's
+    directory and anything fresh stay."""
+    import os
+    import subprocess
+    import time
+
+    from shuttle_spark import cache
+
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(root))
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    target = tmp_path / "target.parquet"
+    target.write_bytes(b"x")
+    stale = [
+        root / f"shuttle_{gone.pid}_old",
+        root / "events_dup_sf0.1",
+        root / "shuttle_csv_abc",
+        root / "loose.parquet",
+        root / "link.parquet",
+    ]
+    kept = [root / f"shuttle_{os.getpid()}_old", root / "events_dup_fresh"]
+    for p in stale[:3] + kept:
+        p.mkdir()
+        (p / "part-0.parquet").write_bytes(b"y")
+    stale[3].write_bytes(b"z")
+    stale[4].symlink_to(target)
+    hours_ago = time.time() - 3 * 3600
+    for p in stale + kept[:1]:
+        os.utime(p, (hours_ago, hours_ago), follow_symlinks=False)
+
+    d = cache.scratch_dir("sweep_")
+    left = set(os.listdir(root))
+    assert not left & {p.name for p in stale}
+    assert {p.name for p in kept} | {os.path.basename(os.path.dirname(d))} == left
+    assert target.exists()
+
+
 def test_driver_gate_covers_every_b_family():
     """VERDICT r11 item 1: the promise that the driver's first-50 gate
     keeps a row for every SURVEY §2.B family (B1-B30) is a CHECKED
@@ -235,19 +278,22 @@ def test_directories_come_from_the_cache_policy():
     lifetime): outside it no ``tempfile.mkdtemp``, no ``gettempdir`` and
     no string literal starting with /tmp/ or /dev/shm.  Two exceptions:
     the javac build directory under jvm/classes (``session.jvm_classes``)
-    and the ``spark.sql.warehouse.dir`` deployment default."""
+    and the ``spark.sql.warehouse.dir`` deployment default.  The tests
+    take theirs from pytest's ``tmp_path`` (or cache.py), so tests/ holds
+    no ``mkdtemp`` or ``gettempdir`` either."""
     import ast
     from pathlib import Path
 
-    pkg = Path(__file__).resolve().parents[1] / "shuttle_spark"
+    repo = Path(__file__).resolve().parents[1]
     allowed = {
-        ("session.py", "jvm_classes", "mkdtemp"),
-        ("session.py", None, "/tmp/shuttle_spark_warehouse"),
+        ("shuttle_spark/session.py", "jvm_classes", "mkdtemp"),
+        ("shuttle_spark/session.py", None, "/tmp/shuttle_spark_warehouse"),
     }
     found = set()
-    for path in pkg.rglob("*.py"):
-        rel = str(path.relative_to(pkg))
-        if rel == "cache.py":
+    for path in [*(repo / "shuttle_spark").rglob("*.py"), *(repo / "tests").rglob("*.py")]:
+        rel = path.relative_to(repo).as_posix()
+        in_tests = rel.startswith("tests/")
+        if rel == "shuttle_spark/cache.py":
             continue
         for top in ast.parse(path.read_text()).body:
             owner = (
@@ -265,7 +311,8 @@ def test_directories_come_from_the_cache_policy():
                 if name in ("mkdtemp", "gettempdir"):
                     found.add((rel, owner, name))
                 elif (
-                    isinstance(node, ast.Constant)
+                    not in_tests
+                    and isinstance(node, ast.Constant)
                     and isinstance(node.value, str)
                     and node.value.startswith(("/tmp/", "/dev/shm"))
                 ):

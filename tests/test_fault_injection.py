@@ -87,14 +87,13 @@ def test_injected_task_failure_is_exactly_once():
     assert "FAULT_PARITY_OK" in r.stdout, (r.stdout[-2000:], r.stderr[-2000:])
 
 
-def test_lineage_crashed_attempt_is_never_read(spark):
+def test_lineage_crashed_attempt_is_never_read(spark, tmp_path):
     """A crashed write attempt (in-flight _temporary marker, partial rows)
     must be invisible to read_latest: the newest COMMITTED attempt wins,
     stale/partial attempt files stay on disk for audit (the reference's
     stale-attempt block filter, PartitionPipeReader.java:150-170, as a
     durable-table property)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -106,7 +105,7 @@ def test_lineage_crashed_attempt_is_never_read(spark):
         .select("l_orderkey", "l_linenumber")
         .limit(500)
     )
-    path = tempfile.mkdtemp(prefix="lineage_fault_") + "/t"
+    path = str(tmp_path / "t")
 
     # attempt 0: committed
     L.write_attempt(li, path, app_attempt=0)
@@ -131,18 +130,16 @@ def test_lineage_crashed_attempt_is_never_read(spark):
     assert audit == {0: 500, 1: 10}
 
 
-def test_lineage_retry_supersedes_stale_attempt(spark):
+def test_lineage_retry_supersedes_stale_attempt(spark, tmp_path):
     """Retried-write semantics: once attempt 1 commits, its rows replace
     attempt 0's entirely (latest-attempt-wins, Ors2Util.scala:54-87)."""
-    import tempfile
-
     from shuttle_spark.catalog import load_table
     from shuttle_spark.operators import lineage as L
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem").select(
         "l_orderkey", "l_linenumber"
     )
-    path = tempfile.mkdtemp(prefix="lineage_retry_") + "/t"
+    path = str(tmp_path / "t")
     L.write_attempt(li.limit(100), path, app_attempt=0)          # stale
     L.write_attempt(li, path, app_attempt=1, write_version=1)    # retry
     assert L.latest_attempt(spark, path) == 1
@@ -150,14 +147,13 @@ def test_lineage_retry_supersedes_stale_attempt(spark):
     assert got.count() == li.count()
 
 
-def test_lineage_premarker_table_falls_back_to_legacy(spark):
+def test_lineage_premarker_table_falls_back_to_legacy(spark, tmp_path):
     """Migration path: a table written entirely before _COMMITTED markers
     existed (no marker under ANY attempt) must stay readable via the
     legacy has-data/no-_temporary judgment — but the moment any attempt
     carries a marker, markers are the only authority and unmarked
     attempts are treated as in-flight."""
     import os
-    import tempfile
 
     from shuttle_spark.catalog import load_table
     from shuttle_spark.operators import lineage as L
@@ -167,7 +163,7 @@ def test_lineage_premarker_table_falls_back_to_legacy(spark):
         .select("l_orderkey", "l_linenumber")
         .limit(200)
     )
-    path = tempfile.mkdtemp(prefix="lineage_premarker_") + "/t"
+    path = str(tmp_path / "t")
     L.write_attempt(li.limit(50), path, app_attempt=0)
     L.write_attempt(li, path, app_attempt=1)
     # simulate a pre-marker (round-4) table: strip every marker
@@ -183,13 +179,11 @@ def test_lineage_premarker_table_falls_back_to_legacy(spark):
     assert L.read_latest(spark, path, with_provenance=False).count() == 50
 
 
-def test_lineage_attempts_write_isolated_dirs(spark):
+def test_lineage_attempts_write_isolated_dirs(spark, tmp_path):
     """Each attempt writes DIRECTLY into its own _app_attempt=N dir (no
     shared _temporary staging at the table root), re-running an attempt id
     overwrites only itself, and a committed EMPTY attempt reads back as 0
     rows with a schema instead of failing schema inference."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from shuttle_spark.catalog import load_table
@@ -200,7 +194,7 @@ def test_lineage_attempts_write_isolated_dirs(spark):
         .select("l_orderkey", "l_linenumber")
         .limit(100)
     )
-    path = tempfile.mkdtemp(prefix="lineage_iso_") + "/t"
+    path = str(tmp_path / "t")
     L.write_attempt(li.limit(30), path, app_attempt=0)
     L.write_attempt(li.limit(60), path, app_attempt=1)
     # re-run of attempt 1 replaces ONLY its own directory
@@ -213,7 +207,7 @@ def test_lineage_attempts_write_isolated_dirs(spark):
     assert audit == {0: 30, 1: 100}
 
     # committed empty attempt: marker exists AND a schema-bearing file
-    empty = tempfile.mkdtemp(prefix="lineage_empty_") + "/t"
+    empty = str(tmp_path / "empty")
     L.write_attempt(li.filter(F.lit(False)), empty, app_attempt=0)
     assert L.latest_attempt(spark, empty) == 0
     back = L.read_latest(spark, empty, with_provenance=False)

@@ -59,6 +59,32 @@ def test_last_replay_records_stream_progress(spark, sf_dir):
     assert rep.rows_dropped_late == 0
 
 
+def test_stream_window_agg_emits_only_closed_windows(spark, sf_dir):
+    """stream_window_agg selects the closed windows by the watermark
+    alone: every window it returns ends at or before the watermark of the
+    replay's last batch, which is the newest event time, floored to the
+    ms, less 2 h.  Outside its micro-batches (which run in the query's
+    own job group) building and collecting it runs no Spark job."""
+    from shuttle_spark.catalog import load_table
+    from shuttle_spark.contracts import REGISTRY
+
+    sc = spark.sparkContext
+    sc.setJobGroup("closed_windows", "stream_window_agg outside its batches")
+    try:
+        rows = REGISTRY["stream_window_agg"].build(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("closed_windows") == []
+    wm = O.last_replay().batches[-1].watermark_ms
+    newest_us = load_table(spark, sf_dir, "events").agg(
+        F.max(F.unix_micros("ts"))
+    ).collect()[0][0]
+    assert wm == newest_us // 1000 - 2 * 3600 * 1000
+    # w is the window start as a local datetime; every window is 1 h
+    ends_ms = [round(r.w.timestamp() * 1000) + 3600 * 1000 for r in rows]
+    assert ends_ms and max(ends_ms) <= wm
+
+
 def test_last_replay_records_foreach_batch_replays(spark, sf_dir):
     """The foreachBatch replays leave their progress too: after
     run_upsert_sink and after stream_mv_maintenance, last_replay() names

@@ -8,8 +8,6 @@ materialization; Catalyst fuses the narrow stages)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from shuttle_spark import sources as IO
@@ -22,7 +20,7 @@ from shuttle_spark.operators import neardup as N
 SF = "/root/testdata/sf0.001"
 
 
-def test_document_pipeline_end_to_end(spark):
+def test_document_pipeline_end_to_end(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     n0 = docs.count()
 
@@ -55,7 +53,7 @@ def test_document_pipeline_end_to_end(spark):
     # 4. integrity checksum audit across the write boundary
     chk = I.checksum(featured, F.col("fp")).collect()[0][0]
 
-    out = tempfile.mkdtemp(prefix="pipe_") + "/clean_docs"
+    out = str(tmp_path / "clean_docs")
     IO.write_partitioned(featured, out, ["lid"])
     back = IO.read(spark, out, "parquet")
     assert back.count() == n3

@@ -3,8 +3,6 @@ writes, and shuffle-free joins from bucketed tables."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,28 +12,24 @@ from shuttle_spark.catalog import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def _tmp(name: str) -> str:
-    return tempfile.mkdtemp(prefix=f"src_{name}_") + "/data"
-
-
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
 
 
-def test_parquet_roundtrip(spark):
+def test_parquet_roundtrip(spark, tmp_path):
     nation = load_table(spark, SF, "nation")
-    p = _tmp("pq")
+    p = str(tmp_path / "data")
     IO.write(nation, p, "parquet")
     back = IO.read(spark, p, "parquet")
     assert back.schema == nation.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
 
 
-def test_csv_roundtrip_requires_schema(spark):
+def test_csv_roundtrip_requires_schema(spark, tmp_path):
     nation = load_table(spark, SF, "nation")
-    p = _tmp("csv")
+    p = str(tmp_path / "data")
     IO.write(nation, p, "csv")
     with pytest.raises(ValueError, match="schema"):
         IO.read(spark, p, "csv")
@@ -44,25 +38,25 @@ def test_csv_roundtrip_requires_schema(spark):
     assert back.count() == nation.count()
 
 
-def test_json_roundtrip(spark):
+def test_json_roundtrip(spark, tmp_path):
     region = load_table(spark, SF, "region")
-    p = _tmp("json")
+    p = str(tmp_path / "data")
     IO.write(region, p, "json")
     back = IO.read(spark, p, "json", schema=region.schema)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, region.collect()))
 
 
-def test_orc_roundtrip(spark):
+def test_orc_roundtrip(spark, tmp_path):
     supplier = load_table(spark, SF, "supplier")
-    p = _tmp("orc")
+    p = str(tmp_path / "data")
     IO.write(supplier, p, "orc", compression="zstd")
     back = IO.read(spark, p, "orc")
     assert back.count() == supplier.count()
 
 
-def test_partitioned_write_prunes(spark):
+def test_partitioned_write_prunes(spark, tmp_path):
     orders = load_table(spark, SF, "orders")
-    p = _tmp("part")
+    p = str(tmp_path / "data")
     IO.write_partitioned(orders, p, ["o_orderpriority"])
     back = IO.read(spark, p, "parquet").filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -129,11 +123,9 @@ def test_python_datasource_batch(spark):
 
 
 @pytest.mark.slow
-def test_python_datasource_stream_equals_batch(spark):
+def test_python_datasource_stream_equals_batch(spark, tmp_path):
     """The streaming side of the custom source replays the identical rows
     the batch side produces (offsets are pure id ranges)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from shuttle_spark.sources import synthetic
@@ -148,7 +140,7 @@ def test_python_datasource_stream_equals_batch(spark):
     q = (
         stream.writeStream.format("memory")
         .queryName("synth_stream")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="synth_ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .outputMode("append")
         .start()
     )
@@ -374,12 +366,11 @@ def test_bucket_index_matches_searchsorted(spark):
     assert got == want
 
 
-def test_compact_csv_preserves_every_row(spark):
+def test_compact_csv_preserves_every_row(spark, tmp_path):
     """CSV compaction must write headers like the module's own write():
     read() forces header=true, so headerless compacted files would lose
     their first data row to header consumption — silently."""
     import glob
-    import tempfile
 
     from shuttle_spark.catalog import load_table
     from shuttle_spark.sources import io as IO
@@ -387,8 +378,7 @@ def test_compact_csv_preserves_every_row(spark):
     c = load_table(spark, "/root/testdata/sf0.001", "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    base = tempfile.mkdtemp(prefix="csv_compact_")
-    src, dst = base + "/landing", base + "/out"
+    src, dst = str(tmp_path / "landing"), str(tmp_path / "out")
     IO.write(c.repartition(8), src, "csv", mode="overwrite")
     schema = "c_custkey bigint, c_mktsegment string"
     written = IO.compact(

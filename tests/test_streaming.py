@@ -48,6 +48,13 @@ def _rows(df, *order_cols):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _subdirs(tmp_path, *names: str) -> list[str]:
+    """New empty directories under pytest's ``tmp_path``."""
+    for name in names:
+        (tmp_path / name).mkdir()
+    return [str(tmp_path / name) for name in names]
+
+
 def test_windowed_agg_stream_equals_batch(spark):
     got = run_available_now(
         windowed_agg_stream(events_stream(spark, SF), "1 hour", "2 hours"),
@@ -121,13 +128,11 @@ def test_stream_keep_latest_equals_batch(spark):
 
 
 @pytest.mark.slow
-def test_stream_file_sink_roundtrip(spark):
+def test_stream_file_sink_roundtrip(spark, tmp_path):
     """Streaming ETL to a parquet file sink (AvailableNow): the output of a
     replayed windowed aggregation lands as parquet and reads back equal to
     the memory-sink result."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="sink_")
+    out_dir = str(tmp_path)
     stream = windowed_agg_stream(events_stream(spark, SF), "1 hour", "2 hours")
     q = (
         stream.writeStream.format("parquet")
@@ -146,13 +151,11 @@ def test_stream_file_sink_roundtrip(spark):
     assert _rows(back) == _rows(mem)
 
 
-def test_upsert_sink_is_idempotent_and_matches_batch(spark):
+def test_upsert_sink_is_idempotent_and_matches_batch(spark, tmp_path):
     """Replaying the whole stream into the SAME state path (fresh
     checkpoint — every batch re-runs) must rebuild the identical state:
     the per-batch merge is idempotent, which is what makes checkpoint
     recovery exactly-once."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from shuttle_spark.catalog import load_table
@@ -160,7 +163,7 @@ def test_upsert_sink_is_idempotent_and_matches_batch(spark):
     from shuttle_spark.streaming import events_stream_multi, run_upsert_sink
 
     sf = "/root/testdata/sf0.001"
-    path = tempfile.mkdtemp(prefix="upsert_idem_")
+    path = str(tmp_path)
     s1 = run_upsert_sink(
         events_stream_multi(spark, sf, n_files=4), path, shuffle_partitions=4
     )
@@ -184,17 +187,14 @@ def test_upsert_sink_is_idempotent_and_matches_batch(spark):
 
 
 @pytest.mark.slow
-def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
+def test_upsert_sink_zero_batch_stream_is_empty_state(spark, tmp_path):
     """A stream over an empty landing dir runs zero batches; the sink must
     return empty state (not IndexError on a fresh versionless path —
     ADVICE r3)."""
-    import tempfile
-
     from shuttle_spark.sources.io import read_stream
     from shuttle_spark.streaming import run_upsert_sink
 
-    landing = tempfile.mkdtemp(prefix="upsert_empty_landing_")
-    state_path = tempfile.mkdtemp(prefix="upsert_empty_state_")
+    landing, state_path = _subdirs(tmp_path, "landing", "state")
     stream = read_stream(
         spark,
         landing,
@@ -206,19 +206,16 @@ def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
     assert set(state.columns) == {"user_id", "ts", "event_id", "event_type"}
 
 
-def test_decontaminate_sink_zero_batch_stream_is_empty_corpus(spark):
+def test_decontaminate_sink_zero_batch_stream_is_empty_corpus(spark, tmp_path):
     """The decontaminate sink's twin of the upsert zero-batch guard: a
     stream over an empty landing dir runs zero batches, so no b{batch_id}
     dir ever exists — the sink must return the empty corpus, not die on
     an unmatchable b* glob (PATH_NOT_FOUND)."""
-    import tempfile
-
     from shuttle_spark.catalog import load_table
     from shuttle_spark.sources.io import read_stream
     from shuttle_spark.streaming import run_stream_decontaminate
 
-    landing = tempfile.mkdtemp(prefix="decon_empty_landing_")
-    out = tempfile.mkdtemp(prefix="decon_empty_out_")
+    landing, out = _subdirs(tmp_path, "landing", "out")
     stream = read_stream(
         spark, landing, "doc_id long, lang string, text string"
     )
@@ -232,18 +229,14 @@ def test_decontaminate_sink_zero_batch_stream_is_empty_corpus(spark):
     assert "doc_id" in clean.columns
 
 
-def test_decontaminate_sink_ignores_uncommitted_batch_dir(spark):
+def test_decontaminate_sink_ignores_uncommitted_batch_dir(spark, tmp_path):
     """A b{batch_id} dir without _SUCCESS (crash mid-write) must be
     invisible to the returned corpus."""
-    import os
-    import tempfile
-
     from shuttle_spark.catalog import load_table
     from shuttle_spark.sources.io import read_stream
     from shuttle_spark.streaming import run_stream_decontaminate
 
-    landing = tempfile.mkdtemp(prefix="decon_crash_landing_")
-    out = tempfile.mkdtemp(prefix="decon_crash_out_")
+    landing, out = _subdirs(tmp_path, "landing", "out")
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "lang", "text"
     )
@@ -265,19 +258,15 @@ def test_decontaminate_sink_ignores_uncommitted_batch_dir(spark):
     assert os.path.isdir(crashed)  # still on disk, just never read
 
 
-def test_upsert_sink_never_reads_uncommitted_only_version(spark):
+def test_upsert_sink_never_reads_uncommitted_only_version(spark, tmp_path):
     """Zero-batch run over a state path whose ONLY version dir lacks
     _SUCCESS (crash before first commit): the sink must return empty
     state, not read the partial dir its own guard says it never picks."""
-    import os
-    import tempfile
-
     from shuttle_spark.catalog import load_table
     from shuttle_spark.sources.io import read_stream
     from shuttle_spark.streaming import run_upsert_sink
 
-    landing = tempfile.mkdtemp(prefix="upsert_uncommitted_landing_")
-    state_path = tempfile.mkdtemp(prefix="upsert_uncommitted_state_")
+    landing, state_path = _subdirs(tmp_path, "landing", "state")
     ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -785,10 +774,25 @@ def test_keyed_recurrence_all_null_values_leave_no_drained_state(
         with fold():
             _replay_to(spark, _family_op(family, layout)(src), ckpt)
         store = spark.read.format("statestore").load(ckpt)
-        drained = store.filter(F.size("value.groupState.p_ts") == 0)
-        assert drained.count() == 0
+        drained = [p for p in _pending_payloads(store, family) if not p]
+        assert len(drained) == 0
         if family in ("ewma", "cusum"):
             assert store.count() == 0
+
+
+def _pending_payloads(store, family: str) -> list[list]:
+    """Each stored group's pending payloads: the twin's ``p_*`` arrays,
+    or the kernel's binary state through ``core._kernel_state``."""
+    from shuttle_spark.streaming.core import _kernel_state
+
+    state = store.select("value.groupState.*")
+    if "p_ts" in state.columns:  # the twin's, payload array last
+        return [list(r[-1]) for r in state.collect()]
+    text = family.startswith("keep_latest")
+    return [
+        [p for _, _, p in _kernel_state(bytes(r[0]), text)[1]]
+        for r in state.collect()
+    ]
 
 
 def _write_events(path, rows) -> None:
@@ -1132,6 +1136,7 @@ def test_keyed_recurrence_steps_equal_loop_reference(
 
 _RESTART_CASES = [
     ("locf", "per_key"),
+    ("keep_latest_utf8", "per_key"),
     pytest.param("locf", "packed", marks=pytest.mark.slow),
     pytest.param("keep_latest", "per_key", marks=pytest.mark.slow),
     pytest.param("keep_latest", "packed", marks=pytest.mark.slow),
@@ -1185,10 +1190,21 @@ def test_keyed_recurrence_restarts_from_checkpoint(
     point; so its restarted output holds every row of the uninterrupted
     replay plus those earlier winners, and each key's last emission equals
     both the uninterrupted replay's and the batch keep-latest of the
-    quiesced keys."""
+    quiesced keys.  keep_latest_utf8 is keep_latest over NULL and
+    multibyte UTF-8 event types (``_utf8_if``); its first run must leave
+    both among the pending payloads the restart reads back."""
     for i, fold in enumerate(_folds(layout, without_kernels)):
         with fold():
             _check_restart(spark, tmp_path / str(i), family, layout)
+
+
+def _utf8_if(c):
+    """Deterministic NULL and multibyte UTF-8 event types, so the text
+    payload of keep_latest round-trips both through the state store."""
+    k = F.col("event_id") % 3
+    return F.when(k == 0, F.lit(None)).when(
+        k == 1, F.concat(F.lit("\u00e9\u5317\U0001f600_"), c)
+    ).otherwise(c)
 
 
 def _check_restart(spark, tmp_path, family, layout):
@@ -1197,11 +1213,15 @@ def _check_restart(spark, tmp_path, family, layout):
     from shuttle_spark.sources.io import read_stream
     from shuttle_spark.streaming import events_stream_multi, staged_events_files
 
+    utf8 = family == "keep_latest_utf8"
+    family = family.removesuffix("_utf8")
     op = _family_op(family, layout)
 
     def prep(src):
         if family == "locf":
             src = src.withColumn("value", _null_if(F.col("value")))
+        if utf8:
+            src = src.withColumn("event_type", _utf8_if(F.col("event_type")))
         return op(src)
 
     staged = staged_events_files(spark, SF, 4)
@@ -1214,6 +1234,10 @@ def _check_restart(spark, tmp_path, family, layout):
             shutil.copy2(os.path.join(staged, f), os.path.join(land, f))
         src = read_stream(spark, land, _EVENTS_SCHEMA, max_files_per_trigger=1)
         _replay_to(spark, prep(src), ckpt, fmt="parquet", path=sink)
+        if utf8 and files == parts[:2]:  # the state the restart reads
+            store = spark.read.format("statestore").load(ckpt)
+            kept = {p for ps in _pending_payloads(store, family) for p in ps}
+            assert None in kept and any(p and not p.isascii() for p in kept)
     restarted = spark.read.parquet(sink)
     whole = run_available_now(
         prep(events_stream_multi(spark, SF, n_files=4, files_per_trigger=1)),
@@ -1236,9 +1260,10 @@ def _check_restart(spark, tmp_path, family, layout):
         assert want
         assert _rows(restarted.filter(F.col("ts_us") <= cutoff_us).select(*cols)) == want
     else:
-        latest = D.keep_latest(
-            _events(spark), ["user_id"], [F.desc("ts"), F.desc("event_id")]
-        )
+        ev = _events(spark)
+        if utf8:
+            ev = ev.withColumn("event_type", _utf8_if(F.col("event_type")))
+        latest = D.keep_latest(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")])
         want = _rows(
             latest.filter(F.col("ts") < F.lit(_cutoff(spark))).select(
                 "user_id", F.unix_micros("ts").alias("ts_us"), "event_id",
