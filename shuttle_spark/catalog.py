@@ -4,6 +4,13 @@ Schemas are declared (FIXTURES.md), not inferred — parquet footers carry them,
 but declaring the expectation lets us fail fast on drift.  Load pattern is a
 plain ``spark.read.parquet`` so Catalyst gets predicate pushdown, column
 pruning and partition pruning for free on every contract query.
+
+Loading a table runs no Spark write.  A source too sequential to scan in
+parallel is re-laid once per session by a streamed pyarrow rewrite on the
+driver (``_ingest_relayout``); ``events.props_v``, the VARIANT form of the
+JSON ``props`` string, is declared as a query-time parse, and the queries
+that read it take the parse-once copy ``load_events_variant`` stages on
+first use.
 """
 
 from __future__ import annotations
@@ -48,34 +55,30 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def source_bytes(path: str) -> int:
-    """Total data bytes of a table source: one parquet file (the driver's
-    testdata) or a directory of part files (.scaledata expansions).
-    os.path.getsize on a directory returns the inode size (~4 KB) — never
-    use it to size a table."""
+def _parquet_parts(path: str) -> list[str]:
+    """The data files of a table source: one parquet file (the driver's
+    testdata) or the sorted parquet parts of a directory (.scaledata
+    expansions); none for a missing path."""
     if os.path.isfile(path):
-        return os.path.getsize(path)
+        return [path]
     if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
+        return sorted(
+            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
         )
-    return 0
+    return []
+
+
+def source_bytes(path: str) -> int:
+    """Total data bytes of a table source.  os.path.getsize on a directory
+    returns the inode size (~4 KB) — never use it to size a table."""
+    return sum(os.path.getsize(p) for p in _parquet_parts(path))
 
 
 def source_rows(path: str) -> int:
-    """Row count from parquet footer metadata (no Spark job), handling
-    both single-file and directory-of-parts sources."""
+    """Row count from parquet footer metadata (no Spark job)."""
     import pyarrow.parquet as pq
 
-    if os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in _parquet_parts(path))
 
 
 def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
@@ -89,105 +92,92 @@ def _ingest_relayout(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     re-group incoming records into sequential, parallel-readable files
     (README.md:7 "small random IO into sequential IO";
     ShuffleStageSpace.java:181-205 per-partition writers).  Here: the first
-    ``load_table`` of an affected table rewrites it into 1 MiB row groups
-    in a staged directory (``cache.staged_dir``), and every subsequent
-    scan splits across cores.
+    ``load_table`` of an affected table rewrites it on the driver with
+    pyarrow (``_relayout``) into a staged directory (``cache.staged_dir``),
+    and every subsequent scan splits across cores.  No Spark job writes it:
+    the rewrite streams one batch at a time from the source into a parquet
+    writer, keeping the source's column types as they are.
 
     Two regimes (Spark's split planner works on COMPRESSED file bytes and
     bin-packs small files, so row groups alone cannot parallelize a small
     file):
 
-    * >= 4 MiB compressed: rewrite in place as ONE file of 1 MiB row
-      groups — order-preserving (min/max pruning survives); split planning
-      fans it across cores.
-    * 256 KiB - 4 MiB compressed: round-robin into 16 files — these are
-      the small-but-compute-dense tables (documents: ~3 MB of text whose
-      regex/shingling work is seconds per core) where per-file task
-      assignment is the only parallelism lever.
+    * >= 4 MiB compressed: ONE file of ~1 MiB row groups —
+      order-preserving (min/max pruning survives); split planning fans it
+      across cores.
+    * 256 KiB - 4 MiB compressed: round-robin into min(16, parallelism)
+      files — these are the small-but-compute-dense tables (documents:
+      ~600 KB of text whose regex/shingling work is seconds per core)
+      where per-file task assignment is the only parallelism lever.
 
     Scale posture: the rewrite triggers ONLY when the source has fewer row
     groups than cores — a layout no sane 100 TB deployment has (writers
     emit 64-1024 MiB files of many row groups; io.compact keeps them that
     way).  On real corpora this probe reads one footer and returns None.
-    The staging cost is paid once per session and is charged to the
-    suite's cold numbers (BASELINE.md).
     """
     src = table_path(sf_dir, name)
     try:
-        # Source may be one parquet file (the driver's testdata) or a
-        # directory of part files (.scaledata expansions): probe the first
-        # part for schema/row-group layout, sum the parts for size.
-        probe = src
+        parts = _parquet_parts(src)
         size = source_bytes(src)
-        if os.path.isfile(src):
-            n_groups_known = True
-        elif os.path.isdir(src):
-            parts = sorted(
-                os.path.join(src, f)
-                for f in os.listdir(src)
-                if f.endswith(".parquet")
-            )
-            probe = parts[0] if parts else src
+        if not parts or size < _RELAYOUT_MIN_BYTES or len(parts) >= 4:
             # a multi-file source already parallelizes by file count
-            n_groups_known = len(parts) < 4
-        if size >= _RELAYOUT_MIN_BYTES and os.path.isfile(probe):
-            import pyarrow.parquet as pq
+            return None
+        import pyarrow.parquet as pq
 
-            cores = spark.sparkContext.defaultParallelism
-            meta = pq.ParquetFile(probe)
-            # events additionally restages when the source lacks the
-            # parse-once VARIANT column (see below): the JSON parse is an
-            # ingest cost by design, so a raw-string source is re-laid
-            # even when its row-group layout is already parallel.
-            needs_variant = (
-                name == "events"
-                and "props" in meta.schema_arrow.names
-                and "props_v" not in meta.schema_arrow.names
-            )
-            few_groups = (
-                n_groups_known
-                and meta.metadata.num_row_groups < min(4, cores)
-            )
-            if few_groups or needs_variant:
-                d = staged_dir(
-                    spark, src, params=("relayout",),
-                    build=lambda d: _relayout(spark, src, name, size, cores, d),
-                )
-                return os.path.join(d, f"{name}.parquet")
+        cores = spark.sparkContext.defaultParallelism
+        if pq.ParquetFile(parts[0]).metadata.num_row_groups >= min(4, cores):
+            return None
+        d = staged_dir(
+            spark, src, params=("relayout",),
+            build=lambda d: _relayout(
+                parts, size, cores, os.path.join(d, f"{name}.parquet")
+            ),
+        )
+        return os.path.join(d, f"{name}.parquet")
     except Exception:
-        pass  # any probe/write hiccup -> scan the source as-is
-    return None
+        return None  # any probe/write hiccup -> scan the source as-is
 
 
-def _relayout(
-    spark: SparkSession, src: str, name: str, size: int, cores: int, d: str
-) -> None:
-    df = spark.read.parquet(src)
-    if name == "events" and "props" in df.columns:
-        # Parse-once VARIANT shredding at ingest: events.props is a JSON
-        # *string* in the source, and re-parsing it with Jackson on every
-        # JSON-touching query was the single worst kernel residual vs
-        # DuckDB's yyjson (29.6x marginal on the scale curve).  The
-        # relayout already rewrites the table once per session, so the
-        # parse rides that write: props_v is stored as a parquet VARIANT
-        # column and every subsequent variant_get is binary traversal, no
-        # JSON parse.  The raw string column stays for the compat twin
-        # (json_extract_agg_compat).  This mirrors the reference's
-        # consumption pattern — aggregate over pre-structured data
-        # (Ors2ShuffleManagerTest.scala:74-79), parse paid once at ingest.
-        # try_parse_json: a malformed props string yields NULL (the
-        # get_json_object tolerance), never a failed ingest — one bad row
-        # must not take down the corpus restage.
-        from pyspark.sql import functions as F
+def _relayout(parts: list[str], size: int, cores: int, out: str) -> None:
+    """Rewrite ``parts`` into the directory ``out`` in the regime ``size``
+    picks (``_ingest_relayout``), streaming: the driver holds one record
+    batch at a time, never the table.  Every batch written is one row
+    group.  The copy must carry the source's parquet column types: one
+    that pyarrow would store differently (an INT96 timestamp, say) fails
+    the build, so the caller scans the source instead."""
+    import pyarrow.parquet as pq
 
-        df = df.withColumn("props_v", F.try_parse_json("props"))
-    if size < _RELAYOUT_SPLIT_BYTES:
-        df = df.repartition(min(_RELAYOUT_SMALL_FILES, cores))
-    (
-        df.write.option("parquet.block.size", _RELAYOUT_ROW_GROUP_BYTES)
-        .mode("overwrite")
-        .parquet(os.path.join(d, f"{name}.parquet"))
-    )
+    files = [pq.ParquetFile(p) for p in parts]
+    rows = sum(f.metadata.num_rows for f in files)
+    if size >= _RELAYOUT_SPLIT_BYTES:
+        # row groups of ~1 MiB of uncompressed data, the measure Spark's
+        # parquet.block.size takes
+        raw = sum(
+            f.metadata.row_group(g).total_byte_size
+            for f in files for g in range(f.metadata.num_row_groups)
+        )
+        n_out = 1
+        batch_rows = -(-rows * _RELAYOUT_ROW_GROUP_BYTES // raw)
+    else:
+        n_out = min(_RELAYOUT_SMALL_FILES, cores)
+        batch_rows = -(-rows // n_out)
+    os.makedirs(out)
+    paths = [os.path.join(out, f"part-{i:05d}.parquet") for i in range(n_out)]
+    writers = [
+        pq.ParquetWriter(p, files[0].schema_arrow, compression="snappy")
+        for p in paths
+    ]
+    batches = (b for f in files for b in f.iter_batches(batch_size=batch_rows))
+    try:
+        for i, batch in enumerate(batches):
+            writers[i % n_out].write_batch(batch, row_group_size=batch_rows)
+    finally:
+        for w in writers:
+            w.close()
+    source_cols = list(files[0].schema)
+    for p in paths:
+        if list(pq.ParquetFile(p).schema) != source_cols:
+            raise ValueError(f"relayout of {parts[0]} changed its column types")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -237,19 +227,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         try:
             path = _ingest_relayout(spark, sf_dir, name) or table_path(sf_dir, name)
             df = normalize_events_ts(spark.read.parquet(path))
-            if "props" in df.columns and "props_v" not in df.columns:
-                # Relayout skipped (tiny table / disabled): declare the
-                # variant column in the loaded relation instead — same
-                # schema either way, parse at query time (NULL-tolerant,
-                # matching the staged path), pruned when untouched.
-                from pyspark.sql import functions as F
-
-                df = df.withColumn("props_v", F.try_parse_json("props"))
         finally:
             restore()
+        if "props" in df.columns and "props_v" not in df.columns:
+            # The VARIANT column is declared, not stored: a query-time
+            # parse (NULL-tolerant, like get_json_object), pruned from
+            # every query that does not read it.  Queries that do read it
+            # take the parse-once copy (``load_events_variant``).
+            from pyspark.sql import functions as F
+
+            df = df.withColumn("props_v", F.try_parse_json("props"))
     else:
         path = _ingest_relayout(spark, sf_dir, name) or table_path(sf_dir, name)
         df = spark.read.parquet(path)
+    _df_cache[key] = df
+    return df
+
+
+def load_events_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events`` with ``props_v`` stored as a parquet VARIANT column: the
+    JSON parse of ``props`` is paid once per session, by the first query
+    that reads the parsed column, instead of once per query (Jackson per
+    row is many times dearer than traversing the binary VARIANT).  The
+    copy is a Spark write of ``load_table``'s events, staged through
+    ``cache.staged_dir``."""
+    key = (spark.sparkContext.applicationId, sf_dir, "events:props_v")
+    cached = _df_cache.get(key)
+    if cached is not None:
+        return cached
+    ev = load_table(spark, sf_dir, "events")
+    d = staged_dir(
+        spark, table_path(sf_dir, "events"), params=("props_v",),
+        build=lambda d: ev.write.mode("overwrite").parquet(
+            os.path.join(d, "events.parquet")),
+    )
+    df = spark.read.parquet(os.path.join(d, "events.parquet"))
     _df_cache[key] = df
     return df
 

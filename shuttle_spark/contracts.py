@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shuttle_spark.cache import DFCache, cache_key, scratch_dir, staged_dir
-from shuttle_spark.catalog import load_table
+from shuttle_spark.catalog import load_events_variant, load_table
 from shuttle_spark.functions import text as TX
 from shuttle_spark.operators import components as CC
 from shuttle_spark.operators import dedup as D
@@ -860,11 +860,11 @@ def q_scalar_functions(spark: SparkSession, sf: str) -> DataFrame:
 def q_json_extract(spark: SparkSession, sf: str) -> DataFrame:
     """JSON access on the RAW events.props string column (B20 compat twin;
     get_json_object = Jackson parse per row).  The default engine path is
-    json_extract_variant_agg below — parse-once VARIANT staged at catalog
-    ingest (1.7x marginal at sf10; typed access 0.3x).  Tagged ``compat``
-    so bench outputs label this row: its ~32x Jackson-vs-yyjson marginal
-    is the cost of the compatibility path, not the engine's JSON story
-    (VERDICT r6 item 8)."""
+    json_extract_variant_agg below — the parse-once VARIANT copy the
+    catalog stages on first use (1.7x marginal at sf10; typed access
+    0.3x).  Tagged ``compat`` so bench outputs label this row: its ~32x
+    Jackson-vs-yyjson marginal is the cost of the compatibility path, not
+    the engine's JSON story."""
     ev = load_table(spark, sf, "events")
     return ev.groupBy(
         F.get_json_object("props", "$.k").alias("k")
@@ -878,15 +878,15 @@ def q_json_extract(spark: SparkSession, sf: str) -> DataFrame:
     "B20",
 )
 def q_json_extract_variant(spark: SparkSession, sf: str) -> DataFrame:
-    """The DEFAULT JSON path (VERDICT r4 item 3): the same query as
-    json_extract_agg_compat routed over the parse-once VARIANT column the catalog
-    stages at ingest (catalog._ingest_relayout writes events.props_v as a
-    parquet VARIANT; the JSON parse is paid once per corpus, not once per
+    """The DEFAULT JSON path: the same query as json_extract_agg_compat
+    routed over the parse-once VARIANT column (catalog.load_events_variant
+    stages events.props_v as a parquet VARIANT the first time a query
+    reads it; the JSON parse is paid once per session, not once per
     query).  variant_get is binary traversal — the engine answer to the
     Jackson-vs-yyjson kernel residual, which was the worst marginal on the
     scale curve (29.6x).  Oracle identical to the raw-string twin: same
     values either path."""
-    ev = load_table(spark, sf, "events")
+    ev = load_events_variant(spark, sf)
     return ev.groupBy(
         F.variant_get("props_v", "$.k", "string").alias("k")
     ).agg(F.count("*").alias("cnt"))
@@ -5480,11 +5480,11 @@ def q_window_distinct(spark: SparkSession, sf: str) -> DataFrame:
 def q_variant_json(spark: SparkSession, sf: str) -> DataFrame:
     """Typed semi-structured access through the VARIANT type (Spark 4):
     variant_get with a target type over the parse-once staged column
-    (catalog ingest writes events.props_v as parquet VARIANT) — the
-    shred-on-read path for schema-on-read event bags (vs the string
-    get_json_object twin in json_extract_agg_compat; the string-typed default
-    path is json_extract_variant_agg)."""
-    ev = load_table(spark, sf, "events")
+    (catalog.load_events_variant stores events.props_v as parquet VARIANT)
+    — the shred-on-read path for schema-on-read event bags (vs the string
+    get_json_object twin in json_extract_agg_compat; the string-typed
+    default path is json_extract_variant_agg)."""
+    ev = load_events_variant(spark, sf)
     k = F.variant_get(F.col("props_v"), "$.k", "bigint")
     return ev.select((k % 10).alias("k_bucket"), k.alias("k")).groupBy(
         "k_bucket"

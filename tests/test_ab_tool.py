@@ -81,6 +81,19 @@ def test_ab_refuses_to_time_variants_whose_rows_differ(spark, sf_dir, capsys, tm
     assert capsys.readouterr().out == ""
 
 
+def test_ab_counts_each_calls_own_jobs(spark, sf_dir, capsys, tmp_path):
+    """Two main() calls in one process read the same per-run job count:
+    the second call's job groups hold none of the first call's jobs."""
+    variants = tmp_path / "variants.py"
+    variants.write_text("def one(spark, sf):\n    return spark.range(10)\n")
+    jobs = []
+    for _ in range(2):
+        _ab().main([f"{variants}:one", "--sf", sf_dir, "--rounds", "2"])
+        jobs.append([r["jobs"] for r in _runs(capsys.readouterr().out)])
+    assert jobs[0] == jobs[1] == [jobs[0][0]] * 2
+    assert jobs[0][0] >= 1
+
+
 def test_ab_names_an_unknown_contract():
     with pytest.raises(SystemExit) as e:
         _ab().main(["no_such_contract_xyz"])

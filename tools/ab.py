@@ -29,9 +29,10 @@ median wall and its quartiles, the median of every layer field and
 ``wins_vs_first`` (rounds in which it beat variant 0; ties count for
 neither), from which the 9-of-10 rule for a speed claim reads directly.
 
-Run fields: ``wall_s``; ``jobs`` (jobs in the run's job group — a stream's
-micro-batch jobs run in the query's own group); ``stages``, ``tasks``,
-``executor_run_s``, ``executor_cpu_s``, ``gc_s``, ``shuffle_read_bytes``,
+Run fields: ``wall_s``; ``jobs`` (jobs in the run's job group, named
+afresh by every ``main`` call — a stream's micro-batch jobs run in the
+query's own group); ``stages``, ``tasks``, ``executor_run_s``,
+``executor_cpu_s``, ``gc_s``, ``shuffle_read_bytes``,
 ``shuffle_write_bytes``, ``spill_bytes``; for a stream replay also
 ``batches``, ``<phase>_ms`` (``durationMs`` summed over micro-batches) and
 ``state_commit_ms`` / ``state_update_ms`` (summed over batches and stateful
@@ -49,6 +50,7 @@ import runpy
 import statistics
 import sys
 import time
+import uuid
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -178,10 +180,13 @@ def main(argv: list[str] | None = None) -> dict:
                 )
         runs = []
         order = list(range(len(builds)))
+        # job groups unique to this call: a group name reused by an
+        # earlier call in the process would count that call's jobs too
+        call = uuid.uuid4().hex[:8]
         for rnd in range(args.rounds):
             for i in order if rnd % 2 == 0 else order[::-1]:
                 rec = {"round": rnd, "variant": i, "name": args.variants[i]}
-                rec |= timed_run(spark, builds[i], args.sf, f"ab-{rnd}-{i}")
+                rec |= timed_run(spark, builds[i], args.sf, f"ab-{call}-{rnd}-{i}")
                 runs.append(rec)
                 print(json.dumps(rec), flush=True)
         summary = summarize(args.variants, runs)

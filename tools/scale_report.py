@@ -63,8 +63,9 @@ RESIDUALS = """
   the warm path to 2 jobs; the ratio still falls monotonically
   (122x -> 6.3x / 198x -> 10.4x across the curve).
 - `json_extract_agg` (renamed json_extract_agg_compat in r11) residual **CLOSED in round 5** by parse-once VARIANT
-  staging at catalog ingest (events.props_v stored as a parquet VARIANT;
-  the Jackson parse is paid once per corpus on the ingest write): the raw
+  staging (catalog.load_events_variant stores events.props_v as a parquet
+  VARIANT the first time a query reads it; the Jackson parse is paid once
+  per corpus, by the queries that read the parsed column): the raw
   Jackson twin stays ~18-30x on the curve BY DESIGN as the compat path,
   while the staged default `json_extract_variant_agg` fits at ~1.7x
   marginal and the typed `variant_json_agg` at ~0.3x — under the 2x bar
